@@ -45,14 +45,7 @@ import itertools
 import re
 import time
 
-try:  # recursive patterns (unbounded paren nesting in operands);
-    # public PyPI `regex` — fall back to bounded `re` patterns if absent
-    import regex as _rx
-
-    _RE = _rx
-except ImportError:  # pragma: no cover - regex is present in the env
-    _rx = None
-    _RE = re
+import regex as _RE  # recursive patterns: unbounded paren nesting in operands
 
 #: process-start wall time — pg_postmaster_start_time's analog (the
 #: "postmaster" here is this Spark driver process)
@@ -68,39 +61,24 @@ _KW = (
     r"|DISTINCT|VALUES|BETWEEN|IN|IS|LIKE|ILIKE|EXISTS|OVER|PARTITION"
     r"|RETURNING|SET|AS)"
 )
+_PAREN_IDS = itertools.count()
+
+
+def _paren() -> str:
+    """Balanced paren group at ANY nesting depth: a recursive pattern
+    under a fresh group name (fresh so one compiled pattern can embed
+    several operands without name collisions); possessive quantifiers
+    keep failure on unbalanced input linear.
+    """
+    name = f"_p{next(_PAREN_IDS)}"
+    return rf"(?P<{name}>\((?:[^()]++|(?&{name}))*+\))"
+
+
 #: operand for :: and [] rewrites: quoted literal, function call
 #: (name must not be a reserved keyword), identifier, or (expr)
 #: the leading lookbehind stops a match from starting mid-identifier
 #: (without it, the keyword guard on ``SELECT (...)`` just shifts the
 #: match to ``ELECT (...)``)
-def _nested_parens(levels: int) -> str:
-    """`re`-compatible regex for a balanced paren group up to
-    ``levels`` deep — the fallback when the `regex` module is absent."""
-    pat = r"\([^()]*\)"
-    for _ in range(levels - 1):
-        pat = rf"\((?:[^()]|{pat})*\)"
-    return pat
-
-
-_PAREN_IDS = itertools.count()
-
-
-def _paren() -> str:
-    """Balanced paren group at ANY nesting depth.
-
-    With the `regex` module: a recursive pattern under a fresh group
-    name (fresh so one compiled pattern can embed several operands
-    without name collisions); possessive quantifiers keep failure on
-    unbalanced input linear. Without it: bounded to 6 levels — the
-    pre-r8 behavior, one level deeper (r7 fuzz found the 2-level
-    cliff; the tokenizer-grade fix is the recursive form).
-    """
-    if _rx is None:  # pragma: no cover - regex is present in the env
-        return _nested_parens(6)
-    name = f"_p{next(_PAREN_IDS)}"
-    return rf"(?P<{name}>\((?:[^()]++|(?&{name}))*+\))"
-
-
 def _operand() -> str:
     """One :: / [] / binary-operator operand (fresh pattern instance).
 

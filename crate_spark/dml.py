@@ -26,11 +26,13 @@ At production scale the same API fronts a transactional table format
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import re
 import shutil
 import tempfile
+import threading
 import uuid
 from dataclasses import dataclass, field
 
@@ -39,6 +41,23 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 META_FILE = "_crate_meta.json"
+
+#: one mutation at a time across all tables. A mutation reads the
+#: current content (PK-clash check, UPDATE/DELETE rewrite) and then
+#: commits by merge or swap; front-door threads share the session, so
+#: without this two INSERTs of one key could both pass the check and
+#: an UPDATE could swap away a concurrent one. Reads take no lock.
+_WRITE_LOCK = threading.RLock()
+
+
+def _serialized(method):
+    """Run a CrateTable mutation under ``_WRITE_LOCK`` (re-entrant:
+    mutations nest, e.g. update -> _overwrite)."""
+    @functools.wraps(method)
+    def locked(self, *args, **kwargs):
+        with _WRITE_LOCK:
+            return method(self, *args, **kwargs)
+    return locked
 
 
 class CheckViolation(Exception):
@@ -269,7 +288,9 @@ class CrateTable:
         # empty shuffle with a LocalRelation, dropping the caller's
         # upstream observe node — a mutation that empties a CLUSTERED
         # table then fails to report its observed count. Exclude the
-        # rule for the staged write only.
+        # rule for the staged write only. The save/restore of this
+        # session-global conf is safe because every caller holds
+        # _WRITE_LOCK.
         key = "spark.sql.adaptive.optimizer.excludedRules"
         prev = self.spark.conf.get(key, None)
         self.spark.conf.set(
@@ -314,6 +335,7 @@ class CrateTable:
         shutil.rmtree(staging, ignore_errors=True)
         return moved
 
+    @_serialized
     def _overwrite(self, df: DataFrame) -> None:
         """Write df as the table's new content via staging + swap."""
         staging, _ = self._write_staged(df)
@@ -326,6 +348,7 @@ class CrateTable:
         writer.parquet(self.path)
 
     # -- dynamic columns -------------------------------------------------
+    @_serialized
     def insert_dynamic(self, df: DataFrame, returning: list[str] | None = None):
         """INSERT with ``column_policy='dynamic'`` semantics
         (``execution/dml/DynamicIndexer.java``; SURVEY.md §7 hard part
@@ -359,6 +382,7 @@ class CrateTable:
         return self.insert(df.select(*[f.name for f in full.fields]), returning=returning)
 
     # -- INSERT ----------------------------------------------------------
+    @_serialized
     def insert(self, df: DataFrame, returning: list[str] | None = None):
         """INSERT ... SELECT/VALUES. With a PK, duplicate keys (against
         existing data or within the batch) raise DuplicateKeyError —
@@ -429,6 +453,7 @@ class CrateTable:
         ))
         return self.insert(base.toDF(*names), returning=returning)
 
+    @_serialized
     def upsert(self, df: DataFrame, *, do_nothing: bool = False,
                set_exprs: dict[str, str] | None = None) -> dict:
         """INSERT ... ON CONFLICT (pk) DO UPDATE SET ... / DO NOTHING.
@@ -512,6 +537,7 @@ class CrateTable:
         return {"inserted": int(got["inserted"]), "updated": int(got["updated"])}
 
     # -- UPDATE / DELETE -------------------------------------------------
+    @_serialized
     def update(self, set_exprs: dict[str, str], where: str | None = None,
                returning: list[str] | None = None):
         """UPDATE ... SET col = expr [WHERE ...] — read-transform-write.
@@ -550,6 +576,7 @@ class CrateTable:
         self._swap_in(staging)
         return int(got["n"] or 0)
 
+    @_serialized
     def delete(self, where: str | None = None) -> int:
         """DELETE [WHERE ...]. A predicate that exactly selects whole
         partitions drops the directories (DeletePartitions fast path);
@@ -576,6 +603,7 @@ class CrateTable:
             shutil.rmtree(staging, ignore_errors=True)
         return n
 
+    @_serialized
     def drop_partition(self, **kv) -> bool:
         """DELETE of a whole partition == directory drop."""
         if list(kv) != self.partitioned_by[: len(kv)]:
@@ -589,6 +617,7 @@ class CrateTable:
         return False
 
     # -- COPY ------------------------------------------------------------
+    @_serialized
     def copy_from(self, uri: str, *, format: str = "csv",
                   header: bool = True, delimiter: str = ",") -> dict:
         """COPY FROM with RETURN SUMMARY semantics: load good rows,
@@ -733,6 +762,7 @@ class CrateTable:
         loaded = int(obs_in.get["n_total"] or 0) - int(obs_in.get["n_bad"] or 0)
         return {"loaded": loaded, "errors": int(obs_in.get["n_bad"] or 0)}
 
+    @_serialized
     def optimize(self, *, max_num_segments: int | None = None,
                  partition: dict | None = None) -> dict:
         """OPTIMIZE TABLE — the Lucene segment-merge analog

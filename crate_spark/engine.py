@@ -22,7 +22,8 @@ from __future__ import annotations
 import itertools
 import json as _json
 import re
-import weakref
+import threading
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -206,7 +207,10 @@ class CrateSession:
         #: bootstrap; SET SESSION AUTHORIZATION switches it)
         self.roles = RoleStore()
         self.snapshots = SnapshotStore()
-        self.current_user: str = SUPERUSER
+        self._own_user: str = SUPERUSER
+        #: per-thread principal of the statement being served
+        #: (acting_as); front-door threads share this session
+        self._principal = threading.local()
         self._blob_store = None  # lazy (needs storage_dir, set below)
         self._fdw_store = None
         self._pub_store = None
@@ -273,46 +277,41 @@ class CrateSession:
         #: SET GLOBAL overrides surfaced in sys.cluster.settings
         #: (runtime-config.rst; defaults in cluster_settings.py)
         self._cluster_settings: dict[str, object] = {}
-        #: statements currently executing (stack — execute() nests for
-        #: fixture loads); backs sys.jobs / sys.operations, which the
-        #: reference populates with in-flight work (SysJobsTableInfo)
-        self._jobs_stack: list[tuple] = []
+        #: statements currently executing, keyed by job id (front-door
+        #: threads interleave, and execute() nests for fixture loads);
+        #: backs sys.jobs / sys.operations, which the reference
+        #: populates with in-flight work (SysJobsTableInfo)
+        self._jobs_running: dict[str, tuple] = {}
         #: sys.node_checks ids acknowledged via UPDATE (transient,
         #: like the reference's — lost on restart)
         self._node_check_ack: set[int] = set()
-        #: system-view registration is LAZY (r11 optimization round):
-        #: rebuilding the ~60 catalog temp views costs ~1 s of
-        #: createDataFrame round-trips, and the old code paid it on
-        #: EVERY DDL/DML statement and session construction. Mutations
-        #: now bump a generation counter; the views rebuild only when
-        #: a statement actually reads them (_ensure_system_views) and
-        #: the registered generation is stale.
-        self._sysviews_gen = 1
-        #: monotonic identity token (ADVICE r11: id(self) can be
-        #: reused by CPython after GC, letting a new CrateSession
-        #: collide with a dead one's registration entry and silently
-        #: serve its system views; the counter never repeats)
-        self._sysviews_token = next(CrateSession._SYSVIEWS_TOKENS)
 
-    #: per SparkSession -> (CrateSession token, generation) owning the
-    #: currently-registered system temp views (temp views are global
-    #: to the SparkSession, so another session's registration must
-    #: also invalidate ours). Weak keys: entries die with their
-    #: SparkSession instead of accumulating, and keying on the live
-    #: object rules out id-reuse collisions on the session side too.
-    _SYSVIEWS_STATE: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-    _SYSVIEWS_TOKENS = itertools.count(1)
+    @property
+    def current_user(self) -> str:
+        """The principal the current statement runs as: the innermost
+        ``acting_as`` scope on this thread, else the session's own user."""
+        return getattr(self._principal, "user", None) or self._own_user
 
-    def _mark_sysviews_dirty(self) -> None:
-        self._sysviews_gen += 1
+    @current_user.setter
+    def current_user(self, user: str) -> None:
+        # SET SESSION AUTHORIZATION inside a scope changes only that
+        # scope, never the user other threads fall back to
+        if getattr(self._principal, "user", None):
+            self._principal.user = user
+        else:
+            self._own_user = user
 
-    def _ensure_system_views(self) -> None:
-        """Rebuild the system temp views iff this session's catalog
-        generation is not the one currently registered on the shared
-        SparkSession."""
-        mine = (self._sysviews_token, self._sysviews_gen)
-        if CrateSession._SYSVIEWS_STATE.get(self.spark) != mine:
-            self._register_system_views()
+    @contextmanager
+    def acting_as(self, user: str):
+        """Run the enclosed statements as ``user`` on this thread only
+        (the reference keeps the user on each client's own session,
+        ``session/Session.java``); HTTP and pg-wire wrap each request."""
+        prev = getattr(self._principal, "user", None)
+        self._principal.user = user
+        try:
+            yield
+        finally:
+            self._principal.user = prev
 
     def _string_object_cols(self) -> set[str]:
         """String-typed columns across the catalog — the engine stores
@@ -429,7 +428,6 @@ class CrateSession:
     def register(self, name: str, df: DataFrame) -> None:
         df.createOrReplaceTempView(name)
         self.tables[name] = df
-        self._mark_sysviews_dirty()
 
     def _register_system_views(self) -> None:
         spark = self.spark
@@ -914,7 +912,7 @@ class CrateSession:
         # executed right now IS a job — the reference's doc examples
         # select themselves out of sys.jobs
         node_obj = ("n1", "crate")
-        jobs_now = list(getattr(self, "_jobs_stack", []))
+        jobs_now = list(self._jobs_running.values())
         spark.createDataFrame(
             [(j[0], j[1], j[2], j[3], node_obj, 1) for j in jobs_now]
             or [("", "", "", None, node_obj, 0)],
@@ -1362,12 +1360,6 @@ class CrateSession:
         ).filter("subname <> ''").createOrReplaceTempView(
             "pg_catalog_pg_subscription"
         )
-        # record who registered, at which catalog generation — the
-        # _ensure_system_views read gate compares against this
-        CrateSession._SYSVIEWS_STATE[spark] = (
-            getattr(self, "_sysviews_token", 0),
-            getattr(self, "_sysviews_gen", 0),
-        )
 
     @property
     def publications(self):
@@ -1478,16 +1470,15 @@ class CrateSession:
         jid = str(uuid.uuid4())
         err = None
         # in-flight entry backing sys.jobs (SysJobsTableInfo: a
-        # running statement sees itself); stack because fixture loads
-        # nest execute() calls
-        self._jobs_stack.append((jid, stmt[:500], self.current_user, started))
+        # running statement sees itself)
+        self._jobs_running[jid] = (jid, stmt[:500], self.current_user, started)
         try:
             return self._dispatch(stmt)
         except Exception as e:
             err = str(e).split("\n")[0][:200]
             raise
         finally:
-            self._jobs_stack.pop()
+            del self._jobs_running[jid]
             # sys.jobs_log ring buffer (reference SysJobsLogTableInfo;
             # stats.jobs_log_size default 10_000)
             self._jobs_log.append(
@@ -1646,27 +1637,24 @@ class CrateSession:
     def _dispatch(self, stmt: str) -> DataFrame:
         upper = stmt.upper()
 
-        # Every statement changes runtime-backed system state (the
-        # sys.jobs stack / jobs_log ring were pushed by execute();
-        # SET/cursor statements mutate pg_settings/pg_cursors), so the
-        # catalog generation advances per statement...
-        self._mark_sysviews_dirty()
-        # ...but temp views REBUILD lazily: only when a statement
-        # might actually read them — dotted (sys.jobs) or bare PG
-        # spellings (pg_type) both count. Statements that never touch
-        # the catalog (the common DDL/DML path) skip the ~60-view
-        # rebuild entirely (~1 s each, r11 optimization round: the
-        # old eager rebuild made every lifecycle statement pay it).
-        # Temp views are global to the SparkSession; the generation
-        # state also invalidates when ANOTHER CrateSession registered
-        # last, so each session still sees its own catalog.
+        # System temp views rebuild only for a statement that might
+        # read them — dotted (sys.jobs) or bare PG spellings (pg_type),
+        # or SHOW TABLES/SCHEMAS/COLUMNS, which query
+        # information_schema. Every statement changes runtime-backed
+        # state (sys.jobs, jobs_log, pg_settings, pg_cursors), so such
+        # a statement always rebuilds; statements that never touch the
+        # catalog (the common DDL/DML path) skip the ~60-view rebuild
+        # (~1 s each, r11 optimization round). Rebuilding per reading
+        # statement also keeps each CrateSession's own catalog in the
+        # temp views, which are global to the SparkSession.
         if re.search(
             r"\b(information_schema|sys|pg_catalog)\s*\.|\bpg_\w+"
-            r"|\b(sys|information_schema)_\w+",
+            r"|\b(sys|information_schema)_\w+"
+            r"|^SHOW\s+(TABLES|SCHEMAS|COLUMNS)\b",
             stmt,
             re.IGNORECASE,
         ):
-            self._ensure_system_views()
+            self._register_system_views()
         if re.search(r"\bblob\s*\.", stmt, re.IGNORECASE):
             self._register_blob_views()
 
@@ -1692,7 +1680,6 @@ class CrateSession:
             for cid in ids:
                 (self._node_check_ack.add if flag
                  else self._node_check_ack.discard)(cid)
-            self._mark_sysviews_dirty()
             return self.spark.createDataFrame(
                 [(len(ids),)], "rowcount bigint"
             )
@@ -1808,7 +1795,6 @@ class CrateSession:
                     return self.spark.createDataFrame([(0,)], "rowcount bigint")
                 raise ValueError(f"Schema '{name}' already exists")
             self._schemas.add(name)
-            self._mark_sysviews_dirty()
             return self.spark.createDataFrame([(1,)], "rowcount bigint")
 
         # DROP SCHEMA [IF EXISTS] name [, ...] [CASCADE|RESTRICT]
@@ -1845,7 +1831,6 @@ class CrateSession:
                     self._dml._drop_table(f'DROP TABLE "{t}"')
                 self._schemas.discard(name)
                 n_dropped += 1
-            self._mark_sysviews_dirty()
             return self.spark.createDataFrame([(n_dropped,)], "rowcount bigint")
 
         if upper.startswith("EXPLAIN"):
@@ -1878,7 +1863,6 @@ class CrateSession:
                 self._cluster_settings[key] = val
                 # JSON spelling in the conf: booleans stay lowercase
                 self.spark.conf.set(key, _json.dumps(val) if isinstance(val, bool) else str(val))
-            self._mark_sysviews_dirty()
             return self.spark.createDataFrame(
                 [(k, _json.dumps(v) if isinstance(v, bool) else str(v)) for k, v in pairs],
                 "setting string, value string",
@@ -1895,7 +1879,6 @@ class CrateSession:
                     self.spark.conf.unset(key)
                 except Exception:  # noqa: BLE001 - never-set key
                     pass
-            self._mark_sysviews_dirty()
             return self.spark.createDataFrame(
                 [(k,) for k in keys], "setting string"
             )
@@ -1988,7 +1971,6 @@ class CrateSession:
         # information_schema queries — same trick here)
         m = re.match(r"SHOW\s+(TABLES|SCHEMAS|COLUMNS\s+(?:FROM|IN)\s+(\w+))\s*$", stmt, re.IGNORECASE)
         if m:
-            self._ensure_system_views()
             what = m.group(1).upper()
             if what == "TABLES":
                 return self.spark.sql(
@@ -2145,7 +2127,6 @@ class CrateSession:
             self.spark.catalog.dropTempView(name)
             self.tables.pop(name, None)
             self._views.pop(name, None)
-            self._mark_sysviews_dirty()
             return self.spark.createDataFrame([(name,)], "dropped string")
 
         # Cursors (reference session/Cursor.java): DECLARE / FETCH /
@@ -2956,7 +2937,6 @@ class CrateSession:
             "seq": self._udf_seq,
         }
         self._register_udf_dispatch(schema, name.strip('`"').lower())
-        self._mark_sysviews_dirty()
         return self.spark.createDataFrame(
             [(f"{schema}.{name}", ret_type)], "function string, returns string"
         )
@@ -3057,7 +3037,6 @@ class CrateSession:
                     self._udf_spark_name(schema, name.lower())
                 )
             )
-        self._mark_sysviews_dirty()
         return self.spark.createDataFrame([(qname,)], "dropped string")
 
     def _explain_analyze(self, body: str) -> DataFrame:

@@ -25,6 +25,8 @@ import threading
 import time
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
+from crate_spark.errors import error_class
+
 
 def _json_value(v):
     """CrateDB HTTP value mapping (SqlHttpHandler result serialization)."""
@@ -52,6 +54,15 @@ def _json_value(v):
 _BUILTIN_SCHEMAS = {"doc", "sys", "information_schema", "pg_catalog", "blob"}
 
 
+#: error class (crate_spark.errors) -> HttpError.java code family:
+#: MISSING_USER_PRIVILEGES 4011 (HttpErrorStatus.java:60),
+#: DUPLICATE_KEY 4091, unknown relation 4041, statement error 4000
+_HTTP_CODES = {
+    "permission": 4011, "duplicate_key": 4091, "unknown_relation": 4041,
+    "user": 4000, "internal": 5000,
+}
+
+
 def _error_envelope(session, stmt: str, exc: Exception) -> dict:
     """Map an engine exception to the reference's error body
     (``rest/action/HttpError.java`` code families). An unresolved
@@ -60,17 +71,9 @@ def _error_envelope(session, stmt: str, exc: Exception) -> dict:
     does before relation lookup (interfaces/http.rst error example)."""
     import re as _re
 
-    msg = str(exc)
-    if type(exc).__name__ == "PermissionDenied" or "not authorized" in msg:
-        # MISSING_USER_PRIVILEGES (HttpErrorStatus.java:60) -> 401
-        return {"message": msg.split("\n")[0][:500], "code": 4011}
-    if "conflict with existing primary key" in msg:
-        # DUPLICATE_KEY (HttpErrorStatus: CONFLICT 4091)
-        return {"message": msg.split("\n")[0][:500], "code": 4091}
-    if "TABLE_OR_VIEW_NOT_FOUND" in msg or "unknown table" in msg:
-        known = _BUILTIN_SCHEMAS | (
-            session._user_schemas() if hasattr(session, "_user_schemas") else set()
-        )
+    cls = error_class(exc)
+    if cls == "unknown_relation":
+        known = _BUILTIN_SCHEMAS | session._user_schemas()
         for sch, _tbl in _re.findall(
             r"(?:FROM|JOIN|INTO|UPDATE|TABLE)\s+\"?([A-Za-z_]\w*)\"?\s*\.\s*\"?(\w+)\"?",
             stmt,
@@ -81,15 +84,7 @@ def _error_envelope(session, stmt: str, exc: Exception) -> dict:
                     "message": f"SchemaUnknownException[Schema '{sch}' unknown]",
                     "code": 4045,
                 }
-        return {"message": msg.split("\n")[0][:500], "code": 4041}
-    code = (
-        4000
-        if isinstance(exc, ValueError)
-        or "PARSE_SYNTAX_ERROR" in msg
-        or "Analysis" in type(exc).__name__
-        else 5000
-    )
-    return {"message": msg.split("\n")[0][:500], "code": code}
+    return {"message": str(exc).split("\n")[0][:500], "code": _HTTP_CODES[cls]}
 
 
 #: Spark type -> crate HTTP type id (interfaces/http.rst data-type
@@ -255,17 +250,13 @@ class _Handler(BaseHTTPRequestHandler):
             payload = json.loads(raw)
         except json.JSONDecodeError:
             payload = {}
-        prev = self.session.current_user
-        self.session.current_user = user
-        try:
+        with self.session.acting_as(user):
             resp = execute_request(
                 self.session,
                 payload,
                 types="types" in params,
                 error_trace=params.get("error_trace", "").lower() == "true",
             )
-        finally:
-            self.session.current_user = prev
         body = json.dumps(resp).encode()
         # HTTP status tracks the error-code family, as the reference's
         # HttpErrorStatus does: unknown relation/schema -> 404,

@@ -159,6 +159,9 @@ def minhash_lsh_candidates(
         spread_small_input(df.select(F.col(id_col).alias("_id"), F.split(normalize_text(text_col), " ").alias("_w")))
         .select("_id", F.transform(grams, lambda g: F.xxhash64(g)).alias("_h0s"))
         .select("_id", F.expr(sig_fold).alias("_sig"))
+        # a NULL text has a NULL signature, whose band buckets would
+        # all hash alike and pair every NULL-text doc with every other
+        .filter(F.col("_sig").isNotNull())
     )
     band_structs = ", ".join(
         "named_struct('band', {b}, 'bucket', xxhash64(array_join("

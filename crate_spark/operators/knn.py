@@ -303,6 +303,19 @@ def _nearest_cells_sql(vec_col: str, cents: np.ndarray, nprobe: int) -> str:
     )
 
 
+def _nearest_cells_np(vecs: np.ndarray, cents: np.ndarray, nprobe: int) -> np.ndarray:
+    """``_nearest_cells_sql`` evaluated in numpy for a batch of vectors
+    already on the driver, bit-identical to the SQL fold: (v - c)^2
+    elementwise then a cumulative sum reproduces the left-to-right
+    ``aggregate`` rounding step for step, and the stable argsort breaks
+    distance ties by centroid id, as ``array_sort`` on (d, cid) does."""
+    v = np.asarray(vecs, dtype=np.float64)
+    c = np.asarray(cents, dtype=np.float64)
+    diff = v[:, None, :] - c[None, :, :]
+    dist = np.cumsum(diff * diff, axis=2)[:, :, -1]
+    return np.argsort(dist, axis=1, kind="stable")[:, :nprobe]
+
+
 def _nearest_cells(vec_col: str, cents: np.ndarray, nprobe: int) -> Column:
     """Array of the ``nprobe`` nearest centroid ids for column
     ``vec_col``.

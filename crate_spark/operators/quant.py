@@ -431,16 +431,9 @@ def _knn_pq_ivf_routed(
     # the query vectors are already in hand, so evaluating
     # _nearest_cells on the broadcast batch would re-ship the centroid
     # literal a second time in the SQL text (~20 KB of parse per
-    # build) to compute 200 rows. numpy parity with the SQL fold is
-    # exact: (q - c)^2 elementwise then cumsum[..., -1] reproduces the
-    # left-to-right aggregate rounding step for step, and the stable
-    # argsort ties like array_sort on the (d, cid) struct — verified
-    # bit-identical over the full sf0.01 AND sf0.1 corpora (0 diffs).
-    cents_arr = np.asarray(centroids, dtype=np.float64)
-    qdiff = qarr[:, None, :] - cents_arr[None, :, :]
-    qcells = np.argsort(
-        np.cumsum(qdiff * qdiff, axis=2)[:, :, -1], axis=1, kind="stable"
-    )[:, :nprobe]
+    # build) to compute 200 rows. The numpy form is bit-identical to
+    # the SQL fold (tests/test_pipeline.py pins the parity, ties too).
+    qcells = knn._nearest_cells_np(qarr, centroids, nprobe)
     # verifySchema=False: the rows are built right here with exact
     # types; per-element verification was ~0.1 s of the per-batch plan
     # build (r11 optimization-round profile)

@@ -29,11 +29,9 @@ import socketserver
 import struct
 import threading
 
-_SSL_REQUEST = 80877103
+from crate_spark.errors import error_class
 
-#: serializes statement execution across wire connections so the
-#: per-connection user scoping on the shared CrateSession is race-free
-_EXEC_LOCK = threading.Lock()
+_SSL_REQUEST = 80877103
 _CANCEL_REQUEST = 80877102
 
 #: PG type OIDs for RowDescription (PGTypes.java mapping)
@@ -69,18 +67,18 @@ def _text(v) -> str | None:
     return str(v)
 
 
+#: error class (crate_spark.errors) -> the SQLSTATE the reference's
+#: PostgresWireProtocol reports: 42501 insufficient privilege, 23505
+#: unique violation, 42P01 undefined table, 42601 syntax error,
+#: XX000 internal error
+_SQLSTATES = {
+    "permission": "42501", "duplicate_key": "23505",
+    "unknown_relation": "42P01", "user": "42601", "internal": "XX000",
+}
+
+
 def _sqlstate_of(exc: Exception) -> str:
-    """Exception -> PG SQLSTATE, the classes the reference's
-    PostgresWireProtocol reports: 42P01 undefined table, 42501
-    insufficient privilege, 23505 unique violation, 42601 syntax."""
-    msg = str(exc)
-    if type(exc).__name__ == "PermissionDenied" or "not authorized" in msg:
-        return "42501"
-    if "conflict with existing primary key" in msg:
-        return "23505"
-    if "TABLE_OR_VIEW_NOT_FOUND" in msg or "unknown table" in msg:
-        return "42P01"
-    return "42601"
+    return _SQLSTATES[error_class(exc)]
 
 
 def _msg(tag: bytes, payload: bytes) -> bytes:
@@ -133,17 +131,12 @@ class _PgHandler(socketserver.BaseRequestHandler):
         self.user = "crate"
 
     def _exec(self, sql: str, params=None):
-        """Run one statement AS the authenticated connection user.
-        Statements serialize through a lock (the reference executes a
-        session's statements serially too); Spark still parallelizes
-        each job internally."""
-        with _EXEC_LOCK:
-            prev = self.session.current_user
-            self.session.current_user = self.user
-            try:
-                return self.session.execute(sql, params=params)
-            finally:
-                self.session.current_user = prev
+        """Run one statement AS the authenticated connection user. A
+        connection's statements run one at a time on its own thread;
+        connections run concurrently, as HTTP requests do, and their
+        table mutations serialize in the storage layer (dml)."""
+        with self.session.acting_as(self.user):
+            return self.session.execute(sql, params=params)
 
     def _parse(self, sock, body: bytes) -> None:
         """'P': named statement with $n placeholders (Session.parse)."""
@@ -176,7 +169,7 @@ class _PgHandler(socketserver.BaseRequestHandler):
             self._portals[portal.decode()] = df
             sock.sendall(_msg(b"2", b""))  # BindComplete
         except Exception as e:
-            self._error(sock, "42601", str(e).split("\n")[0][:400])
+            self._fail(sock, e)
 
     def _describe(self, body: bytes) -> bytes:
         kind, name = body[0:1], body[1:].rstrip(b"\x00").decode()
@@ -187,16 +180,10 @@ class _PgHandler(socketserver.BaseRequestHandler):
 
     def _execute(self, sock, body: bytes) -> None:
         portal = body.split(b"\x00", 1)[0].decode()
-        df = self._portals.get(portal)
-        if df is None:
-            sock.sendall(_msg(b"C", _cstr("OK")))
-            return
         try:
-            rows = df.collect()
-            self._send_rows(sock, df.schema.fields, rows, with_description=False)
-            sock.sendall(_msg(b"C", _cstr(f"SELECT {len(rows)}")))
+            self._complete(sock, self._portals.get(portal), describe=False)
         except Exception as e:
-            self._error(sock, "42601", str(e).split("\n")[0][:400])
+            self._fail(sock, e)
 
     # -- protocol steps --------------------------------------------------
     def _startup(self, sock) -> bool:
@@ -248,17 +235,23 @@ class _PgHandler(socketserver.BaseRequestHandler):
 
     def _simple_query(self, sock, sql: str) -> None:
         try:
-            df = self._exec(sql)
-            if df is None:
-                sock.sendall(_msg(b"C", _cstr("OK")))
-                sock.sendall(_msg(b"Z", b"I"))
-                return
-            rows = df.collect()
-            self._send_rows(sock, df.schema.fields, rows, with_description=True)
-            sock.sendall(_msg(b"C", _cstr(f"SELECT {len(rows)}")))
+            self._complete(sock, self._exec(sql), describe=True)
         except Exception as e:
-            self._error(sock, _sqlstate_of(e), str(e).split("\n")[0][:400])
+            self._fail(sock, e)
         sock.sendall(_msg(b"Z", b"I"))
+
+    def _complete(self, sock, df, *, describe: bool) -> None:
+        """Send df's rows and CommandComplete (a bare OK for no result);
+        a simple query sends RowDescription first, an extended Execute
+        does not (Describe sent it)."""
+        if df is None:
+            sock.sendall(_msg(b"C", _cstr("OK")))
+            return
+        rows = df.collect()
+        if describe:
+            sock.sendall(_msg(b"T", self._row_description(df)))
+        self._data_rows(sock, df.schema.fields, rows)
+        sock.sendall(_msg(b"C", _cstr(f"SELECT {len(rows)}")))
 
     @staticmethod
     def _row_description(df) -> bytes:
@@ -272,16 +265,6 @@ class _PgHandler(socketserver.BaseRequestHandler):
             )
         return desc
 
-    def _send_rows(self, sock, fields, rows, *, with_description: bool) -> None:
-        if with_description:
-            desc = struct.pack("!H", len(fields))
-            for f in fields:
-                desc += _cstr(f.name) + struct.pack(
-                    "!IHIhih", 0, 0, _oid_of(f.dataType.simpleString()), -1, -1, 0
-                )
-            sock.sendall(_msg(b"T", desc))
-        self._data_rows(sock, fields, rows)
-
     @staticmethod
     def _data_rows(sock, fields, rows) -> None:
         for r in rows:
@@ -294,6 +277,9 @@ class _PgHandler(socketserver.BaseRequestHandler):
                     b = t.encode()
                     payload += struct.pack("!I", len(b)) + b
             sock.sendall(_msg(b"D", payload))
+
+    def _fail(self, sock, exc: Exception) -> None:
+        self._error(sock, _sqlstate_of(exc), str(exc).split("\n")[0][:400])
 
     def _error(self, sock, sqlstate: str, message: str) -> None:
         """ErrorResponse with severity/SQLSTATE/message fields — the

@@ -961,7 +961,6 @@ class SqlDmlRouter:
         # implicit schemas vanish with their last object
         # (create-schema.rst) — schemata recomputes from this map
         getattr(self.owner, "_table_schema", {}).pop(name, None)
-        self.owner._mark_sysviews_dirty()
         return self._count_df(1)
 
     # -- INSERT ----------------------------------------------------------

@@ -136,3 +136,14 @@ def test_knn_lsh_bucket_cap(spark):
     # cap below every bucket population -> no candidates survive
     none = knn_lsh_cosine(emb, q, k=5, dim=64, max_bucket_size=1)
     assert none.count() == 0
+
+
+def test_minhash_null_text_pairs_with_nothing(spark):
+    """A NULL text has no shingles: it must not collide with another
+    NULL-text doc in every band (NULL signatures all bucket alike)."""
+    docs = spark.createDataFrame(
+        [(1, "the quick brown fox jumps"), (2, None), (3, None),
+         (4, "lorem ipsum dolor sit amet")],
+        "doc_id bigint, text string",
+    )
+    assert dd.minhash_lsh_candidates(docs, "text", "doc_id").collect() == []

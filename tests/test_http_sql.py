@@ -168,3 +168,51 @@ def test_http_bulk_duplicate_key_errors(spark, tmp_path):
     assert rcs == [1, -2, 1]
     assert resp["results"][1]["error"]["code"] == 4091
     assert s.execute("SELECT count(*) AS n FROM dupk").collect()[0]["n"] == 3
+
+
+def test_http_concurrent_users_see_only_their_own_principal(spark, tmp_path):
+    """Requests from different users run concurrently on one shared
+    session: each statement runs as its requester, and the session's
+    own user is untouched afterwards."""
+    import base64
+    import sys
+    import threading
+
+    session = CrateSession(spark, None, storage_dir=str(tmp_path))
+    session.execute("CREATE USER alice")
+    srv = serve(session, port=0)
+    port = srv.server_address[1]
+    answers: dict[str, list] = {"alice": [], "crate": []}
+
+    def client(user):
+        for _ in range(60):
+            req = urllib.request.Request(
+                f"http://127.0.0.1:{port}/_sql",
+                data=json.dumps({"stmt": "SELECT current_user"}).encode(),
+                headers={"Content-Type": "application/json"},
+            )
+            if user != "crate":
+                req.add_header(
+                    "Authorization",
+                    "Basic " + base64.b64encode(f"{user}:".encode()).decode(),
+                )
+            with urllib.request.urlopen(req) as r:
+                answers[user].append(json.loads(r.read())["rows"][0][0])
+
+    threads = [threading.Thread(target=client, args=(u,))
+               for u in ("alice", "crate") * 3]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-4)  # switch threads often: widen any race
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=600)
+    finally:
+        sys.setswitchinterval(interval)
+        srv.shutdown()
+    assert not any(t.is_alive() for t in threads)
+    assert len(answers["alice"]) == len(answers["crate"]) == 180
+    assert set(answers["alice"]) == {"alice"}
+    assert set(answers["crate"]) == {"crate"}
+    assert session.current_user == "crate"

@@ -236,3 +236,149 @@ def test_sqlstate_mapping():
     assert _sqlstate_of(ValueError("1 row(s) conflict with existing primary keys")) == "23505"
     assert _sqlstate_of(ValueError("[TABLE_OR_VIEW_NOT_FOUND] nope")) == "42P01"
     assert _sqlstate_of(ValueError("syntax error")) == "42601"
+
+
+def _extended(c, sql: str, params: list[str]) -> dict:
+    """Parse/Bind/Execute/Sync with text params; message tag -> bodies."""
+    body = b"\x00" + sql.encode() + b"\x00" + struct.pack("!H", 0)
+    c.sock.sendall(b"P" + struct.pack("!I", len(body) + 4) + body)
+    body = b"\x00\x00" + struct.pack("!H", 0) + struct.pack("!H", len(params))
+    for p in params:
+        body += struct.pack("!i", len(p)) + p.encode()
+    body += struct.pack("!H", 0)
+    c.sock.sendall(b"B" + struct.pack("!I", len(body) + 4) + body)
+    body = b"\x00" + struct.pack("!I", 0)
+    c.sock.sendall(b"E" + struct.pack("!I", len(body) + 4) + body)
+    c.sock.sendall(b"S" + struct.pack("!I", 4))
+    tags: dict = {}
+    for tag, payload in c._drain_until_ready():
+        tags.setdefault(tag, []).append(payload)
+    return tags
+
+
+def test_pg_wire_extended_pk_clash_is_unique_violation(pg_server):
+    """Bind/Execute errors carry the classified SQLSTATE, as simple
+    queries do: a duplicate primary key is 23505."""
+    c = MiniPgClient(pg_server)
+    try:
+        assert c.query("CREATE TABLE wire_pk (id int PRIMARY KEY, v text)")[2] is None
+        assert c.query("INSERT INTO wire_pk (id, v) VALUES (1, 'a')")[2] is None
+        tags = _extended(c, "INSERT INTO wire_pk (id, v) VALUES ($1, $2)", ["1", "b"])
+        fields = dict(
+            (chr(f[0]), f[1:].decode()) for f in tags[b"E"][0].split(b"\x00") if f
+        )
+        assert fields["C"] == "23505"
+        assert c.query("DROP TABLE wire_pk")[2] is None
+    finally:
+        c.close()
+
+
+def test_pg_wire_users_interleave_with_http(spark, tmp_path):
+    """pg-wire connections as two users and HTTP clients reading
+    sys.jobs share one session concurrently: each pg statement runs as
+    its connection's user, each sys.jobs reader sees its own running
+    statement, and nothing errors."""
+    import json
+    import sys
+    import threading
+    import urllib.request
+
+    from crate_spark.http_sql import serve as serve_http
+
+    session = CrateSession(spark, None, storage_dir=str(tmp_path))
+    session.execute("CREATE USER alice")
+    pg = serve(session, port=0)
+    http = serve_http(session, port=0)
+    failures: list = []
+    answers: dict[str, list] = {"alice": [], "crate": []}
+
+    def pg_client(user):
+        c = AuthPgClient(pg.server_address[1], user)
+        try:
+            for _ in range(30):
+                _cols, rows, err = c.query("SELECT current_user")
+                if err is not None:
+                    failures.append(err)
+                else:
+                    answers[user].append(rows[0][0])
+        finally:
+            c.close()
+
+    def http_client(n):
+        # each reader sends its own text: a reader must find ITS entry,
+        # not merely some reader's
+        stmt = f"SELECT stmt, username FROM sys.jobs WHERE 'r{n}' = 'r{n}'"
+        for _ in range(15):
+            req = urllib.request.Request(
+                f"http://127.0.0.1:{http.server_address[1]}/_sql",
+                data=json.dumps({"stmt": stmt}).encode(),
+                headers={"Content-Type": "application/json"},
+            )
+            try:
+                with urllib.request.urlopen(req) as r:
+                    resp = json.loads(r.read())
+                if "error" in resp or [stmt, "crate"] not in resp["rows"]:
+                    failures.append(resp)
+            except Exception as e:  # noqa: BLE001 - collected, asserted below
+                failures.append(e)
+
+    threads = [threading.Thread(target=pg_client, args=(u,)) for u in ("alice", "crate") * 2]
+    threads += [threading.Thread(target=http_client, args=(n,)) for n in range(3)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-4)  # switch threads often: widen any race
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=600)
+    finally:
+        sys.setswitchinterval(interval)
+        pg.shutdown()
+        http.shutdown()
+    assert not any(t.is_alive() for t in threads)
+    assert failures == []
+    assert answers == {"alice": ["alice"] * 60, "crate": ["crate"] * 60}
+    assert session.current_user == "crate"
+    assert session.execute("SELECT count(*) AS n FROM sys.jobs").collect()[0]["n"] == 1
+
+
+def test_pg_wire_concurrent_pk_clash_admits_one(spark, tmp_path):
+    """Two connections INSERT the same primary key at the same moment:
+    exactly one commits and the other gets 23505, for every key."""
+    import threading
+
+    session = CrateSession(spark, None, storage_dir=str(tmp_path))
+    session.execute("CREATE TABLE race_pk (id int PRIMARY KEY, v text)")
+    pg = serve(session, port=0)
+    keys = range(6)
+    start = threading.Barrier(2)
+    outcomes: dict[int, list] = {k: [] for k in keys}
+
+    def writer(tag):
+        c = MiniPgClient(pg.server_address[1])
+        try:
+            for k in keys:
+                start.wait(timeout=120)
+                _cols, _rows, err = c.query(
+                    f"INSERT INTO race_pk (id, v) VALUES ({k}, '{tag}')"
+                )
+                outcomes[k].append(None if err is None else err["C"])
+        finally:
+            c.close()
+
+    threads = [threading.Thread(target=writer, args=(t,)) for t in ("a", "b")]
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=600)
+    finally:
+        pg.shutdown()
+    assert not any(t.is_alive() for t in threads)
+    assert {k: sorted(v, key=str) for k, v in outcomes.items()} == {
+        k: ["23505", None] for k in keys
+    }
+    rows = session.execute(
+        "SELECT count(*) AS n, count(DISTINCT id) AS d FROM race_pk"
+    ).collect()[0]
+    assert (rows["n"], rows["d"]) == (len(keys), len(keys))

@@ -451,3 +451,29 @@ def test_training_cache_amortizes_jobs(spark, monkeypatch):
         spark.conf.unset("crate_spark.vector.pq_route_threshold")
         spark.conf.unset("crate_spark.vector.centroid_cache")
         K.clear_training_cache()
+
+
+def test_probe_cells_numpy_matches_sql_fold(spark):
+    """The driver-side probe cells (routed PQ) and the SQL fold
+    (``_nearest_cells_sql``) are one definition: same cells, same
+    order, with exact distance ties broken by centroid id."""
+    import numpy as np
+
+    from crate_spark.operators.knn import _nearest_cells_np, _nearest_cells_sql
+
+    rng = np.random.default_rng(7)
+    cents = rng.normal(size=(6, 8))
+    cents = np.vstack([cents, cents[1], cents[4], cents[1]])  # duplicate centroids
+    vecs = np.vstack([rng.normal(size=(40, 8)), cents[:3], np.zeros((1, 8))])
+    nprobe = 5
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+        "id int, v array<double>",
+    )
+    rows = df.select("id", F.expr(_nearest_cells_sql("v", cents, nprobe)).alias("c")).collect()
+    via_sql = {r["id"]: list(r["c"]) for r in rows}
+    via_np = _nearest_cells_np(vecs, cents, nprobe)
+    assert {i: [int(c) for c in via_np[i]] for i in range(len(vecs))} == via_sql
+    # a vector equal to centroid 1 is at distance 0 from its two
+    # copies as well: the tie resolves by ascending centroid id
+    assert via_sql[41][:3] == [1, 6, 8]
