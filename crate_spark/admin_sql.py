@@ -76,7 +76,6 @@ def route_admin(session, stmt: str) -> DataFrame | None:
             is_user=m.group(1).upper() == "USER",
             password=m.group(3),
         )
-        session._register_admin_views()
         return ok()
 
     # ALTER USER x SET (password = ... | <session setting> = ..., ...)
@@ -102,7 +101,6 @@ def route_admin(session, stmt: str) -> DataFrame | None:
                 roles.alter_password(name, val)
             else:
                 roles.alter_session_setting(name, key, val)
-        session._register_admin_views()
         return ok()
 
     # ALTER USER x RESET <setting> / RESET ALL
@@ -119,7 +117,6 @@ def route_admin(session, stmt: str) -> DataFrame | None:
             roles.alter_session_setting(name, None, None)
         else:
             roles.alter_session_setting(name, target, None)
-        session._register_admin_views()
         return ok()
 
     m = re.match(
@@ -129,7 +126,6 @@ def route_admin(session, stmt: str) -> DataFrame | None:
     )
     if m:
         dropped = roles.drop(m.group(3).strip('"'), if_exists=bool(m.group(2)))
-        session._register_admin_views()
         return ok(1 if dropped else 0)
 
     # -- GRANT / DENY / REVOKE ------------------------------------------
@@ -160,7 +156,6 @@ def route_admin(session, stmt: str) -> DataFrame | None:
         n = roles.apply_privileges(
             state, perms, clazz, idents, _names(m.group(5)), session.current_user
         )
-        session._register_admin_views()
         return ok(n)
 
     # GRANT role1, role2 TO user / REVOKE role FROM user
@@ -175,7 +170,6 @@ def route_admin(session, stmt: str) -> DataFrame | None:
             n = roles.grant_roles(names, grantees, session.current_user)
         else:
             n = roles.revoke_roles(names, grantees)
-        session._register_admin_views()
         return ok(n)
 
     # -- repositories ----------------------------------------------------
@@ -193,7 +187,6 @@ def route_admin(session, stmt: str) -> DataFrame | None:
                 os.path.join(session.storage_dir, "_repo_" + m.group(1).lower()),
             )
         snaps.create_repository(m.group(1), m.group(2), settings)
-        session._register_admin_views()
         return ok()
 
     m = re.match(
@@ -203,7 +196,6 @@ def route_admin(session, stmt: str) -> DataFrame | None:
     )
     if m:
         snaps.alter_repository(m.group(1), _parse_with(m.group(2)))
-        session._register_admin_views()
         return ok()
 
     # ALTER REPOSITORY name RESET prop [, prop ...]
@@ -216,13 +208,11 @@ def route_admin(session, stmt: str) -> DataFrame | None:
     if m:
         props = [p.strip().strip('"') for p in m.group(2).split(",")]
         snaps.reset_repository_settings(m.group(1), props)
-        session._register_admin_views()
         return ok()
 
     m = re.match(r"DROP\s+REPOSITORY\s+\"?([\w]+)\"?\s*$", stmt, re.IGNORECASE)
     if m:
         snaps.drop_repository(m.group(1))
-        session._register_admin_views()
         return ok()
 
     # -- snapshots -------------------------------------------------------
@@ -264,7 +254,6 @@ def route_admin(session, stmt: str) -> DataFrame | None:
             else:
                 tables[name] = session.tables[name]
         snaps.create_snapshot(repo, snap, tables, metas)
-        session._register_admin_views()
         return ok(len(names))
 
     m = re.match(
@@ -272,7 +261,6 @@ def route_admin(session, stmt: str) -> DataFrame | None:
     )
     if m:
         snaps.drop_snapshot(m.group(1), m.group(2))
-        session._register_admin_views()
         return ok()
 
     m = re.match(
@@ -319,7 +307,6 @@ def route_admin(session, stmt: str) -> DataFrame | None:
             session._dml.crate_tables[name] = t
             session.register(name, t.read())
             # sys.snapshot_restore feed (SysSnapshotRestoreTableInfo)
-            session._restores = getattr(session, "_restores", [])
             session._restores.append((m.group(1), m.group(2), name))
         return ok(len(restored))
 

@@ -224,8 +224,11 @@ _CONCAT_OP_RE = _RE.compile(rf"(?P<lhs>{_operand()})\s*\|\|\s*(?P<rhs>{_operand(
 _POW_OP_RE = _RE.compile(rf"(?P<lhs>{_operand()})\s*\^\s*(?P<rhs>{_operand()})")
 _XOR_OP_RE = _RE.compile(rf"(?P<lhs>{_operand()})\s*#\s*(?P<rhs>{_operand()})")
 _OVERLAP_OP_RE = _RE.compile(rf"(?P<lhs>{_operand()})\s*&&\s*(?P<rhs>{_operand()})")
+#: ``schema.name`` of a system relation; either part may be
+#: backticked (double-quoted identifiers are backticked by then)
 _SCHEMA_RE = re.compile(
-    r"\b(information_schema|sys|pg_catalog|blob)\s*\.\s*([A-Za-z_][A-Za-z0-9_]*)"
+    r"(`?)\b(information_schema|sys|pg_catalog|blob)\1\s*\.\s*"
+    r"(`?)([A-Za-z_][A-Za-z0-9_]*)\3"
 )
 
 
@@ -4529,7 +4532,7 @@ def rewrite(
         return f"{hof}({inner}, __x -> {operand} {op} __x)"
 
     sql = _ANY_ALL_CMP_RE.sub(_any_all_cmp_sub, sql)
-    sql = _SCHEMA_RE.sub(r"\1_\2", sql)
+    sql = _SCHEMA_RE.sub(r"\2_\4", sql)
     # the default schema prefix is transparent: doc.t (and the
     # column-qualifying doc.t.c) resolve to the bare table name
     sql = re.sub(r"(?<![\w.])doc\s*\.\s*(?=[A-Za-z_])", "", sql)

@@ -40,6 +40,8 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from crate_spark.session import conf_scope
+
 META_FILE = "_crate_meta.json"
 
 #: one mutation at a time across all tables. A mutation reads the
@@ -288,23 +290,13 @@ class CrateTable:
         # empty shuffle with a LocalRelation, dropping the caller's
         # upstream observe node — a mutation that empties a CLUSTERED
         # table then fails to report its observed count. Exclude the
-        # rule for the staged write only. The save/restore of this
-        # session-global conf is safe because every caller holds
-        # _WRITE_LOCK.
+        # rule for the staged write only. Scoping this session-global
+        # conf is safe because every caller holds _WRITE_LOCK.
         key = "spark.sql.adaptive.optimizer.excludedRules"
         prev = self.spark.conf.get(key, None)
-        self.spark.conf.set(
-            key,
-            (prev + "," if prev else "")
-            + "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation",
-        )
-        try:
+        rule = "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation"
+        with conf_scope(self.spark, {key: f"{prev},{rule}" if prev else rule}):
             writer.parquet(staging)
-        finally:
-            if prev is None:
-                self.spark.conf.unset(key)
-            else:
-                self.spark.conf.set(key, prev)
         if metrics:
             got = obs.get
         return staging, got

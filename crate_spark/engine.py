@@ -10,11 +10,12 @@ Surface:
 - ``explain(sql)``      -> formatted physical plan text
 - ``analyze(table)``    -> ANALYZE: Spark COMPUTE STATISTICS (feeds
                            CBO — reference ``TableStatsService.java:101``)
-- system views: ``sys_cluster``, ``sys_tables``,
-  ``information_schema_tables``, ``information_schema_columns``
-  (queryable as ``sys.tables`` etc. through the shim —
-  reference ``SysTableDefinitions.java``,
-  ``InformationSchemaTableDefinitions.java``)
+- system catalog: the sys, information_schema and pg_catalog
+  relations (``sys.jobs``, ``information_schema.tables``,
+  ``pg_catalog.pg_type``, ...), each built on demand when a statement
+  reads it — see ``crate_spark.system_views`` (reference
+  ``SysTableDefinitions.java``, ``InformationSchemaTableDefinitions.java``,
+  ``PgCatalogTableDefinitions.java``)
 """
 
 from __future__ import annotations
@@ -29,7 +30,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from crate_spark.dialect import _LIT_RE, rewrite, rewrite_sys_columns
-from crate_spark.session import TABLES, apply_runtime_confs, load_tables
+from crate_spark.session import apply_runtime_confs, load_tables
+from crate_spark.system_views import register_views_read
 
 
 def _sql_literal(v) -> str:
@@ -52,133 +54,6 @@ def _sql_literal(v) -> str:
     if isinstance(v, bytes):
         return f"unhex('{v.hex()}')"
     return "'" + str(v).replace("'", "''") + "'"
-
-
-#: Spark type -> PG type OID (PGTypes.java mapping, the subset the
-#: synthetic tables use; 705 = PG's 'unknown' for everything else)
-_PG_OIDS = {
-    "boolean": 16, "bigint": 20, "smallint": 21, "int": 23,
-    "string": 25, "float": 700, "double": 701,
-    "timestamp": 1114, "timestamp_ntz": 1114, "date": 1082,
-    "binary": 17,
-}
-
-
-def _pg_type_oid(dt) -> int:
-    s = dt.simpleString()
-    if s.startswith("decimal"):
-        return 1700
-    if s.startswith("array"):
-        return 2277  # anyarray
-    return _PG_OIDS.get(s, 705)
-
-
-#: the reference's fixed system-catalog inventory as listed by
-#: information_schema.tables (information-schema.rst:67-156)
-_SYSTEM_TABLE_INVENTORY = {
-    "information_schema": (
-        "administrable_role_authorizations", "applicable_roles",
-        "character_sets", "collations", "columns",
-        "constraint_column_usage", "enabled_roles",
-        "foreign_server_options", "foreign_servers",
-        "foreign_table_options", "foreign_tables", "key_column_usage",
-        "referential_constraints", "role_table_grants", "routines",
-        "schemata", "sql_features", "table_constraints",
-        "table_partitions", "tables", "user_mapping_options",
-        "user_mappings", "view_column_usage", "views",
-    ),
-    "pg_catalog": (
-        "pg_am", "pg_attrdef", "pg_attribute", "pg_auth_members",
-        "pg_class", "pg_constraint", "pg_cursors", "pg_database",
-        "pg_depend", "pg_description", "pg_enum", "pg_event_trigger",
-        "pg_index", "pg_indexes", "pg_locks", "pg_matviews",
-        "pg_namespace", "pg_proc", "pg_publication",
-        "pg_publication_tables", "pg_range", "pg_roles", "pg_settings",
-        "pg_shdescription", "pg_stats", "pg_subscription",
-        "pg_subscription_rel", "pg_tables", "pg_tablespace", "pg_type",
-        "pg_user", "pg_views",
-    ),
-    "sys": (
-        "allocations", "checks", "cluster", "cluster_health", "health",
-        "jobs", "jobs_log", "jobs_metrics", "node_checks", "nodes",
-        "operations", "operations_log", "privileges", "repositories",
-        "roles", "segments", "sessions", "shards", "snapshot_restore",
-        "snapshots", "summits", "users",
-    ),
-}
-
-#: information_schema.routines built-in inventory: the reference's
-#: Lucene analysis components (RoutineInfos.java; names extracted from
-#: CommonAnalysisPlugin.java + AnalysisModule.java:95-130 +
-#: AnalysisRegistry.java:169-170 synonym/synonym_graph +
-#: FulltextAnalyzerResolver.java EXTENDED_* sets) — 45/16/61/3 per
-#: information-schema.rst:770-783
-_ROUTINE_INVENTORY = {
-    "ANALYZER": (
-        "arabic", "armenian", "basque", "bengali", "brazilian", "bulgarian",
-        "catalan", "chinese", "cjk", "czech", "danish", "default", "dutch",
-        "english", "fingerprint", "finnish", "french", "galician", "german",
-        "greek", "hindi", "hungarian", "indonesian", "irish", "italian",
-        "keyword", "latvian", "lithuanian", "norwegian", "pattern", "persian",
-        "portuguese", "romanian", "russian", "simple", "snowball", "sorani",
-        "spanish", "standard", "standard_html_strip", "stop", "swedish",
-        "thai", "turkish", "whitespace",
-    ),
-    "TOKENIZER": (
-        "PathHierarchy", "char_group", "classic", "edge_ngram", "keyword",
-        "letter", "lowercase", "ngram", "path_hierarchy", "pattern",
-        "simple_pattern", "simple_pattern_split", "standard", "thai",
-        "uax_url_email", "whitespace",
-    ),
-    "TOKEN_FILTER": (
-        "apostrophe", "arabic_normalization", "arabic_stem", "asciifolding",
-        "bengali_normalization", "brazilian_stem", "cjk_bigram", "cjk_width",
-        "classic", "common_grams", "czech_stem", "decimal_digit",
-        "delimited_payload", "dictionary_decompounder", "dutch_stem",
-        "edge_ngram", "elision", "fingerprint", "flatten_graph", "french_stem",
-        "german_normalization", "german_stem", "hindi_normalization",
-        "hunspell", "hyphenation_decompounder", "indic_normalization", "keep",
-        "keep_types", "keyword_marker", "kstem", "length", "limit",
-        "lowercase", "min_hash", "multiplexer", "ngram", "pattern_capture",
-        "pattern_replace", "persian_normalization", "porter_stem",
-        "remove_duplicates", "reverse", "russian_stem", "scandinavian_folding",
-        "scandinavian_normalization", "serbian_normalization", "shingle",
-        "snowball", "sorani_normalization", "standard", "stemmer",
-        "stemmer_override", "stop", "synonym", "synonym_graph", "trim",
-        "truncate", "unique", "uppercase", "word_delimiter",
-        "word_delimiter_graph",
-    ),
-    "CHAR_FILTER": (
-        "html_strip", "mapping", "pattern_replace",
-    ),
-}
-
-#: information_schema.columns describing ITSELF — the reference's
-#: fixed 44-column shape (information-schema.rst:395-447)
-_COLUMNS_SELF_ROWS = [
-    ("character_maximum_length", "integer"), ("character_octet_length", "integer"),
-    ("character_set_catalog", "text"), ("character_set_name", "text"),
-    ("character_set_schema", "text"), ("check_action", "integer"),
-    ("check_references", "text"), ("collation_catalog", "text"),
-    ("collation_name", "text"), ("collation_schema", "text"),
-    ("column_default", "text"), ("column_details", "object"),
-    ("column_details['name']", "text"), ("column_details['oid']", "bigint"),
-    ("column_details['path']", "text_array"), ("column_details['policy']", "text"),
-    ("column_name", "text"), ("data_type", "text"),
-    ("datetime_precision", "integer"), ("domain_catalog", "text"),
-    ("domain_name", "text"), ("domain_schema", "text"),
-    ("generation_expression", "text"), ("identity_cycle", "boolean"),
-    ("identity_generation", "text"), ("identity_increment", "text"),
-    ("identity_maximum", "text"), ("identity_minimum", "text"),
-    ("identity_start", "text"), ("interval_precision", "integer"),
-    ("interval_type", "text"), ("is_generated", "text"),
-    ("is_identity", "boolean"), ("is_nullable", "text"),
-    ("numeric_precision", "integer"), ("numeric_precision_radix", "integer"),
-    ("numeric_scale", "integer"), ("ordinal_position", "integer"),
-    ("table_catalog", "text"), ("table_name", "text"),
-    ("table_schema", "text"), ("udt_catalog", "text"),
-    ("udt_name", "text"), ("udt_schema", "text"),
-]
 
 
 class CrateSession:
@@ -285,6 +160,9 @@ class CrateSession:
         #: sys.node_checks ids acknowledged via UPDATE (transient,
         #: like the reference's — lost on restart)
         self._node_check_ack: set[int] = set()
+        #: RESTORE SNAPSHOT results: (repository, snapshot, table) —
+        #: sys.snapshot_restore
+        self._restores: list[tuple[str, str, str]] = []
 
     @property
     def current_user(self) -> str:
@@ -350,8 +228,7 @@ class CrateSession:
         one flat namespace, so rx.metrics resolves to the bare table
         (create-schema.rst; RelationName resolution)."""
         return (
-            set(getattr(self, "_table_schema", {}).values())
-            | getattr(self, "_schemas", set())
+            set(self._table_schema.values()) | self._schemas
         ) - {"doc", "sys", "information_schema", "pg_catalog", "blob"}
 
     # -- user-defined functions -------------------------------------------
@@ -429,938 +306,6 @@ class CrateSession:
         df.createOrReplaceTempView(name)
         self.tables[name] = df
 
-    def _register_system_views(self) -> None:
-        spark = self.spark
-        crate_tables0 = getattr(self._dml, "crate_tables", {}) if hasattr(self, "_dml") else {}
-
-        def _shards_of(n):
-            # the reference's single-node default is 4 shards when
-            # CLUSTERED INTO is not declared (NumberOfShards.java)
-            ct = crate_tables0.get(n)
-            return (ct.shards or 4) if ct is not None else 1
-
-        table_schema = getattr(self, "_table_schema", {})
-        views = getattr(self, "_views", {})
-
-        def _replicas_of(n):
-            # reference default is the '0-1' range (create-table.rst);
-            # replicas is TEXT in the reference schema. Registered
-            # parquet sources report '0' (no replication to configure)
-            ct = crate_tables0.get(n)
-            if ct is None:
-                return "0"
-            return str(ct.settings.get("number_of_replicas", "0-1"))
-
-        def _clustered_by(n):
-            # routing column (information-schema.rst:163-177): the
-            # declared CLUSTERED BY column, '_id' when none, first PK
-            # when only a PK is declared
-            ct = crate_tables0.get(n)
-            if ct is None:
-                return "_id"
-            if ct.clustered_by:
-                return ct.clustered_by[0]
-            return ct.primary_key[0] if ct.primary_key else "_id"
-
-        def _settings_json(n):
-            # nested settings object from the flat dotted keys
-            # (information-schema.rst:238-247; numbers stay numeric)
-            ct = crate_tables0.get(n)
-            if ct is None or not ct.settings:
-                return None
-            import json as _json
-
-            out: dict = {}
-            for k, v in ct.settings.items():
-                node = out
-                parts = k.split(".")
-                for p in parts[:-1]:
-                    node = node.setdefault(p, {})
-                node[parts[-1]] = (
-                    int(v) if isinstance(v, str) and v.lstrip("-").isdigit() else v
-                )
-            return _json.dumps(out)
-
-        #: version['created'] for user tables (reference stamps the
-        #: CrateDB version that created the table; doc reindex example)
-        _tbl_version = ("6.5.0", None)
-        rows = []
-        for name in sorted(self.tables):
-            if name in views:
-                # SQL views list as VIEW with NULL shards/replicas
-                rows.append(
-                    (name, table_schema.get(name, "doc"), "VIEW",
-                     None, None, None, None, None, None)
-                )
-            else:
-                ct = crate_tables0.get(name)
-                rows.append(
-                    (name, table_schema.get(name, "doc"), "BASE TABLE",
-                     _shards_of(name), _replicas_of(name),
-                     _clustered_by(name),
-                     (list(ct.partitioned_by) or None) if ct is not None else None,
-                     _settings_json(name), _tbl_version)
-                )
-        if self._blob_store is not None:
-            rows += [
-                (name, "blob", "BASE TABLE", 1, "0", "digest", None, None,
-                 _tbl_version)
-                for name in sorted(self._blob_store.tables)
-            ]
-        # the reference's fixed catalog inventory
-        # (information-schema.rst:67-156): every system table listed
-        # with NULL shards/replicas
-        for sch, names in _SYSTEM_TABLE_INVENTORY.items():
-            rows += [
-                (t, sch, "BASE TABLE", None, None, None, None, None, None)
-                for t in names
-            ]
-        spark.createDataFrame(
-            rows or [("", "", "", 0, "0", "", None, None, None)],
-            "table_name string, table_schema string, table_type string, "
-            "number_of_shards int, number_of_replicas string, "
-            "clustered_by string, partitioned_by array<string>, "
-            "settings string, version struct<created:string,upgraded:string>",
-        ).filter("table_name <> ''").withColumn(
-            # blob-storage custom location (blob tables only; always
-            # NULL here — blobs live in the store's own directory)
-            "blobs_path", F.lit(None).cast("string")
-        ).createOrReplaceTempView("information_schema_tables")
-
-        # information_schema.routines (RoutineInfos.java): the Lucene
-        # analysis inventory + custom analyzers + CREATE FUNCTION UDFs
-        routine_rows = [
-            (n, rtype)
-            for rtype, names in _ROUTINE_INVENTORY.items()
-            for n in names
-        ]
-        routine_rows += [(n, "ANALYZER") for n in getattr(self, "_analyzers", {})]
-        routine_rows += [
-            (f"{sch}.{n}", "FUNCTION") for (sch, n) in getattr(self, "_udfs", ())
-        ]
-        spark.createDataFrame(
-            routine_rows, "routine_name string, routine_type string"
-        ).createOrReplaceTempView("information_schema_routines")
-
-        # information_schema.sql_features: the SQL-standard feature
-        # conformance matrix (resources/sql_features.tsv — data
-        # resource, see resources/README.md; information-schema.rst
-        # sql_features section)
-        if not spark.catalog._jcatalog.tableExists("information_schema_sql_features"):
-            import os as _os
-
-            feat_path = _os.path.join(
-                _os.path.dirname(__file__), "resources", "sql_features.tsv"
-            )
-            feat_rows = []
-            with open(feat_path) as fh:
-                for line in fh:
-                    parts = (line.rstrip("\n").split("\t") + [""] * 7)[:7]
-                    # YES/NO -> TRUE/FALSE (reference renders boolean)
-                    parts[4] = "TRUE" if parts[4] == "YES" else "FALSE"
-                    feat_rows.append(
-                        tuple(parts[:5]) + tuple(p or None for p in parts[5:])
-                    )
-            spark.createDataFrame(
-                feat_rows,
-                "feature_id string, feature_name string, sub_feature_id string, "
-                "sub_feature_name string, is_supported string, "
-                "is_verified_by string, comments string",
-            ).createOrReplaceTempView("information_schema_sql_features")
-
-        # information_schema.character_sets: single UTF8 row
-        # (information-schema.rst:938-944)
-        spark.createDataFrame(
-            [("UTF8", "UCS", "UTF8", None, None, None)],
-            "character_set_name string, character_repertoire string, "
-            "form_of_use string, character_set_catalog string, "
-            "character_set_schema string, default_collate_name string",
-        ).createOrReplaceTempView("information_schema_character_sets")
-
-        # information_schema.collations: single C.utf8 row
-        # (information-schema.rst:988-994)
-        spark.createDataFrame(
-            [("crate", "pg_catalog", "C.utf8", "NO")],
-            "collation_catalog string, collation_schema string, "
-            "collation_name string, pad_attribute string",
-        ).createOrReplaceTempView("information_schema_collations")
-
-        # information_schema.views (information-schema.rst:260-300):
-        # definition is the stored SQL text (the reference re-prints
-        # its AST; we keep the user's text — declared divergence)
-        spark.createDataFrame(
-            [
-                ("crate", table_schema.get(n, "doc"), n, d, "NONE", False,
-                 self.current_user)
-                for n, d in sorted(views.items())
-            ] or [("", "", "", "", "", False, "")],
-            "table_catalog string, table_schema string, table_name string, "
-            "view_definition string, check_option string, "
-            "is_updatable boolean, owner string",
-        ).filter("table_name <> ''").createOrReplaceTempView(
-            "information_schema_views"
-        )
-
-        # information_schema.schemata (schemata.rst /
-        # InformationSchemataTableInfo): built-ins + implicit schemas
-        # of live tables + explicitly created (possibly empty) schemas
-        schema_names = sorted(
-            {"blob", "doc", "information_schema", "pg_catalog", "sys"}
-            | set(table_schema.values())
-            | getattr(self, "_schemas", set())
-        )
-        spark.createDataFrame(
-            [("crate", s) for s in schema_names],
-            "catalog_name string, schema_name string",
-        ).createOrReplaceTempView("information_schema_schemata")
-
-        # information_schema.table_partitions (TablePartitionsTableInfo):
-        # one row per live partition of a PARTITIONED BY table, values
-        # read from the partition directory layout
-        import json as _json
-        import os as _os
-
-        part_rows = []
-        for name, ct in sorted(crate_tables0.items()):
-            if not ct.partitioned_by:
-                continue
-            for entry in sorted(_os.listdir(ct.path)):
-                full = _os.path.join(ct.path, entry)
-                if not (_os.path.isdir(full) and "=" in entry):
-                    continue
-                # a partition is live only while it holds data files —
-                # whole-partition DELETE drops the contents
-                # (partitioned-tables.rst:301-318) and may leave the
-                # empty directory behind
-                if not any(
-                    f.endswith(".parquet")
-                    for _r, _d, fs in _os.walk(full)
-                    for f in fs
-                ):
-                    continue
-                # values are typed per the declared partition column
-                # (TablePartitionsTableInfo renders timestamps as epoch
-                # millis, numerics as numbers); dir segments are
-                # URL-encoded by the parquet writer
-                from urllib.parse import unquote
-
-                decl_types = {
-                    c["name"]: c["type"]
-                    for c in getattr(ct, "crate_columns", [])
-                }
-                vals = {}
-                for seg in entry.split("/"):
-                    k, _, v = seg.partition("=")
-                    v = unquote(v)
-                    t = decl_types.get(k, "")
-                    if t.startswith("timestamp") or t == "date":
-                        try:
-                            from datetime import datetime, timezone
-
-                            dt = datetime.fromisoformat(v)
-                            if dt.tzinfo is None:
-                                dt = dt.replace(tzinfo=timezone.utc)
-                            vals[k] = int(dt.timestamp() * 1000)
-                        except ValueError:
-                            vals[k] = v
-                    elif t in ("integer", "bigint", "smallint", "byte"):
-                        try:
-                            vals[k] = int(v)
-                        except ValueError:
-                            vals[k] = v
-                    else:
-                        vals[k] = v
-                part_rows.append(
-                    (name, table_schema.get(name, "doc"), entry,
-                     _json.dumps(vals), _shards_of(name), 0)
-                )
-        spark.createDataFrame(
-            part_rows or [("", "", "", "", 0, 0)],
-            "table_name string, table_schema string, partition_ident string, "
-            "values string, number_of_shards int, number_of_replicas int",
-        ).filter("table_name <> ''").createOrReplaceTempView(
-            "information_schema_table_partitions"
-        )
-
-        # information_schema.columns with the reference's shape
-        # (information-schema.rst:363-381): crate data_type names,
-        # object columns expanded into col['sub'] rows — subcolumns
-        # take the ordinals right after their parent, in declaration
-        # order — for SQL-created tables with declared DDL; registered
-        # parquet sources fall back to spark-type-derived names
-        from crate_spark.sql_dml import _spark_to_crate
-
-        col_rows = []
-        for name, df in sorted(self.tables.items()):
-            ct = crate_tables0.get(name)
-            schema_name = table_schema.get(name, "doc")
-            if ct is not None and getattr(ct, "crate_columns", None):
-                pos = 0
-
-                def _emit(decl, prefix=""):
-                    nonlocal pos
-                    pos += 1
-                    path = (
-                        f"{prefix}['{decl['name']}']" if prefix else decl["name"]
-                    )
-                    col_rows.append(
-                        (name, schema_name, path, pos, decl["type"], True)
-                    )
-                    for child in decl.get("children") or []:
-                        _emit(child, path)
-
-                for decl in ct.crate_columns:
-                    _emit(decl)
-            else:
-                for pos, f in enumerate(df.schema.fields, start=1):
-                    col_rows.append(
-                        (
-                            name, schema_name, f.name, pos,
-                            _spark_to_crate(f.dataType.simpleString()),
-                            f.nullable,
-                        )
-                    )
-        # self-description (information-schema.rst:395-447)
-        col_rows += [
-            ("columns", "information_schema", cname, pos, dtype, True)
-            for pos, (cname, dtype) in enumerate(_COLUMNS_SELF_ROWS, start=1)
-        ]
-        # sys.cluster with the full documented settings subscript tree
-        # (system-information.rst:86-215; CrateSettings registry)
-        from crate_spark.cluster_settings import SETTINGS_COLUMNS
-
-        sys_cluster_cols = (
-            [("id", "text"), ("license", "object"),
-             ("master_node", "text"), ("name", "text")]
-            + list(SETTINGS_COLUMNS)
-            + [("state", "text")]
-        )
-        col_rows += [
-            ("cluster", "sys", cname, pos, dtype, True)
-            for pos, (cname, dtype) in enumerate(sys_cluster_cols, start=1)
-        ]
-        spark.createDataFrame(
-            col_rows or [("", "", "", 0, "", True)],
-            "table_name string, table_schema string, column_name string, "
-            "ordinal_position int, data_type string, is_nullable boolean",
-        ).filter("table_name <> ''").createOrReplaceTempView("information_schema_columns")
-
-        # information_schema.table_constraints / key_column_usage
-        # (reference InformationSchemaTableDefinitions): PK constraints
-        # of SQL-created tables, what \d and ORMs introspect
-        # PG-style pkey naming; NOT NULL columns surface as CHECK rows
-        # named {schema}_{table}_{col}_not_null; information_schema's
-        # own tables table has a PK (information-schema.rst:600-608)
-        tc_rows = [("tables_pkey", "tables", "information_schema", "PRIMARY KEY")]
-        kcu_rows = []
-        for name, ct in sorted(getattr(self._dml, "crate_tables", {}).items()):
-            sch = table_schema.get(name, "doc")
-            if ct.primary_key:
-                cn = f"{name}_pkey"
-                tc_rows.append((cn, name, sch, "PRIMARY KEY"))
-                for pos, col in enumerate(ct.primary_key, start=1):
-                    kcu_rows.append((cn, name, sch, col, pos))
-            for col in getattr(ct, "not_null", []):
-                tc_rows.append(
-                    (f"{sch}_{name}_{col}_not_null", name, sch, "CHECK")
-                )
-            for i, _chk in enumerate(ct.checks):
-                tc_rows.append((f"{name}_check_{i}", name, sch, "CHECK"))
-        spark.createDataFrame(
-            tc_rows or [("", "", "", "")],
-            "constraint_name string, table_name string, table_schema string, "
-            "constraint_type string",
-        ).filter("constraint_name <> ''").createOrReplaceTempView(
-            "information_schema_table_constraints"
-        )
-        spark.createDataFrame(
-            kcu_rows or [("", "", "", "", 0)],
-            "constraint_name string, table_name string, table_schema string, "
-            "column_name string, ordinal_position int",
-        ).filter("constraint_name <> ''").createOrReplaceTempView(
-            "information_schema_key_column_usage"
-        )
-
-        # sys.cluster with the live settings object: SET GLOBAL
-        # overrides on top of the full documented defaults tree
-        # (cluster_settings.py), rendered as the nested JSON object
-        # settings['stats']['enabled'] subscripts resolve against
-        # (runtime-config.rst, system-information.rst)
-        import json as _json
-
-        nested_settings: dict = {}
-        merged = {
-            **_CLUSTER_SETTING_DEFAULTS,
-            **getattr(self, "_cluster_settings", {}),
-        }
-        for k, v in merged.items():
-            cur = nested_settings
-            parts = k.split(".")
-            for p in parts[:-1]:
-                cur = cur.setdefault(p, {})
-            cur[parts[-1]] = v
-        spark.createDataFrame(
-            [(
-                "cluster-1", getattr(self, "cluster_name", "crate-spark"),
-                "n1", None, spark.version,
-                spark.sparkContext.defaultParallelism,
-                _json.dumps(nested_settings, sort_keys=True),
-            )],
-            "id string, name string, master_node string, license string, "
-            "version string, parallelism int, settings string",
-        ).createOrReplaceTempView("sys_cluster")
-        spark.createDataFrame(
-            [(n, "doc") for n in sorted(self.tables)] or [("", "")],
-            "table_name string, schema_name string",
-        ).filter("table_name <> ''").createOrReplaceTempView("sys_tables")
-
-        # sys.nodes / sys.shards / sys.health / sys.jobs — single-node
-        # analogs (reference SysNodesTableInfo, SysShardsTableInfo,
-        # SysHealth, SysJobsTableInfo). One "node" = this Spark driver;
-        # one primary STARTED shard per table; health GREEN (no
-        # replication to degrade); jobs = statements in flight (none:
-        # execute() is synchronous).
-        import socket
-
-        spark.createDataFrame(
-            [("n1", socket.gethostname(), socket.gethostname(),
-              spark.version, spark.sparkContext.defaultParallelism,
-              {"http": 4200, "psql": 5432, "transport": 4300})],
-            "id string, name string, hostname string, version string, "
-            "cpus int, port struct<http:int,psql:int,transport:int>",
-        ).createOrReplaceTempView("sys_nodes")
-        # sys.shards with REAL storage stats (SysShardsTableInfo: size
-        # in bytes, num file segments): SQL-created tables report their
-        # parquet footprint; one routed shard row per CLUSTERED shard
-        shard_rows = []
-        crate_tables = getattr(self._dml, "crate_tables", {}) if hasattr(self, "_dml") else {}
-        for n in sorted(self.tables):
-            ct = crate_tables.get(n)
-            if ct is not None:
-                import os as _os
-
-                size = n_files = n_rows = 0
-                for root, _d, files in _os.walk(ct.path):
-                    for f in files:
-                        if f.endswith(".parquet"):
-                            n_files += 1
-                            full_f = _os.path.join(root, f)
-                            size += _os.path.getsize(full_f)
-                            # num_docs from the parquet FOOTER — a
-                            # metadata read, no scan job
-                            try:
-                                import pyarrow.parquet as _pq
-
-                                n_rows += _pq.read_metadata(full_f).num_rows
-                            except Exception:
-                                pass
-                n_shards = ct.shards or 4
-                # partitioned tables shard PER PARTITION
-                # (partitioned-tables.rst:481-489: count(*) over
-                # sys.shards = live partitions x shards)
-                n_parts = 1
-                if ct.partitioned_by:
-                    n_parts = sum(
-                        1
-                        for e in _os.listdir(ct.path)
-                        if "=" in e and _os.path.isdir(_os.path.join(ct.path, e))
-                        and any(
-                            f.endswith(".parquet")
-                            for _r, _d2, fs in _os.walk(_os.path.join(ct.path, e))
-                            for f in fs
-                        )
-                    ) or 1
-                total_shards = n_shards * n_parts
-                base, rem = divmod(n_rows, total_shards)
-                for i in range(total_shards):
-                    shard_rows.append(
-                        (n, "doc", i % n_shards, True, "STARTED",
-                         size // total_shards, n_files,
-                         base + (1 if i < rem else 0))
-                    )
-            else:
-                shard_rows.append((n, "doc", 0, True, "STARTED", None, None, None))
-        spark.createDataFrame(
-            # full SysShardsTableInfo routing columns: never
-            # relocating, routing == lifecycle state, no orphaned
-            # partitions on the parquet store
-            [r + ("", None, r[4], False) for r in shard_rows]
-            or [("", "", 0, True, "", 0, 0, 0, "", None, "", False)],
-            "table_name string, schema_name string, id int, "
-            "primary boolean, state string, size bigint, num_segments int, "
-            "num_docs bigint, partition_ident string, "
-            "relocating_node string, routing_state string, "
-            "orphan_partition boolean",
-        ).filter("table_name <> ''").createOrReplaceTempView("sys_shards")
-        # sys.health / sys.cluster_health (SysHealth; columns in
-        # alphabetical order — crate prints SELECT * alphabetically):
-        # every shard is a started primary here, so always GREEN
-        spark.createDataFrame(
-            [("GREEN", 0, None, 1, n, table_schema.get(n, "doc"), 0)
-             for n in sorted(self.tables)]
-            or [("", 0, None, 0, "", "", 0)],
-            "health string, missing_shards int, partition_ident string, "
-            "severity int, table_name string, table_schema string, "
-            "underreplicated_shards int",
-        ).filter("table_name <> ''").createOrReplaceTempView("sys_health")
-        spark.createDataFrame(
-            [("", "GREEN", 0, 0, 1, 0)],
-            "description string, health string, missing_shards int, "
-            "pending_tasks int, severity int, underreplicated_shards int",
-        ).createOrReplaceTempView("sys_cluster_health")
-        # in-flight statements (SysJobsTableInfo): the statement being
-        # executed right now IS a job — the reference's doc examples
-        # select themselves out of sys.jobs
-        node_obj = ("n1", "crate")
-        jobs_now = list(self._jobs_running.values())
-        spark.createDataFrame(
-            [(j[0], j[1], j[2], j[3], node_obj, 1) for j in jobs_now]
-            or [("", "", "", None, node_obj, 0)],
-            "id string, stmt string, username string, started timestamp, "
-            "node struct<id:string,name:string>, session_id int",
-        ).filter("id <> ''").createOrReplaceTempView("sys_jobs")
-        spark.createDataFrame(
-            list(self._jobs_log),
-            "id string, stmt string, username string, started timestamp, "
-            "ended timestamp, error string",
-        ).createOrReplaceTempView("sys_jobs_log")
-
-        # sys.operations / sys.operations_log (SysOperations(Log)
-        # TableInfo): one collect-phase operation per in-flight job;
-        # the log derives one collect-phase row per finished job
-        op_schema = (
-            "id string, job_id string, name string, started timestamp, "
-            "ended timestamp, used_bytes bigint, error string"
-        )
-        spark.createDataFrame(
-            [(f"op-{j[0]}", j[0], "collect", node_obj, j[3], 0)
-             for j in jobs_now]
-            or [("", "", "", node_obj, None, 0)],
-            "id string, job_id string, name string, "
-            "node struct<id:string,name:string>, started timestamp, "
-            "used_bytes bigint",
-        ).filter("id <> ''").createOrReplaceTempView("sys_operations")
-        spark.createDataFrame(
-            [(f"op-{j[0]}", j[0], "collect", j[3], j[4], None, j[5])
-             for j in self._jobs_log],
-            op_schema,
-        ).createOrReplaceTempView("sys_operations_log")
-
-        # sys.metrics (SysMetricsTableInfo): per-statement-type latency
-        # histogram aggregated from the jobs log; classification.type
-        # is the leading SQL keyword, as the reference classifies plans
-        from collections import defaultdict
-
-        by_type: dict[str, list] = defaultdict(list)
-        for j in self._jobs_log:
-            kind = (j[1].split() or ["UNKNOWN"])[0].upper()
-            dur_ms = (j[4] - j[3]).total_seconds() * 1000.0
-            by_type[kind].append((dur_ms, j[5] is not None))
-        import statistics as _stats
-
-        metric_rows = []
-        for kind, vals in sorted(by_type.items()):
-            durs = [v[0] for v in vals]
-            metric_rows.append((
-                len(durs), int(sum(durs)), sum(1 for v in vals if v[1]),
-                float(_stats.mean(durs)),
-                float(_stats.pstdev(durs)) if len(durs) > 1 else 0.0,
-                int(max(durs)), int(min(durs)), "n1", kind,
-            ))
-        spark.createDataFrame(
-            metric_rows or [(0, 0, 0, 0.0, 0.0, 0, 0, "", "")],
-            "total_count bigint, sum_of_durations bigint, failed_count bigint, "
-            "mean double, stdev double, max bigint, min bigint, "
-            "node_id string, classification string",
-        ).filter("node_id <> ''").createOrReplaceTempView("sys_metrics")
-
-        # sys.checks / sys.node_checks (SysChecksTableInfo /
-        # SysNodeChecksTableInfo; severity 1=LOW..3=HIGH): the
-        # reference's registered checks with their documented
-        # descriptions (system-information.rst example output), all
-        # passing; acknowledged is UPDATE-able and transient
-        spark.createDataFrame(
-            [(2, 2,
-              "The total number of partitions of one or more partitioned "
-              "tables is approaching the soft limit. Consider reducing "
-              "the partition count.", True),
-             (3, 3,
-              "The following tables need to be recreated for "
-              "compatibility with future major versions of CrateDB: []. "
-              "Use the reindexing procedure to upgrade them.", True)],
-            "id int, severity int, description string, passed boolean",
-        ).createOrReplaceTempView("sys_checks")
-        ack = getattr(self, "_node_check_ack", set())
-        spark.createDataFrame(
-            [(cid, "n1", sev, desc, True, cid in ack)
-             for cid, sev, desc in _NODE_CHECKS],
-            "id int, node_id string, severity int, description string, "
-            "passed boolean, acknowledged boolean",
-        ).createOrReplaceTempView("sys_node_checks")
-
-        # sys.allocations (SysAllocationsTableInfo): one row per shard,
-        # mirroring sys.shards routing on the single node
-        spark.createDataFrame(
-            [(r[1], r[0], None, r[2], "n1", True, "STARTED", None)
-             for r in shard_rows if r[0]] or [("", "", None, 0, "", True, "", None)],
-            "table_schema string, table_name string, partition_ident string, "
-            "shard_id int, node_id string, primary boolean, "
-            "current_state string, explanation string",
-        ).filter("table_name <> ''").createOrReplaceTempView("sys_allocations")
-
-        # sys.segments (SysSegmentsTableInfo): the storage-segment
-        # analog is one row per parquet file, with REAL per-file row
-        # counts from the parquet footer (no data scan)
-        seg_rows = []
-        for n in sorted(self.tables):
-            ct = crate_tables.get(n)
-            if ct is None:
-                continue
-            import os as _os
-
-            import pyarrow.parquet as _pq
-
-            for root, _d, files in _os.walk(ct.path):
-                for f in sorted(files):
-                    if not f.endswith(".parquet"):
-                        continue
-                    p = _os.path.join(root, f)
-                    try:
-                        num_docs = _pq.ParquetFile(p).metadata.num_rows
-                    except Exception:  # noqa: BLE001 - unreadable footer
-                        num_docs = None
-                    seg_rows.append(
-                        ("doc", n, None, 0, f, num_docs, 0,
-                         _os.path.getsize(p), True, True, True)
-                    )
-        spark.createDataFrame(
-            seg_rows or [("", "", None, 0, "", 0, 0, 0, True, True, True)],
-            "table_schema string, table_name string, partition_ident string, "
-            "shard_id int, segment_name string, num_docs bigint, "
-            "deleted_docs int, size bigint, committed boolean, "
-            "primary boolean, search boolean",
-        ).filter("table_name <> ''").createOrReplaceTempView("sys_segments")
-
-        # sys.sessions (SysSessionsTableInfo): this session
-        from datetime import datetime as _dt
-
-        last = self._jobs_log[-1] if self._jobs_log else None
-        spark.createDataFrame(
-            [("s1", getattr(self, "auth_user", self.current_user),
-              self.current_user, "n1", "local", _dt.now(), "http", False,
-              last[1] if last else None, last[0] if last else None)],
-            "id string, auth_user string, session_user string, "
-            "handler_node string, client_address string, "
-            "time_created timestamp, protocol string, ssl boolean, "
-            "last_statement string, last_job_id string",
-        ).createOrReplaceTempView("sys_sessions")
-
-        # sys.snapshot_restore (SysSnapshotRestoreTableInfo): populated
-        # by RESTORE SNAPSHOT; empty otherwise
-        spark.createDataFrame(
-            [(str(i), s[0], s[1], "doc", s[2], None, 0, "SUCCESS")
-             for i, s in enumerate(getattr(self, "_restores", []))]
-            or [("", "", "", "", "", None, 0, "")],
-            "id string, repository string, name string, table_schema string, "
-            "table_name string, partition_ident string, shard_id int, "
-            "state string",
-        ).filter("repository <> ''").createOrReplaceTempView("sys_snapshot_restore")
-
-        # sys.summits (SysSummitsTableInfo: mountain/height/prominence/
-        # coordinates geo_point/range/classification/region/country/
-        # first_ascent): the full 1605-row alpine dataset, vendored as
-        # a DATA resource (resources/summits.tsv, see resources/
-        # README.md — public geographic facts, reference
-        # SummitsIterable.java loads the same file). Registered once
-        # per spark session (static data).
-        if not spark.catalog._jcatalog.tableExists("sys_summits"):
-            import os as _os2
-            import re as _re2
-
-            srows = []
-            with open(
-                _os2.path.join(
-                    _os2.path.dirname(__file__), "resources", "summits.tsv"
-                )
-            ) as fh:
-                for line in fh:
-                    p = line.rstrip("\n").split("\t")
-                    pm = _re2.match(
-                        r"POINT\((-?[\d.]+) (-?[\d.]+)\)", p[3]
-                    )
-                    srows.append((
-                        p[0],
-                        int(p[1]) if p[1] else None,
-                        int(p[2]) if p[2] else None,
-                        [float(pm.group(1)), float(pm.group(2))] if pm else None,
-                        p[4] or None,
-                        p[5] or None,
-                        p[6] or None,
-                        p[7] or None,
-                        int(p[8]) if len(p) > 8 and p[8] else None,
-                    ))
-            spark.createDataFrame(
-                srows,
-                "mountain string, height int, prominence int, "
-                "coordinates array<double>, range string, "
-                "classification string, region string, country string, "
-                "first_ascent int",
-            ).createOrReplaceTempView("sys_summits")
-
-        # pg_catalog minimum for PG-compat tooling (reference
-        # metadata/pgcatalog/PgCatalogTableDefinitions.java): pg_tables,
-        # pg_namespace, pg_type — queryable as pg_catalog.X via the shim.
-        spark.createDataFrame(
-            [("doc", n, "crate") for n in sorted(self.tables)] or [("", "", "")],
-            "schemaname string, tablename string, tableowner string",
-        ).filter("tablename <> ''").createOrReplaceTempView("pg_catalog_pg_tables")
-        spark.createDataFrame(
-            [(11, "doc"), (12, "information_schema"), (13, "sys"), (14, "pg_catalog")],
-            "oid int, nspname string",
-        ).createOrReplaceTempView("pg_catalog_pg_namespace")
-        # pg_constraint (PgCatalogTableDefinitions): PK constraints of
-        # SQL-created tables, the shape \d+ and ORMs probe
-        con_rows = []
-        for name, ct in sorted(getattr(self._dml, "crate_tables", {}).items()):
-            if ct.primary_key:
-                con_rows.append((f"{name}_pkey", "p", name))
-            for i, _chk in enumerate(ct.checks):
-                con_rows.append((f"{name}_check_{i}", "c", name))
-        spark.createDataFrame(
-            con_rows or [("", "", "")],
-            "conname string, contype string, relname string",
-        ).filter("conname <> ''").createOrReplaceTempView("pg_catalog_pg_constraint")
-
-        # pg_type: the reference's full 54-row catalog inventory
-        # (PGTypes.java; listed verbatim in interfaces/postgres.rst) —
-        # standard PostgreSQL catalog facts: oid, typname, typarray
-        # (oid of the array type), typelem (element oid for arrays),
-        # typlen (-1 varlena, -2 cstring), typtype (b base/p pseudo),
-        # typcategory (N numeric, S string, A array, D datetime, ...)
-        spark.createDataFrame(
-            [
-                (16, "bool", 1000, 0, 1, "b", "N"),
-                (18, "char", 1002, 0, 1, "b", "S"),
-                (19, "name", -1, 0, 64, "b", "S"),
-                (20, "int8", 1016, 0, 8, "b", "N"),
-                (21, "int2", 1005, 0, 2, "b", "N"),
-                (23, "int4", 1007, 0, 4, "b", "N"),
-                (24, "regproc", 1008, 0, 4, "b", "N"),
-                (25, "text", 1009, 0, -1, "b", "S"),
-                (26, "oid", 1028, 0, 4, "b", "N"),
-                (30, "oidvector", 1013, 26, -1, "b", "A"),
-                (114, "json", 199, 0, -1, "b", "U"),
-                (199, "_json", 0, 114, -1, "b", "A"),
-                (600, "point", 1017, 0, 16, "b", "G"),
-                (700, "float4", 1021, 0, 4, "b", "N"),
-                (701, "float8", 1022, 0, 8, "b", "N"),
-                (705, "unknown", 0, 0, -2, "p", "X"),
-                (1000, "_bool", 0, 16, -1, "b", "A"),
-                (1002, "_char", 0, 18, -1, "b", "A"),
-                (1005, "_int2", 0, 21, -1, "b", "A"),
-                (1007, "_int4", 0, 23, -1, "b", "A"),
-                (1008, "_regproc", 0, 24, -1, "b", "A"),
-                (1009, "_text", 0, 25, -1, "b", "A"),
-                (1014, "_bpchar", 0, 1042, -1, "b", "A"),
-                (1015, "_varchar", 0, 1043, -1, "b", "A"),
-                (1016, "_int8", 0, 20, -1, "b", "A"),
-                (1017, "_point", 0, 600, -1, "b", "A"),
-                (1021, "_float4", 0, 700, -1, "b", "A"),
-                (1022, "_float8", 0, 701, -1, "b", "A"),
-                (1042, "bpchar", 1014, 0, -1, "b", "S"),
-                (1043, "varchar", 1015, 0, -1, "b", "S"),
-                (1082, "date", 1182, 0, 4, "b", "D"),
-                (1114, "timestamp", 1115, 0, 8, "b", "D"),
-                (1115, "_timestamp", 0, 1114, -1, "b", "A"),
-                (1182, "_date", 0, 1082, -1, "b", "A"),
-                (1184, "timestamptz", 1185, 0, 8, "b", "D"),
-                (1185, "_timestamptz", 0, 1184, -1, "b", "A"),
-                (1186, "interval", 1187, 0, 16, "b", "T"),
-                (1187, "_interval", 0, 1186, -1, "b", "A"),
-                (1231, "_numeric", 0, 1700, -1, "b", "A"),
-                (1266, "timetz", 1270, 0, 12, "b", "D"),
-                (1270, "_timetz", 0, 1266, -1, "b", "A"),
-                (1560, "bit", 1561, 0, -1, "b", "V"),
-                (1561, "_bit", 0, 1560, -1, "b", "A"),
-                (1700, "numeric", 1231, 0, -1, "b", "N"),
-                (2205, "regclass", 2210, 0, 4, "b", "N"),
-                (2206, "regtype", 2211, 0, 4, "b", "N"),
-                (2210, "_regclass", 0, 2205, -1, "b", "A"),
-                (2211, "_regtype", 0, 2206, -1, "b", "A"),
-                (2249, "record", 2287, 0, -1, "p", "P"),
-                (2276, "any", 0, 0, 4, "p", "P"),
-                (2277, "anyarray", 0, 2276, -1, "p", "P"),
-                (2287, "_record", 0, 2249, -1, "p", "A"),
-                (2950, "uuid", 2951, 0, 16, "b", "U"),
-                (2951, "_uuid", 0, 2950, -1, "b", "A"),
-            ],
-            "oid int, typname string, typarray int, typelem int, "
-            "typlen int, typtype string, typcategory string",
-        ).createOrReplaceTempView("pg_catalog_pg_type")
-
-        # pg_class / pg_attribute / pg_proc — what psql's \d and ORM
-        # introspection actually join (PgCatalogTableDefinitions.java
-        # PgClassTable/PgAttributeTable/PgProcTable). Relation OIDs are
-        # deterministic: 16384 + position in sorted table order.
-        cls_rows = [
-            (16384 + i, n, 11, "r", len(self.tables[n].columns))
-            for i, n in enumerate(sorted(self.tables))
-        ]
-        spark.createDataFrame(
-            cls_rows or [(0, "", 0, "", 0)],
-            "oid int, relname string, relnamespace int, relkind string, relnatts int",
-        ).filter("relname <> ''").createOrReplaceTempView("pg_catalog_pg_class")
-        att_rows = []
-        for i, n in enumerate(sorted(self.tables)):
-            for pos, f in enumerate(self.tables[n].schema.fields, start=1):
-                att_rows.append(
-                    (16384 + i, f.name, _pg_type_oid(f.dataType), pos, not f.nullable)
-                )
-        spark.createDataFrame(
-            att_rows or [(0, "", 0, 0, False)],
-            "attrelid int, attname string, atttypid int, attnum int, attnotnull boolean",
-        ).filter("attname <> ''").createOrReplaceTempView("pg_catalog_pg_attribute")
-        spark.createDataFrame(
-            [
-                (2100 + i, name, 11)
-                for i, name in enumerate(
-                    ("abs", "avg", "count", "max", "min", "sum", "length",
-                     "substr", "upper", "lower", "coalesce", "now",
-                     "date_trunc", "concat", "round")
-                )
-            ],
-            "oid int, proname string, pronamespace int",
-        ).createOrReplaceTempView("pg_catalog_pg_proc")
-
-        # pg_catalog breadth (PgCatalogTableDefinitions.java lists all
-        # of these): the single-catalog/single-node values, the role
-        # store, open cursors, and views — plus the tables the
-        # reference itself serves EMPTY (pg_enum, pg_locks, pg_depend,
-        # pg_matviews, pg_event_trigger, pg_range, pg_shdescription,
-        # pg_am, pg_description) so tooling that probes them succeeds.
-        spark.createDataFrame(
-            [(0, "crate", 6, True)],
-            "oid int, datname string, encoding int, datallowconn boolean",
-        ).createOrReplaceTempView("pg_catalog_pg_database")
-        spark.createDataFrame(
-            [(0, "pg_default")], "oid int, spcname string",
-        ).createOrReplaceTempView("pg_catalog_pg_tablespace")
-        setting_rows = [
-            ("search_path", "doc"), ("datestyle", "ISO"), ("timezone", "UTC"),
-            ("server_version", "14.0"), ("server_version_num", "140000"),
-            ("max_index_keys", "32"), ("max_identifier_length", "255"),
-            ("application_name", ""), ("enable_hashjoin", "on"),
-        ]
-        spark.createDataFrame(
-            setting_rows, "name string, setting string",
-        ).createOrReplaceTempView("pg_catalog_pg_settings")
-        role_rows = [
-            (r[0], bool(r[1]), True) for r in self.roles.sys_users_rows()
-        ] or [("crate", True, True)]
-        spark.createDataFrame(
-            role_rows, "rolname string, rolsuper boolean, rolcanlogin boolean",
-        ).createOrReplaceTempView("pg_catalog_pg_roles")
-        spark.createDataFrame(
-            [(r[0],) for r in role_rows], "usename string",
-        ).createOrReplaceTempView("pg_catalog_pg_user")
-        spark.createDataFrame(
-            [(name, "doc", cur.get("stmt", ""))
-             for name, cur in self._cursors.items()] or [("", "", "")],
-            "name string, schemaname string, statement string",
-        ).filter("name <> ''").createOrReplaceTempView("pg_catalog_pg_cursors")
-        view_rows = [
-            (vn, "doc", "crate") for vn in sorted(getattr(self, "_views", {}))
-        ]
-        spark.createDataFrame(
-            view_rows or [("", "", "")],
-            "viewname string, schemaname string, viewowner string",
-        ).filter("viewname <> ''").createOrReplaceTempView("pg_catalog_pg_views")
-        idx_rows = [
-            (f"{name}_pkey", name, "doc")
-            for name, ct in sorted(getattr(self._dml, "crate_tables", {}).items())
-            if ct.primary_key
-        ]
-        spark.createDataFrame(
-            idx_rows or [("", "", "")],
-            "indexname string, tablename string, schemaname string",
-        ).filter("indexname <> ''").createOrReplaceTempView("pg_catalog_pg_indexes")
-        for empty_name, empty_schema in (
-            ("pg_enum", "oid int, enumtypid int, enumlabel string"),
-            ("pg_locks", "locktype string, relation int, pid int, granted boolean"),
-            ("pg_depend", "classid int, objid int, refclassid int, refobjid int"),
-            ("pg_matviews", "schemaname string, matviewname string"),
-            ("pg_event_trigger", "oid int, evtname string"),
-            ("pg_range", "rngtypid int, rngsubtype int"),
-            ("pg_shdescription", "objoid int, description string"),
-            ("pg_am", "oid int, amname string"),
-            ("pg_description", "objoid int, objsubid int, description string"),
-            ("pg_attrdef", "oid int, adrelid int, adnum int"),
-            ("pg_auth_members", "roleid int, member int"),
-            ("pg_index", "indexrelid int, indrelid int, indisprimary boolean"),
-            ("pg_stats", "schemaname string, tablename string, attname string, "
-             "null_frac float, n_distinct float"),
-        ):
-            spark.createDataFrame([], empty_schema).createOrReplaceTempView(
-                f"pg_catalog_{empty_name}"
-            )
-        self._register_admin_views()
-        # information_schema.foreign_servers / foreign_tables
-        # (fdw/ServersMetadata; PG FDW catalog shape)
-        fdw_servers = (
-            self._fdw_store.foreign_servers_rows() if self._fdw_store else []
-        )
-        spark.createDataFrame(
-            fdw_servers or [("", "", "")],
-            "foreign_server_name string, foreign_data_wrapper_name string, "
-            "authorization_identifier string",
-        ).filter("foreign_server_name <> ''").createOrReplaceTempView(
-            "information_schema_foreign_servers"
-        )
-        fdw_tables = self._fdw_store.foreign_tables_rows() if self._fdw_store else []
-        spark.createDataFrame(
-            fdw_tables or [("", "", "")],
-            "foreign_table_name string, foreign_table_schema string, "
-            "foreign_server_name string",
-        ).filter("foreign_table_name <> ''").createOrReplaceTempView(
-            "information_schema_foreign_tables"
-        )
-        # pg_publication / pg_publication_tables / pg_subscription
-        # (metadata/pgcatalog/PgPublicationTableInfo et al.)
-        pubs = self._pub_store.pubs if self._pub_store else {}
-        spark.createDataFrame(
-            [
-                (name, p["owner"], p["all_tables"], True, True, True)
-                for name, p in sorted(pubs.items())
-            ]
-            or [("", "", False, False, False, False)],
-            "pubname string, pubowner string, puballtables boolean, "
-            "pubinsert boolean, pubupdate boolean, pubdelete boolean",
-        ).filter("pubname <> ''").createOrReplaceTempView("pg_catalog_pg_publication")
-        pub_tables = []
-        for name, p in sorted(pubs.items()):
-            tnames = (
-                sorted(self._dml.crate_tables) if p["all_tables"] else p["tables"]
-            )
-            pub_tables += [(name, "doc", t) for t in tnames]
-        spark.createDataFrame(
-            pub_tables or [("", "", "")],
-            "pubname string, schemaname string, tablename string",
-        ).filter("pubname <> ''").createOrReplaceTempView(
-            "pg_catalog_pg_publication_tables"
-        )
-        subs = self._sub_store.subs if self._sub_store else {}
-        spark.createDataFrame(
-            [
-                (s.name, "crate", s.enabled, s.connection, [s.publication])
-                for s in sorted(subs.values(), key=lambda x: x.name)
-            ]
-            or [("", "", False, "", [""])],
-            "subname string, subowner string, subenabled boolean, "
-            "subconninfo string, subpublications array<string>",
-        ).filter("subname <> ''").createOrReplaceTempView(
-            "pg_catalog_pg_subscription"
-        )
-
     @property
     def publications(self):
         """Publisher-side replication catalog (logical-replication.rst),
@@ -1418,38 +363,6 @@ class CrateSession:
 
     def delete_blob(self, table: str, digest: str) -> bool:
         return self.blobs.get(table).delete(digest)
-
-    def _register_admin_views(self) -> None:
-        """sys.users / sys.roles / sys.privileges
-        (role/metadata/Sys*TableInfo.java) and sys.repositories /
-        sys.snapshots (metadata/sys/Sys*TableInfo.java) as temp views.
-        Tiny catalog rows — rebuilt on every admin mutation."""
-        spark = self.spark
-        spark.createDataFrame(
-            self.roles.sys_users_rows(),
-            "name string, superuser boolean, password string, "
-            "granted_roles string, session_settings string",
-        ).createOrReplaceTempView("sys_users")
-        spark.createDataFrame(
-            self.roles.sys_roles_rows() or [("", "")],
-            "name string, granted_roles string",
-        ).filter("name <> ''").createOrReplaceTempView("sys_roles")
-        spark.createDataFrame(
-            self.roles.sys_privileges_rows() or [("", "", "", "", "", "")],
-            "class string, grantee string, grantor string, "
-            "ident string, state string, type string",
-        ).filter("grantee <> ''").createOrReplaceTempView("sys_privileges")
-        spark.createDataFrame(
-            self.snapshots.sys_repositories_rows() or [("", "", "")],
-            "name string, type string, settings string",
-        ).filter("name <> ''").createOrReplaceTempView("sys_repositories")
-        spark.createDataFrame(
-            self.snapshots.sys_snapshots_rows()
-            or [("", "", "", [""], [""], "", "", "", "")],
-            "id string, name string, repository string, tables array<string>, "
-            "concrete_indices array<string>, "
-            "started string, finished string, version string, state string",
-        ).filter("id <> ''").createOrReplaceTempView("sys_snapshots")
 
     # -- statements ------------------------------------------------------
     def execute(self, sql: str, params: list | None = None) -> DataFrame:
@@ -1637,24 +550,13 @@ class CrateSession:
     def _dispatch(self, stmt: str) -> DataFrame:
         upper = stmt.upper()
 
-        # System temp views rebuild only for a statement that might
-        # read them — dotted (sys.jobs) or bare PG spellings (pg_type),
-        # or SHOW TABLES/SCHEMAS/COLUMNS, which query
-        # information_schema. Every statement changes runtime-backed
-        # state (sys.jobs, jobs_log, pg_settings, pg_cursors), so such
-        # a statement always rebuilds; statements that never touch the
-        # catalog (the common DDL/DML path) skip the ~60-view rebuild
-        # (~1 s each, r11 optimization round). Rebuilding per reading
-        # statement also keeps each CrateSession's own catalog in the
-        # temp views, which are global to the SparkSession.
-        if re.search(
-            r"\b(information_schema|sys|pg_catalog)\s*\.|\bpg_\w+"
-            r"|\b(sys|information_schema)_\w+"
-            r"|^SHOW\s+(TABLES|SCHEMAS|COLUMNS)\b",
-            stmt,
-            re.IGNORECASE,
-        ):
-            self._register_system_views()
+        # build the system views this statement names, and only those
+        # (sys.jobs, "sys"."jobs", pg_catalog_pg_type, SHOW TABLES):
+        # each read rebuilds its view from the current state, so
+        # runtime-backed views (sys.jobs, pg_cursors) stay live, and
+        # each CrateSession reads its own catalog through temp views
+        # that are global to the SparkSession
+        register_views_read(self, stmt)
         if re.search(r"\bblob\s*\.", stmt, re.IGNORECASE):
             self._register_blob_views()
 
@@ -2082,7 +984,7 @@ class CrateSession:
                 if not em:
                     raise ValueError(f"unsupported OPTIMIZE target: {entry!r}")
                 name = em.group(1).strip('"').split(".")[-1]
-                table = getattr(self._dml, "crate_tables", {}).get(name)
+                table = self._dml.crate_tables.get(name)
                 if table is None:
                     # views/virtual relations ack without a rewrite
                     out_rows.append((name, "ok", 0, 0))
@@ -2260,8 +1162,8 @@ class CrateSession:
         the concatenation of its source columns (CompositeIndex in
         fulltext-indices.rst: the index name is the MATCH target)."""
         mapping: dict[str, str] = {}
-        for ct in getattr(self._dml, "crate_tables", {}).values():
-            for idx, cols in getattr(ct, "ft_indexes", {}).items():
+        for ct in self._dml.crate_tables.values():
+            for idx, cols in ct.ft_indexes.items():
                 mapping[idx.lower()] = "concat_ws(' ', " + ", ".join(cols) + ")"
         if not mapping:
             return stmt
@@ -3082,45 +1984,6 @@ class CrateSession:
         except Exception:
             status = "skipped (temp view)"
         return self.spark.createDataFrame([(table, status)], "table string, status string")
-
-
-#: cluster settings surfaced in sys.cluster.settings — the full
-#: documented defaults tree (runtime-config.rst; JobsLogService
-#: defaults: logs enabled, 10k ring buffers)
-from crate_spark.cluster_settings import (  # noqa: E402
-    SETTING_DEFAULTS as _CLUSTER_SETTING_DEFAULTS,
-)
-
-#: sys.node_checks rows: (id, severity, description) — the reference's
-#: registered node checks with their documented description texts
-#: (system-information.rst node-checks example + settings sections)
-_NODE_CHECKS: list[tuple[int, int, str]] = [
-    (1, 3,
-     "It has been detected that the 'gateway.expected_data_nodes' "
-     "setting is not set or does not match the current number of data "
-     "nodes in the cluster."),
-    (2, 3,
-     "The cluster setting 'gateway.recover_after_data_nodes' (or the "
-     "deprecated 'gateway.recover_after_nodes') is not set or has an "
-     "invalid value relative to the expected number of data nodes."),
-    (3, 3,
-     'If any of the "expected data nodes" recovery settings are set, '
-     'the "recover after time" setting should also be set so state '
-     "recovery does not start prematurely."),
-    (5, 3,
-     "The high disk watermark is exceeded on the node. The cluster "
-     "will attempt to relocate existing shards away from this node."),
-    (6, 2,
-     "The low disk watermark is exceeded on the node. The cluster "
-     "will not allocate new shards to this node."),
-    (7, 3,
-     "The flood stage disk watermark is exceeded on the node. Tables "
-     "on this node are enforced read-only to prevent running out of "
-     "disk space."),
-    (8, 2,
-     "The amount of shards on the node reached 90 % of the limit of "
-     "1000 shards per node."),
-]
 
 
 def _parse_setting_value(v: str):

@@ -128,7 +128,7 @@ def minhash_lsh_candidates(
     # pipeline at 100 TB) just to reassemble per-document state the
     # scan already had. Measured at sf0.1: signature stage 0.85 s ->
     # 0.41 s, signatures bit-identical over the full corpus
-    # (scripts/ab_minhash_mapside.py, 0 diffs).
+    # (OPTIMIZATION_r12.md, 0 diffs).
     # Interpreted-HOF discipline (the r3 trap this code used to avoid
     # by exploding): lambdas skip codegen AND common-subexpression
     # elimination, so every multiply-referenced intermediate must be a

@@ -50,6 +50,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from crate_spark.session import conf_scope
+
 
 def _symmetrize(edges: DataFrame) -> DataFrame:
     """Both directions of every edge, self-loops dropped. NO distinct:
@@ -224,7 +226,7 @@ def connected_components(
     nodes = e.select(F.col("src").alias("node")).distinct()
     # NOTE (ADVICE r11): the per-round shuffle-partition clamp below
     # mutates the session-global spark.sql.shuffle.partitions (restored
-    # in finally). The window forms of the star steps plan their
+    # when the conf_scope exits). The window forms of the star steps plan their
     # exchange width from that conf, so a dedicated repartition cannot
     # replace it without adding an exchange per round. This assumes the
     # driver's single-query-at-a-time contract; a query planned
@@ -242,7 +244,7 @@ def connected_components(
     exact_check = str(
         sess.conf.get("crate_spark.graph.exact_convergence_check", "false")
     ).lower() in ("true", "1")
-    try:
+    with conf_scope(sess, {"spark.sql.shuffle.partitions": caller_parts}):
         for _ in range(max_iterations):
             # convergence via the per-round (count, hash-xor)
             # fingerprint observed during the checkpoint job — zero
@@ -286,8 +288,6 @@ def connected_components(
             raise RuntimeError(
                 f"connected_components: no convergence in {max_iterations} rounds"
             )
-    finally:
-        sess.conf.set("spark.sql.shuffle.partitions", caller_parts)
     # post-convergence the edges form stars: (member → root). Roots and
     # isolated nodes map to themselves.
     membership = e.select(F.col("src").alias("node"), F.col("dst").alias("component"))

@@ -13,6 +13,7 @@ NullOrEmptyFunction (docs/general/builtins/scalar-functions.rst).
 from __future__ import annotations
 
 from crate_spark.queries import query
+from crate_spark.session import conf_scope
 
 
 def _session(spark, sf_dir):
@@ -471,9 +472,7 @@ def streaming_rollup_events(spark, sf_dir):
     # it explicitly instead of inheriting a batch-sized default.
     # (r11 A/B: the JVM windowed agg is state-store-bound, not
     # compute-bound — 16 beat both 4 (0.95 s) and 32 (1.28 s).)
-    prev = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    spark.conf.set("spark.sql.shuffle.partitions", "16")
-    try:
+    with conf_scope(spark, {"spark.sql.shuffle.partitions": "16"}):
         q = (
             agg.writeStream.format("memory")
             .queryName(name)
@@ -482,8 +481,6 @@ def streaming_rollup_events(spark, sf_dir):
             .start()
         )
         q.awaitTermination(120)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.sql(f"SELECT * FROM {name}")
 
 
@@ -742,25 +739,24 @@ def streaming_sessionize_events(spark, sf_dir):
     # Re-checked after the vectorized-emit rewrite (total ~4.4 s):
     # 16 vs 8 still equal within noise (4.1-4.6 both), 4 still worse
     # (5.6-7.0) — unchanged.
-    prev = spark.conf.get("spark.sql.shuffle.partitions", "200")
     # the flush depends on the trailing no-data micro-batch firing the
     # event-time timeouts — pin the engine default rather than relying
     # on it (VERDICT r11)
-    prev_ndb = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    spark.conf.set("spark.sql.shuffle.partitions", "16")
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
+    overrides = {
+        "spark.sql.shuffle.partitions": "16",
+        "spark.sql.streaming.noDataMicroBatches.enabled": "true",
+    }
     try:
-        q = (
-            sessions.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
+        with conf_scope(spark, overrides):
+            q = (
+                sessions.writeStream.format("memory")
+                .queryName(name)
+                .outputMode("append")
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination(300)
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prev_ndb)
         shutil.rmtree(stage, ignore_errors=True)
     # NTZ timestamps deserialize naively, like DuckDB's (rollup twin)
     return spark.sql(f"SELECT * FROM {name}").select(

@@ -25,6 +25,7 @@ Scale notes (100 TB design intent, tested at local[32]):
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -99,6 +100,25 @@ def get_spark(
     spark = builder.getOrCreate()
     apply_runtime_confs(spark)
     return spark
+
+
+@contextmanager
+def conf_scope(spark: SparkSession, overrides: dict[str, str]):
+    """Set ``overrides`` for the enclosed block, then restore each key
+    to its previous value, unsetting a key that was unset before. The
+    conf is session-global: a statement planned on the same
+    SparkSession by another thread sees the overrides meanwhile."""
+    prev = {key: spark.conf.get(key, None) for key in overrides}
+    for key, value in overrides.items():
+        spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        for key, value in prev.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
 
 
 def input_is_small(df: DataFrame) -> bool:

@@ -1745,3 +1745,16 @@ def test_order_by_alias_qualifier_survives_schema_strip(spark, tmp_path):
         "SELECT zx.a, zx.b FROM plain AS zx, zx.t ORDER BY zx.a, zx.b"
     ).collect()
     assert [tuple(r) for r in rows] == [(1, 2), (2, 1)]
+
+
+def test_conf_scope_restores_set_keys_and_unsets_unset_ones(spark):
+    from crate_spark.session import conf_scope
+
+    s = spark.newSession()
+    s.conf.set("spark.sql.shuffle.partitions", "7")
+    with conf_scope(s, {"spark.sql.shuffle.partitions": "3", "crate_spark.test.k": "v"}):
+        assert s.conf.get("spark.sql.shuffle.partitions") == "3"
+        assert s.conf.get("crate_spark.test.k") == "v"
+        s.conf.set("spark.sql.shuffle.partitions", "2")  # per-round sets inside
+    assert s.conf.get("spark.sql.shuffle.partitions") == "7"
+    assert s.conf.get("crate_spark.test.k", None) is None
