@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame
 
 from crate_spark.dml import CrateTable
 from crate_spark.roles import PERMISSIONS, SUPERUSER, RoleStore
+from crate_spark.session import local_frame, rowcount_frame
 from crate_spark.snapshots import SnapshotError, SnapshotStore
 
 _PRIV_WORD = "|".join(PERMISSIONS)
@@ -46,9 +47,6 @@ def route_admin(session, stmt: str) -> DataFrame | None:
     roles: RoleStore = session.roles
     snaps: SnapshotStore = session.snapshots
 
-    def ok(n: int = 1) -> DataFrame:
-        return spark.createDataFrame([(n,)], "rowcount bigint")
-
     # -- session authorization ------------------------------------------
     m = re.match(
         r"SET\s+SESSION\s+AUTHORIZATION\s+(?:DEFAULT|'?([\w]+)'?)\s*$",
@@ -58,10 +56,10 @@ def route_admin(session, stmt: str) -> DataFrame | None:
     if m:
         session.current_user = (m.group(1) or SUPERUSER).lower()
         roles._get(session.current_user)  # must exist
-        return spark.createDataFrame([("OK",)], "status string")
+        return local_frame(spark, [("OK",)], "status string")
     if re.match(r"RESET\s+SESSION\s+AUTHORIZATION\s*$", stmt, re.IGNORECASE):
         session.current_user = SUPERUSER
-        return spark.createDataFrame([("OK",)], "status string")
+        return local_frame(spark, [("OK",)], "status string")
 
     # -- users / roles ---------------------------------------------------
     m = re.match(
@@ -76,7 +74,7 @@ def route_admin(session, stmt: str) -> DataFrame | None:
             is_user=m.group(1).upper() == "USER",
             password=m.group(3),
         )
-        return ok()
+        return rowcount_frame(spark)
 
     # ALTER USER x SET (password = ... | <session setting> = ..., ...)
     # (alter-role.rst: password plus per-user session-setting defaults)
@@ -101,7 +99,7 @@ def route_admin(session, stmt: str) -> DataFrame | None:
                 roles.alter_password(name, val)
             else:
                 roles.alter_session_setting(name, key, val)
-        return ok()
+        return rowcount_frame(spark)
 
     # ALTER USER x RESET <setting> / RESET ALL
     m = re.match(
@@ -117,7 +115,7 @@ def route_admin(session, stmt: str) -> DataFrame | None:
             roles.alter_session_setting(name, None, None)
         else:
             roles.alter_session_setting(name, target, None)
-        return ok()
+        return rowcount_frame(spark)
 
     m = re.match(
         r"DROP\s+(USER|ROLE)\s+(IF\s+EXISTS\s+)?(\"[^\"]+\"|[\w]+)\s*$",
@@ -126,7 +124,7 @@ def route_admin(session, stmt: str) -> DataFrame | None:
     )
     if m:
         dropped = roles.drop(m.group(3).strip('"'), if_exists=bool(m.group(2)))
-        return ok(1 if dropped else 0)
+        return rowcount_frame(spark, 1 if dropped else 0)
 
     # -- GRANT / DENY / REVOKE ------------------------------------------
     m = re.match(
@@ -156,7 +154,7 @@ def route_admin(session, stmt: str) -> DataFrame | None:
         n = roles.apply_privileges(
             state, perms, clazz, idents, _names(m.group(5)), session.current_user
         )
-        return ok(n)
+        return rowcount_frame(spark, n)
 
     # GRANT role1, role2 TO user / REVOKE role FROM user
     m = re.match(
@@ -170,7 +168,7 @@ def route_admin(session, stmt: str) -> DataFrame | None:
             n = roles.grant_roles(names, grantees, session.current_user)
         else:
             n = roles.revoke_roles(names, grantees)
-        return ok(n)
+        return rowcount_frame(spark, n)
 
     # -- repositories ----------------------------------------------------
     m = re.match(
@@ -187,7 +185,7 @@ def route_admin(session, stmt: str) -> DataFrame | None:
                 os.path.join(session.storage_dir, "_repo_" + m.group(1).lower()),
             )
         snaps.create_repository(m.group(1), m.group(2), settings)
-        return ok()
+        return rowcount_frame(spark)
 
     m = re.match(
         r"ALTER\s+REPOSITORY\s+\"?([\w]+)\"?\s+SET\s*\((.*)\)\s*$",
@@ -196,7 +194,7 @@ def route_admin(session, stmt: str) -> DataFrame | None:
     )
     if m:
         snaps.alter_repository(m.group(1), _parse_with(m.group(2)))
-        return ok()
+        return rowcount_frame(spark)
 
     # ALTER REPOSITORY name RESET prop [, prop ...]
     # (alter-repository.rst:72-77)
@@ -208,12 +206,12 @@ def route_admin(session, stmt: str) -> DataFrame | None:
     if m:
         props = [p.strip().strip('"') for p in m.group(2).split(",")]
         snaps.reset_repository_settings(m.group(1), props)
-        return ok()
+        return rowcount_frame(spark)
 
     m = re.match(r"DROP\s+REPOSITORY\s+\"?([\w]+)\"?\s*$", stmt, re.IGNORECASE)
     if m:
         snaps.drop_repository(m.group(1))
-        return ok()
+        return rowcount_frame(spark)
 
     # -- snapshots -------------------------------------------------------
     m = re.match(
@@ -254,14 +252,14 @@ def route_admin(session, stmt: str) -> DataFrame | None:
             else:
                 tables[name] = session.tables[name]
         snaps.create_snapshot(repo, snap, tables, metas)
-        return ok(len(names))
+        return rowcount_frame(spark, len(names))
 
     m = re.match(
         r"DROP\s+SNAPSHOT\s+\"?([\w]+)\"?\.\"?([\w]+)\"?\s*$", stmt, re.IGNORECASE
     )
     if m:
         snaps.drop_snapshot(m.group(1), m.group(2))
-        return ok()
+        return rowcount_frame(spark)
 
     m = re.match(
         r"RESTORE\s+SNAPSHOT\s+\"?([\w]+)\"?\.\"?([\w]+)\"?"
@@ -308,7 +306,7 @@ def route_admin(session, stmt: str) -> DataFrame | None:
             session.register(name, t.read())
             # sys.snapshot_restore feed (SysSnapshotRestoreTableInfo)
             session._restores.append((m.group(1), m.group(2), name))
-        return ok(len(restored))
+        return rowcount_frame(spark, len(restored))
 
     return None
 

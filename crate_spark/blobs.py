@@ -28,6 +28,8 @@ import re
 import shutil
 from dataclasses import dataclass, field
 
+from crate_spark.session import local_frame
+
 
 class BlobError(Exception):
     """Blob storage failure (bad digest, unknown table)."""
@@ -92,9 +94,7 @@ class BlobTable:
         from pyspark.sql import functions as F
 
         if not self._has_files():
-            return spark.createDataFrame(
-                [], "digest string, last_modified timestamp"
-            )
+            return local_frame(spark, [], "digest string, last_modified timestamp")
         return (
             spark.read.format("binaryFile")
             .option("recursiveFileLookup", "true")
@@ -113,7 +113,7 @@ class BlobTable:
         from pyspark.sql import functions as F
 
         if not self._has_files():
-            return spark.createDataFrame([], "digest string, content binary")
+            return local_frame(spark, [], "digest string, content binary")
         return (
             spark.read.format("binaryFile")
             .option("recursiveFileLookup", "true")

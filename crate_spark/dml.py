@@ -38,9 +38,10 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from crate_spark.session import conf_scope
+from crate_spark.session import conf_scope, ddl_schema, local_frame
 
 META_FILE = "_crate_meta.json"
 
@@ -109,6 +110,12 @@ class CrateTable:
     #: information_schema.columns expands into col['sub'] rows
     #: (information-schema.rst:363-381)
     crate_columns: list = field(default_factory=list)
+
+    @property
+    def schema(self) -> T.StructType:
+        """The declared schema, parsed once per ``schema_ddl`` value
+        (ALTER TABLE and dynamic inserts assign a new one)."""
+        return ddl_schema(self.schema_ddl)
 
     # -- catalog ---------------------------------------------------------
     @classmethod
@@ -186,7 +193,7 @@ class CrateTable:
 
     def read(self) -> DataFrame:
         if not self._has_data():
-            return self.spark.createDataFrame([], self.schema_ddl)
+            return local_frame(self.spark, [], self.schema)
         return self.spark.read.schema(self.schema_ddl).parquet(self.path)
 
     # -- write plumbing --------------------------------------------------
@@ -244,7 +251,7 @@ class CrateTable:
                     df = df.withColumn(
                         col, F.expr(f"rpad({col}, {n}, ' ')")
                     )
-        names = [f.name for f in self.spark.createDataFrame([], self.schema_ddl).schema.fields]
+        names = self.schema.names
         return df.select(*names)
 
     def _check_viol_col(self):
@@ -333,12 +340,6 @@ class CrateTable:
         staging, _ = self._write_staged(df)
         self._swap_in(staging)
 
-    def _append(self, df: DataFrame) -> None:
-        writer = df.write.mode("append")
-        if self.partitioned_by:
-            writer = writer.partitionBy(*self.partitioned_by)
-        writer.parquet(self.path)
-
     # -- dynamic columns -------------------------------------------------
     @_serialized
     def insert_dynamic(self, df: DataFrame, returning: list[str] | None = None):
@@ -349,7 +350,7 @@ class CrateTable:
         schema merge); declared columns missing from the batch are
         filled with NULL.
         """
-        declared = self.spark.createDataFrame([], self.schema_ddl).schema
+        declared = self.schema
         declared_types = {f.name: f.dataType for f in declared.fields}
         # a dynamic batch may ADD columns but never change a type
         # (DynamicIndexer raises a mapper conflict in the reference)
@@ -367,7 +368,7 @@ class CrateTable:
                 + [f"{f.name} {f.dataType.simpleString()}" for f in new_fields]
             )
             self._save_meta()
-        full = self.spark.createDataFrame([], self.schema_ddl).schema
+        full = self.schema
         for f in full.fields:
             if f.name not in df.columns:
                 df = df.withColumn(f.name, F.lit(None).cast(f.dataType))
@@ -418,9 +419,7 @@ class CrateTable:
         moved = self._merge_in(staging)
         if returning is not None:
             out = (
-                self.spark.read.schema(
-                    self.spark.createDataFrame([], self.schema_ddl).schema
-                )
+                self.spark.read.schema(self.schema)
                 .option("basePath", self.path)
                 .parquet(*moved)
                 if moved
@@ -428,22 +427,6 @@ class CrateTable:
             )
             return out.select(*returning or out.columns)
         return int(got["n"])
-
-    def insert_values(self, rows: list[tuple], returning: list[str] | None = None):
-        """INSERT INTO ... VALUES — rows carry the non-generated columns
-        in schema order."""
-        gen = set(self.generated)
-        names = [
-            f.name
-            for f in self.spark.createDataFrame([], self.schema_ddl).schema.fields
-            if f.name not in gen
-        ]
-        base = self.spark.createDataFrame(rows, schema=", ".join(
-            f"{f.name} {f.dataType.simpleString()}"
-            for f in self.spark.createDataFrame([], self.schema_ddl).schema.fields
-            if f.name not in gen
-        ))
-        return self.insert(base.toDF(*names), returning=returning)
 
     @_serialized
     def upsert(self, df: DataFrame, *, do_nothing: bool = False,
@@ -655,7 +638,7 @@ class CrateTable:
                     os.unlink(spool)
                 except OSError:
                     pass
-        target_schema = self.spark.createDataFrame([], self.schema_ddl).schema
+        target_schema = self.schema
         if format == "csv":
             raw = (
                 self.spark.read.option("header", header)
@@ -670,7 +653,6 @@ class CrateTable:
             # numbers (or ISO strings); Spark's JSON reader would read
             # a number into TimestampType as seconds. Read those
             # fields as strings and convert explicitly.
-            from pyspark.sql import types as T
 
             # ... and scalar fields coerce leniently ("0" -> integer 0,
             # as the reference's type casts do): read scalars as

@@ -30,8 +30,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from crate_spark.dialect import _LIT_RE, rewrite, rewrite_sys_columns
-from crate_spark.session import apply_runtime_confs, load_tables
-from crate_spark.system_views import register_views_read
+from crate_spark.session import (
+    apply_runtime_confs, load_tables, local_frame, rowcount_frame,
+)
+from crate_spark.system_views import views_held
 
 
 def _sql_literal(v) -> str:
@@ -54,6 +56,41 @@ def _sql_literal(v) -> str:
     if isinstance(v, bytes):
         return f"unhex('{v.hex()}')"
     return "'" + str(v).replace("'", "''") + "'"
+
+
+#: a string literal, a quoted name or an innermost parenthesised group
+_QUOTED_OR_GROUP = re.compile(
+    r"'(?:[^'\\]|\\.|'')*'|\"[^\"]*\"|`[^`]*`|\([^()'\"`]*\)"
+)
+#: the clauses that can follow a FROM-less select list
+_AFTER_SELECT_LIST = re.compile(
+    r"\b(?:WHERE|GROUP|HAVING|WINDOW|QUALIFY|ORDER|SORT|CLUSTER|DISTRIBUTE"
+    r"|LIMIT|OFFSET|UNION|INTERSECT|EXCEPT|MINUS)\b",
+    re.IGNORECASE,
+)
+
+
+def _over_one_row(sql: str) -> str:
+    """Plan a top-level SELECT with no FROM clause over a one-row
+    ``VALUES`` (a ``LocalRelation``, collected with no Spark job) in
+    place of ``OneRowRelation``, whose scan is a job. Literals, quoted
+    names and parenthesised groups are blanked before looking for FROM.
+    A select list with a star is left alone: the row's column would
+    join it."""
+    if not re.match(r"\s*SELECT\b", sql, re.IGNORECASE):
+        return sql
+    masked, prev = sql, None
+    while masked != prev:
+        prev = masked
+        masked = _QUOTED_OR_GROUP.sub(lambda m: " " * len(m.group(0)), masked)
+    if re.search(r"\bFROM\b", masked, re.IGNORECASE):
+        return sql
+    clause = _AFTER_SELECT_LIST.search(masked)
+    at = clause.start() if clause else len(sql)
+    if "*" in masked[:at]:
+        return sql
+    one_row = "FROM VALUES (0) AS __one_row(__one_row)"
+    return f"{sql[:at].rstrip()} {one_row} {sql[at:]}".rstrip()
 
 
 class CrateSession:
@@ -215,11 +252,13 @@ class CrateSession:
     def _sql(self, stmt: str) -> DataFrame:
         """Shim + run one SELECT-shaped statement."""
         return self.spark.sql(
-            rewrite(
-                self._sub_current_setting(self._resolve_udf_calls(stmt)),
-                self._string_object_cols(),
-                session_user=self.current_user,
-                user_schemas=self._user_schemas(),
+            _over_one_row(
+                rewrite(
+                    self._sub_current_setting(self._resolve_udf_calls(stmt)),
+                    self._string_object_cols(),
+                    session_user=self.current_user,
+                    user_schemas=self._user_schemas(),
+                )
             )
         )
 
@@ -386,7 +425,14 @@ class CrateSession:
         # running statement sees itself)
         self._jobs_running[jid] = (jid, stmt[:500], self.current_user, started)
         try:
-            return self._dispatch(stmt)
+            # build the system views this statement names, and only
+            # those (sys.jobs, "sys"."jobs", pg_catalog_pg_type, SHOW
+            # TABLES): each read rebuilds its view from the current
+            # state, so runtime-backed views (sys.jobs, pg_cursors)
+            # stay live, and each CrateSession reads its own catalog
+            # through temp views that are global to the SparkSession
+            with views_held(self, stmt):
+                return self._dispatch(stmt)
         except Exception as e:
             err = str(e).split("\n")[0][:200]
             raise
@@ -417,7 +463,7 @@ class CrateSession:
         schema = cur["schema"]
 
         def empty():
-            return spark.createDataFrame([], schema)
+            return local_frame(spark, [], schema)
 
         # normalize (direction, count) -> (mode, n); n None = ALL
         mode, n = direction, None
@@ -470,7 +516,7 @@ class CrateSession:
                 rows = [r for _, r in zip(range(n), cur["it"])]
                 cur["fetched"] += len(rows)
                 cur["pos"] = cur["fetched"]
-                return spark.createDataFrame(rows, schema)
+                return local_frame(spark, rows, schema)
             # forward ABSOLUTE / RELATIVE on a stream: skip to the
             # target row, return it
             target = n if mode == "ABSOLUTE" else pos + n
@@ -492,7 +538,7 @@ class CrateSession:
                         f"Cannot return row: {target}, total rows: {cur['fetched']}"
                     )
                 return empty()
-            return spark.createDataFrame([row], schema)
+            return local_frame(spark, [row], schema)
 
         # scroll path: every fetched row is buffered; backward
         # movement replays the buffer in reverse
@@ -522,13 +568,13 @@ class CrateSession:
                 cur["pos"] = total + 1  # fetched past the end: after last
             else:
                 cur["pos"] = pos + n
-            return spark.createDataFrame(rows, schema) if rows else empty()
+            return local_frame(spark, rows, schema)
         if mode == "BACKWARD":
             first = pos - 1  # 1-based index of first row to return
             last = 1 if n is None else max(pos - n, 1)
             rows = [buf[r - 1] for r in range(min(first, len(buf)), last - 1, -1)]
             cur["pos"] = 0 if n is None else max(pos - n, 0)
-            return spark.createDataFrame(rows, schema) if rows else empty()
+            return local_frame(spark, rows, schema)
         # ABSOLUTE / RELATIVE: jump, return the single row at the new
         # position (empty if before start / past end — except ABSOLUTE
         # past end errors, Cursor.java:219)
@@ -545,18 +591,10 @@ class CrateSession:
             cur["pos"] = total + 1
             return empty()
         cur["pos"] = target
-        return spark.createDataFrame([buf[target - 1]], schema)
+        return local_frame(spark, [buf[target - 1]], schema)
 
     def _dispatch(self, stmt: str) -> DataFrame:
         upper = stmt.upper()
-
-        # build the system views this statement names, and only those
-        # (sys.jobs, "sys"."jobs", pg_catalog_pg_type, SHOW TABLES):
-        # each read rebuilds its view from the current state, so
-        # runtime-backed views (sys.jobs, pg_cursors) stay live, and
-        # each CrateSession reads its own catalog through temp views
-        # that are global to the SparkSession
-        register_views_read(self, stmt)
         if re.search(r"\bblob\s*\.", stmt, re.IGNORECASE):
             self._register_blob_views()
 
@@ -582,9 +620,7 @@ class CrateSession:
             for cid in ids:
                 (self._node_check_ack.add if flag
                  else self._node_check_ack.discard)(cid)
-            return self.spark.createDataFrame(
-                [(len(ids),)], "rowcount bigint"
-            )
+            return rowcount_frame(self.spark, len(ids))
 
         # privilege enforcement + admin statements (users/roles/
         # privileges, repositories/snapshots, session authorization)
@@ -642,7 +678,7 @@ class CrateSession:
                 settings=_parse_with(m.group(3) or ""),
             )
             self._register_blob_views()
-            return self.spark.createDataFrame([(1,)], "rowcount bigint")
+            return rowcount_frame(self.spark)
         # ALTER BLOB TABLE t SET (...) / RESET (...) — replication and
         # allocation settings are cluster-topology knobs, recorded as
         # table settings (blobs.rst "Altering a blob table")
@@ -662,7 +698,7 @@ class CrateSession:
                 for k in m.group(4).split(","):
                     store.settings.pop(k.strip().strip('"'), None)
             # ALTER acks with -1 rows affected (crash renders it so)
-            return self.spark.createDataFrame([(-1,)], "rowcount bigint")
+            return rowcount_frame(self.spark, -1)
         m = re.match(
             r"DROP\s+BLOB\s+TABLE\s+(IF\s+EXISTS\s+)?\"?([\w]+)\"?\s*$",
             stmt,
@@ -672,9 +708,7 @@ class CrateSession:
             dropped = self.blobs.drop(m.group(2), if_exists=bool(m.group(1)))
             if dropped:
                 self.spark.catalog.dropTempView(f"blob_{m.group(2).lower()}")
-            return self.spark.createDataFrame(
-                [(1 if dropped else 0,)], "rowcount bigint"
-            )
+            return rowcount_frame(self.spark, 1 if dropped else 0)
 
         # CREATE SCHEMA [IF NOT EXISTS] name (create-schema.rst):
         # explicit schemas persist while empty; CREATE TABLE in an
@@ -694,10 +728,10 @@ class CrateSession:
             )
             if exists:
                 if m.group(1):
-                    return self.spark.createDataFrame([(0,)], "rowcount bigint")
+                    return rowcount_frame(self.spark, 0)
                 raise ValueError(f"Schema '{name}' already exists")
             self._schemas.add(name)
-            return self.spark.createDataFrame([(1,)], "rowcount bigint")
+            return rowcount_frame(self.spark)
 
         # DROP SCHEMA [IF EXISTS] name [, ...] [CASCADE|RESTRICT]
         # (drop-schema.rst): RESTRICT (default) refuses non-empty
@@ -733,7 +767,7 @@ class CrateSession:
                     self._dml._drop_table(f'DROP TABLE "{t}"')
                 self._schemas.discard(name)
                 n_dropped += 1
-            return self.spark.createDataFrame([(n_dropped,)], "rowcount bigint")
+            return rowcount_frame(self.spark, n_dropped)
 
         if upper.startswith("EXPLAIN"):
             analyze = re.match(r"EXPLAIN\s+(\(\s*)?ANALYZE", upper) is not None
@@ -747,7 +781,7 @@ class CrateSession:
             if analyze:
                 return self._explain_analyze(body)
             plan = self.explain(body)
-            return self.spark.createDataFrame([(plan,)], "plan string")
+            return local_frame(self.spark, [(plan,)], "plan string")
 
         # SET GLOBAL [PERSISTENT|TRANSIENT] assignments (set.rst; AL
         # privilege class): comma-separated `k = v` pairs, values may
@@ -765,7 +799,8 @@ class CrateSession:
                 self._cluster_settings[key] = val
                 # JSON spelling in the conf: booleans stay lowercase
                 self.spark.conf.set(key, _json.dumps(val) if isinstance(val, bool) else str(val))
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(k, _json.dumps(v) if isinstance(v, bool) else str(v)) for k, v in pairs],
                 "setting string, value string",
             )
@@ -781,8 +816,8 @@ class CrateSession:
                     self.spark.conf.unset(key)
                 except Exception:  # noqa: BLE001 - never-set key
                     pass
-            return self.spark.createDataFrame(
-                [(k,) for k in keys], "setting string"
+            return local_frame(
+                self.spark, [(k,) for k in keys], "setting string"
             )
 
         # ALTER CLUSTER REROUTE/DECOMMISSION/GC (alter-cluster.rst):
@@ -795,7 +830,7 @@ class CrateSession:
             re.IGNORECASE,
         )
         if m:
-            return self.spark.createDataFrame([("OK",)], "status string")
+            return local_frame(self.spark, [("OK",)], "status string")
 
         # SET [SESSION|LOCAL] key { = | TO } value|DEFAULT (set.rst,
         # config/session.rst; keys may be double-quoted, search_path
@@ -814,14 +849,14 @@ class CrateSession:
                     pass
             else:
                 self.spark.conf.set(key, val.strip("'\""))
-            return self.spark.createDataFrame(
-                [(key, val)], "setting string, value string"
+            return local_frame(
+                self.spark, [(key, val)], "setting string, value string"
             )
 
         m = re.match(r"RESET\s+(\S+)$", stmt, re.IGNORECASE)
         if m:
             self.spark.conf.unset(m.group(1))
-            return self.spark.createDataFrame([(m.group(1),)], "setting string")
+            return local_frame(self.spark, [(m.group(1),)], "setting string")
 
         m = re.match(
             r"CREATE\s+(OR\s+REPLACE\s+)?FUNCTION\s+"
@@ -859,13 +894,13 @@ class CrateSession:
             # user table
             for name in sorted(self.tables):
                 self.analyze(name)
-            return self.spark.createDataFrame([(1,)], "rowcount bigint")
+            return rowcount_frame(self.spark)
 
         m = re.match(r"SHOW\s+CREATE\s+TABLE\s+([\w.\"]+)\s*$", stmt, re.IGNORECASE)
         if m:
             name = m.group(1).strip('"').split(".")[-1]
-            return self.spark.createDataFrame(
-                [(self._show_create_table(name),)], "create_table string"
+            return local_frame(
+                self.spark, [(self._show_create_table(name),)], "create_table string"
             )
 
         # SHOW statements (reference sql/statements/show.rst;
@@ -892,15 +927,15 @@ class CrateSession:
         if re.match(
             r"SHOW\s+TRANSACTION\s+ISOLATION\s+LEVEL\s*$", stmt, re.IGNORECASE
         ):
-            return self.spark.createDataFrame(
-                [("read uncommitted",)], "transaction_isolation string"
+            return local_frame(
+                self.spark, [("read uncommitted",)], "transaction_isolation string"
             )
 
         m = re.match(r"SHOW\s+(\S+)\s*$", stmt, re.IGNORECASE)
         if m:
             val = self.spark.conf.get(m.group(1), None)
-            return self.spark.createDataFrame(
-                [(m.group(1), val)], "setting string, value string"
+            return local_frame(
+                self.spark, [(m.group(1), val)], "setting string, value string"
             )
 
         m = re.match(
@@ -921,8 +956,8 @@ class CrateSession:
             ]
             for name in names:
                 self.spark.catalog.refreshTable(name)
-            return self.spark.createDataFrame(
-                [(n,) for n in names], "refreshed string"
+            return local_frame(
+                self.spark, [(n,) for n in names], "refreshed string"
             )
 
         # Transaction statements are accepted no-ops: the engine is
@@ -930,7 +965,7 @@ class CrateSession:
         # visitBegin/visitCommit return NoopPlan). KILL likewise.
         m = re.match(r"(BEGIN|COMMIT|ROLLBACK|END)\b|KILL\s+", upper)
         if m:
-            return self.spark.createDataFrame([("OK",)], "status string")
+            return local_frame(self.spark, [("OK",)], "status string")
 
         # ALTER CLUSTER SWAP TABLE a TO b (alter-cluster.rst): atomic
         # name exchange — the blue/green cutover primitive
@@ -946,7 +981,7 @@ class CrateSession:
             self._dml.crate_tables[a], self._dml.crate_tables[b] = tb, ta
             self._dml._refresh(a)
             self._dml._refresh(b)
-            return self.spark.createDataFrame([(a, b)], "source string, target string")
+            return local_frame(self.spark, [(a, b)], "source string, target string")
 
         # More PG-client session-management no-ops (reference planner
         # visits these to NoopPlan too: deallocate.rst, discard.rst,
@@ -958,7 +993,7 @@ class CrateSession:
             upper,
         )
         if m:
-            return self.spark.createDataFrame([("OK",)], "status string")
+            return local_frame(self.spark, [("OK",)], "status string")
 
         # OPTIMIZE TABLE [PARTITION (...)] [WITH (...)]: parquet
         # small-file compaction — the Lucene segment-merge analog
@@ -1006,8 +1041,8 @@ class CrateSession:
                     (name, "ok", stats.get("files_before", 0),
                      stats.get("files_after", 0))
                 )
-            return self.spark.createDataFrame(
-                out_rows,
+            return local_frame(
+                self.spark, out_rows,
                 "table string, status string, files_before int, files_after int",
             )
 
@@ -1021,7 +1056,7 @@ class CrateSession:
             df = self._sql(m.group(2))
             self._views[name] = m.group(2)[:500]
             self.register(name, df)
-            return self.spark.createDataFrame([(name,)], "view string")
+            return local_frame(self.spark, [(name,)], "view string")
 
         m = re.match(r"DROP\s+VIEW\s+(IF\s+EXISTS\s+)?([\w.\"]+)\s*$", stmt, re.IGNORECASE)
         if m:
@@ -1029,7 +1064,7 @@ class CrateSession:
             self.spark.catalog.dropTempView(name)
             self.tables.pop(name, None)
             self._views.pop(name, None)
-            return self.spark.createDataFrame([(name,)], "dropped string")
+            return local_frame(self.spark, [(name,)], "dropped string")
 
         # Cursors (reference session/Cursor.java): DECLARE / FETCH /
         # CLOSE. FETCH n streams through toLocalIterator — one
@@ -1068,7 +1103,7 @@ class CrateSession:
                 "buffer": [],  # scroll only: materialized rows
                 "pos": 0,  # scroll only: 1-based row of last fetch; 0 = before first
             }
-            return self.spark.createDataFrame([(m.group(1),)], "cursor string")
+            return local_frame(self.spark, [(m.group(1),)], "cursor string")
 
         m = re.match(
             r"FETCH\s+(?:(NEXT|PRIOR|FORWARD|BACKWARD|ABSOLUTE|RELATIVE)\s+)?"
@@ -1092,7 +1127,9 @@ class CrateSession:
             closed = list(self._cursors) if target == "all" else [target]
             for name in closed:
                 self._cursors.pop(name, None)
-            return self.spark.createDataFrame([(n,) for n in closed] or [("",)], "closed string")
+            return local_frame(
+                self.spark, [(n,) for n in closed] or [("",)], "closed string"
+            )
 
         # CREATE ANALYZER (reference FulltextAnalyzerResolver.java,
         # create-analyzer.rst): register a named tokenizer config that
@@ -1111,12 +1148,12 @@ class CrateSession:
                 "extends": (m.group(2) or "").lower() or None,
                 "definition": body.strip(),
             }
-            return self.spark.createDataFrame([(m.group(1),)], "analyzer string")
+            return local_frame(self.spark, [(m.group(1),)], "analyzer string")
 
         m = re.match(r"DROP\s+ANALYZER\s+\"?(\w+)\"?\s*$", stmt, re.IGNORECASE)
         if m:
             self._analyzers.pop(m.group(1).lower(), None)
-            return self.spark.createDataFrame([(m.group(1),)], "dropped string")
+            return local_frame(self.spark, [(m.group(1),)], "dropped string")
 
         # MATCH against a NAMED fulltext index searches its source
         # columns (fulltext-indices.rst composite indexes) — resolved
@@ -1237,7 +1274,7 @@ class CrateSession:
         registered source tables."""
         ct = self._dml.crate_tables.get(name)
         if ct is not None:
-            fields = self.spark.createDataFrame([], ct.schema_ddl).schema.fields
+            fields = ct.schema.fields
 
             def _decl_type(decl, indent):
                 # declared crate spelling; objects nest their
@@ -1357,9 +1394,22 @@ class CrateSession:
 
     def execute_bulk(self, sql: str, bulk_params: list[list]) -> list:
         """Bulk execution (Session.bulkExec:717): one statement, many
-        parameter rows; returns the per-row results (row counts for
-        DML, DataFrames otherwise)."""
-        return [self.execute(sql, params=row) for row in bulk_params]
+        parameter rows. Returns one entry per row: the rows affected
+        for INSERT/UPDATE/DELETE (the value of the rowcount frame), the
+        number of result rows for any other statement, or the exception
+        the row raised; a failing row does not stop the rows after it
+        (http.rst "Bulk errors")."""
+        dml = re.match(r"\s*(INSERT|UPDATE|DELETE)\b", sql, re.IGNORECASE)
+        out: list = []
+        for row in bulk_params:
+            try:
+                df = self.execute(sql, params=list(row))
+                rows = [] if df is None else df.collect()
+                counted = dml and df.columns == ["rowcount"]
+                out.append(rows[0][0] if counted else len(rows))
+            except Exception as e:  # noqa: BLE001 - reported per row
+                out.append(e)
+        return out
 
     # -- fulltext --------------------------------------------------------
     _MATCH_CALL_RE = re.compile(
@@ -1839,8 +1889,9 @@ class CrateSession:
             "seq": self._udf_seq,
         }
         self._register_udf_dispatch(schema, name.strip('`"').lower())
-        return self.spark.createDataFrame(
-            [(f"{schema}.{name}", ret_type)], "function string, returns string"
+        return local_frame(
+            self.spark, [(f"{schema}.{name}", ret_type)],
+            "function string, returns string",
         )
 
     #: widening order for overloads whose return types differ — the
@@ -1908,7 +1959,7 @@ class CrateSession:
         schema, _, name = qname.rpartition(".")
         schema = (schema or self._search_path()[0]).lower()
         key = (schema, name.strip('`"').lower())
-        empty = self.spark.createDataFrame([], "dropped string")
+        empty = local_frame(self.spark, [], "dropped string")
         overloads = self._udfs.get(key)
         if overloads is None:
             if if_exists:
@@ -1939,7 +1990,7 @@ class CrateSession:
                     self._udf_spark_name(schema, name.lower())
                 )
             )
-        return self.spark.createDataFrame([(qname,)], "dropped string")
+        return local_frame(self.spark, [(qname,)], "dropped string")
 
     def _explain_analyze(self, body: str) -> DataFrame:
         """EXPLAIN ANALYZE: execute the statement and report per-phase
@@ -1962,8 +2013,8 @@ class CrateSession:
             ("plan", plan_text.strip().split("\n")[0], (t1 - t0) * 1000.0, None),
             ("execute", physical.strip().split("\n")[0], (t2 - t1) * 1000.0, rows),
         ]
-        return self.spark.createDataFrame(
-            out, "phase string, detail string, millis double, rows bigint"
+        return local_frame(
+            self.spark, out, "phase string, detail string, millis double, rows bigint"
         )
 
     def explain(self, sql: str) -> str:
@@ -1983,7 +2034,7 @@ class CrateSession:
             status = "analyzed"
         except Exception:
             status = "skipped (temp view)"
-        return self.spark.createDataFrame([(table, status)], "table string, status string")
+        return local_frame(self.spark, [(table, status)], "table string, status string")
 
 
 def _parse_setting_value(v: str):

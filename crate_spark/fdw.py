@@ -23,6 +23,8 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
+from crate_spark.session import rowcount_frame
+
 
 class FdwError(Exception):
     """FDW catalog failure (unknown server, duplicate, bad wrapper)."""
@@ -160,9 +162,6 @@ class FdwStore:
         del self.tables[key]
         return True
 
-    def is_foreign(self, name: str) -> bool:
-        return name.split(".")[-1].lower() in self.tables
-
     def read(self, spark, name: str, current_user: str):
         """Build the foreign-scan DataFrame (ForeignCollect analog).
         JDBC: Spark's jdbc source — partitionable, filter-pushing.
@@ -222,9 +221,6 @@ def route_fdw(session, stmt: str):
     spark = session.spark
     store: FdwStore = session.fdw
 
-    def ok(n: int = 1):
-        return spark.createDataFrame([(n,)], "rowcount bigint")
-
     m = re.match(
         r"CREATE\s+SERVER\s+(IF\s+NOT\s+EXISTS\s+)?\"?([\w]+)\"?\s+"
         r"FOREIGN\s+DATA\s+WRAPPER\s+(\w+)"
@@ -237,7 +233,7 @@ def route_fdw(session, stmt: str):
             m.group(2), m.group(3), parse_options(m.group(4)),
             if_not_exists=bool(m.group(1)),
         )
-        return ok(1 if created else 0)
+        return rowcount_frame(spark, 1 if created else 0)
 
     m = re.match(
         r"ALTER\s+SERVER\s+\"?([\w]+)\"?\s+OPTIONS\s*\((.*)\)\s*$",
@@ -246,7 +242,7 @@ def route_fdw(session, stmt: str):
     )
     if m:
         store.alter_server(m.group(1), parse_options(m.group(2)))
-        return ok()
+        return rowcount_frame(spark)
 
     m = re.match(
         r"DROP\s+SERVER\s+(IF\s+EXISTS\s+)?\"?([\w]+)\"?\s*(CASCADE|RESTRICT)?\s*$",
@@ -259,7 +255,7 @@ def route_fdw(session, stmt: str):
             if_exists=bool(m.group(1)),
             cascade=(m.group(3) or "").upper() == "CASCADE",
         )
-        return ok(1 if dropped else 0)
+        return rowcount_frame(spark, 1 if dropped else 0)
 
     m = re.match(
         r"CREATE\s+FOREIGN\s+TABLE\s+(IF\s+NOT\s+EXISTS\s+)?\"?([\w.]+)\"?\s*"
@@ -290,7 +286,7 @@ def route_fdw(session, stmt: str):
             key = name.split(".")[-1].lower()
             df = store.read(spark, key, session.current_user)
             df.createOrReplaceTempView(key)
-        return ok(1 if created else 0)
+        return rowcount_frame(spark, 1 if created else 0)
 
     m = re.match(
         r"DROP\s+FOREIGN\s+TABLE\s+(IF\s+EXISTS\s+)?\"?([\w.]+)\"?\s*$",
@@ -301,7 +297,7 @@ def route_fdw(session, stmt: str):
         dropped = store.drop_table(m.group(2), if_exists=bool(m.group(1)))
         if dropped:
             spark.catalog.dropTempView(m.group(2).split(".")[-1].lower())
-        return ok(1 if dropped else 0)
+        return rowcount_frame(spark, 1 if dropped else 0)
 
     m = re.match(
         r"CREATE\s+USER\s+MAPPING\s+(?:IF\s+NOT\s+EXISTS\s+)?FOR\s+"
@@ -313,7 +309,7 @@ def route_fdw(session, stmt: str):
     if m:
         user = m.group(1) or session.current_user
         store.create_user_mapping(user, m.group(2), parse_options(m.group(3)))
-        return ok()
+        return rowcount_frame(spark)
 
     m = re.match(
         r"DROP\s+USER\s+MAPPING\s+(IF\s+EXISTS\s+)?FOR\s+"
@@ -324,6 +320,6 @@ def route_fdw(session, stmt: str):
     if m:
         user = m.group(2) or session.current_user
         dropped = store.drop_user_mapping(user, m.group(3), if_exists=bool(m.group(1)))
-        return ok(1 if dropped else 0)
+        return rowcount_frame(spark, 1 if dropped else 0)
 
     return None

@@ -15,6 +15,10 @@ flow for unparameterized statements, which is exactly the subset here:
   reference's SQLSTATE-bearing envelope) then ReadyForQuery
 - 'X' Terminate
 
+Each reply leaves in one write, as PostgreSQL's backend flushes its
+output buffer once per reply, and connections set ``TCP_NODELAY``: a
+reply sent in pieces waits for the client's delayed ACK (~40 ms).
+
 Values travel in text format (every type has a text rendering; psql
 displays it directly): booleans as t/f, timestamps ISO, arrays in
 PG-brace form, NULL as the -1 length marker.
@@ -89,12 +93,18 @@ def _cstr(s: str) -> bytes:
     return s.encode() + b"\x00"
 
 
+#: a reply buffer this large is sent before the reply is complete
+_FLUSH_AT = 64 * 1024
+
+
 class _PgHandler(socketserver.BaseRequestHandler):
     session = None  # injected
 
     def handle(self):
         sock: socket.socket = self.request
-        if not self._startup(sock):
+        started = self._startup(sock)
+        self._flush(sock)
+        if not started:
             return
         while True:
             head = self._read_exact(sock, 5)
@@ -111,21 +121,34 @@ class _PgHandler(socketserver.BaseRequestHandler):
             elif tag == b"B":
                 self._bind(sock, body)
             elif tag == b"D":
-                sock.sendall(self._describe(body))
+                self._put(sock, self._describe(body))
             elif tag == b"E":
                 self._execute(sock, body)
             elif tag == b"C":
-                sock.sendall(_msg(b"3", b""))  # CloseComplete
+                self._put(sock, _msg(b"3", b""))  # CloseComplete
             elif tag == b"H":
-                pass  # Flush: we always write eagerly
+                pass  # Flush: every reply is flushed when it is complete
             elif tag == b"S":
-                sock.sendall(_msg(b"Z", b"I"))  # Sync
+                self._put(sock, _msg(b"Z", b"I"))  # Sync
             else:
                 self._error(sock, "0A000", f"message type {tag!r} not supported")
-                sock.sendall(_msg(b"Z", b"I"))
+                self._put(sock, _msg(b"Z", b"I"))
+            self._flush(sock)
+
+    def _put(self, sock, msg: bytes) -> None:
+        self._out += msg
+        if len(self._out) >= _FLUSH_AT:
+            self._flush(sock)
+
+    def _flush(self, sock) -> None:
+        if self._out:
+            sock.sendall(self._out)
+            self._out.clear()
 
     # -- extended query protocol (Session.parse/bind/execute analogs) ----
     def setup(self):
+        self.request.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
+        self._out = bytearray()
         self._stmts: dict[str, str] = {}
         self._portals: dict[str, object] = {}
         self.user = "crate"
@@ -143,7 +166,7 @@ class _PgHandler(socketserver.BaseRequestHandler):
         name, rest = body.split(b"\x00", 1)
         query, _rest = rest.split(b"\x00", 1)
         self._stmts[name.decode()] = query.decode()
-        sock.sendall(_msg(b"1", b""))  # ParseComplete
+        self._put(sock, _msg(b"1", b""))  # ParseComplete
 
     def _bind(self, sock, body: bytes) -> None:
         """'B': bind text-format params into a portal (Session.bind:403).
@@ -167,7 +190,7 @@ class _PgHandler(socketserver.BaseRequestHandler):
         try:
             df = self._exec(sql, params=params or None)
             self._portals[portal.decode()] = df
-            sock.sendall(_msg(b"2", b""))  # BindComplete
+            self._put(sock, _msg(b"2", b""))  # BindComplete
         except Exception as e:
             self._fail(sock, e)
 
@@ -192,7 +215,7 @@ class _PgHandler(socketserver.BaseRequestHandler):
             return False
         length, code = struct.unpack("!II", raw)
         if code == _SSL_REQUEST:
-            sock.sendall(b"N")
+            sock.sendall(b"N")  # the client waits for this before going on
             raw = self._read_exact(sock, 8)
             if raw is None:
                 return False
@@ -212,7 +235,7 @@ class _PgHandler(socketserver.BaseRequestHandler):
             return False
         if role.password is not None:
             # AuthenticationCleartextPassword (PasswordAuthenticationMethod)
-            sock.sendall(_msg(b"R", struct.pack("!I", 3)))
+            sock.sendall(_msg(b"R", struct.pack("!I", 3)))  # awaits the password
             tag = self._read_exact(sock, 1)
             if tag != b"p":
                 return False
@@ -221,16 +244,16 @@ class _PgHandler(socketserver.BaseRequestHandler):
             if pw[:-1].decode(errors="replace") != role.password:
                 self._error(sock, "28P01", f'password authentication failed for user "{self.user}"')
                 return False
-        sock.sendall(_msg(b"R", struct.pack("!I", 0)))  # AuthenticationOk
+        self._put(sock, _msg(b"R", struct.pack("!I", 0)))  # AuthenticationOk
         for k, v in (
             ("server_version", "14.0"),
             ("server_encoding", "UTF8"),
             ("client_encoding", "UTF8"),
             ("crate_version", "5.x-spark"),
         ):
-            sock.sendall(_msg(b"S", _cstr(k) + _cstr(v)))
-        sock.sendall(_msg(b"K", struct.pack("!II", 0, 0)))  # BackendKeyData
-        sock.sendall(_msg(b"Z", b"I"))  # ReadyForQuery (idle)
+            self._put(sock, _msg(b"S", _cstr(k) + _cstr(v)))
+        self._put(sock, _msg(b"K", struct.pack("!II", 0, 0)))  # BackendKeyData
+        self._put(sock, _msg(b"Z", b"I"))  # ReadyForQuery (idle)
         return True
 
     def _simple_query(self, sock, sql: str) -> None:
@@ -238,20 +261,21 @@ class _PgHandler(socketserver.BaseRequestHandler):
             self._complete(sock, self._exec(sql), describe=True)
         except Exception as e:
             self._fail(sock, e)
-        sock.sendall(_msg(b"Z", b"I"))
+        self._put(sock, _msg(b"Z", b"I"))
+        self._flush(sock)
 
     def _complete(self, sock, df, *, describe: bool) -> None:
         """Send df's rows and CommandComplete (a bare OK for no result);
         a simple query sends RowDescription first, an extended Execute
         does not (Describe sent it)."""
         if df is None:
-            sock.sendall(_msg(b"C", _cstr("OK")))
+            self._put(sock, _msg(b"C", _cstr("OK")))
             return
         rows = df.collect()
         if describe:
-            sock.sendall(_msg(b"T", self._row_description(df)))
+            self._put(sock, _msg(b"T", self._row_description(df)))
         self._data_rows(sock, df.schema.fields, rows)
-        sock.sendall(_msg(b"C", _cstr(f"SELECT {len(rows)}")))
+        self._put(sock, _msg(b"C", _cstr(f"SELECT {len(rows)}")))
 
     @staticmethod
     def _row_description(df) -> bytes:
@@ -265,8 +289,7 @@ class _PgHandler(socketserver.BaseRequestHandler):
             )
         return desc
 
-    @staticmethod
-    def _data_rows(sock, fields, rows) -> None:
+    def _data_rows(self, sock, fields, rows) -> None:
         for r in rows:
             payload = struct.pack("!H", len(fields))
             for v in r:
@@ -276,7 +299,7 @@ class _PgHandler(socketserver.BaseRequestHandler):
                 else:
                     b = t.encode()
                     payload += struct.pack("!I", len(b)) + b
-            sock.sendall(_msg(b"D", payload))
+            self._put(sock, _msg(b"D", payload))
 
     def _fail(self, sock, exc: Exception) -> None:
         self._error(sock, _sqlstate_of(exc), str(exc).split("\n")[0][:400])
@@ -287,7 +310,7 @@ class _PgHandler(socketserver.BaseRequestHandler):
         payload = (
             b"S" + _cstr("ERROR") + b"C" + _cstr(sqlstate) + b"M" + _cstr(message) + b"\x00"
         )
-        sock.sendall(_msg(b"E", payload))
+        self._put(sock, _msg(b"E", payload))
 
     @staticmethod
     def _read_exact(sock, n: int) -> bytes | None:

@@ -26,9 +26,13 @@ from __future__ import annotations
 
 import os
 from contextlib import contextmanager
+from functools import lru_cache
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 #: Tables provided by the driver (TESTDATA.md). One parquet file each.
 TABLES = (
@@ -119,6 +123,35 @@ def conf_scope(spark: SparkSession, overrides: dict[str, str]):
                 spark.conf.unset(key)
             else:
                 spark.conf.set(key, value)
+
+
+@lru_cache(maxsize=1024)
+def ddl_schema(ddl: str) -> StructType:
+    """``ddl`` parsed once per distinct string (one JVM parse, not a
+    DataFrame built and analyzed). Callers must not mutate the result."""
+    return StructType.fromDDL(ddl)
+
+
+def local_frame(spark: SparkSession, rows, schema: str | StructType) -> DataFrame:
+    """``rows`` (tuples in ``schema`` order) as a ``LocalRelation``
+    built from a pyarrow Table: collecting it, or a projection or
+    filter of it, runs no Spark job, where ``createDataFrame(rows)``
+    plans a ``LogicalRDD`` read by a Python-worker job. Values convert
+    as there, through ``StructType.toInternal``."""
+    if isinstance(schema, str):
+        schema = ddl_schema(schema)
+    arrow = to_arrow_schema(schema)
+    internal = [schema.toInternal(r) for r in rows]
+    table = pa.Table.from_arrays(
+        [pa.array([r[i] for r in internal], type=f.type) for i, f in enumerate(arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema)
+
+
+def rowcount_frame(spark: SparkSession, n: int = 1) -> DataFrame:
+    """The one-row answer of a DML or DDL statement: rows affected."""
+    return local_frame(spark, [(n,)], "rowcount bigint")
 
 
 def input_is_small(df: DataFrame) -> bool:

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from crate_spark.dialect import rewrite
 from crate_spark.dml import CrateTable
+from crate_spark.session import local_frame, rowcount_frame
 
 #: CrateDB type spellings -> Spark DDL types
 #: (reference ``types/DataTypes.java``; object columns are stored as
@@ -301,7 +302,7 @@ class SqlDmlRouter:
         timestamp_millis() for every timestamp column of the table."""
         ts_cols = [
             f.name
-            for f in self.spark.createDataFrame([], table.schema_ddl).schema.fields
+            for f in table.schema.fields
             if f.dataType.simpleString() in ("timestamp", "timestamp_ntz")
         ]
         for col in ts_cols:
@@ -316,9 +317,6 @@ class SqlDmlRouter:
                 where,
             )
         return where
-
-    def _count_df(self, n: int) -> DataFrame:
-        return self.spark.createDataFrame([(n,)], "rowcount bigint")
 
     # -- dispatch --------------------------------------------------------
     def route(self, stmt: str) -> DataFrame | None:
@@ -374,7 +372,7 @@ class SqlDmlRouter:
             raise ValueError("unsupported CREATE TABLE syntax")
         name = m.group(2).strip('"').split(".")[-1]
         if m.group(1) and name in self.crate_tables:
-            return self._count_df(0)
+            return rowcount_frame(self.spark, 0)
         open_idx = m.end() - 1
         close_idx = _find_close(masked, open_idx)
         body = masked[open_idx + 1 : close_idx]
@@ -408,7 +406,7 @@ class SqlDmlRouter:
             self.crate_tables[name] = t
             self._record_schema(m.group(2), name)
             self._refresh(name)
-            return self._count_df(1)
+            return rowcount_frame(self.spark)
 
         cols: list[str] = []
         crate_cols: list[dict] = []
@@ -640,7 +638,7 @@ class SqlDmlRouter:
         }
         for cname in untyped_generated:
             typed = ", ".join(c for c in cols if " " in c)
-            probe = self.spark.createDataFrame([], typed or "__x int")
+            probe = local_frame(self.spark, [], typed or "__x int")
             dt = probe.selectExpr(
                 f"({generated_eval[cname]}) AS __g"
             ).schema[0].dataType.simpleString()
@@ -698,7 +696,7 @@ class SqlDmlRouter:
         self.crate_tables[name] = t
         self._record_schema(m.group(2), name)
         self._refresh(name)
-        return self._count_df(1)
+        return rowcount_frame(self.spark)
 
     def _create_table_as(self, raw_name: str, query: str, literals: list[str]) -> DataFrame:
         """CREATE TABLE t AS <query> (reference ``CreateTableAsPlan``):
@@ -722,7 +720,7 @@ class SqlDmlRouter:
         self._record_schema(raw_name, name)
         n = t.insert(src)
         self._refresh(name)
-        return self._count_df(n)
+        return rowcount_frame(self.spark, n)
 
     def _alter_table(self, masked: str, literals: list[str]) -> DataFrame:
         """ALTER TABLE ADD/DROP/RENAME COLUMN (reference
@@ -745,7 +743,7 @@ class SqlDmlRouter:
                 # partition-scoped OPEN/CLOSE (partitioned-tables.rst):
                 # partition open-state isn't tracked on the flat
                 # parquet store — accepted, table stays queryable
-                return self._count_df(1)
+                return rowcount_frame(self.spark)
             if ocm.group(3).upper() == "CLOSE":
                 table.settings["closed"] = "true"
                 table._save_meta()
@@ -755,7 +753,7 @@ class SqlDmlRouter:
                 table.settings.pop("closed", None)
                 table._save_meta()
                 self._refresh(name)
-            return self._count_df(1)
+            return rowcount_frame(self.spark)
 
         # ALTER TABLE a RENAME TO b (alter-table.rst): directory move +
         # catalog/view swap — the table-level rename, distinct from
@@ -779,7 +777,7 @@ class SqlDmlRouter:
             self.spark.catalog.dropTempView(old)
             self.owner.tables.pop(old, None)
             self._refresh(new)
-            return self._count_df(1)
+            return rowcount_frame(self.spark)
 
         # ALTER TABLE t [PARTITION (...)] SET (k = v, ...) / RESET (...)
         # — storage settings on the table metadata (alter-table.rst;
@@ -810,7 +808,7 @@ class SqlDmlRouter:
                 for k in sm.group(3).split(","):
                     table.settings.pop(k.strip().strip('"'), None)
             table._save_meta()
-            return self._count_df(1)
+            return rowcount_frame(self.spark)
 
         m = re.match(
             r"\s*ALTER\s+TABLE\s+([\w.\"]+)\s+"
@@ -866,10 +864,7 @@ class SqlDmlRouter:
                 table._save_meta()
         elif m.group(4):  # DROP COLUMN
             col = m.group(4)
-            fields = [
-                f for f in self.spark.createDataFrame([], table.schema_ddl).schema.fields
-                if f.name != col
-            ]
+            fields = [f for f in table.schema.fields if f.name != col]
             if table._has_data():
                 table._overwrite(table.read().drop(col))
             table.schema_ddl = ", ".join(
@@ -925,7 +920,7 @@ class SqlDmlRouter:
                     )
             else:
                 old, new = ocol, ncol
-                fields = self.spark.createDataFrame([], table.schema_ddl).schema.fields
+                fields = table.schema.fields
                 renamed = (
                     table.read().withColumnRenamed(old, new)
                     if table._has_data() else None
@@ -941,7 +936,7 @@ class SqlDmlRouter:
                 if renamed is not None:
                     table._overwrite(renamed)
         self._refresh(name)
-        return self._count_df(1)
+        return rowcount_frame(self.spark)
 
     def _drop_table(self, masked: str) -> DataFrame:
         m = re.match(
@@ -952,7 +947,7 @@ class SqlDmlRouter:
         name = m.group(2).strip('"').split(".")[-1]
         if name not in self.crate_tables:
             if m.group(1):
-                return self._count_df(0)
+                return rowcount_frame(self.spark, 0)
             raise ValueError(f"unknown table '{name}'")
         t = self.crate_tables.pop(name)
         shutil.rmtree(t.path, ignore_errors=True)
@@ -961,7 +956,7 @@ class SqlDmlRouter:
         # implicit schemas vanish with their last object
         # (create-schema.rst) — schemata recomputes from this map
         getattr(self.owner, "_table_schema", {}).pop(name, None)
-        return self._count_df(1)
+        return rowcount_frame(self.spark)
 
     # -- INSERT ----------------------------------------------------------
     def _insert(self, masked: str, literals: list[str]) -> DataFrame:
@@ -993,7 +988,7 @@ class SqlDmlRouter:
             body,
             re.IGNORECASE | re.DOTALL,
         )
-        declared = self.spark.createDataFrame([], table.schema_ddl).schema
+        declared = table.schema
         declared_types = {f.name: f.dataType.simpleString() for f in declared.fields}
         if cm:
             if cm.group(2).upper() == "NOTHING":
@@ -1052,7 +1047,7 @@ class SqlDmlRouter:
                 dt = widen.get(dt, dt)
                 table.schema_ddl += f", {c} {dt}"
             table._save_meta()
-            declared = self.spark.createDataFrame([], table.schema_ddl).schema
+            declared = table.schema
             declared_types = {
                 f.name: f.dataType.simpleString() for f in declared.fields
             }
@@ -1089,13 +1084,13 @@ class SqlDmlRouter:
         if conflict is None:
             out = table.insert(src, returning=returning)
             self._refresh(name)
-            return out if returning is not None else self._count_df(out)
+            return out if returning is not None else rowcount_frame(self.spark, out)
         if conflict[0] == "nothing":
             stats = table.upsert(src, do_nothing=True)
         else:
             stats = table.upsert(src, set_exprs=conflict[1])
         self._refresh(name)
-        return self._count_df(stats["inserted"] + stats["updated"])
+        return rowcount_frame(self.spark, stats["inserted"] + stats["updated"])
 
     # -- UPDATE / DELETE -------------------------------------------------
     def _update(self, masked: str, literals: list[str]) -> DataFrame:
@@ -1140,7 +1135,7 @@ class SqlDmlRouter:
                     )
         out = table.update(set_exprs, where=where, returning=returning)
         self._refresh(name)
-        return out if returning is not None else self._count_df(out)
+        return out if returning is not None else rowcount_frame(self.spark, out)
 
     def _delete(self, masked: str, literals: list[str]) -> DataFrame:
         m = re.match(
@@ -1161,7 +1156,7 @@ class SqlDmlRouter:
         )
         n = table.delete(where)
         self._refresh(name)
-        return self._count_df(n)
+        return rowcount_frame(self.spark, n)
 
     # -- COPY ------------------------------------------------------------
     def _copy(self, masked: str, literals: list[str]) -> DataFrame:
@@ -1204,7 +1199,8 @@ class SqlDmlRouter:
                 delimiter=props.get("delimiter", ","),
             )
             self._refresh(name)
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(summary["loaded"], summary["errors"])],
                 "loaded bigint, errors bigint",
             )
@@ -1219,4 +1215,4 @@ class SqlDmlRouter:
             directory=bool(m.group(6)),
             compression=props.get("compression"),
         )
-        return self._count_df(n)
+        return rowcount_frame(self.spark, n)

@@ -37,6 +37,8 @@ import os
 import re
 from dataclasses import dataclass, field
 
+from crate_spark.session import rowcount_frame
+
 
 class ReplicationError(Exception):
     """Publication/subscription failure."""
@@ -185,7 +187,7 @@ class SubscriptionStore:
                 defaults=remote.defaults,
                 settings=remote.settings,
             )
-            schema = session.spark.createDataFrame([], remote.schema_ddl).schema
+            schema = remote.schema
             ckpt = os.path.join(
                 session.storage_dir, f"_sub_ckpt_{key}_{tname}"
             )
@@ -249,9 +251,6 @@ def route_replication(session, stmt: str):
     """Handle a PUBLICATION / SUBSCRIPTION statement; None if not one."""
     spark = session.spark
 
-    def ok(n: int = 1):
-        return spark.createDataFrame([(n,)], "rowcount bigint")
-
     m = re.match(
         r"CREATE\s+PUBLICATION\s+\"?([\w]+)\"?\s+FOR\s+"
         r"(ALL\s+TABLES|TABLE\s+[\w.\",\s]+?)\s*$",
@@ -274,7 +273,7 @@ def route_replication(session, stmt: str):
                         f"Cannot publish '{t}': only stored tables are publishable"
                     )
         session.publications.create(m.group(1), tables, session.current_user)
-        return ok()
+        return rowcount_frame(spark)
 
     m = re.match(
         r"ALTER\s+PUBLICATION\s+\"?([\w]+)\"?\s+(ADD|DROP|SET)\s+TABLE\s+([\w.\",\s]+)\s*$",
@@ -294,7 +293,7 @@ def route_replication(session, stmt: str):
                 add=names if verb == "ADD" else [],
                 drop=names if verb == "DROP" else [],
             )
-        return ok()
+        return rowcount_frame(spark)
 
     m = re.match(
         r"DROP\s+PUBLICATION\s+(IF\s+EXISTS\s+)?\"?([\w]+)\"?\s*$",
@@ -303,7 +302,7 @@ def route_replication(session, stmt: str):
     )
     if m:
         dropped = session.publications.drop(m.group(2), if_exists=bool(m.group(1)))
-        return ok(1 if dropped else 0)
+        return rowcount_frame(spark, 1 if dropped else 0)
 
     m = re.match(
         r"CREATE\s+SUBSCRIPTION\s+\"?([\w]+)\"?\s+CONNECTION\s+'([^']+)'\s+"
@@ -313,7 +312,7 @@ def route_replication(session, stmt: str):
     )
     if m:
         session.subscriptions.create(session, m.group(1), m.group(2), m.group(3))
-        return ok()
+        return rowcount_frame(spark)
 
     m = re.match(
         r"DROP\s+SUBSCRIPTION\s+(IF\s+EXISTS\s+)?\"?([\w]+)\"?\s*$",
@@ -324,6 +323,6 @@ def route_replication(session, stmt: str):
         dropped = session.subscriptions.drop(
             session, m.group(2), if_exists=bool(m.group(1))
         )
-        return ok(1 if dropped else 0)
+        return rowcount_frame(spark, 1 if dropped else 0)
 
     return None

@@ -7,8 +7,8 @@ each map a relation name to a row supplier that runs only for the
 table being queried. ``SYSTEM_VIEWS`` is the same map keyed by the
 temp-view name the dialect resolves ``schema.name`` to (``sys_jobs``,
 ``pg_catalog_pg_type``): each entry is the view's DDL schema and a
-function of the session returning its rows. ``register_views_read``
-builds exactly the views a statement names, right before it runs, so
+function of the session returning its rows. ``views_held`` builds
+exactly the views a statement names, right before it runs, so
 runtime-backed views (sys.jobs, pg_cursors) always show the current
 state; the two file-backed views load once per SparkSession.
 """
@@ -20,7 +20,9 @@ import os
 import re
 import socket
 import statistics
+import threading
 from collections import defaultdict
+from contextlib import contextmanager
 from datetime import datetime, timezone
 from typing import TYPE_CHECKING, Callable
 from urllib.parse import unquote
@@ -28,6 +30,7 @@ from urllib.parse import unquote
 import pyarrow.parquet as pq
 
 from crate_spark.cluster_settings import SETTING_DEFAULTS, SETTINGS_COLUMNS
+from crate_spark.session import local_frame
 from crate_spark.sql_dml import _spark_to_crate
 
 if TYPE_CHECKING:
@@ -78,15 +81,30 @@ def views_read(stmt: str) -> set[str]:
     return names & SYSTEM_VIEWS.keys()
 
 
-def register_views_read(session: "CrateSession", stmt: str) -> None:
+#: the views are temp views global to the SparkSession: a statement
+#: that reads one holds this from building its views until its plan is
+#: analyzed, so a concurrent reader cannot swap in its own snapshot
+#: (of sys.jobs, say) in between
+_VIEWS_LOCK = threading.RLock()
+
+
+@contextmanager
+def views_held(session: "CrateSession", stmt: str):
     """(Re)build the temp views ``stmt`` reads from the session's
-    current state."""
+    current state and keep them for the enclosed block, which plans
+    the statement; a statement that reads no view takes no lock."""
+    names = views_read(stmt)
+    if not names:
+        yield
+        return
     spark = session.spark
-    for name in views_read(stmt):
-        if name in _LOAD_ONCE and spark.catalog._jcatalog.tableExists(name):
-            continue
-        ddl, rows = SYSTEM_VIEWS[name]
-        spark.createDataFrame(rows(session), ddl).createOrReplaceTempView(name)
+    with _VIEWS_LOCK:
+        for name in names:
+            if name in _LOAD_ONCE and spark.catalog._jcatalog.tableExists(name):
+                continue
+            ddl, rows = SYSTEM_VIEWS[name]
+            local_frame(spark, rows(session), ddl).createOrReplaceTempView(name)
+        yield
 
 
 # -- inventories ---------------------------------------------------------

@@ -170,6 +170,29 @@ def test_http_bulk_duplicate_key_errors(spark, tmp_path):
     assert s.execute("SELECT count(*) AS n FROM dupk").collect()[0]["n"] == 3
 
 
+def test_http_bulk_dml_reports_rows_affected(spark, tmp_path):
+    """A bulk UPDATE or DELETE reports, per argument row, the rows it
+    affected (http.rst bulk operations), not the one row of its count
+    frame; ``execute_bulk`` returns the same counts."""
+    from crate_spark.engine import CrateSession
+
+    s = CrateSession(spark, None, storage_dir=str(tmp_path))
+    s.execute("CREATE TABLE bk (id int PRIMARY KEY, g int, v text)")
+    s.execute(
+        "INSERT INTO bk (id, g, v) VALUES (1, 1, 'a'), (2, 1, 'b'), (3, 1, 'c'), (4, 2, 'd')"
+    )
+    resp = execute_request(
+        s, {"stmt": "UPDATE bk SET v = 'z' WHERE g = ?", "bulk_args": [[1], [9]]}
+    )
+    assert [r["rowcount"] for r in resp["results"]] == [3, 0]
+    resp = execute_request(
+        s, {"stmt": "DELETE FROM bk WHERE id = ?", "bulk_args": [[4], [9]]}
+    )
+    assert [r["rowcount"] for r in resp["results"]] == [1, 0]
+    assert s.execute_bulk("UPDATE bk SET v = ? WHERE g = 1", [["y"]]) == [3]
+    assert s.execute_bulk("SELECT id FROM bk WHERE g = ?", [[1], [2]]) == [3, 0]
+
+
 def test_http_concurrent_users_see_only_their_own_principal(spark, tmp_path):
     """Requests from different users run concurrently on one shared
     session: each statement runs as its requester, and the session's
@@ -216,3 +239,60 @@ def test_http_concurrent_users_see_only_their_own_principal(spark, tmp_path):
     assert set(answers["alice"]) == {"alice"}
     assert set(answers["crate"]) == {"crate"}
     assert session.current_user == "crate"
+
+
+def test_http_connection_sets_nodelay(http_session, monkeypatch):
+    """Each reply leaves in one write with TCP_NODELAY: read back from
+    the accepted socket of a live server."""
+    import socket
+    import threading
+
+    from crate_spark import http_sql
+
+    seen, done = [], threading.Event()
+
+    def handle(self):
+        seen.append(
+            self.connection.getsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY)
+        )
+        done.set()
+
+    monkeypatch.setattr(http_sql._Handler, "handle", handle)
+    srv = serve(http_session, port=0)
+    try:
+        socket.create_connection(("127.0.0.1", srv.server_address[1])).close()
+        assert done.wait(30)
+    finally:
+        srv.shutdown()
+        srv.server_close()
+    assert seen == [1]
+
+
+def test_http_expect_100_continue_is_answered_before_the_body(http_session):
+    """A client that sends ``Expect: 100-continue`` holds its body back
+    until the interim reply arrives; the buffered reply path must send
+    that reply at once (curl waits a full second otherwise)."""
+    import socket
+
+    srv = serve(http_session, port=0)
+    body = json.dumps({"stmt": "SELECT 1 AS one"}).encode()
+    try:
+        with socket.create_connection(("127.0.0.1", srv.server_address[1])) as c:
+            c.settimeout(10)
+            c.sendall(
+                b"POST /_sql HTTP/1.1\r\nHost: localhost\r\n"
+                b"Content-Type: application/json\r\n"
+                b"Content-Length: %d\r\nExpect: 100-continue\r\n\r\n" % len(body)
+            )
+            assert c.recv(64).startswith(b"HTTP/1.1 100")
+            c.sendall(body)
+            reply = b""
+            while b'"rows"' not in reply:
+                chunk = c.recv(4096)
+                assert chunk, "server closed before the final reply"
+                reply += chunk
+    finally:
+        srv.shutdown()
+        srv.server_close()
+    assert reply.startswith(b"HTTP/1.1 200")
+    assert b'"rows": [[1]]' in reply

@@ -382,3 +382,61 @@ def test_pg_wire_concurrent_pk_clash_admits_one(spark, tmp_path):
         "SELECT count(*) AS n, count(DISTINCT id) AS d FROM race_pk"
     ).collect()[0]
     assert (rows["n"], rows["d"]) == (len(keys), len(keys))
+
+
+class _RecordingSocket:
+    """Stands in for a client connection: keeps every ``sendall``."""
+
+    def __init__(self):
+        self.sent: list[bytes] = []
+
+    def setsockopt(self, *args):
+        pass
+
+    def sendall(self, data):
+        self.sent.append(bytes(data))
+
+
+def test_pg_wire_simple_query_reply_is_one_write(spark):
+    """RowDescription, the DataRows, CommandComplete and ReadyForQuery
+    of one simple query leave in a single write: a reply written in
+    pieces waits for the client's delayed ACK."""
+    from crate_spark.pg_wire import _PgHandler
+
+    handler = _PgHandler.__new__(_PgHandler)
+    handler.request = sock = _RecordingSocket()
+    handler.session = CrateSession(spark, SF_DIR)
+    handler.setup()
+    handler._simple_query(
+        sock, "SELECT n_nationkey FROM nation ORDER BY n_nationkey LIMIT 3"
+    )
+    assert len(sock.sent) == 1
+    reply, tags = sock.sent[0], []
+    while reply:
+        tags.append(reply[0:1])
+        reply = reply[1 + struct.unpack("!I", reply[1:5])[0]:]
+    assert tags == [b"T", b"D", b"D", b"D", b"C", b"Z"]
+
+
+def test_pg_wire_connection_sets_nodelay(spark, monkeypatch):
+    """A connection accepted by ``serve`` has TCP_NODELAY set, read back
+    from the accepted socket."""
+    import threading
+
+    from crate_spark import pg_wire
+
+    seen, done = [], threading.Event()
+
+    def handle(self):
+        seen.append(self.request.getsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY))
+        done.set()
+
+    monkeypatch.setattr(pg_wire._PgHandler, "handle", handle)
+    srv = serve(CrateSession(spark, SF_DIR), port=0)
+    try:
+        socket.create_connection(("127.0.0.1", srv.server_address[1])).close()
+        assert done.wait(30)
+    finally:
+        srv.shutdown()
+        srv.server_close()
+    assert seen == [1]
