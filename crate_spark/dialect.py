@@ -6,7 +6,17 @@ sqlglot is not available in this environment, so the shim is
 deliberately conservative: it rewrites the documented constructs and
 leaves everything else alone.
 
+The module also holds the front end's one SQL lexer: ``mask`` scans a
+statement once, left to right, for the five quoted token kinds —
+``'…'`` (``''`` escapes), ``E'…'`` (backslash escapes), ``$tag$…$tag$``,
+``"…"`` (``""`` escapes) and backticked names — and replaces each with
+a ``__LIT_n__`` placeholder; ``unmask`` restores them all in one pass.
+Every text pass that runs before Spark and must skip quoted text
+(parameter binding, the DML router, UDF resolution, the system-column
+and system-view scans, ``rewrite``) goes through this pair.
+
 Rewrites:
+- ``"name"``                -> one backticked Spark identifier
 - ``expr::type``            -> ``CAST(expr AS type)`` (identifier,
                                literal, or parenthesized expr)
 - ``arr[n]`` (numeric)      -> ``element_at(arr, n)`` (CrateDB arrays
@@ -52,6 +62,9 @@ import regex as _RE  # recursive patterns: unbounded paren nesting in operands
 _PROCESS_START = time.strftime("%Y-%m-%d %H:%M:%S")
 
 _IDENT = r"[A-Za-z_][A-Za-z0-9_.]*"
+#: a column reference whose dotted parts may be backticked names (the
+#: lexer backticks every quoted identifier): a subscript base
+_NAME = r"(?:[A-Za-z_][A-Za-z0-9_]*|`(?:[^`]|``)+`)(?:\.(?:[A-Za-z_][A-Za-z0-9_]*|`(?:[^`]|``)+`))*"
 #: reserved words that must never be parsed as a function name — else
 #: ``SELECT (a+b)::int`` would match ``SELECT (...)`` as a call and the
 #: cast rewrite would swallow the keyword (``CAST(SELECT (a+b) AS int)``)
@@ -62,6 +75,138 @@ _KW = (
     r"|RETURNING|SET|AS)"
 )
 _PAREN_IDS = itertools.count()
+
+
+# ---------------------------------------------------------------------------
+# the lexer: which parts of a statement are quoted text
+# ---------------------------------------------------------------------------
+#: the five quoted token kinds (SqlBaseLexer.g4, lexical-structure.rst),
+#: tried in one left-to-right scan so no kind is looked for inside
+#: another: an escape string ``E'…'`` (backslash escapes; the E must
+#: start a token — after a quote it ends the previous string), a
+#: string ``'…'`` (``''`` escapes), a dollar quote ``$tag$…$tag$`` (no
+#: escapes, no nesting), a quoted identifier ``"…"`` (``""`` escapes)
+#: and a backticked identifier.
+_TOKEN_RE = re.compile(
+    r"(?<![\w'])[Ee]'(?:[^'\\]|''|\\.)*'"
+    r"|'(?:[^']|'')*'"
+    r"|\$(?P<tag>(?:[A-Za-z_]\w*)?)\$.*?\$(?P=tag)\$"
+    r'|"(?:[^"]|"")*"'
+    r"|`(?:[^`]|``)*`",
+    re.DOTALL,
+)
+_MASK_RE = re.compile(r"__LIT_(\d+)__")
+
+
+def add_token(tokens: list[str], text: str) -> str:
+    """Append ``text`` as one more token and return its placeholder.
+    Rewrite templates emit their (already Spark-escaped) string
+    literals this way: a later pass can't tell raw quoted text from
+    operators."""
+    tokens.append(text)
+    return f"__LIT_{len(tokens) - 1}__"
+
+
+def mask(sql: str, ident=None) -> tuple[str, list[str]]:
+    """Lex ``sql`` and replace each quoted token by ``__LIT_n__``,
+    where n indexes the returned list of the tokens' source text. With
+    ``ident``, a quoted identifier is written in place as
+    ``ident(token)`` instead, for passes that must read names
+    (``ident=str`` keeps it as written)."""
+    tokens: list[str] = []
+
+    def _sub(m: re.Match) -> str:
+        tok = m.group(0)
+        if ident is not None and tok[0] in '"`':
+            return ident(tok)
+        return add_token(tokens, tok)
+
+    return _TOKEN_RE.sub(_sub, sql), tokens
+
+
+def unmask(masked: str, tokens: list[str]) -> str:
+    """Restore every ``__LIT_n__`` in one pass: restored text is never
+    scanned again, so data shaped like a placeholder stays data."""
+    return _MASK_RE.sub(lambda m: tokens[int(m.group(1))], masked)
+
+
+def spark_ident(tok: str) -> str:
+    """A quoted identifier token as one Spark backticked identifier."""
+    if tok[0] == "`":
+        return tok
+    return "`" + tok[1:-1].replace('""', '"').replace("`", "``") + "`"
+
+
+def string_value(tok: str) -> str:
+    """The value of a string token of any of the three kinds."""
+    if tok[0] == "'":
+        return tok[1:-1].replace("''", "'")
+    if tok[0] == "$":
+        end = tok.index("$", 1) + 1
+        return tok[end:-end]
+    return _e_value(tok[2:-1])
+
+
+def _e_value(body: str) -> str:
+    """Decode the body of an escape string ``E'…'`` per
+    Literals.replaceEscapedChars (libs/sql-parser Literals.java:44-140):
+    an UNRECOGNIZED escape drops the backslash and keeps the char
+    (E'Te\\%tch' is 'Te%tch', so LIKE sees the % wildcard —
+    LikeOperatorTest test_wildcard_escaped_in_c_style_string); octal
+    starts 0-3 (\\4x falls to the drop rule); \\x without hex digits
+    emits 'x'; malformed \\u/\\U rejects like the reference lexer."""
+    out, i = [], 0
+    esc = {"b": "\b", "f": "\f", "n": "\n", "r": "\r", "t": "\t"}
+    while i < len(body):
+        c = body[i]
+        if c == "\\" and i + 1 < len(body):
+            n = body[i + 1]
+            if n in esc:
+                out.append(esc[n])
+                i += 2
+                continue
+            if n in ("\\", "'"):
+                out.append(n)
+                i += 2
+                continue
+            if n in ("u", "U"):
+                width = 4 if n == "u" else 8
+                u = re.match(r"[0-9A-Fa-f]{%d}" % width, body[i + 2 :])
+                if not u:
+                    raise ValueError(
+                        "Invalid Unicode escape in escaped string "
+                        "literal (Literals.java ESCAPED_UNICODE)"
+                    )
+                out.append(chr(int(u.group(0), 16)))
+                i += 2 + width
+                continue
+            if n == "x":
+                x = re.match(r"[0-9A-Fa-f]{1,2}", body[i + 2 :])
+                if x:
+                    out.append(chr(int(x.group(0), 16)))
+                    i += 2 + len(x.group(0))
+                else:
+                    # hex sequence unmatched: original char
+                    out.append("x")
+                    i += 2
+                continue
+            o = re.match(r"[0-3][0-7]{0,2}", body[i + 1 :])
+            if o:
+                out.append(chr(int(o.group(0), 8)))
+                i += 1 + len(o.group(0))
+                continue
+            # unrecognized escape: IGNORE the backslash (drop it),
+            # next char re-processes normally
+            i += 1
+            continue
+        if c == "'" and i + 1 < len(body) and body[i + 1] == "'":
+            # doubled quote inside the raw body is ONE quote char
+            out.append("'")
+            i += 2
+            continue
+        out.append(c)
+        i += 1
+    return "".join(out)
 
 
 def _paren() -> str:
@@ -97,8 +242,8 @@ def _sub_base() -> str:
     """Subscript base: function call (keyword-guarded, like
     ``_operand``), identifier, or parenthesized expression."""
     return (
-        rf"(?<![A-Za-z0-9_.])(?:(?!{_KW}\s*\(){_IDENT}\s*{_paren()}"
-        rf"|{_IDENT}|{_paren()})"
+        rf"(?<![A-Za-z0-9_.`])(?:(?!{_KW}\s*\(){_IDENT}\s*{_paren()}"
+        rf"|{_NAME}|{_paren()})"
     )
 
 
@@ -193,7 +338,7 @@ def _subscript_slice_sub(m: re.Match) -> str:
 #: identifier followed by one or more string-literal subscripts
 #: (literals are masked at this point, so the key shows as __LIT_n__)
 _OBJ_SUBSCRIPT_RE = re.compile(
-    rf"({_IDENT})((?:\s*\[\s*__LIT_\d+__\s*\])"
+    rf"({_NAME})((?:\s*\[\s*__LIT_\d+__\s*\])"
     rf"(?:\s*\[\s*(?:__LIT_\d+__|\d+)\s*\])*|(?:\s*\[\s*\d+\s*\])+\s*\[\s*__LIT_\d+__\s*\]"
     rf"(?:\s*\[\s*(?:__LIT_\d+__|\d+)\s*\])*)"
 )
@@ -225,10 +370,11 @@ _POW_OP_RE = _RE.compile(rf"(?P<lhs>{_operand()})\s*\^\s*(?P<rhs>{_operand()})")
 _XOR_OP_RE = _RE.compile(rf"(?P<lhs>{_operand()})\s*#\s*(?P<rhs>{_operand()})")
 _OVERLAP_OP_RE = _RE.compile(rf"(?P<lhs>{_operand()})\s*&&\s*(?P<rhs>{_operand()})")
 #: ``schema.name`` of a system relation; either part may be
-#: backticked (double-quoted identifiers are backticked by then)
+#: backticked (double-quoted identifiers are backticked by then), but
+#: not the whole: `sys.jobs` is one name
 _SCHEMA_RE = re.compile(
-    r"(`?)\b(information_schema|sys|pg_catalog|blob)\1\s*\.\s*"
-    r"(`?)([A-Za-z_][A-Za-z0-9_]*)\3"
+    r"(?<![\w`])(`?)(information_schema|sys|pg_catalog|blob)\1\s*\.\s*"
+    r"(`?)([A-Za-z_][A-Za-z0-9_]*)\3(?![\w`])"
 )
 
 
@@ -252,14 +398,6 @@ def _split_args(s: str) -> list[str]:
     if tail:
         parts.append(tail)
     return parts
-
-
-def _mklit(literals: list[str], text: str) -> str:
-    """Append an already-Spark-escaped string literal and return its
-    mask token — template output must never contain raw quoted text
-    (later rewrite passes can't tell literals from operators)."""
-    literals.append(text)
-    return f"__LIT_{len(literals) - 1}__"
 
 
 def _not_null(a: str) -> str:
@@ -705,7 +843,7 @@ def _null_or_empty_sql(a: list[str], lits: list[str]) -> str | None:
     if (lit is not None and lit.strip().startswith("{")) or arg.startswith(
         "to_json("
     ) or arg.startswith("__OBJSTRUCT__"):
-        empty = _mklit(lits, "'{}'")
+        empty = add_token(lits, "'{}'")
         return f"({arg} IS NULL OR trim({arg}) = {empty})"
     return f"({arg} IS NULL OR size({arg}) = 0)"
 
@@ -727,13 +865,13 @@ def _quote_ident_sql(a: list[str], lits: list[str]) -> str | None:
             out = raw
         else:
             out = '"' + raw.replace('"', '""') + '"'
-        return _mklit(
+        return add_token(
             lits, "'" + out.replace("\\", "\\\\").replace("'", "''") + "'"
         )
-    pat = _mklit(lits, "'^[a-z_][a-z0-9_]*$'")
+    pat = add_token(lits, "'^[a-z_][a-z0-9_]*$'")
     dq, esc = "'\"'", "'\"\"'"
     kws = ", ".join(
-        _mklit(lits, f"'{w}'") for w, c in PG_KEYWORDS if c == "R"
+        add_token(lits, f"'{w}'") for w, c in PG_KEYWORDS if c == "R"
     )
     return (
         f"(CASE WHEN {a[0]} RLIKE {pat} "
@@ -814,7 +952,7 @@ def _parse_ident_sql(a: list[str], lits: list[str]) -> str | None:
         # new literals go through the mask so later passes keep their
         # all-literals-masked invariant
         body = ", ".join(
-            _mklit(
+            add_token(
                 lits,
                 "'" + p.replace("\\", "\\\\").replace("'", "''") + "'",
             )
@@ -823,7 +961,7 @@ def _parse_ident_sql(a: list[str], lits: list[str]) -> str | None:
         return f"array({body})"
     if len(a) != 1:
         return None
-    dot = _mklit(lits, r"'\\.'")
+    dot = add_token(lits, r"'\\.'")
     dq = "'\"'"
     return (
         f"transform(split({a[0]}, {dot}), __p -> "
@@ -958,7 +1096,7 @@ def _regexp_instr_sql(a: list[str], literals: list[str]) -> str | None:
     # template-appended literals emit VERBATIM at unmask (no
     # backslash doubling — see the unmask loop), so Spark-escape the
     # user pattern here or '\d' reaches Spark's parser as escape-'d'
-    p = _mklit(
+    p = add_token(
         literals, "'" + pat.replace("\\", "\\\\").replace("'", "''") + "'"
     )
     sub = f"substring({a[0]}, {start})" if start > 1 else a[0]
@@ -1089,11 +1227,11 @@ def _encode_sql(a: list[str], literals: list[str]) -> str | None:
             text = data.hex()
         else:
             text = _bytea_escape(data)
-        return _mklit(
+        return add_token(
             literals,
             "'" + text.replace("\\", "\\\\").replace("'", "''") + "'",
         )
-    hexpfx = _mklit(literals, "'\\\\x'")
+    hexpfx = add_token(literals, "'\\\\x'")
     src = (
         f"CASE WHEN startswith({a[0]}, {hexpfx}) "
         f"THEN unhex(substring({a[0]}, 3)) "
@@ -1147,10 +1285,10 @@ def _decode_sql(a: list[str], literals: list[str]) -> str | None:
             data = bytes.fromhex(raw)
         else:
             data = _bytea_parse(raw)
-        return _mklit(
+        return add_token(
             literals, "'" + "\\\\x" + data.hex() + "'"
         )
-    pfx = _mklit(literals, "'\\\\x'")
+    pfx = add_token(literals, "'\\\\x'")
     if fmt == "base64":
         return f"concat({pfx}, lower(hex(unbase64({a[0]}))))"
     if fmt == "hex":
@@ -1417,7 +1555,7 @@ def _to_char_fn_sql(a: list[str], literals: list[str]) -> str | None:
         text = format_interval(_normalize_interval_fields(parsed), fmt)
         if text is None:
             return None
-        return _mklit(literals, "'" + text.replace("'", "''") + "'")
+        return add_token(literals, "'" + text.replace("'", "''") + "'")
     # a MIXED interval literal was already text-folded to a plain
     # string by _fold_interval_literals, which wraps its output in a
     # no-op CAST(__LIT__ AS STRING) marker precisely so this fallback
@@ -1436,7 +1574,7 @@ def _to_char_fn_sql(a: list[str], literals: list[str]) -> str | None:
         if parsed is not None:
             text = format_interval(_normalize_interval_fields(parsed), fmt)
             if text is not None:
-                return _mklit(literals, "'" + text.replace("'", "''") + "'")
+                return add_token(literals, "'" + text.replace("'", "''") + "'")
     return compile_to_sql(_ts_coerce(a[0]), fmt)
 
 
@@ -1463,8 +1601,8 @@ def _parse_uri_sql(
 
     else:
         # java.net.URI getters: %XX decodes, '+' stays '+'
-        plus = _mklit(lits, "'+'")
-        plus_enc = _mklit(lits, "'%2B'")
+        plus = add_token(lits, "'+'")
+        plus_enc = add_token(lits, "'%2B'")
 
         def dec(s: str) -> str:
             return f"url_decode(replace({s}, {plus}, {plus_enc}))"
@@ -1472,8 +1610,8 @@ def _parse_uri_sql(
     q = f"parse_url({u}, 'QUERY')"
     params = ""
     if with_params:
-        eq = _mklit(lits, "'='")
-        amp_re = _mklit(lits, "'&(?!amp)'")
+        eq = add_token(lits, "'='")
+        amp_re = add_token(lits, "'&(?!amp)'")
         key = (
             f"CASE WHEN instr(__e, {eq}) > 1 THEN url_decode("
             f"substring(__e, 1, instr(__e, {eq}) - 1)) "
@@ -1734,7 +1872,7 @@ def _map_fn_sql(a: list[str], lits: list[str]) -> str | None:
                 raw = k
             else:
                 return None
-        key_lit = _mklit(lits, "'" + raw.replace("'", "''") + "'")
+        key_lit = add_token(lits, "'" + raw.replace("'", "''") + "'")
         parts.append(f"{key_lit}, {a[i + 1]}")
     return "to_json(named_struct(" + ", ".join(parts) + "))"
 
@@ -1791,7 +1929,7 @@ def _string_to_array_sql(a: list[str], literals: list[str]) -> str | None:
         return None
     sep = a[1]
     if sep.strip().upper() == "NULL":
-        parts = f"split({a[0]}, {_mklit(literals, chr(39) + '(?!$)' + chr(39))})"
+        parts = f"split({a[0]}, {add_token(literals, chr(39) + '(?!$)' + chr(39))})"
     else:
         m = re.fullmatch(r"__LIT_(\d+)__", sep.strip())
         if m:
@@ -1800,8 +1938,8 @@ def _string_to_array_sql(a: list[str], literals: list[str]) -> str | None:
                 parts = f"array({a[0]})"
             else:
                 escaped = re.escape(raw).replace("'", "''").replace("\\", "\\\\")
-                literals.append(f"'{escaped}'")
-                parts = f"split({a[0]}, __LIT_{len(literals) - 1}__)"
+                tok = add_token(literals, f"'{escaped}'")
+                parts = f"split({a[0]}, {tok})"
         else:
             parts = f"split({a[0]}, {sep})"
     # PG: an EMPTY source string yields an EMPTY array, whatever the
@@ -2101,8 +2239,6 @@ def _rewrite_order_by(sql: str) -> str:
         i = j
     return "".join(out)
 
-
-_LIT_RE = re.compile(r"'(?:[^']|'')*'")
 
 #: innermost object literal ``{k = v, ...}`` (AstBuilder objectLiteral;
 #: docs/general/ddl/data-types: OBJECT literals). Keys are identifiers;
@@ -2536,11 +2672,6 @@ def _normalize_interval_fields(parts):
     h, rest = _trunc_divmod(rest, 3_600_000)
     mi, rest = _trunc_divmod(rest, 60_000)
     return y, mo, d, h, mi, rest / 1000.0
-
-
-def _normalize_interval_up_to_days(parts):
-    """Historic alias for ``_normalize_interval_fields``."""
-    return _normalize_interval_fields(parts)
 
 
 def _struct_array_literal_subscripts(sql: str, literals: list[str]) -> str:
@@ -3092,21 +3223,6 @@ PG_KEYWORDS = [
 _IVL_FIELDS = ("YEAR", "MONTH", "DAY", "HOUR", "MINUTE", "SECOND")
 
 
-def _parse_pg_interval(s: str):
-    """PG interval string -> (months, days, micros, used_shorthand,
-    has_ym, has_dt) or None if unparseable. Thin wrapper over
-    ``_parse_interval_literal_ex`` (single source of truth for the
-    reference parsers' acceptance rules — fractional non-second
-    values, repeated units, sign on shorthand segments)."""
-    parsed = _parse_interval_literal_ex(s)
-    if parsed is None:
-        return None
-    (y, mo, d, h, mi, sec), shorthand = parsed
-    months = y * 12 + mo
-    micros = round(((h * 60 + mi) * 60 + sec) * 1_000_000)
-    return (months, d, micros, shorthand, months != 0, d != 0 or micros != 0)
-
-
 def _truncate_interval_fields(parts, start, end):
     """``INTERVAL '<lit>' <u> [TO <u>]`` precision restriction on the
     RAW parsed fields, BEFORE normalization — the reference's
@@ -3240,8 +3356,7 @@ def _fold_interval_literals(sql: str, literals: list[str]) -> str:
             # matcher and get corrupted by later text passes (the
             # decimal D-suffix pass turned '1.5 seconds' into a parse
             # error) (ADVICE r10)
-            literals.append("'" + canon + "'")
-            return f"{prefix}INTERVAL __LIT_{len(literals) - 1}__"
+            return f"{prefix}INTERVAL " + add_token(literals, "'" + canon + "'")
         if qual_start:
             # precision restriction applies to the RAW fields, before
             # the render's normalization (roundToPrecision order)
@@ -3568,10 +3683,11 @@ def rewrite(
 ) -> str:
     """Apply all crate-ism rewrites to one statement.
 
-    String literals are masked as identifier-shaped placeholders first
-    so the operator regexes can never match text INSIDE a literal
-    (e.g. ``'a::b'`` must survive untouched), while a literal can
-    still BE an operand (``'5'::int``).
+    The statement is lexed first (``mask``): string literals become
+    identifier-shaped placeholders so the operator regexes can never
+    match text INSIDE a literal (e.g. ``'a::b'`` must survive
+    untouched), while a literal can still BE an operand
+    (``'5'::int``); quoted identifiers become backticked names.
 
     ``string_object_columns`` names columns whose OBJECT content is
     stored as a JSON string (the engine's dynamic-object
@@ -3579,121 +3695,11 @@ def rewrite(
     rewrite to ``get_json_object(col, '$.a.b')``. Subscripts on any
     other base are left to Spark's native map/struct extraction.
     """
-    literals: list[str] = []
-
-    # PG escape-string literals E'...' (string-literal.rst): decode
-    # the C-style escapes into a plain literal before masking —
-    # reference semantics per Literals.replaceEscapedChars
-    # (libs/sql-parser Literals.java:44-140): an UNRECOGNIZED escape
-    # drops the backslash and keeps the char (E'Te\%tch' is 'Te%tch',
-    # so LIKE sees the % wildcard — LikeOperatorTest
-    # test_wildcard_escaped_in_c_style_string); octal starts 0-3 (\4x
-    # falls to the drop rule); \x without hex digits emits 'x';
-    # malformed \u/\U rejects like the reference lexer.
-    def _e_lit(m: re.Match) -> str:
-        body, out, i = m.group(1), [], 0
-        esc = {"b": "\b", "f": "\f", "n": "\n", "r": "\r", "t": "\t"}
-        while i < len(body):
-            c = body[i]
-            if c == "\\" and i + 1 < len(body):
-                n = body[i + 1]
-                if n in esc:
-                    out.append(esc[n])
-                    i += 2
-                    continue
-                if n in ("\\", "'"):
-                    out.append(n)
-                    i += 2
-                    continue
-                if n in ("u", "U"):
-                    width = 4 if n == "u" else 8
-                    u = re.match(
-                        r"[0-9A-Fa-f]{%d}" % width, body[i + 2 :]
-                    )
-                    if not u:
-                        raise ValueError(
-                            "Invalid Unicode escape in escaped string "
-                            "literal (Literals.java ESCAPED_UNICODE)"
-                        )
-                    out.append(chr(int(u.group(0), 16)))
-                    i += 2 + width
-                    continue
-                if n == "x":
-                    x = re.match(r"[0-9A-Fa-f]{1,2}", body[i + 2 :])
-                    if x:
-                        out.append(chr(int(x.group(0), 16)))
-                        i += 2 + len(x.group(0))
-                    else:
-                        # hex sequence unmatched: original char
-                        out.append("x")
-                        i += 2
-                    continue
-                o = re.match(r"[0-3][0-7]{0,2}", body[i + 1 :])
-                if o:
-                    out.append(chr(int(o.group(0), 8)))
-                    i += 1 + len(o.group(0))
-                    continue
-                # unrecognized escape: IGNORE the backslash (drop it),
-                # next char re-processes normally
-                i += 1
-                continue
-            if c == "'" and i + 1 < len(body) and body[i + 1] == "'":
-                # doubled quote inside the raw body is ONE quote char
-                out.append("'")
-                i += 2
-                continue
-            out.append(c)
-            i += 1
-        return "'" + "".join(out).replace("'", "''") + "'"
-
-    # the E must start a token — right after a quote it's the tail of
-    # an ordinary string literal ('E'), not an escape-string prefix
-    sql = re.sub(r"(?<!['\w])[Ee]'((?:[^'\\]|''|\\.)*)'", _e_lit, sql)
-
-    # dollar-quoted strings $tag$...$tag$ (lexical-structure.rst:26-44;
-    # no nesting) -> ordinary literals. Single left-to-right scan so a
-    # $$ INSIDE an ordinary '...' literal never opens a dollar quote.
-    if "$" in sql:
-        parts, i, n = [], 0, len(sql)
-        while i < n:
-            c = sql[i]
-            if c == "'":
-                j = i + 1
-                while j < n:
-                    if sql[j] == "'":
-                        if j + 1 < n and sql[j + 1] == "'":
-                            j += 2
-                            continue
-                        break
-                    j += 1
-                parts.append(sql[i : j + 1])
-                i = j + 1
-            elif c == '"':
-                j = sql.find('"', i + 1)
-                j = n - 1 if j < 0 else j
-                parts.append(sql[i : j + 1])
-                i = j + 1
-            elif c == "$":
-                dm = re.match(r"\$(\w*)\$", sql[i:])
-                if dm:
-                    close = sql.find(dm.group(0), i + dm.end())
-                    if close >= 0:
-                        body = sql[i + dm.end() : close]
-                        parts.append("'" + body.replace("'", "''") + "'")
-                        i = close + dm.end()
-                        continue
-                parts.append(c)
-                i += 1
-            else:
-                parts.append(c)
-                i += 1
-        sql = "".join(parts)
-
-    def _mask(m: re.Match) -> str:
-        literals.append(m.group(0))
-        return f"__LIT_{len(literals) - 1}__"
-
-    sql = _LIT_RE.sub(_mask, sql)
+    # one lex: every string literal becomes a __LIT_n__ placeholder
+    # holding its standard '...' spelling (E'...' decoded, $$...$$
+    # re-quoted), and every quoted identifier one backticked name
+    sql, tokens = mask(sql, ident=spark_ident)
+    literals = ["'" + string_value(t).replace("'", "''") + "'" for t in tokens]
     n_input_lits = len(literals)
 
     # LIKE/ILIKE ... ESCAPE '' — the reference DISABLES escaping
@@ -3711,8 +3717,8 @@ def rewrite(
             j = int(pm.group(1))
             literals[j] = literals[j].replace("\\", "\\\\")
             return pat
-        bs1 = _mklit(literals, "'\\\\'")  # one backslash to Spark
-        bs2 = _mklit(literals, "'\\\\\\\\'")  # two backslashes
+        bs1 = add_token(literals, "'\\\\'")  # one backslash to Spark
+        bs2 = add_token(literals, "'\\\\\\\\'")  # two backslashes
         return f"replace({pat}, {bs1}, {bs2})"
 
     sql = re.sub(
@@ -3768,11 +3774,6 @@ def rewrite(
         sql,
         flags=re.IGNORECASE,
     )
-
-    # PG double-quoted identifiers -> Spark backticks (string literals
-    # are masked, so any remaining "word" is an identifier). Dotted
-    # chains quote each part; "" inside stays (rare) untouched.
-    sql = re.sub(r'"([A-Za-z_][A-Za-z0-9_ ]*)"', r"`\1`", sql)
 
     # bit-string literals B'0110' (data-types.rst bit strings): stored
     # as bare bit text (declared divergence — no BIT runtime type)
@@ -3928,8 +3929,7 @@ def rewrite(
     if re.search(r"(?i)\bpg_get_keywords\s*\(\s*\)", sql):
 
         def _kw_lit(v: str) -> str:
-            literals.append(f"'{v}'")
-            return f"__LIT_{len(literals) - 1}__"
+            return add_token(literals, f"'{v}'")
 
         _kw_vals = ", ".join(
             f"({_kw_lit(w)}, {_kw_lit(c)})" for w, c in PG_KEYWORDS
@@ -4108,7 +4108,7 @@ def rewrite(
 
         def _obj_sub(m: re.Match) -> str:
             base, chain = m.group(1), m.group(2)
-            name = base.split(".")[-1].lower()
+            name = base.split(".")[-1].strip("`").lower()
             is_arr = "[]" + name in lowered
             if name not in lowered and not is_arr:
                 return m.group(0)
@@ -4141,8 +4141,7 @@ def rewrite(
                     path += f".{k}" if re.fullmatch(r"\w+", k) else f"['{k}']"
                 else:  # 1-based array index -> 0-based JSON path
                     path += f"[{int(p) - 1}]"
-            literals.append("'" + path.replace("'", "''") + "'")
-            tok = f"__LIT_{len(literals) - 1}__"
+            tok = add_token(literals, "'" + path.replace("'", "''") + "'")
             if is_arr and base_expr == base:
                 # arr['k'] with no element index: per-element projection
                 return f"transform({base}, __o -> get_json_object(__o, {tok}))"
@@ -4159,8 +4158,7 @@ def rewrite(
     # engine's JSON-string empty object, masked so no later pass can
     # touch the braces
     def _empty_obj(_m: re.Match) -> str:
-        literals.append("'{}'")
-        return f"__LIT_{len(literals) - 1}__"
+        return add_token(literals, "'{}'")
 
     sql = re.sub(r"\{\s*\}", _empty_obj, sql)
 
@@ -4197,8 +4195,9 @@ def rewrite(
         sql = re.sub(r"\bARRAY\s*\[([^\[\]]*)\]", r"array(\1)", sql, flags=re.IGNORECASE)
         # the lookbehind also excludes '}': an object LITERAL's
         # subscript ({v=1}['v']) must stay a subscript for the
-        # struct-literal pass below, not become array('v')
-        sql = re.sub(r"(?<![\w\]\)\}])\[([^\[\]]*)\]", r"array(\1)", sql)
+        # struct-literal pass below, not become array('v'); and '`',
+        # the end of a quoted name ("o"['b'])
+        sql = re.sub(r"(?<![\w\]\)\}`])\[([^\[\]]*)\]", r"array(\1)", sql)
         sql = _OBJ_LIT_RE.sub(_obj_lit_sub, sql)
     sql = _finalize_obj_structs(sql)
     # a directly-subscripted object literal reads through the struct,
@@ -4420,13 +4419,6 @@ def rewrite(
         or not re.fullmatch(r"[A-Za-z_][\w<>,()]*", _cast_type(m.group(1)))
         else f"::{_cast_type(m.group(1))}",
         sql,
-    )
-    # explicit CAST targets in crate's array(inner) spelling
-    sql = re.sub(
-        r"\bAS\s+ARRAY\s*\(\s*([\w ]+)\s*\)",
-        lambda m: "AS " + _cast_type(f"array({m.group(1)})"),
-        sql,
-        flags=re.IGNORECASE,
     )
     sql = _SUBSCRIPT_SLICE_RE.sub(_subscript_slice_sub, sql)
     sql = _SUBSCRIPT_RE.sub(r"element_at(\g<base>, \g<idx>)", sql)
@@ -4782,16 +4774,14 @@ def rewrite(
     )
 
     sql = _rewrite_order_by(sql)
-    for i, lit in enumerate(literals):
-        if i < n_input_lits:
-            # PG/CrateDB string literals are standard-conforming:
-            # backslash is a literal character ('\d' stays '\d').
-            # Spark's parser treats it as an escape, so double it at
-            # unmask time. Literals appended by rewrite templates are
-            # already Spark-escaped and emit verbatim.
-            lit = lit.replace("\\", "\\\\")
-        sql = sql.replace(f"__LIT_{i}__", lit)
-    return sql
+    # PG/CrateDB string literals are standard-conforming: backslash is
+    # a literal character ('\d' stays '\d'). Spark's parser treats it
+    # as an escape, so the input literals double it. Literals appended
+    # by rewrite templates are already Spark-escaped and emit verbatim.
+    return unmask(sql, [
+        lit.replace("\\", "\\\\") if i < n_input_lits else lit
+        for i, lit in enumerate(literals)
+    ])
 
 
 #: system doc columns every table exposes in the reference
@@ -4837,16 +4827,10 @@ def rewrite_sys_columns(sql: str) -> str:
     Single-relation statements only — ``struct(*)`` expands the whole
     input row, so in a join it would span both sides.
 
-    String literals are masked first so a ``_score`` or ``_id``
-    INSIDE a literal is never rewritten into the data.
+    Quoted text is masked first so a ``_score`` or ``_id`` INSIDE a
+    literal or a quoted name is never rewritten.
     """
-    lits: list[str] = []
-
-    def _mask(m: re.Match) -> str:
-        lits.append(m.group(0))
-        return f"__SYSLIT{len(lits) - 1}__"
-
-    sql = re.sub(r"'(?:[^']|'')*'", _mask, sql)
+    sql, tokens = mask(sql)
     # qualified references (t._score, nation._id) read the same system
     # column — the reference resolves alias-qualified sys columns like
     # any column; storage is single-relation here so the qualifier
@@ -4869,8 +4853,4 @@ def rewrite_sys_columns(sql: str) -> str:
         out.append(f"{expr} AS {m.group(1)}" if bare_item else expr)
         last = m.end()
     out.append(sql[last:])
-    # single-pass unmask: replacements are never rescanned, so a
-    # literal whose DATA contains a placeholder-shaped token survives
-    return re.sub(
-        r"__SYSLIT(\d+)__", lambda m: lits[int(m.group(1))], "".join(out)
-    )
+    return unmask("".join(out), tokens)

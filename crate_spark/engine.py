@@ -29,7 +29,9 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from crate_spark.dialect import _LIT_RE, rewrite, rewrite_sys_columns
+from crate_spark.dialect import (
+    add_token, mask, rewrite, rewrite_sys_columns, unmask,
+)
 from crate_spark.session import (
     apply_runtime_confs, load_tables, local_frame, rowcount_frame,
 )
@@ -58,10 +60,8 @@ def _sql_literal(v) -> str:
     return "'" + str(v).replace("'", "''") + "'"
 
 
-#: a string literal, a quoted name or an innermost parenthesised group
-_QUOTED_OR_GROUP = re.compile(
-    r"'(?:[^'\\]|\\.|'')*'|\"[^\"]*\"|`[^`]*`|\([^()'\"`]*\)"
-)
+#: an innermost parenthesised group
+_GROUP = re.compile(r"\([^()]*\)")
 #: the clauses that can follow a FROM-less select list
 _AFTER_SELECT_LIST = re.compile(
     r"\b(?:WHERE|GROUP|HAVING|WINDOW|QUALIFY|ORDER|SORT|CLUSTER|DISTRIBUTE"
@@ -73,24 +73,25 @@ _AFTER_SELECT_LIST = re.compile(
 def _over_one_row(sql: str) -> str:
     """Plan a top-level SELECT with no FROM clause over a one-row
     ``VALUES`` (a ``LocalRelation``, collected with no Spark job) in
-    place of ``OneRowRelation``, whose scan is a job. Literals, quoted
-    names and parenthesised groups are blanked before looking for FROM.
+    place of ``OneRowRelation``, whose scan is a job. Quoted text is
+    masked and parenthesised groups blanked before looking for FROM.
     A select list with a star is left alone: the row's column would
     join it."""
     if not re.match(r"\s*SELECT\b", sql, re.IGNORECASE):
         return sql
-    masked, prev = sql, None
-    while masked != prev:
-        prev = masked
-        masked = _QUOTED_OR_GROUP.sub(lambda m: " " * len(m.group(0)), masked)
-    if re.search(r"\bFROM\b", masked, re.IGNORECASE):
+    masked, tokens = mask(sql)
+    blank, prev = masked, None
+    while blank != prev:
+        prev = blank
+        blank = _GROUP.sub(lambda m: " " * len(m.group(0)), blank)
+    if re.search(r"\bFROM\b", blank, re.IGNORECASE):
         return sql
-    clause = _AFTER_SELECT_LIST.search(masked)
-    at = clause.start() if clause else len(sql)
-    if "*" in masked[:at]:
+    clause = _AFTER_SELECT_LIST.search(blank)
+    at = clause.start() if clause else len(blank)
+    if "*" in blank[:at]:
         return sql
     one_row = "FROM VALUES (0) AS __one_row(__one_row)"
-    return f"{sql[:at].rstrip()} {one_row} {sql[at:]}".rstrip()
+    return unmask(f"{masked[:at].rstrip()} {one_row} {masked[at:]}".rstrip(), tokens)
 
 
 class CrateSession:
@@ -297,7 +298,8 @@ class CrateSession:
         user-defined-functions.rst)."""
         if not self._udfs:
             return sql
-        parts = re.split(r"('(?:[^']|'')*')", sql)  # literals untouched
+        # literals untouched; quoted names stay readable
+        seg, tokens = mask(sql, ident=str)
         # unquoted identifiers fold to lowercase (reference parser),
         # and UDF schemas are stored lowercased — compare folded
         sp = [s.lower() for s in self._search_path()]
@@ -316,29 +318,26 @@ class CrateSession:
                 continue
             if nm not in by_name or _rank(sch) < _rank(by_name[nm]):
                 by_name[nm] = sch
-        for i in range(0, len(parts), 2):
-            seg = parts[i]
-            # call sites may quote the name (`"Camel"(x)` — quoted
-            # identifiers keep case in the reference; the registry is
-            # lowercase-keyed, so resolution here is case-insensitive
-            # either way) — consume the quotes/backticks with the name
-            for sch, nm in self._udfs:
-                seg = re.sub(
-                    rf'(?<![\w.])"?{re.escape(sch)}"?\s*\.\s*'
-                    rf'[`"]?{re.escape(nm)}[`"]?\s*\(',
-                    self._udf_spark_name(sch, nm) + "(",
-                    seg,
-                    flags=re.IGNORECASE,
-                )
-            for nm, sch in by_name.items():
-                seg = re.sub(
-                    rf'(?<![\w.`"])[`"]?{re.escape(nm)}[`"]?\s*\(',
-                    self._udf_spark_name(sch, nm) + "(",
-                    seg,
-                    flags=re.IGNORECASE,
-                )
-            parts[i] = seg
-        return "".join(parts)
+        # call sites may quote the name (`"Camel"(x)` — quoted
+        # identifiers keep case in the reference; the registry is
+        # lowercase-keyed, so resolution here is case-insensitive
+        # either way) — consume the quotes/backticks with the name
+        for sch, nm in self._udfs:
+            seg = re.sub(
+                rf'(?<![\w.])"?{re.escape(sch)}"?\s*\.\s*'
+                rf'[`"]?{re.escape(nm)}[`"]?\s*\(',
+                self._udf_spark_name(sch, nm) + "(",
+                seg,
+                flags=re.IGNORECASE,
+            )
+        for nm, sch in by_name.items():
+            seg = re.sub(
+                rf'(?<![\w.`"])[`"]?{re.escape(nm)}[`"]?\s*\(',
+                self._udf_spark_name(sch, nm) + "(",
+                seg,
+                flags=re.IGNORECASE,
+            )
+        return unmask(seg, tokens)
 
     # -- catalog ---------------------------------------------------------
     def register(self, name: str, df: DataFrame) -> None:
@@ -595,7 +594,9 @@ class CrateSession:
 
     def _dispatch(self, stmt: str) -> DataFrame:
         upper = stmt.upper()
-        if re.search(r"\bblob\s*\.", stmt, re.IGNORECASE):
+        # name scans read the statement with its literals masked
+        names, _ = mask(stmt, ident=str)
+        if re.search(r"\bblob\s*\.", names, re.IGNORECASE):
             self._register_blob_views()
 
         # UPDATE sys.node_checks SET acknowledged = <bool> [WHERE ...]
@@ -644,7 +645,7 @@ class CrateSession:
         # subscribed tables receive files continuously; re-list before
         # answering a query that touches one
         for name in self.subscribed_tables:
-            if re.search(rf"(?<![\w.\"]){re.escape(name)}\b", stmt, re.IGNORECASE):
+            if re.search(rf"(?<![\w.\"]){re.escape(name)}\b", names, re.IGNORECASE):
                 ct = self._dml.crate_tables.get(name)
                 if ct is not None:
                     self.register(name, ct.read())
@@ -1169,7 +1170,7 @@ class CrateSession:
             return routed
         # detection/validation on a literal-masked copy: '_score'
         # inside a string literal is data, not a system column
-        _masked = re.sub(r"'(?:[^']|'')*'", "''", stmt)
+        _masked, _ = mask(stmt, ident=str)
         # bare OR alias-qualified (t._score) — qualified sys columns
         # resolve like any column in the reference
         has_score = bool(
@@ -1368,29 +1369,24 @@ class CrateSession:
     def _bind_params(self, stmt: str, params: list) -> str:
         """Substitute ``$1``-style (and bare ``?`` positional)
         placeholders with typed SQL literals (Session.bind():403).
-        String literals are masked first so placeholder-shaped text
-        inside them survives."""
-        lits: list[str] = []
-
-        def _mask(m: re.Match) -> str:
-            lits.append(m.group(0))
-            return f"__PLIT_{len(lits) - 1}__"
-
-        masked = _LIT_RE.sub(_mask, stmt)
+        Quoted text is masked first so placeholder-shaped text inside
+        it survives, and each bound value is one more token, so no
+        value is scanned again."""
+        masked, tokens = mask(stmt)
 
         def _repl_dollar(m: re.Match) -> str:
             i = int(m.group(1)) - 1
             if not 0 <= i < len(params):
                 raise ValueError(f"no value bound for placeholder ${m.group(1)}")
-            return _sql_literal(params[i])
+            return add_token(tokens, _sql_literal(params[i]))
 
         masked = re.sub(r"\$(\d+)", _repl_dollar, masked)
         if "?" in masked:
             it = iter(params)
-            masked = re.sub(r"\?", lambda _m: _sql_literal(next(it)), masked)
-        for i, lit in enumerate(lits):
-            masked = masked.replace(f"__PLIT_{i}__", lit)
-        return masked
+            masked = re.sub(
+                r"\?", lambda _m: add_token(tokens, _sql_literal(next(it))), masked
+            )
+        return unmask(masked, tokens)
 
     def execute_bulk(self, sql: str, bulk_params: list[list]) -> list:
         """Bulk execution (Session.bulkExec:717): one statement, many

@@ -143,16 +143,6 @@ def interval_total_micros(iv: Column | str) -> Column:
     )
 
 
-def interval_add(a: Column | str, b: Column | str) -> Column:
-    """Interval + interval: field-wise, as PG (no normalization)."""
-    va, vb = _col(a), _col(b)
-    return F.struct(
-        (va["months"] + vb["months"]).alias("months"),
-        (va["days"] + vb["days"]).alias("days"),
-        (va["micros"] + vb["micros"]).alias("micros"),
-    )
-
-
 def interval_sum(iv: Column | str) -> Column:
     """SUM aggregate over interval columns: field-wise sums
     (``impl/IntervalSumAggregation.java`` — Period.plus per field)."""
@@ -174,13 +164,6 @@ def any_match(val: Column | str, arr: Column | str, op) -> Column:
     ``op`` is a binary Column function, e.g. ``lambda v, e: v > e``."""
     v = _col(val)
     return F.exists(_col(arr), lambda e: op(v, e))
-
-
-def all_match(val: Column | str, arr: Column | str, op) -> Column:
-    """``val <op> ALL(arr)`` (``expression/operator/all/AllOperator.java``)
-    via the ``forall`` HOF (vacuously true on empty arrays, as SQL)."""
-    v = _col(val)
-    return F.forall(_col(arr), lambda e: op(v, e))
 
 
 def like_any(val: Column | str, patterns: Column | str) -> Column:

@@ -64,21 +64,6 @@ def shingles(text_col, n: int = 3) -> F.Column:
     return F.array_distinct(grams)
 
 
-def minhash_signature(shingle_col, num_hashes: int = 32) -> F.Column:
-    """MinHash signature: per seed i, min over shingles of
-    xxhash64(shingle, i). Pure JVM (xxhash64 is a Spark builtin);
-    one pass over the shingle array per hash — map-side only.
-    """
-    return F.array(
-        *[
-            F.array_min(
-                F.transform(shingle_col, lambda s: F.xxhash64(s, F.lit(i)))
-            )
-            for i in range(num_hashes)
-        ]
-    )
-
-
 def minhash_lsh_candidates(
     df: DataFrame,
     text_col: str,

@@ -271,12 +271,6 @@ _TABLE_CACHE: dict[tuple[int, str], dict[str, DataFrame]] = {}
 _REGISTERED: dict[int, str] = {}
 
 
-def clear_table_cache() -> None:
-    """Drop cached table DataFrames (tests / after external mutation)."""
-    _TABLE_CACHE.clear()
-    _REGISTERED.clear()
-
-
 def load_tables(
     spark: SparkSession, sf_dir: str, register: bool = True
 ) -> dict[str, DataFrame]:

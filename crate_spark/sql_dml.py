@@ -25,7 +25,7 @@ import shutil
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from crate_spark.dialect import rewrite
+from crate_spark.dialect import mask, rewrite, unmask
 from crate_spark.dml import CrateTable
 from crate_spark.session import local_frame, rowcount_frame
 
@@ -223,31 +223,12 @@ def _find_close(s: str, open_idx: int) -> int:
     raise ValueError(f"unbalanced parentheses in: {s[:80]}...")
 
 
-_LIT_RE = re.compile(r"'(?:[^']|'')*'")
-
-
-def _mask_literals(sql: str) -> tuple[str, list[str]]:
-    literals: list[str] = []
-
-    def _sub(m: re.Match) -> str:
-        literals.append(m.group(0))
-        return f"__LIT_{len(literals) - 1}__"
-
-    return _LIT_RE.sub(_sub, sql), literals
-
-
-def _unmask(s: str, literals: list[str]) -> str:
-    for i, lit in enumerate(literals):
-        s = s.replace(f"__LIT_{i}__", lit)
-    return s
-
-
 def _parse_returning(tail: str, literals: list[str]) -> tuple[str, list[str] | None]:
     """Strip a trailing RETURNING clause; [] means RETURNING *."""
     m = re.search(r"\bRETURNING\s+(.+)$", tail, re.IGNORECASE | re.DOTALL)
     if not m:
         return tail, None
-    cols = _unmask(m.group(1).strip(), literals)
+    cols = unmask(m.group(1).strip(), literals)
     tail = tail[: m.start()].strip()
     return tail, [] if cols == "*" else [c.strip() for c in _split_top(cols)]
 
@@ -321,7 +302,7 @@ class SqlDmlRouter:
     # -- dispatch --------------------------------------------------------
     def route(self, stmt: str) -> DataFrame | None:
         """Execute stmt if it is DML/DDL; None -> not a DML statement."""
-        masked, literals = _mask_literals(stmt)
+        masked, literals = mask(stmt, ident=str)
         head = masked.lstrip().split(None, 2)
         if not head:
             return None
@@ -431,7 +412,7 @@ class SqlDmlRouter:
             # starts with CHECK (dml.rst debit_card example)
             if re.match(r"CHECK\s*\(", up):
                 checks.append(
-                    _unmask(item[item.index("(") + 1 : item.rindex(")")], literals)
+                    unmask(item[item.index("(") + 1 : item.rindex(")")], literals)
                 )
                 continue
             if up.startswith("CONSTRAINT "):
@@ -452,7 +433,7 @@ class SqlDmlRouter:
                     continue
                 if re.match(r"CHECK\s*\(", up):
                     checks.append(
-                        _unmask(item[item.index("(") + 1 : item.rindex(")")], literals)
+                        unmask(item[item.index("(") + 1 : item.rindex(")")], literals)
                     )
                     continue
             if up.startswith("INDEX "):
@@ -484,7 +465,7 @@ class SqlDmlRouter:
             )
             if gm:
                 gclose = _find_close(rest, gm.end() - 1)
-                generated[cname] = _unmask(rest[gm.end() : gclose], literals)
+                generated[cname] = unmask(rest[gm.end() : gclose], literals)
                 rest = rest[: gm.start()] + rest[gclose + 1 :]
             else:
                 # paren-less form (create-table.rst: GENERATED ALWAYS
@@ -496,7 +477,7 @@ class SqlDmlRouter:
                     re.IGNORECASE | re.DOTALL,
                 )
                 if gm2:
-                    generated[cname] = _unmask(gm2.group(1).strip(), literals)
+                    generated[cname] = unmask(gm2.group(1).strip(), literals)
                     rest = rest[: gm2.start()]
                 else:
                     # bare `[data_type] AS expr` shorthand — GENERATED
@@ -524,18 +505,18 @@ class SqlDmlRouter:
                             # parenthesized generation expression
                             popen = rest.index("(", am.end())
                             pclose = _find_close(rest, popen)
-                            generated[cname] = _unmask(
+                            generated[cname] = unmask(
                                 rest[popen + 1 : pclose], literals
                             )
                             rest = pre + rest[pclose + 1 :]
                         else:
-                            generated[cname] = _unmask(expr, literals)
+                            generated[cname] = unmask(expr, literals)
                             rest = pre
                         break
             ckm = re.search(r"CHECK\s*\(", rest, re.IGNORECASE)
             if ckm:
                 cclose = _find_close(rest, ckm.end() - 1)
-                checks.append(_unmask(rest[ckm.end() : cclose], literals))
+                checks.append(unmask(rest[ckm.end() : cclose], literals))
                 rest = rest[: ckm.start()] + rest[cclose + 1 :]
             # column DEFAULT expression (reference metadata
             # Reference.defaultExpression; insert.rst) — applied when
@@ -554,7 +535,7 @@ class SqlDmlRouter:
             )
             if dm:
                 defaults[cname] = rewrite(
-                    _unmask(rest[dm.end():].strip(), literals)
+                    unmask(rest[dm.end():].strip(), literals)
                 )
                 rest = rest[: dm.start()]
             else:
@@ -575,7 +556,7 @@ class SqlDmlRouter:
                             re.IGNORECASE | re.DOTALL,
                         )
                         if cdm:
-                            raw = _unmask(cdm.group(2).strip(), literals)
+                            raw = unmask(cdm.group(2).strip(), literals)
                             obj_defaults[cdm.group(1)] = (
                                 raw[1:-1].replace("''", "'")
                                 if raw.startswith("'")
@@ -657,7 +638,7 @@ class SqlDmlRouter:
             for kv in wm.group(1).split(","):
                 if "=" in kv:
                     k, v = kv.split("=", 1)
-                    settings[k.strip().strip('"')] = _unmask(v.strip(), literals).strip("'\"")
+                    settings[k.strip().strip('"')] = unmask(v.strip(), literals).strip("'\"")
 
         # CLUSTERED [BY (col)] INTO n SHARDS (create-table.rst): the
         # MODULO routing key — writes hash-repartition on it so each
@@ -702,7 +683,7 @@ class SqlDmlRouter:
         """CREATE TABLE t AS <query> (reference ``CreateTableAsPlan``):
         materialize the query result as a new stored table."""
         name = raw_name.strip('"').split(".")[-1]
-        src = self.spark.sql(rewrite(_unmask(query.strip(), literals), user_schemas=self.owner._user_schemas()))
+        src = self.spark.sql(rewrite(unmask(query.strip(), literals), user_schemas=self.owner._user_schemas()))
         schema_ddl = ", ".join(
             f"{f.name} {f.dataType.simpleString()}" for f in src.schema.fields
         )
@@ -798,7 +779,7 @@ class SqlDmlRouter:
                     if "=" in kv:
                         k, v = kv.split("=", 1)
                         key = k.strip().strip('"')
-                        val = _unmask(v.strip(), literals).strip("'\"")
+                        val = unmask(v.strip(), literals).strip("'\"")
                         table.settings[key] = val
                         if key == "number_of_shards" and val.isdigit():
                             # applies to future partitions/batches
@@ -842,8 +823,8 @@ class SqlDmlRouter:
             return level
 
         if m.group(2):  # ADD COLUMN (top-level or obj['sub'] nested)
-            ref = _unmask(m.group(2), literals)
-            raw_type = _unmask(m.group(3), literals).strip()
+            ref = unmask(m.group(2), literals)
+            raw_type = unmask(m.group(3), literals).strip()
             if re.search(r"\bPRIMARY\s+KEY\b", raw_type, re.IGNORECASE):
                 table.primary_key = list(table.primary_key) + [ref]
             raw_type = re.sub(
@@ -875,8 +856,8 @@ class SqlDmlRouter:
             ]
             table._save_meta()
         else:  # RENAME COLUMN (top-level or nested object subcolumn)
-            old_ref = _unmask(m.group(5), literals)
-            new_ref = _unmask(m.group(6), literals)
+            old_ref = unmask(m.group(5), literals)
+            new_ref = unmask(m.group(6), literals)
             ocol, opath = _subref(old_ref)
             ncol, npath = _subref(new_ref)
             if opath:
@@ -1009,7 +990,7 @@ class SqlDmlRouter:
                     k, _, v = a.partition("=")
                     vq = colpat.sub(r"target.\1", v.strip())
                     set_exprs[k.strip().strip('"')] = rewrite(
-                        _unmask(vq, literals)
+                        unmask(vq, literals)
                     )
                 conflict = ("update", set_exprs)
             body = body[: cm.start()].strip()
@@ -1019,13 +1000,13 @@ class SqlDmlRouter:
         ]
 
         if re.match(r"VALUES\b", body, re.IGNORECASE):
-            values_sql = _unmask(body[len("VALUES") :].strip(), literals)
+            values_sql = unmask(body[len("VALUES") :].strip(), literals)
             src = self.spark.sql(f"SELECT * FROM VALUES {rewrite(values_sql)}")
         else:
             # `INSERT INTO t (SELECT ...)` — PG-style parenthesized query
             if body.startswith("(") and _find_close(body, 0) == len(body) - 1:
                 body = body[1:-1].strip()
-            src = self.spark.sql(rewrite(_unmask(body, literals), user_schemas=self.owner._user_schemas()))
+            src = self.spark.sql(rewrite(unmask(body, literals), user_schemas=self.owner._user_schemas()))
         if len(src.columns) != len(target_cols):
             raise ValueError(
                 f"INSERT has {len(src.columns)} expressions for "
@@ -1107,13 +1088,13 @@ class SqlDmlRouter:
         if wm:
             where = self._coerce_ts_literals(
                 table,
-                rewrite(_expand_occ_where(_unmask(wm.group(1).strip(), literals))),
+                rewrite(_expand_occ_where(unmask(wm.group(1).strip(), literals))),
             )
             body = body[: wm.start()].strip()
         set_exprs = {}
         for a in _split_top(body):
             k, _, v = a.partition("=")
-            set_exprs[k.strip().strip('"')] = rewrite(_unmask(v.strip(), literals))
+            set_exprs[k.strip().strip('"')] = rewrite(unmask(v.strip(), literals))
         # partition columns are immutable — moving documents between
         # partitions is not atomic (partitioned-tables.rst:258-273,
         # reference ColumnValidationException); columns feeding a
@@ -1150,7 +1131,7 @@ class SqlDmlRouter:
         where = (
             self._coerce_ts_literals(
                 table,
-                rewrite(_expand_occ_where(_unmask(m.group(2).strip(), literals))),
+                rewrite(_expand_occ_where(unmask(m.group(2).strip(), literals))),
             )
             if m.group(2) else None
         )
@@ -1172,14 +1153,14 @@ class SqlDmlRouter:
         name = m.group(1).strip('"').split(".")[-1]
         table = self._table(name)
         direction = m.group(5).upper()
-        uri = _unmask(m.group(7), literals).strip("'")
+        uri = unmask(m.group(7), literals).strip("'")
         tail = m.group(8) or ""
         props: dict[str, str] = {}
         pm = re.search(r"WITH\s*\(([^)]*)\)", tail, re.IGNORECASE)
         if pm:
             for kv in _split_top(pm.group(1)):
                 k, _, v = kv.partition("=")
-                props[k.strip().lower()] = _unmask(v.strip(), literals).strip("'\"")
+                props[k.strip().lower()] = unmask(v.strip(), literals).strip("'\"")
         where = None
         # copy-to.rst grammar puts WHERE before TO; accept a trailing
         # spelling too for compatibility with earlier statements
@@ -1188,7 +1169,7 @@ class SqlDmlRouter:
         if where_src is None and wm:
             where_src = wm.group(1)
         if where_src:
-            where = rewrite(_unmask(where_src.strip(), literals))
+            where = rewrite(unmask(where_src.strip(), literals))
 
         if direction == "FROM":
             fmt = props.get("format", "csv" if not uri.endswith(".json") else "json")

@@ -30,6 +30,7 @@ from urllib.parse import unquote
 import pyarrow.parquet as pq
 
 from crate_spark.cluster_settings import SETTING_DEFAULTS, SETTINGS_COLUMNS
+from crate_spark.dialect import mask
 from crate_spark.session import local_frame
 from crate_spark.sql_dml import _spark_to_crate
 
@@ -71,9 +72,11 @@ _SHOW_VIEWS = {
 
 
 def views_read(stmt: str) -> set[str]:
-    """The system views ``stmt`` reads."""
+    """The system views ``stmt`` reads; text inside its literals names
+    none."""
+    masked, _ = mask(stmt, ident=str)
     names = {
-        (f"{m[1]}_{m[2]}" if m[1] else m[3]).lower() for m in _READ_RE.finditer(stmt)
+        (f"{m[1]}_{m[2]}" if m[1] else m[3]).lower() for m in _READ_RE.finditer(masked)
     }
     show = _SHOW_RE.match(stmt)
     if show:

@@ -14,10 +14,10 @@ import os
 import duckdb
 import pytest
 
-# something on this host periodically wipes /tmp; keep Spark scratch,
-# pytest tmp and tempfile roots inside the repo so a wipe mid-run
-# can't kill the shared SparkSession's shuffle/broadcast dirs
-_TMP = "/root/repo/.tmp"
+# a periodic /tmp wipe must not kill the shared SparkSession's
+# shuffle/broadcast dirs mid-run: keep Spark scratch, pytest tmp and
+# tempfile roots under the checkout these tests run from
+_TMP = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".tmp")
 os.makedirs(f"{_TMP}/spark", exist_ok=True)
 os.environ.setdefault("SPARK_LOCAL_DIRS", f"{_TMP}/spark")
 os.environ.setdefault("TMPDIR", _TMP)

@@ -17,20 +17,29 @@ from __future__ import annotations
 
 import re
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from crate_spark.dialect import rewrite
+from crate_spark.engine import CrateSession
 
-# text that exercises the masking: quotes doubled per SQL, plus the
-# operator characters every rewrite pass matches on
-_TRICKY = st.text(
-    alphabet=st.sampled_from(
+
+@pytest.fixture(scope="module")
+def crate(spark):
+    return CrateSession(spark)
+
+
+# text that exercises the masking: quotes doubled per SQL, the
+# operator characters every rewrite pass matches on, and fragments
+# shaped like mask placeholders, dollar quotes, parameters and escapes
+_TRICKY = st.lists(
+    st.sampled_from(
         list("abcZ09 _%\\~*#[]{}():=<>/.-+$'\"|^?!")
+        + ["__LIT_0__", "__LIT_1__", "__PLIT_0__", "__SYSLIT0__", "$$", "$1", "?", "\\'", '"']
     ),
-    min_size=0,
     max_size=24,
-)
+).map("".join)
 
 
 def _sql_quote(s: str) -> str:
@@ -41,8 +50,13 @@ def _sql_quote(s: str) -> str:
 @given(_TRICKY)
 def test_no_mask_token_leaks(s):
     out = rewrite(f"SELECT {_sql_quote(s)} AS v, 1 + 1 AS w FROM t")
-    assert not re.search(r"__LIT_\d+__", out)
-    assert "__OBJSTRUCT__" not in out
+    # the literal comes out whole (backslashes Spark-escaped); outside
+    # it, no placeholder is left
+    lit = _sql_quote(s).replace("\\", "\\\\")
+    assert lit in out
+    outside = out.replace(lit, "", 1)
+    assert not re.search(r"__LIT_\d+__", outside)
+    assert "__OBJSTRUCT__" not in outside
 
 
 @settings(max_examples=200, deadline=None)
@@ -80,11 +94,19 @@ def test_int_division_chain_matches_java(terms):
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(_TRICKY)
-def test_literals_roundtrip_through_spark(spark, s):
+def test_literals_roundtrip_through_spark(spark, crate, s):
     """The masked literal reaches Spark byte-exact: whatever operator
-    soup it contains, the VALUE comes back unchanged."""
+    soup it contains, the VALUE comes back unchanged — spelled as a
+    string, an escape string or a dollar quote, or bound as ``?`` or
+    ``$1`` through the session."""
     df = spark.sql(rewrite(f"SELECT {_sql_quote(s)} AS v"))
     assert df.collect()[0][0] == s
+    e_quoted = "E'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    spellings = [e_quoted] + ([f"$q${s}$q$"] if "$q" not in s else [])
+    for lit in spellings:
+        assert crate.execute(f"SELECT {lit} AS v").collect()[0][0] == s, lit
+    for marker in ("?", "$1"):
+        assert crate.execute(f"SELECT {marker} AS v", [s]).collect()[0][0] == s, marker
 
 
 # ---------------------------------------------------------------------------

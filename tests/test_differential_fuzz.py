@@ -21,9 +21,11 @@ every mismatch is a real bug:
 from __future__ import annotations
 
 import random
+import re
 
 import pytest
 
+from crate_spark.dialect import mask, unmask
 from crate_spark.engine import CrateSession
 from tests.conftest import SF_DIR, canonical_rows
 
@@ -1382,3 +1384,49 @@ def test_array_model_differential(crate, i, case):
     assert got == want or (got is None and want is None), (
         f"{expr} -> {got!r}, model -> {want!r}"
     )
+
+
+# ---- family #13: quoted identifiers (ROADMAP 3j) ----------------------------
+# Every name of a generated query is written bare, double-quoted or
+# backticked at random, outside its string literals; the quoted
+# spelling must answer exactly like the bare one. A quoted name is one
+# identifier: subscripts, qualifiers, aliases and ORDER BY keys after
+# it keep working.
+
+_NAMES = {c for c, _ in NATION_COLS + ORDERS_COLS} | {
+    "nation", "orders", "n", "o", "g", "s", "w", "nm", "cnt", "sk",
+    *(f"c{i}" for i in range(4)), *(f"a{i}" for i in range(3)),
+}
+_NAME_RE = re.compile(r"\b(" + "|".join(sorted(_NAMES, key=len, reverse=True)) + r")\b")
+
+
+def gen_quoted_pair(rng: random.Random) -> tuple[str, str]:
+    bare = gen_query(rng)
+    masked, tokens = mask(bare)
+    quoted = _NAME_RE.sub(
+        lambda m: rng.choice(['"{}"', "`{}`", "{}"]).format(m.group(1)), masked
+    )
+    return unmask(quoted, tokens), bare
+
+
+N_QUOTED = 40
+
+
+def _quoted_pairs():
+    rng = random.Random(SEED ^ 0x0DDBA11)
+    return [gen_quoted_pair(random.Random(rng.getrandbits(64))) for _ in range(N_QUOTED)]
+
+
+@pytest.mark.parametrize(
+    "i,pair",
+    list(enumerate(_quoted_pairs())),
+    ids=[f"qi{i:03d}" for i in range(N_QUOTED)],
+)
+def test_quoted_identifier_differential(crate, i, pair):
+    quoted_sql, bare_sql = pair
+    sdf_a = crate.execute(quoted_sql)
+    sdf_b = crate.execute(bare_sql)
+    assert [c.lower() for c in sdf_a.columns] == [c.lower() for c in sdf_b.columns]
+    a = canonical_rows([c.lower() for c in sdf_a.columns], [tuple(r) for r in sdf_a.collect()])
+    b = canonical_rows([c.lower() for c in sdf_b.columns], [tuple(r) for r in sdf_b.collect()])
+    assert a == b, f"values differ: {quoted_sql} vs {bare_sql}"

@@ -1,0 +1,94 @@
+"""One engine-level case per ``dialect.rewrite`` pass that only the
+reference doc corpus reached before: each asserts the answer the
+pass's own comment documents, so deleting or merging a pass (ROADMAP
+item 4) shows here when it changes an answer."""
+
+from __future__ import annotations
+
+import sys
+
+import pytest
+
+from crate_spark.engine import CrateSession
+
+
+@pytest.fixture(scope="module")
+def crate(spark, tmp_path_factory):
+    s = CrateSession(spark, None, storage_dir=str(tmp_path_factory.mktemp("passes")))
+    s.execute("CREATE TABLE rp (id INT PRIMARY KEY, g INT, x INT)")
+    s.execute("INSERT INTO rp (id, g, x) VALUES (1, 1, 10), (2, 1, 20), (3, 2, 30), (4, 2, 40)")
+    return s
+
+
+def _rows(crate, sql):
+    return [tuple(r) for r in crate.execute(sql).collect()]
+
+
+def test_at_time_zone(crate):
+    """A WITHOUT-tz operand is a wall clock in the zone, read as UTC;
+    a WITH-tz operand (``*_tz``) renders as the zone's wall clock."""
+    src = "(SELECT CAST('2024-01-01 12:00:00' AS TIMESTAMP) AS ts, " \
+          "CAST('2024-01-01 12:00:00' AS TIMESTAMP) AS ts_tz) AS q"
+    assert _rows(
+        crate,
+        "SELECT CAST(ts AT TIME ZONE 'Europe/Berlin' AS STRING) AS a, "
+        f"CAST(ts_tz AT TIME ZONE 'Europe/Berlin' AS STRING) AS b FROM {src}",
+    ) == [("2024-01-01 11:00:00", "2024-01-01 13:00:00")]
+
+
+def test_schema_qualified_table_function(crate):
+    assert sorted(_rows(crate, "SELECT * FROM pg_catalog.generate_series(1, 3)")) == [
+        (1,), (2,), (3,),
+    ]
+
+
+def test_pg_get_keywords_relation(crate):
+    assert _rows(
+        crate, "SELECT word, catcode FROM pg_get_keywords() WHERE word = 'select'"
+    ) == [("select", "R")]
+
+
+def test_named_window_extended_in_over(crate):
+    assert sorted(_rows(
+        crate,
+        "SELECT id, row_number() OVER (w ORDER BY x) AS r FROM rp "
+        "WINDOW w AS (PARTITION BY g)",
+    )) == [(1, 1), (2, 2), (3, 1), (4, 2)]
+
+
+def test_exponent_literal_past_double_max_rounds(crate):
+    assert _rows(crate, "SELECT 1.7976931348623158e308 AS v") == [(sys.float_info.max,)]
+
+
+def test_empty_row_table_function(crate):
+    assert _rows(crate, "SELECT 1 AS v FROM empty_row()") == [(1,)]
+
+
+def test_pg_expandarray_field_access(crate):
+    assert sorted(_rows(
+        crate, "SELECT (information_schema._pg_expandarray([10, 20])).n AS n"
+    )) == [(1,), (2,)]
+    assert sorted(_rows(
+        crate, "SELECT (information_schema._pg_expandarray([10, 20])).x AS x"
+    )) == [(10,), (20,)]
+
+
+def test_doc_schema_prefix_is_transparent(crate):
+    assert sorted(_rows(crate, "SELECT doc.rp.x FROM doc.rp WHERE doc.rp.g = 1")) == [
+        (10,), (20,),
+    ]
+
+
+def test_offset_rows(crate):
+    assert _rows(crate, "SELECT id FROM rp ORDER BY id OFFSET 2 ROWS") == [(3,), (4,)]
+
+
+def test_lag_over_unordered_partition(crate):
+    """Spark demands an ORDER BY; each partition still yields one NULL
+    and its other row's value."""
+    rows = _rows(crate, "SELECT g, x, lag(x) OVER (PARTITION BY g) AS l FROM rp")
+    for g in (1, 2):
+        part = [r for r in rows if r[0] == g]
+        assert sorted(r[2] is None for r in part) == [False, True]
+        (x_first,) = [r[1] for r in part if r[2] is None]
+        assert [r[2] for r in part if r[2] is not None] == [x_first]

@@ -65,6 +65,7 @@ def test_quoted_system_relations_resolve(fresh):
         ("SHOW COLUMNS FROM t", {"information_schema_columns"}),
         ("SELECT pg_backend_pid(), pg_catalog.pg_typeof(1)", set()),
         ("SELECT * FROM sys_metrics_src JOIN mysys.jobs ON TRUE", set()),
+        ("SELECT 'sys.jobs' AS s", set()),
     ],
 )
 def test_views_read(stmt, views):
