@@ -303,7 +303,7 @@ def route_admin(session, stmt: str) -> DataFrame | None:
             t = CrateTable(spark, path, **meta)
             t._save_meta()
             session._dml.crate_tables[name] = t
-            session.register(name, t.read())
+            session.register(name, t.relation())
             # sys.snapshot_restore feed (SysSnapshotRestoreTableInfo)
             session._restores.append((m.group(1), m.group(2), name))
         return rowcount_frame(spark, len(restored))

@@ -4828,9 +4828,17 @@ def rewrite_sys_columns(sql: str) -> str:
     input row, so in a join it would span both sides.
 
     Quoted text is masked first so a ``_score`` or ``_id`` INSIDE a
-    literal or a quoted name is never rewritten.
+    literal or a quoted name is never rewritten; a quoted name that is
+    exactly a system column (``"_id"``) reads that column.
     """
     sql, tokens = mask(sql)
+
+    def _sys_name(m: re.Match) -> str:
+        tok = tokens[int(m.group(1))]
+        bare = tok[0] in '"`' and tok[1:-1] in _SYS_COL_EXPRS
+        return tok[1:-1] if bare else m.group(0)
+
+    sql = _MASK_RE.sub(_sys_name, sql)
     # qualified references (t._score, nation._id) read the same system
     # column — the reference resolves alias-qualified sys columns like
     # any column; storage is single-relation here so the qualifier

@@ -41,7 +41,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from crate_spark.session import conf_scope, ddl_schema, local_frame
+from crate_spark.session import (
+    conf_scope, ddl_schema, local_frame, one_split, parquet_files,
+)
 
 META_FILE = "_crate_meta.json"
 
@@ -185,16 +187,22 @@ class CrateTable:
             json.dump(meta, f, indent=2)
 
     # -- read ------------------------------------------------------------
-    def _has_data(self) -> bool:
-        for root, _dirs, files in os.walk(self.path):
-            if any(f.endswith(".parquet") for f in files):
-                return True
-        return False
+    def files(self) -> list[tuple[str, int]]:
+        """(path, bytes) of the table's parquet files: one walk."""
+        return parquet_files(self.path)
 
-    def read(self) -> DataFrame:
-        if not self._has_data():
+    def read(self, files: list[tuple[str, int]] | None = None) -> DataFrame:
+        """The table's rows; ``files`` is a listing the caller already
+        made, so the table is not walked twice."""
+        if not (self.files() if files is None else files):
             return local_frame(self.spark, [], self.schema)
         return self.spark.read.schema(self.schema_ddl).parquet(self.path)
+
+    def relation(self) -> DataFrame:
+        """What SQL statements read: ``read()`` declared one partition
+        when the table is one split (``session.one_split``)."""
+        files = self.files()
+        return one_split(self.read(files), files)
 
     # -- write plumbing --------------------------------------------------
     #
@@ -398,8 +406,9 @@ class CrateTable:
                 "__dup", (F.count(F.lit(1)).over(w) > 1).cast("int")
             )
             metrics["dups"] = F.sum("__dup")
-            if self._has_data():
-                existing = self.read().select(*pk).withColumn("__exists", F.lit(1))
+            files = self.files()
+            if files:
+                existing = self.read(files).select(*pk).withColumn("__exists", F.lit(1))
                 df = df.join(existing, pk, "left")
                 metrics["clash"] = F.sum("__exists")
         staging, got = self._write_staged(df, metrics)
@@ -757,16 +766,11 @@ class CrateTable:
         rewrite stages and swaps like every other mutation — readers
         never observe a partial table.
         """
-        n_before = files_before = 0
-        bytes_total = 0
-        for root, _dirs, files in os.walk(self.path):
-            for f in files:
-                if f.endswith(".parquet"):
-                    files_before += 1
-                    bytes_total += os.path.getsize(os.path.join(root, f))
-        if files_before == 0:
+        files = self.files()
+        if not files:
             return {"files_before": 0, "files_after": 0}
-        df = self.read()
+        bytes_total = sum(size for _f, size in files)
+        df = self.read(files)
         if partition:
             cond = " AND ".join(f"{k} = {v!r}" for k, v in partition.items())
             keep = df.filter(f"NOT ({cond})")
@@ -779,13 +783,7 @@ class CrateTable:
         # _write_staged applies MODULO routing / partitionBy itself
         staging, _ = self._write_staged(df)
         self._swap_in(staging)
-        files_after = sum(
-            1
-            for root, _dirs, files in os.walk(self.path)
-            for f in files
-            if f.endswith(".parquet")
-        )
-        return {"files_before": files_before, "files_after": files_after}
+        return {"files_before": len(files), "files_after": len(self.files())}
 
     def copy_to(self, uri: str, *, format: str = "json",
                 columns: list[str] | None = None, where: str | None = None,

@@ -33,7 +33,7 @@ from crate_spark.dialect import (
     add_token, mask, rewrite, rewrite_sys_columns, unmask,
 )
 from crate_spark.session import (
-    apply_runtime_confs, load_tables, local_frame, rowcount_frame,
+    apply_runtime_confs, dml_count, load_tables, local_frame, rowcount_frame,
 )
 from crate_spark.system_views import views_held
 
@@ -648,7 +648,7 @@ class CrateSession:
             if re.search(rf"(?<![\w.\"]){re.escape(name)}\b", names, re.IGNORECASE):
                 ct = self._dml.crate_tables.get(name)
                 if ct is not None:
-                    self.register(name, ct.read())
+                    self.register(name, ct.relation())
 
         # SERVER / FOREIGN TABLE / USER MAPPING DDL (admin/fdw.rst)
         if re.match(
@@ -1395,14 +1395,15 @@ class CrateSession:
         number of result rows for any other statement, or the exception
         the row raised; a failing row does not stop the rows after it
         (http.rst "Bulk errors")."""
-        dml = re.match(r"\s*(INSERT|UPDATE|DELETE)\b", sql, re.IGNORECASE)
         out: list = []
         for row in bulk_params:
             try:
                 df = self.execute(sql, params=list(row))
-                rows = [] if df is None else df.collect()
-                counted = dml and df.columns == ["rowcount"]
-                out.append(rows[0][0] if counted else len(rows))
+                counted = dml_count(sql, df)
+                out.append(
+                    counted[1] if counted
+                    else 0 if df is None else len(df.collect())
+                )
             except Exception as e:  # noqa: BLE001 - reported per row
                 out.append(e)
         return out

@@ -26,6 +26,7 @@ import time
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from crate_spark.errors import error_class
+from crate_spark.session import dml_count
 
 
 def _json_value(v):
@@ -152,8 +153,9 @@ def execute_request(session, payload: dict, *, types: bool = False,
             return {"cols": [], "results": results,
                     "duration": round((time.time() - t0) * 1000, 3)}
         df = session.execute(stmt, params=payload.get("args"))
-        if df is None:
-            return {"cols": [], "rows": [], "rowcount": 0,
+        counted = dml_count(stmt, df)
+        if df is None or counted:
+            return {"cols": [], "rows": [], "rowcount": counted[1] if counted else 0,
                     "duration": round((time.time() - t0) * 1000, 3)}
         rows = [[_json_value(v) for v in r] for r in df.collect()]
         resp = {

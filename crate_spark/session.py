@@ -25,6 +25,7 @@ Scale notes (100 TB design intent, tested at local[32]):
 from __future__ import annotations
 
 import os
+import re
 from contextlib import contextmanager
 from functools import lru_cache
 
@@ -154,6 +155,50 @@ def rowcount_frame(spark: SparkSession, n: int = 1) -> DataFrame:
     return local_frame(spark, [(n,)], "rowcount bigint")
 
 
+_DML_RE = re.compile(r"\s*(INSERT|UPDATE|DELETE)\b", re.IGNORECASE)
+
+
+def dml_count(sql: str, df: DataFrame | None) -> tuple[str, int] | None:
+    """(verb, rows affected) when ``df`` is the ``rowcount_frame``
+    answer of an INSERT, UPDATE or DELETE ``sql``; None for any other
+    answer, a RETURNING result among them. Every front door replies to
+    a DML statement from this: a count, not a result set."""
+    m = _DML_RE.match(sql)
+    if m is None or df is None or df.columns != ["rowcount"]:
+        return None
+    return m.group(1).upper(), df.collect()[0][0]
+
+
+def parquet_files(path: str) -> list[tuple[str, int]]:
+    """(path, bytes) of every parquet file at ``path``, a file or a
+    table directory walked once (names sorted within a directory);
+    empty when nothing is there."""
+    if os.path.isfile(path):
+        return [(path, os.path.getsize(path))]
+    return [
+        (os.path.join(root, f), os.path.getsize(os.path.join(root, f)))
+        for root, _dirs, files in os.walk(path)
+        for f in sorted(files)
+        if f.endswith(".parquet")
+    ]
+
+
+def one_split(df: DataFrame, files: list[tuple[str, int]]) -> DataFrame:
+    """``df``, a scan of ``files``, declared single-partition when Spark
+    reads it as one split: one file no larger than the split-size floor
+    (``openCostInBytes``, or ``maxPartitionBytes`` if smaller). Then
+    ``coalesce(1)`` moves no row, and aggregates, windows and sorts above
+    it plan no exchange, so AQE runs no stage job for them; a join
+    partner of another width is still shuffled to that width. Anything
+    larger is left as it is: at scale this is a no-op by construction."""
+    if len(files) != 1:
+        return df
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    if files[0][1] > min(conf.filesOpenCostInBytes(), conf.filesMaxPartitionBytes()):
+        return df
+    return df.coalesce(1)
+
+
 def input_is_small(df: DataFrame) -> bool:
     """True when the optimizer's size estimate for ``df`` is at or
     below ``crate_spark.exec.spread_small_input_bytes`` (session conf,
@@ -279,7 +324,8 @@ def load_tables(
     Equivalent of CrateDB's DocTableInfo catalog resolution
     (``metadata/doc/DocTableInfo.java``) — here the "table" is a
     Parquet-backed DataFrame and Spark's session catalog is the schema
-    registry. Cached per (session, sf_dir).
+    registry. Cached per (session, sf_dir). Each view is ``one_split``
+    over its file; the returned DataFrames are the plain scans.
     """
     key = (id(spark), os.path.abspath(sf_dir))
     out = _TABLE_CACHE.get(key)
@@ -289,6 +335,7 @@ def load_tables(
         _TABLE_CACHE[key] = out
     if register and _REGISTERED.get(id(spark)) != key[1]:
         for name, df in out.items():
-            df.createOrReplaceTempView(name)
+            files = parquet_files(os.path.join(sf_dir, f"{name}.parquet"))
+            one_split(df, files).createOrReplaceTempView(name)
         _REGISTERED[id(spark)] = key[1]
     return out

@@ -25,7 +25,7 @@ import shutil
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from crate_spark.dialect import mask, rewrite, unmask
+from crate_spark.dialect import mask, rewrite, rewrite_sys_columns, unmask
 from crate_spark.dml import CrateTable
 from crate_spark.session import local_frame, rowcount_frame
 
@@ -180,18 +180,6 @@ def _spark_to_crate(simple: str) -> str:
     }.get(simple, simple)
 
 
-def _expand_occ_where(where: str) -> str:
-    """Expand OCC system columns (``_seq_no``/``_primary_term``/
-    ``_version``, occ.rst:60) referenced in an UPDATE/DELETE WHERE into
-    their row-level expressions — every live row is at version 1 /
-    seq 0 / term 1 here, so the optimistic-concurrency handshake
-    matches exactly the rows the reference's would."""
-    from crate_spark.dialect import rewrite_sys_columns
-
-    where = re.sub(r'"(_id|_doc|_raw|_version|_seq_no|_primary_term)"', r"\1", where)
-    return rewrite_sys_columns(where)
-
-
 def _split_top(s: str, sep: str = ",") -> list[str]:
     """Split at depth-0 separators (parens nest, literals are masked)."""
     items, buf, depth = [], "", 0
@@ -273,7 +261,7 @@ class SqlDmlRouter:
 
     def _refresh(self, name: str) -> None:
         name = name.split(".")[-1]
-        self.owner.register(name, self.crate_tables[name].read())
+        self.owner.register(name, self.crate_tables[name].relation())
 
     def _coerce_ts_literals(self, table: CrateTable, where: str) -> str:
         """Reference semantics: a NUMERIC literal compared to a
@@ -846,8 +834,9 @@ class SqlDmlRouter:
         elif m.group(4):  # DROP COLUMN
             col = m.group(4)
             fields = [f for f in table.schema.fields if f.name != col]
-            if table._has_data():
-                table._overwrite(table.read().drop(col))
+            files = table.files()
+            if files:
+                table._overwrite(table.read(files).drop(col))
             table.schema_ddl = ", ".join(
                 f"{f.name} {f.dataType.simpleString()}" for f in fields
             )
@@ -874,7 +863,8 @@ class SqlDmlRouter:
                     raise ValueError(f"unknown column '{old_ref}'")
                 node["name"] = npath[-1]
                 table._save_meta()
-                if table._has_data():
+                files = table.files()
+                if files:
                     # JSON payloads key by field name — rewrite the key
                     # at this nesting depth
                     import json as _json
@@ -897,14 +887,15 @@ class SqlDmlRouter:
 
                     rekey = F.udf(_rekey, "string")
                     table._overwrite(
-                        table.read().withColumn(ocol, rekey(F.col(ocol)))
+                        table.read(files).withColumn(ocol, rekey(F.col(ocol)))
                     )
             else:
                 old, new = ocol, ncol
                 fields = table.schema.fields
+                files = table.files()
                 renamed = (
-                    table.read().withColumnRenamed(old, new)
-                    if table._has_data() else None
+                    table.read(files).withColumnRenamed(old, new)
+                    if files else None
                 )
                 table.schema_ddl = ", ".join(
                     f"{new if f.name == old else f.name} {f.dataType.simpleString()}"
@@ -1001,7 +992,11 @@ class SqlDmlRouter:
 
         if re.match(r"VALUES\b", body, re.IGNORECASE):
             values_sql = unmask(body[len("VALUES") :].strip(), literals)
-            src = self.spark.sql(f"SELECT * FROM VALUES {rewrite(values_sql)}")
+            # rows written in the statement: one partition is exact, and
+            # the PK duplicate window over it needs no exchange
+            src = self.spark.sql(
+                f"SELECT * FROM VALUES {rewrite(values_sql)}"
+            ).coalesce(1)
         else:
             # `INSERT INTO t (SELECT ...)` — PG-style parenthesized query
             if body.startswith("(") and _find_close(body, 0) == len(body) - 1:
@@ -1086,9 +1081,11 @@ class SqlDmlRouter:
         where = None
         wm = re.search(r"\bWHERE\s+(.*)$", body, re.IGNORECASE | re.DOTALL)
         if wm:
+            # OCC columns (_version/_seq_no/_primary_term, occ.rst:60)
+            # in the WHERE read their row-level values
             where = self._coerce_ts_literals(
                 table,
-                rewrite(_expand_occ_where(unmask(wm.group(1).strip(), literals))),
+                rewrite(rewrite_sys_columns(unmask(wm.group(1).strip(), literals))),
             )
             body = body[: wm.start()].strip()
         set_exprs = {}
@@ -1131,7 +1128,7 @@ class SqlDmlRouter:
         where = (
             self._coerce_ts_literals(
                 table,
-                rewrite(_expand_occ_where(unmask(m.group(2).strip(), literals))),
+                rewrite(rewrite_sys_columns(unmask(m.group(2).strip(), literals))),
             )
             if m.group(2) else None
         )

@@ -76,6 +76,29 @@ def stream_windowed_rollup(
     )
 
 
+def session_frame(user_col: str, user: int, start_us, last_us, n, total):
+    """The closed sessions of one key as the output frame of
+    :func:`sessionize_stream`, one DataFrame for all of them (the
+    per-segment 1-row construction was the dominant batch cost: r11
+    measured ~95k single-row frames per replay). Session bounds are
+    int64 epoch µs; ``.view("datetime64[us]")`` reads the same instants
+    as ``pd.to_datetime(us, unit="us")`` at ~2.7x less per frame (r12),
+    and the timeout path pays this constructor once per timed-out key,
+    which is most of the flush batch's cost."""
+    import numpy as np
+    import pandas as pd
+
+    return pd.DataFrame(
+        {
+            user_col: np.full(len(n), user, dtype=np.int64),
+            "session_start": np.asarray(start_us, dtype=np.int64).view("datetime64[us]"),
+            "session_end": np.asarray(last_us, dtype=np.int64).view("datetime64[us]"),
+            "n_events": np.asarray(n, dtype=np.int64),
+            "total": np.asarray(total, dtype=np.float64),
+        }
+    )
+
+
 def sessionize_stream(
     src: DataFrame,
     *,
@@ -118,31 +141,8 @@ def sessionize_stream(
     def fn(key, pdf_iter, state):
         (user,) = key
 
-        def emit_many(start_us, last_us, n, total):
-            # one DataFrame for ALL closed segments of this key: the
-            # per-segment 1-row construction was the dominant batch
-            # cost (r11 measured ~95k single-row frames per replay).
-            # int64-µs .view("datetime64[us]") replaces pd.to_datetime
-            # (r12): same instants, ~2.7x cheaper per frame — the
-            # timeout path pays this constructor once per timed-out
-            # key, which is most of the flush batch's cost.
-            return pd.DataFrame(
-                {
-                    user_col: np.full(len(n), user, dtype=np.int64),
-                    "session_start": np.asarray(start_us, dtype=np.int64).view(
-                        "datetime64[us]"
-                    ),
-                    "session_end": np.asarray(last_us, dtype=np.int64).view(
-                        "datetime64[us]"
-                    ),
-                    "n_events": np.asarray(n, dtype=np.int64),
-                    "total": np.asarray(total, dtype=np.float64),
-                }
-            )
-
         def emit(seg):
-            start_us, last_us, n, total = seg
-            return emit_many([start_us], [last_us], [n], [total])
+            return session_frame(user_col, user, *([v] for v in seg))
 
         if state.hasTimedOut:
             seg = state.get
@@ -196,8 +196,8 @@ def sessionize_stream(
         # every non-tail segment is followed by an observed > gap break:
         # it is definitively closed, regardless of the watermark
         if len(seg_start) > 1:
-            yield emit_many(
-                seg_start[:-1], seg_end[:-1], seg_n[:-1], seg_tot[:-1]
+            yield session_frame(
+                user_col, user, seg_start[:-1], seg_end[:-1], seg_n[:-1], seg_tot[:-1]
             )
         tail = (
             int(seg_start[-1]),

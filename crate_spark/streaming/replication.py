@@ -204,7 +204,7 @@ class SubscriptionStore:
             sub.queries.append(q)
             session._dml.crate_tables[tname] = local
             session.subscribed_tables.add(tname)
-            session.register(tname, local.read())
+            session.register(tname, local.relation())
         self.subs[key] = sub
         return sub
 
@@ -233,7 +233,7 @@ class SubscriptionStore:
             )
             ct = session._dml.crate_tables.get(tname)
             if ct is not None:
-                session.register(tname, ct.read())
+                session.register(tname, ct.relation())
         session.subscribed_tables -= set(sub.tables)
         return True
 

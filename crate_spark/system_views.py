@@ -381,16 +381,12 @@ def _parquet_files(ct) -> list[tuple[str, int, int | None]]:
     """(file name, bytes, rows) per data file of ``ct`` — row counts
     from the parquet footer, a metadata read with no scan job."""
     out = []
-    for root, _d, files in os.walk(ct.path):
-        for f in sorted(files):
-            if not f.endswith(".parquet"):
-                continue
-            p = os.path.join(root, f)
-            try:
-                rows = pq.read_metadata(p).num_rows
-            except Exception:  # noqa: BLE001 - unreadable footer
-                rows = None
-            out.append((f, os.path.getsize(p), rows))
+    for p, size in ct.files():
+        try:
+            rows = pq.read_metadata(p).num_rows
+        except Exception:  # noqa: BLE001 - unreadable footer
+            rows = None
+        out.append((os.path.basename(p), size, rows))
     return out
 
 

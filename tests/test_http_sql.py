@@ -193,6 +193,24 @@ def test_http_bulk_dml_reports_rows_affected(spark, tmp_path):
     assert s.execute_bulk("SELECT id FROM bk WHERE g = ?", [[1], [2]]) == [3, 0]
 
 
+def test_http_dml_answers_a_count_not_a_result_set(spark, tmp_path):
+    """A single INSERT, UPDATE or DELETE answers no columns and no rows,
+    with ``rowcount`` the rows it affected (http.rst); INSERT …
+    RETURNING still answers its rows."""
+    s = CrateSession(spark, None, storage_dir=str(tmp_path))
+    s.execute("CREATE TABLE f (id int, v text)")
+
+    def shape(stmt):
+        resp = execute_request(s, {"stmt": stmt})
+        return resp["cols"], resp["rows"], resp["rowcount"]
+
+    assert shape("INSERT INTO f (id) VALUES (1), (2)") == ([], [], 2)
+    assert shape("UPDATE f SET v = 'x' WHERE id = 1") == ([], [], 1)
+    assert shape("DELETE FROM f WHERE id > 0") == ([], [], 2)
+    assert shape("INSERT INTO f (id) VALUES (3) RETURNING id") == (["id"], [[3]], 1)
+    assert shape("SELECT count(*) AS rowcount FROM f") == (["rowcount"], [[1]], 1)
+
+
 def test_http_concurrent_users_see_only_their_own_principal(spark, tmp_path):
     """Requests from different users run concurrently on one shared
     session: each statement runs as its requester, and the session's

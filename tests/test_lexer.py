@@ -144,11 +144,18 @@ def test_score_in_dollar_quote_is_data(crate):
         ('SELECT "tags"[1] AS v FROM lx', "SELECT tags[1] AS v FROM lx"),
         ("SELECT lx.\"o\"['b'] AS v FROM lx", "SELECT lx.o['b'] AS v FROM lx"),
         ('SELECT "lx"."s" AS v FROM "lx"', "SELECT lx.s AS v FROM lx"),
+        ('SELECT "_raw" FROM lx WHERE "_version" = 1', "SELECT _raw FROM lx WHERE _version = 1"),
     ],
 )
 def test_quoted_name_answers_like_bare_name(crate, quoted, bare):
     expect = _rows(crate.execute(bare))
     assert expect and _rows(crate.execute(quoted)) == expect
+
+
+def test_quoted_system_column_reads_the_column(crate):
+    bare, quoted = crate.execute("SELECT _id FROM lx"), crate.execute('SELECT "_id" FROM lx')
+    assert quoted.columns == bare.columns == ["_id"]
+    assert _rows(quoted) == _rows(bare)
 
 
 @pytest.mark.parametrize("name", ['"o.b"', '"my-col"'])

@@ -418,6 +418,71 @@ def test_pg_wire_simple_query_reply_is_one_write(spark):
     assert tags == [b"T", b"D", b"D", b"D", b"C", b"Z"]
 
 
+def _reply_tags(sock) -> list[tuple[bytes, bytes]]:
+    reply, out = b"".join(sock.sent), []
+    while reply:
+        end = 1 + struct.unpack("!I", reply[1:5])[0]
+        out.append((reply[0:1], reply[5:end]))
+        reply = reply[end:]
+    return out
+
+
+def test_pg_wire_dml_sends_its_command_tag_and_no_rows(spark, tmp_path):
+    """A simple-query INSERT, UPDATE or DELETE answers with no
+    RowDescription or DataRow and PostgreSQL's tag: ``INSERT 0 n``,
+    ``UPDATE n``, ``DELETE n``. INSERT … RETURNING still sends rows."""
+    from crate_spark.pg_wire import _PgHandler
+
+    handler = _PgHandler.__new__(_PgHandler)
+    handler.request = _RecordingSocket()
+    handler.session = CrateSession(spark, None, storage_dir=str(tmp_path))
+    handler.setup()
+
+    def reply(sql):
+        handler.request = sock = _RecordingSocket()
+        handler._simple_query(sock, sql)
+        return _reply_tags(sock)
+
+    reply("CREATE TABLE f (id int, v text)")
+    assert reply("INSERT INTO f (id) VALUES (3), (4)") == [
+        (b"C", b"INSERT 0 2\x00"), (b"Z", b"I")
+    ]
+    assert reply("UPDATE f SET v = 'x' WHERE id = 3") == [
+        (b"C", b"UPDATE 1\x00"), (b"Z", b"I")
+    ]
+    assert reply("DELETE FROM f WHERE id > 0") == [
+        (b"C", b"DELETE 2\x00"), (b"Z", b"I")
+    ]
+    tags = [t for t, _ in reply("INSERT INTO f (id) VALUES (5) RETURNING id")]
+    assert tags == [b"T", b"D", b"C", b"Z"]
+
+
+def test_pg_wire_extended_dml_describes_no_data(pg_server):
+    """An extended-protocol INSERT describes its portal as NoData and
+    completes with ``INSERT 0 1``, as a simple query does."""
+    c = MiniPgClient(pg_server)
+    try:
+        assert c.query("CREATE TABLE wire_dml (id int, v text)")[2] is None
+        body = b"\x00" + b"INSERT INTO wire_dml (id, v) VALUES ($1, $2)\x00" + struct.pack("!H", 0)
+        c.sock.sendall(b"P" + struct.pack("!I", len(body) + 4) + body)
+        body = b"\x00\x00" + struct.pack("!HH", 0, 2)
+        for p in (b"1", b"a"):
+            body += struct.pack("!i", len(p)) + p
+        body += struct.pack("!H", 0)
+        c.sock.sendall(b"B" + struct.pack("!I", len(body) + 4) + body)
+        body = b"P\x00"
+        c.sock.sendall(b"D" + struct.pack("!I", len(body) + 4) + body)
+        body = b"\x00" + struct.pack("!I", 0)
+        c.sock.sendall(b"E" + struct.pack("!I", len(body) + 4) + body)
+        c.sock.sendall(b"S" + struct.pack("!I", 4))
+        msgs = c._drain_until_ready()
+        assert [t for t, _ in msgs] == [b"1", b"2", b"n", b"C", b"Z"]
+        assert msgs[3][1] == b"INSERT 0 1\x00"
+        assert c.query("DROP TABLE wire_dml")[2] is None
+    finally:
+        c.close()
+
+
 def test_pg_wire_connection_sets_nodelay(spark, monkeypatch):
     """A connection accepted by ``serve`` has TCP_NODELAY set, read back
     from the accepted socket."""

@@ -199,3 +199,41 @@ def test_stream_quality_gate(spark, tmp_path):
     q.awaitTermination(60)
     got = {r["doc_id"]: r["gate"] for r in spark.read.parquet(dst).collect()}
     assert got == {0: "too_short", 1: "keep"}
+
+
+def test_session_frame_bounds_read_as_the_same_instants(spark):
+    """``session_frame`` turns int64 epoch µs into ``datetime64[us]``
+    with a view, not ``pd.to_datetime``: before the epoch, at it and far
+    after it, its columns hold the instants ``pd.to_datetime`` gives, and
+    Spark reads them back through the pandas-UDF output path as the same
+    epoch microseconds."""
+    import pandas as pd
+
+    from crate_spark.streaming.ingest import session_frame
+
+    starts = [
+        -2_208_988_800_000_001,  # 1899-12-31 23:59:59.999999
+        -1,
+        0,
+        1,
+        7_258_118_400_123_456,  # 2200-01-01 00:00:00.123456
+    ]
+    ends = [u + 90_000_000 for u in starts]
+
+    def frame(_pdf=None):
+        return session_frame("user_id", 7, starts, ends, [1] * 5, [0.5] * 5)
+
+    pdf = frame()
+    for col, us in (("session_start", starts), ("session_end", ends)):
+        assert list(pdf[col]) == list(pd.to_datetime(pd.Series(us), unit="us")), col
+    out = (
+        spark.createDataFrame([(7,)], "user_id bigint")
+        .groupBy("user_id")
+        .applyInPandas(
+            frame,
+            "user_id bigint, session_start timestamp, session_end timestamp, "
+            "n_events bigint, total double",
+        )
+        .selectExpr("unix_micros(session_start) AS s", "unix_micros(session_end) AS e")
+    )
+    assert sorted(tuple(r) for r in out.collect()) == sorted(zip(starts, ends))
