@@ -60,6 +60,7 @@ class MiniPgClient:
         body = sql.encode() + b"\x00"
         self.sock.sendall(b"Q" + struct.pack("!I", len(body) + 4) + body)
         cols, rows, err = [], [], None
+        self.oids = []  # RowDescription type OIDs, one per column
         for tag, body in self._drain_until_ready():
             if tag == b"T":
                 n = struct.unpack("!H", body[:2])[0]
@@ -67,6 +68,7 @@ class MiniPgClient:
                 for _ in range(n):
                     end = body.index(b"\x00", off)
                     cols.append(body[off:end].decode())
+                    self.oids.append(struct.unpack("!I", body[end + 7 : end + 11])[0])
                     off = end + 1 + 18  # fixed field descriptor tail
             elif tag == b"D":
                 nf = struct.unpack("!H", body[:2])[0]
