@@ -1,0 +1,337 @@
+"""The type table: one row per crate type, read by every front-end layer.
+
+The reference resolves every type name and alias in one place
+(``types/DataTypes.java:68-112``) and gives each type one PostgreSQL
+OID (``protocols/postgres/types/PGTypes.java``). ``TYPES`` is that place
+here. A few functions read it:
+
+- inbound, a type spelling: `spark_type` (CREATE TABLE and ALTER TABLE
+  columns, UDF signatures, foreign-table columns), `cast_type` (CAST,
+  ``::`` and typed literals) and `type_name` (the declared column's
+  ``information_schema`` name);
+- outbound, a Spark type's ``simpleString``: `crate_name`
+  (``information_schema``, ``pg_typeof``), `show_type` (SHOW CREATE
+  TABLE), `pg_oid` (pg-wire RowDescription and ``pg_attribute``) and
+  `http_type` (HTTP ``col_types``); `format_type_names` names PG OIDs.
+
+A spelling the table does not know goes to Spark as written, so every
+Spark DDL type (``decimal(10,2)``, ``map<string,int>``) is accepted.
+"""
+
+from __future__ import annotations
+
+import re
+from typing import NamedTuple
+
+
+class CrateType(NamedTuple):
+    #: the crate name: information_schema, pg_typeof and format_type
+    name: str
+    #: the Spark type a column of this type stores
+    spark: str
+    #: lower-case, single-spaced spellings that name this type
+    spellings: tuple[str, ...] = ()
+    #: PostgreSQL OID; format_type names the first row holding it
+    oid: int | None = None
+    #: HTTP col_types id (interfaces/http.rst data-type table)
+    http: int | None = None
+
+
+#: The first row of each Spark type names that type outbound, and its
+#: OID and HTTP id are what a value of it is sent with; a later row of
+#: the same Spark type is an alias store (ip, json, … are text). Arrays,
+#: maps and structs are not rows: arrays nest their element type, and
+#: a map or struct reads as ``object``.
+TYPES = (
+    CrateType("text", "string", ("text", "string", "varchar", "character varying"), 25, 4),
+    CrateType("integer", "int", ("integer", "int", "int4"), 23, 9),
+    CrateType("bigint", "bigint", ("bigint", "long", "int8"), 20, 10),
+    CrateType("smallint", "smallint", ("smallint", "short", "int2"), 21, 8),
+    # no one-byte integer on the wire here: values are sent as text
+    CrateType("byte", "tinyint", ("byte", "tinyint"), 25, 8),
+    CrateType("real", "float", ("real", "float", "float4"), 700, 7),
+    CrateType("double precision", "double", ("double precision", "double", "float8"), 701, 6),
+    CrateType("boolean", "boolean", ("boolean",), 16, 3),
+    CrateType("date", "date", ("date",), 1082, 24),
+    CrateType(
+        "timestamp without time zone", "timestamp_ntz",
+        ("timestamp without time zone", "timestamp_ntz"), 1114, 15,
+    ),
+    # values are sent without their zone, in PG's timestamp text form
+    CrateType(
+        "timestamp with time zone", "timestamp",
+        ("timestamp with time zone", "timestamptz", "timestamp"), 1114, 11,
+    ),
+    # a bare numeric column keeps 18 fractional digits; `cast_type`
+    # gives a bare numeric cast its own scale
+    CrateType("numeric", "decimal(38,18)", ("numeric",), 1700, 22),
+    CrateType("bytea", "binary", ("bytea", "binary"), 17, 4),
+    CrateType("undefined", "void", (), 25, 0),
+    # objects are stored as JSON text (SURVEY.md §7 hard part (a))
+    CrateType("object", "string", ("object",), 25, 12),
+    CrateType("character", "string", ("character", "char"), 1042),
+    CrateType("ip", "string", ("ip",)),
+    CrateType("uuid", "string", ("uuid",), 2950),
+    CrateType("json", "string", ("json",), 114),
+    # bit strings render as '010…' text
+    CrateType("bit", "string", ("bit",), 1560),
+    # shapes are WKT text; the geo scalars parse WKT
+    CrateType("geo_shape", "string", ("geo_shape",)),
+    CrateType("geo_point", "array<double>", ("geo_point",), 600),
+    CrateType("float_vector", "array<float>", ("float_vector",)),
+    CrateType("time with time zone", "string", ("time with time zone", "timetz")),
+    # not Spark's TIME: a cast of it has always answered text
+    CrateType("time without time zone", "string", ("time without time zone",)),
+    CrateType("regproc", "string", ("regproc",)),
+    CrateType("regclass", "string", ("regclass",)),
+    CrateType("regtype", "string", ("regtype",)),
+    CrateType("oidvector", "array<int>", ("oidvector",)),
+    CrateType("interval", "struct<months:bigint,days:int,micros:bigint>", ("interval",), 1186),
+    # PG types no spelling declares; format_type names their OIDs
+    CrateType('"char"', "tinyint", (), 18),
+    CrateType("name", "string", (), 19),
+    CrateType("oid", "int", (), 26),
+    CrateType("text", "string", (), 1043),
+    CrateType("timestamp with time zone", "timestamp", (), 1184),
+)
+
+_BY_SPELLING = {sp: t for t in TYPES for sp in t.spellings}
+_BY_SPARK: dict[str, CrateType] = {}
+for _t in TYPES:
+    _BY_SPARK.setdefault(_t.spark, _t)
+_OBJECT = _BY_SPELLING["object"]
+_NUMERIC = _BY_SPELLING["numeric"]
+
+#: spellings whose length argument is advisory (a string store, a
+#: float_vector's dimension) or, for numeric, its precision and scale
+_SIZED = ("varchar", "character varying", "char", "character", "bit", "numeric", "float_vector")
+_SIZED_RE = re.compile(rf"({'|'.join(_SIZED)})\((\d+(?:,\d+)?)\)")
+#: OBJECT[(policy)][ AS (…)]: stored as JSON text like a bare object;
+#: the declared inner shape is not enforced at write (dynamic policy)
+_OBJECT_RE = re.compile(r"object(\((strict|dynamic|ignored)\))?( ?as ?\(.*\))?", re.DOTALL)
+
+#: first words of every spelling and every stored Spark type: an item
+#: of a function signature that starts with one has no argument name
+TYPE_WORDS = frozenset(
+    {sp.split()[0] for sp in _BY_SPELLING}
+    | {re.split(r"[(<]", t.spark)[0] for t in TYPES}
+)
+
+
+def _key(spelling: str) -> str:
+    """Lower case, single spaces, no spaces around brackets or commas;
+    ``"char"`` (PG's quoted internal spelling) reads as ``char``."""
+    key = re.sub(r"\s+", " ", spelling.strip().strip('"').lower())
+    return re.sub(r" ?([(),\[\]<>]) ?", r"\1", key)
+
+
+def _element(key: str) -> str | None:
+    """Element spelling of ``array(x)`` or ``x[]``, else None."""
+    m = re.fullmatch(r"array\((.+)\)", key) or re.fullmatch(r"(.+?)\[\]", key)
+    return m.group(1) if m else None
+
+
+def _spark_of(key: str) -> str | None:
+    t = _BY_SPELLING.get(key)
+    if t is not None:
+        return t.spark
+    elem = _element(key)
+    if elem is not None:
+        return f"array<{spark_type(elem)}>"
+    if _OBJECT_RE.fullmatch(key):
+        return _OBJECT.spark
+    m = _SIZED_RE.fullmatch(key)
+    if m:
+        t = _BY_SPELLING[m.group(1)]
+        return f"decimal({m.group(2)})" if t is _NUMERIC else t.spark
+    return None
+
+
+def spark_type(spelling: str) -> str:
+    """Spark type of a column declared as ``spelling``."""
+    return _spark_of(_key(spelling)) or spelling.strip()
+
+
+def cast_type(spelling: str) -> str:
+    """Target of ``CAST(x AS spelling)``, ``x::spelling`` and
+    ``spelling '…'``: the column type in Spark's upper-case spelling.
+    A spelling Spark reads as that type already (``int``,
+    ``decimal(10,2)``) is left as written, and so are interval (an
+    expression's interval is Spark's, not the stored struct) and
+    char(n)/varchar(n) (Spark reads them; the ``::`` pass truncates)."""
+    key = _key(spelling)
+    elem = _element(key)
+    if elem is not None:
+        return f"ARRAY<{cast_type(elem)}>"
+    if key == "numeric":
+        # bare numeric: enough scale for display parity, enough headroom
+        # that sum/avg over bigint-range values don't overflow
+        return "DECIMAL(38,6)"
+    if key == "interval" or re.fullmatch(r"(varchar|character varying|char|character)\(\d+\)", key):
+        return spelling
+    t = _spark_of(key)
+    return spelling if t is None or t == key else t.upper()
+
+
+def type_name(spelling: str) -> str:
+    """Crate name of a declared scalar spelling (``int8`` -> bigint);
+    a spelling the table does not know answers as written."""
+    key = _key(spelling)
+    m = _SIZED_RE.fullmatch(key)
+    t = _BY_SPELLING.get(m.group(1) if m else key)
+    return t.name if t is not None else key
+
+
+def _outbound(simple: str) -> CrateType:
+    """The row that names a non-array Spark type."""
+    if simple.startswith(("struct<", "map<")):
+        return _OBJECT
+    if simple.startswith("decimal"):
+        return _NUMERIC
+    return _BY_SPARK.get(simple) or CrateType(simple, simple, (), 25, 0)
+
+
+def _element_type(simple: str) -> str | None:
+    return simple[6:-1] if simple.startswith("array<") else None
+
+
+def crate_name(simple: str) -> str:
+    """Crate name of a Spark type (``array<int>`` -> integer_array)."""
+    elem = _element_type(simple)
+    if elem is not None:
+        return crate_name(elem) + "_array"
+    return _outbound(simple).name
+
+
+def show_type(simple: str) -> str:
+    """SHOW CREATE TABLE spelling of a Spark type."""
+    elem = _element_type(simple)
+    if elem is not None:
+        return f"ARRAY({show_type(elem)})"
+    if simple.startswith("decimal"):
+        return "NUMERIC" + simple[len("decimal"):]
+    return _outbound(simple).name.upper()
+
+
+_SENT_OIDS: dict[str, int] = {}
+
+
+def pg_oid(simple: str) -> int:
+    """PG OID a value of this Spark type is sent with. Arrays, maps and
+    structs are sent as text (25). Memoized: RowDescription asks once
+    per column of every pg-wire read."""
+    try:
+        return _SENT_OIDS[simple]
+    except KeyError:
+        oid = 25 if simple.startswith("array<") else _outbound(simple).oid
+        _SENT_OIDS[simple] = oid
+        return oid
+
+
+def http_type(simple: str):
+    """HTTP ``col_types`` id of a Spark type; arrays nest as [100, id]."""
+    elem = _element_type(simple)
+    if elem is not None:
+        return [100, http_type(elem)]
+    return _outbound(simple).http
+
+
+def crate_name_sql(typeof: str) -> str:
+    """SQL over ``typeof(x)`` that answers `crate_name` at run time
+    (one level of array)."""
+
+    def names(t: str) -> str:
+        arms = "".join(
+            f"WHEN '{spark}' THEN '{t.name}' "
+            for spark, t in _BY_SPARK.items()
+            if spark != t.name and t is not _NUMERIC and "<" not in spark
+        )
+        return (
+            f"(CASE {t} {arms}"
+            f"ELSE (CASE WHEN {t} LIKE 'decimal%' THEN '{_NUMERIC.name}' "
+            f"WHEN {t} LIKE 'struct<%' OR {t} LIKE 'map<%' THEN '{_OBJECT.name}' "
+            f"ELSE {t} END) END)"
+        )
+
+    elem = f"substring({typeof}, 7, length({typeof}) - 7)"
+    return (
+        f"(CASE WHEN {typeof} LIKE 'array<%' "
+        f"THEN concat({names(elem)}, '_array') ELSE {names(typeof)} END)"
+    )
+
+
+#: pg_type: the reference's full 54-row catalog inventory (PGTypes.java;
+#: listed verbatim in interfaces/postgres.rst) — standard PostgreSQL
+#: catalog facts: oid, typname, typarray (oid of the array type),
+#: typelem (element oid for arrays), typlen (-1 varlena, -2 cstring),
+#: typtype (b base/p pseudo), typcategory (N numeric, S string, A
+#: array, D datetime, ...)
+PG_TYPES = [
+    (16, "bool", 1000, 0, 1, "b", "N"),
+    (18, "char", 1002, 0, 1, "b", "S"),
+    (19, "name", -1, 0, 64, "b", "S"),
+    (20, "int8", 1016, 0, 8, "b", "N"),
+    (21, "int2", 1005, 0, 2, "b", "N"),
+    (23, "int4", 1007, 0, 4, "b", "N"),
+    (24, "regproc", 1008, 0, 4, "b", "N"),
+    (25, "text", 1009, 0, -1, "b", "S"),
+    (26, "oid", 1028, 0, 4, "b", "N"),
+    (30, "oidvector", 1013, 26, -1, "b", "A"),
+    (114, "json", 199, 0, -1, "b", "U"),
+    (199, "_json", 0, 114, -1, "b", "A"),
+    (600, "point", 1017, 0, 16, "b", "G"),
+    (700, "float4", 1021, 0, 4, "b", "N"),
+    (701, "float8", 1022, 0, 8, "b", "N"),
+    (705, "unknown", 0, 0, -2, "p", "X"),
+    (1000, "_bool", 0, 16, -1, "b", "A"),
+    (1002, "_char", 0, 18, -1, "b", "A"),
+    (1005, "_int2", 0, 21, -1, "b", "A"),
+    (1007, "_int4", 0, 23, -1, "b", "A"),
+    (1008, "_regproc", 0, 24, -1, "b", "A"),
+    (1009, "_text", 0, 25, -1, "b", "A"),
+    (1014, "_bpchar", 0, 1042, -1, "b", "A"),
+    (1015, "_varchar", 0, 1043, -1, "b", "A"),
+    (1016, "_int8", 0, 20, -1, "b", "A"),
+    (1017, "_point", 0, 600, -1, "b", "A"),
+    (1021, "_float4", 0, 700, -1, "b", "A"),
+    (1022, "_float8", 0, 701, -1, "b", "A"),
+    (1042, "bpchar", 1014, 0, -1, "b", "S"),
+    (1043, "varchar", 1015, 0, -1, "b", "S"),
+    (1082, "date", 1182, 0, 4, "b", "D"),
+    (1114, "timestamp", 1115, 0, 8, "b", "D"),
+    (1115, "_timestamp", 0, 1114, -1, "b", "A"),
+    (1182, "_date", 0, 1082, -1, "b", "A"),
+    (1184, "timestamptz", 1185, 0, 8, "b", "D"),
+    (1185, "_timestamptz", 0, 1184, -1, "b", "A"),
+    (1186, "interval", 1187, 0, 16, "b", "T"),
+    (1187, "_interval", 0, 1186, -1, "b", "A"),
+    (1231, "_numeric", 0, 1700, -1, "b", "A"),
+    (1266, "timetz", 1270, 0, 12, "b", "D"),
+    (1270, "_timetz", 0, 1266, -1, "b", "A"),
+    (1560, "bit", 1561, 0, -1, "b", "V"),
+    (1561, "_bit", 0, 1560, -1, "b", "A"),
+    (1700, "numeric", 1231, 0, -1, "b", "N"),
+    (2205, "regclass", 2210, 0, 4, "b", "N"),
+    (2206, "regtype", 2211, 0, 4, "b", "N"),
+    (2210, "_regclass", 0, 2205, -1, "b", "A"),
+    (2211, "_regtype", 0, 2206, -1, "b", "A"),
+    (2249, "record", 2287, 0, -1, "p", "P"),
+    (2276, "any", 0, 0, 4, "p", "P"),
+    (2277, "anyarray", 0, 2276, -1, "p", "P"),
+    (2287, "_record", 0, 2249, -1, "p", "A"),
+    (2950, "uuid", 2951, 0, 16, "b", "U"),
+    (2951, "_uuid", 0, 2950, -1, "b", "A"),
+]
+
+
+def format_type_names() -> dict[int, str]:
+    """PG OID -> format_type name (FormatTypeFunction): the first row
+    holding the OID, and ``<element>[]`` for a pg_type array row."""
+    names: dict[int, str] = {}
+    for t in TYPES:
+        if t.oid is not None:
+            names.setdefault(t.oid, t.name)
+    for oid, typname, _arr, elem, _len, _kind, category in PG_TYPES:
+        if category == "A" and typname.startswith("_") and elem in names:
+            names[oid] = names[elem] + "[]"
+    return names

@@ -57,6 +57,8 @@ import time
 
 import regex as _RE  # recursive patterns: unbounded paren nesting in operands
 
+from crate_spark.datatypes import cast_type, crate_name_sql, format_type_names
+
 #: process-start wall time — pg_postmaster_start_time's analog (the
 #: "postmaster" here is this Spark driver process)
 _PROCESS_START = time.strftime("%Y-%m-%d %H:%M:%S")
@@ -276,50 +278,6 @@ _SUBSCRIPT_SLICE_RE = _RE.compile(
 )
 
 
-#: reference cast-type spellings (data-types.rst, pg-compat aliases)
-#: that Spark's CAST grammar doesn't know; everything else passes
-#: through (Spark handles int/bigint/varchar(n)/numeric(p,s)/...)
-_CAST_TYPE_MAP = {
-    "bytea": "BINARY", "text": "STRING", "int2": "SMALLINT", "int4": "INT",
-    "int8": "BIGINT", "float4": "FLOAT", "float8": "DOUBLE", "real": "FLOAT",
-    "ip": "STRING", "regclass": "STRING", "regproc": "STRING",
-    # bare numeric: enough scale for display parity, enough headroom
-    # that sum/avg over bigint-range values don't overflow
-    "numeric": "DECIMAL(38,6)",
-    "timestampwithtimezone": "TIMESTAMP",
-    "timestampwithouttimezone": "TIMESTAMP_NTZ",
-    "timestamptz": "TIMESTAMP",
-    "timewithtimezone": "STRING", "timewithouttimezone": "STRING",
-    "doubleprecision": "DOUBLE", "charactervarying": "STRING",
-    "regtype": "STRING", "timetz": "STRING", "geo_shape": "STRING",
-    "geo_point": "ARRAY<DOUBLE>",
-    # bare varchar = text in the reference (data-types.rst: "varchar
-    # without a length limit"); Spark's VARCHAR demands a length
-    "varchar": "STRING",
-}
-
-
-def _cast_type(t: str) -> str:
-    key = re.sub(r"\s+", "", t.lower())
-    if key.endswith("[]"):  # PG array-type spelling int[] / text[]
-        return f"ARRAY<{_cast_type(key[:-2])}>"
-    m = re.fullmatch(r"array\((.+)\)", key)
-    if m:  # crate array(inner) spelling (data-types.rst)
-        return f"ARRAY<{_cast_type(m.group(1))}>"
-    if key.startswith("float_vector"):
-        return "ARRAY<FLOAT>"
-    if re.fullmatch(r"bit\(\d+\)", key):
-        return "STRING"
-    # json and OBJECT[(policy)][AS (...)] casts: the engine's object
-    # representation is a JSON string, so these are identity-shaped
-    # (data-types.rst json / object cast examples)
-    if key in ("json", "uuid"):
-        return "STRING"
-    if re.fullmatch(r"object(\((strict|dynamic|ignored)\))?(as\(.*\))?", key):
-        return "STRING"
-    return _CAST_TYPE_MAP.get(key, t)
-
-
 def _subscript_slice_sub(m: re.Match) -> str:
     base, frm, to = m.group("base"), m.group("frm"), m.group("to")
     # NULL bounds read as open ends (ArraySliceFunctionTest.java:97:
@@ -381,8 +339,9 @@ _SCHEMA_RE = re.compile(
 # ---------------------------------------------------------------------------
 # crate-only scalar function names -> Spark SQL expression templates
 # ---------------------------------------------------------------------------
-def _split_args(s: str) -> list[str]:
-    """Split a call's argument text at top-level commas."""
+def split_args(s: str) -> list[str]:
+    """Split at top-level commas: parentheses and brackets nest, so an
+    array literal's commas stay inside its item (literals are masked)."""
     parts, depth, cur = [], 0, []
     for ch in s:
         if ch in "([":
@@ -803,24 +762,6 @@ _FN_TEMPLATES: dict = {
 }
 
 
-#: PG type oid -> CrateDB DataType name (FormatTypeFunction calls
-#: PGTypes.fromOID(oid).getName(); oids from protocols/postgres/types/)
-_PG_OID_NAMES = {
-    16: "boolean", 18: '"char"', 19: "name", 20: "bigint", 21: "smallint",
-    23: "integer", 25: "text", 26: "oid", 114: "json", 600: "geo_point",
-    700: "real", 701: "double precision", 1042: "character", 1043: "text",
-    1082: "date", 1114: "timestamp without time zone",
-    1184: "timestamp with time zone", 1186: "interval", 1560: "bit",
-    1700: "numeric", 2950: "uuid",
-}
-#: array-type oid -> element oid (PGArray OIDs)
-_PG_ARRAY_OIDS = {
-    1000: 16, 1005: 21, 1007: 23, 1016: 20, 1021: 700, 1022: 701,
-    1015: 1043, 199: 114, 1115: 1114, 1182: 1082, 1185: 1184,
-    1561: 1560, 1231: 1700, 2951: 2950,
-}
-
-
 def _null_or_empty_sql(a: list[str], lits: list[str]) -> str | None:
     """NullOrEmptyFunction (null-or-empty-array / -object): arrays use
     size(); OBJECT operands — literals (already rewritten to
@@ -975,10 +916,7 @@ def _format_type_sql(a: list[str]) -> str | None:
     if len(a) != 2:
         return None
     arms = "".join(
-        f"WHEN {oid} THEN '{name}' " for oid, name in _PG_OID_NAMES.items()
-    ) + "".join(
-        f"WHEN {oid} THEN '{_PG_OID_NAMES[el]}[]' "
-        for oid, el in _PG_ARRAY_OIDS.items()
+        f"WHEN {oid} THEN '{name}' " for oid, name in format_type_names().items()
     )
     return (
         f"(CASE WHEN {a[0]} IS NULL THEN CAST(NULL AS STRING) "
@@ -1985,7 +1923,7 @@ def _named_struct_entries(text: str) -> dict[str, str] | None:
         t = t[len("to_json(") : -1].strip()
     if not (t.startswith("named_struct(") and t.endswith(")")):
         return None
-    args = _split_args(t[len("named_struct(") : -1])
+    args = split_args(t[len("named_struct(") : -1])
     if len(args) % 2:
         return None
     return {args[i]: args[i + 1] for i in range(0, len(args), 2)}
@@ -2007,7 +1945,7 @@ def _substring_from_for_commas(sql: str) -> str:
         if not m:
             out.append(sql[i:])
             return "".join(out)
-        close = _find_close(sql, m.end() - 1)
+        close = find_close(sql, m.end() - 1)
         if close < 0:
             out.append(sql[i:])
             return "".join(out)
@@ -2097,7 +2035,7 @@ def _lit_array_depth(s: str) -> int:
         inner = s[6:-1].strip()
         if not inner:
             return 1
-        depths = [_lit_array_depth(x) for x in _split_args(inner)]
+        depths = [_lit_array_depth(x) for x in split_args(inner)]
         return 1 + max(depths)
     m = re.match(r"CAST\s*\(\s*array\s*\(\s*\)\s*AS\s+(.+)\)$", s,
                  re.IGNORECASE | re.DOTALL)
@@ -2165,7 +2103,7 @@ def _rewrite_crate_fns(sql: str, literals: list[str]) -> str:
     if depth:
         return sql  # unbalanced parens: bail untouched
     inner = _rewrite_crate_fns(sql[m.end() : i - 1], literals)
-    out = _FN_TEMPLATES[m.group(1).lower()](_split_args(inner), literals)
+    out = _FN_TEMPLATES[m.group(1).lower()](split_args(inner), literals)
     if out is None:  # unsupported arity: keep the call, args rewritten
         out = sql[m.start() : m.end()] + inner + ")"
     return sql[: m.start()] + out + _rewrite_crate_fns(sql[i:], literals)
@@ -2312,7 +2250,7 @@ def _struct_literal_subscripts(sql: str, literals: list[str]) -> str:
         if j < 0:
             out.append(sql[i:])
             return "".join(out)
-        close = _find_close(sql, j + len("to_json"))
+        close = find_close(sql, j + len("to_json"))
         if close < 0:
             out.append(sql[i:])
             return "".join(out)
@@ -2690,11 +2628,11 @@ def _struct_array_literal_subscripts(sql: str, literals: list[str]) -> str:
         if j < 0:
             out.append(sql[i:])
             return "".join(out)
-        close = _find_close(sql, j + len("array"))
+        close = find_close(sql, j + len("array"))
         if close < 0:
             out.append(sql[i:])
             return "".join(out)
-        args = _split_args(sql[j + len("array(") : close])
+        args = split_args(sql[j + len("array(") : close])
         entries = [_named_struct_entries(x) for x in args]
         k = close + 1
         while k < len(sql) and sql[k].isspace():
@@ -2743,18 +2681,18 @@ def _struct_array_literal_subscripts(sql: str, literals: list[str]) -> str:
 
 def _map_cast_as_types(sql: str) -> str:
     """Map the trailing ``AS <type>`` of each ``[TRY_]CAST(...)`` span
-    through ``_cast_type`` (bare varchar -> STRING, int8 -> BIGINT,
+    through ``cast_type`` (bare varchar -> STRING, int8 -> BIGINT,
     double precision -> DOUBLE, ...). Anchored to CAST spans so an
     alias that happens to be named like a type is never rewritten;
     parameterized types (varchar(5), numeric(10,2)) come back from
-    ``_cast_type`` unchanged and stay native."""
+    ``cast_type`` unchanged and stay native."""
     pos = 0
     while True:
         m = re.search(r"\b(?:TRY_)?CAST\s*\(", sql[pos:], re.IGNORECASE)
         if not m:
             return sql
         open_idx = pos + m.end() - 1
-        close = _find_close(sql, open_idx)
+        close = find_close(sql, open_idx)
         if close < 0:
             return sql
         inner = sql[open_idx + 1 : close]
@@ -2768,7 +2706,7 @@ def _map_cast_as_types(sql: str) -> str:
                 as_idx, as_end = am.start(), am.end()
         if as_idx >= 0:
             t = inner[as_end:].strip()
-            mapped = _cast_type(t)
+            mapped = cast_type(t)
             if mapped != t:
                 sql = (
                     sql[: open_idx + 1]
@@ -2782,7 +2720,7 @@ def _map_cast_as_types(sql: str) -> str:
     return sql
 
 
-def _find_close(s: str, open_idx: int) -> int:
+def find_close(s: str, open_idx: int) -> int:
     """Index of the ')' matching s[open_idx] == '('; -1 if unbalanced."""
     depth = 0
     for i in range(open_idx, len(s)):
@@ -2806,7 +2744,7 @@ def _rewrite_array_subquery(sql: str) -> str:
     if not m:
         return sql
     open_idx = sql.index("(", m.start())
-    close = _find_close(sql, open_idx)
+    close = find_close(sql, open_idx)
     if close < 0:
         return sql
     inner = sql[open_idx + 1 : close]
@@ -3068,7 +3006,7 @@ def _rewrite_select_srfs(sql: str, literals: list[str]) -> str:
             if not mm:
                 break
             open_idx = scan + mm.end() - 1
-            close = _find_close(sql, open_idx)
+            close = find_close(sql, open_idx)
             if close < 0:
                 break
             args.append(sql[open_idx + 1 : close])
@@ -3099,7 +3037,7 @@ def _rewrite_select_srfs(sql: str, literals: list[str]) -> str:
             out.append(sql)
             return "".join(out)
         fn = m.group(1).lower()
-        close = _find_close(sql, m.end() - 1)
+        close = find_close(sql, m.end() - 1)
         if close < 0:
             out.append(sql)
             return "".join(out)
@@ -3108,7 +3046,7 @@ def _rewrite_select_srfs(sql: str, literals: list[str]) -> str:
             sql = sql[close + 1 :]
             continue
         after = sql[close + 1 :].lstrip()
-        a = _split_args(sql[m.end() : close])
+        a = split_args(sql[m.end() : close])
         if fn == "_pg_expandarray":
             # projection form yields ONE record column (x, n) per row
             body = (
@@ -3145,10 +3083,10 @@ def _rewrite_series_tvf(sql: str, literals: list[str]) -> str:
         return sql
     fn = m.group(2).lower()
     open_idx = m.end() - 1
-    close = _find_close(sql, open_idx)
+    close = find_close(sql, open_idx)
     if close < 0:
         return sql
-    a = _split_args(sql[open_idx + 1 : close])
+    a = split_args(sql[open_idx + 1 : close])
     # optional alias (with optional column list) after the call
     tail = sql[close + 1 :]
     am = re.match(
@@ -3817,28 +3755,8 @@ def rewrite(
     # typed literals: <TYPE> 'value' -> CAST (data-types.rst "you can
     # also use the type name followed by a string literal"); DATE /
     # TIMESTAMP / INTERVAL are Spark-native and stay
-    _TYPED_LIT = {
-        "integer": "INT", "int": "INT", "bigint": "BIGINT",
-        "smallint": "SMALLINT", "real": "FLOAT",
-        "double precision": "DOUBLE", "boolean": "BOOLEAN",
-        "ip": "STRING", "text": "STRING",
-        # crate/PG alias spellings (CastFunctionTest: string '10.4',
-        # long '-4', int4 '1' — r10)
-        "string": "STRING", "long": "BIGINT", "short": "SMALLINT",
-        "int2": "SMALLINT", "int4": "INT", "int8": "BIGINT",
-        "float4": "FLOAT", "float8": "DOUBLE",
-        "timestamp with time zone": "TIMESTAMP",
-        "timestamp without time zone": "TIMESTAMP_NTZ",
-    }
-
     def _typed_lit(m: re.Match) -> str:
-        t = re.sub(r"\s+", " ", m.group(1).lower())
-        nm = re.match(r"numeric\s*(\(\s*\d+\s*,\s*\d+\s*\))?", t)
-        if nm:
-            target = "DECIMAL" + (re.sub(r"\s", "", nm.group(1)) if nm.group(1) else "(38,6)")
-        else:
-            target = _TYPED_LIT[t]
-        return f"CAST({m.group(2)} AS {target})"
+        return f"CAST({m.group(2)} AS {cast_type(m.group(1)).upper()})"
 
     sql = re.sub(
         r"\b(TIMESTAMP\s+WITH(?:OUT)?\s+TIME\s+ZONE|DOUBLE\s+PRECISION|"
@@ -3885,7 +3803,7 @@ def rewrite(
         if not (body.strip().startswith("{") and body.strip().endswith("}")):
             return m.group(0)
         arr = _pg_array_literal_to_sql(body)
-        elem = _cast_type(
+        elem = cast_type(
             re.sub(r"\s+", "", m.group("ty") or m.group("ty2"))
         )
         if elem.upper() == "STRING":
@@ -4181,7 +4099,7 @@ def rewrite(
             i += 1
         if depth:
             break
-        args = _split_args(sql[mso.end() : i - 1])
+        args = split_args(sql[mso.end() : i - 1])
         if len(args) < 2:
             break
         chain = "(" + args[0].strip() + ")" + "".join(
@@ -4367,7 +4285,7 @@ def rewrite(
                         if tm.group(4) == "-":
                             off = -off
                     return f"array(CAST({us} AS BIGINT), CAST({off} AS BIGINT))"
-        target = _cast_type(m.group("ty"))
+        target = cast_type(m.group("ty"))
         # string-literal -> timestamp casts: the reference's parser is
         # laxer than Spark's ('1852-05-04T00:00Z' — minutes precision
         # with zone); normalize via fromisoformat at rewrite time
@@ -4415,9 +4333,9 @@ def rewrite(
     sql = re.sub(
         r"::\s*([A-Za-z_]\w*)\b(?!\s*\()",
         lambda m: m.group(0)
-        if _cast_type(m.group(1)) == m.group(1)
-        or not re.fullmatch(r"[A-Za-z_][\w<>,()]*", _cast_type(m.group(1)))
-        else f"::{_cast_type(m.group(1))}",
+        if cast_type(m.group(1)) == m.group(1)
+        or not re.fullmatch(r"[A-Za-z_][\w<>,()]*", cast_type(m.group(1)))
+        else f"::{cast_type(m.group(1))}",
         sql,
     )
     sql = _SUBSCRIPT_SLICE_RE.sub(_subscript_slice_sub, sql)
@@ -4573,7 +4491,7 @@ def rewrite(
             # match is anchored to `FROM|JOIN <relation> [AS] rx`, or —
             # for a subquery's `) [AS] rx` — to the closing paren of a
             # paren group that itself OPENS at FROM/JOIN (scan via
-            # _find_close; ADVICE r7: a trailing-context guess misses
+            # find_close; ADVICE r7: a trailing-context guess misses
             # the comma-join position and a bare `,` lookahead would
             # re-admit SELECT-list column aliases).
             # Relation positions were already stripped above.
@@ -4585,7 +4503,7 @@ def rewrite(
             )
             if not alias_decl:
                 for fm in re.finditer(r"\b(?:FROM|JOIN)\s*\(", sql, re.IGNORECASE):
-                    close = _find_close(sql, fm.end() - 1)
+                    close = find_close(sql, fm.end() - 1)
                     if close >= 0 and re.match(
                         rf"\s*(?:AS\s+)?{sch_pat}(?![\w.(])",
                         sql[close + 1 :],
@@ -4602,34 +4520,16 @@ def rewrite(
                 sql,
                 flags=re.IGNORECASE,
             )
-    # pg_typeof returns PG/crate type NAMES (PgTypeofFunction), not
-    # Spark's: integer / text / double precision / integer[] ...
-    def _pg_name(t: str) -> str:
-        return (
-            f"(CASE {t} WHEN 'int' THEN 'integer' WHEN 'string' THEN 'text' "
-            f"WHEN 'double' THEN 'double precision' WHEN 'float' THEN 'real' "
-            f"WHEN 'tinyint' THEN '\"char\"' WHEN 'binary' THEN 'bytea' "
-            f"WHEN 'timestamp' THEN 'timestamp with time zone' "
-            f"WHEN 'timestamp_ntz' THEN 'timestamp without time zone' "
-            f"WHEN 'void' THEN 'undefined' "
-            f"ELSE (CASE WHEN {t} LIKE 'decimal%' THEN 'numeric' ELSE {t} END) END)"
-        )
-
+    # pg_typeof returns crate type NAMES (PgTypeofFunction), not
+    # Spark's: integer / text / double precision / integer_array ...
     while True:
         m = _PG_TYPEOF_RE.search(sql)
         if not m:
             break
-        close = _find_close(sql, m.end() - 1)
+        close = find_close(sql, m.end() - 1)
         if close < 0:
             break
-        t = f"typeof({sql[m.end():close]})"
-        inner = f"substring({t}, 7, length({t}) - 7)"
-        # crate spells array types `<inner>_array` here (PgTypeofFunction
-        # uses DataType names), unlike format_type's `inner[]`
-        mapped = (
-            f"(CASE WHEN {t} LIKE 'array<%' "
-            f"THEN concat({_pg_name(inner)}, '_array') ELSE {_pg_name(t)} END)"
-        )
+        mapped = crate_name_sql(f"typeof({sql[m.end():close]})")
         sql = sql[: m.start()] + mapped + sql[close + 1 :]
     # session-information scalars (systeminformation/CurrentSchemaFunction,
     # CurrentSchemasFunction, CurrentDatabaseFunction): single-schema

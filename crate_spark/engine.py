@@ -29,8 +29,9 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from crate_spark.datatypes import TYPE_WORDS, show_type, spark_type
 from crate_spark.dialect import (
-    add_token, mask, rewrite, rewrite_sys_columns, unmask,
+    add_token, mask, rewrite, rewrite_sys_columns, split_args, unmask,
 )
 from crate_spark.session import (
     apply_runtime_confs, dml_count, load_tables, local_frame, rowcount_frame,
@@ -957,9 +958,7 @@ class CrateSession:
             ]
             for name in names:
                 self.spark.catalog.refreshTable(name)
-            return local_frame(
-                self.spark, [(n,) for n in names], "refreshed string"
-            )
+            return rowcount_frame(self.spark, len(names))
 
         # Transaction statements are accepted no-ops: the engine is
         # autocommit exactly like the reference (Planner.java:289-304
@@ -1250,23 +1249,6 @@ class CrateSession:
 
         return self._CURRENT_SETTING_RE.sub(repl, stmt)
 
-    #: Spark DDL type -> CrateDB spelling (reverse of sql_dml._TYPE_MAP)
-    _CRATE_TYPES = {
-        "string": "TEXT", "int": "INTEGER", "bigint": "BIGINT",
-        "smallint": "SMALLINT", "tinyint": "BYTE", "float": "REAL",
-        "double": "DOUBLE PRECISION", "boolean": "BOOLEAN",
-        "date": "DATE", "timestamp": "TIMESTAMP WITH TIME ZONE",
-        "timestamp_ntz": "TIMESTAMP WITHOUT TIME ZONE",
-    }
-
-    def _crate_type(self, simple: str) -> str:
-        if simple.startswith("decimal"):
-            return simple.upper().replace("DECIMAL", "NUMERIC")
-        m = re.match(r"array<(.+)>$", simple)
-        if m:
-            return f"ARRAY({self._crate_type(m.group(1))})"
-        return self._CRATE_TYPES.get(simple, simple.upper())
-
     def _show_create_table(self, name: str) -> str:
         """SHOW CREATE TABLE (reference ShowCreateTableAnalyzer /
         MetadataToASTNodeResolver): reconstruct CrateDB-spelled DDL
@@ -1305,7 +1287,7 @@ class CrateSession:
                 spelled = (
                     _decl_type(decl, 3)
                     if decl is not None and decl.get("type")
-                    else self._crate_type(f.dataType.simpleString())
+                    else show_type(f.dataType.simpleString())
                 )
                 line = f'   "{f.name}" {spelled}'
                 if f.name in not_null:
@@ -1359,7 +1341,7 @@ class CrateSession:
         if name in self.tables:
             fields = self.tables[name].schema.fields
             body = ",\n".join(
-                f'   "{f.name}" {self._crate_type(f.dataType.simpleString())}'
+                f'   "{f.name}" {show_type(f.dataType.simpleString())}'
                 for f in fields
             )
             return f'CREATE TABLE IF NOT EXISTS "doc"."{name}" (\n{body}\n)'
@@ -1684,8 +1666,6 @@ class CrateSession:
         pandas Series (Arrow-batched, ~10-100x faster — the right
         choice at scale when a built-in genuinely can't express it).
         """
-        from crate_spark.sql_dml import _map_type, _split_top
-
         schema = (schema or self._search_path()[0]).lower()
         if schema in ("sys", "information_schema"):
             # user-defined-functions.rst: pg_catalog is allowed for PG
@@ -1693,7 +1673,7 @@ class CrateSession:
             raise ValueError(
                 f"Cannot create a function in the read-only schema '{schema}'"
             )
-        ret_type = _map_type(ret_type)
+        ret_type = spark_type(ret_type)
         # The reference runs UDF bodies in a sandboxed GraalVM JS context
         # (UserDefinedFunctionService). A Python eval cannot be a real
         # sandbox, so (a) CREATE FUNCTION must only be exposed to trusted
@@ -1769,14 +1749,14 @@ class CrateSession:
             # binding; symmetric_point in user-defined-functions.rst)
             specs = [
                 ["__arg"] + _sig_item_type(a).split()
-                for a in _split_top(args)
+                for a in split_args(args)
                 if a.strip()
             ]
             kind = "row"
         else:
             specs = [
                 [p.strip('"') for p in a.strip().split()]
-                for a in _split_top(args)
+                for a in split_args(args)
                 if a.strip()
             ]
             arg_names = [s[0] for s in specs]
@@ -1784,12 +1764,12 @@ class CrateSession:
             body_fn = None
         # coerce inputs to natural Python types (SQL decimal literals
         # arrive as decimal.Decimal, which breaks float arithmetic)
-        _float_types = {"double", "real", "float", "double precision"}
-        _int_types = {"int", "integer", "bigint", "smallint", "byte"}
+        _float_types = {"double", "float"}
+        _int_types = {"int", "bigint", "smallint", "tinyint"}
         declared_types = [
             " ".join(s[1:]).lower() if len(s) > 1 else "" for s in specs
         ]
-        sig = tuple(_map_type(t) if t else "" for t in declared_types)
+        sig = tuple(spark_type(t) if t else "" for t in declared_types)
         def _obj_parse(x):
             # OBJECT values ride the engine as JSON strings (dynamic
             # object representation); a JS UDF's declared-object param
@@ -1806,10 +1786,10 @@ class CrateSession:
             return x
 
         coercers = []
-        for declared in declared_types:
-            if declared in _float_types:
+        for declared, stored in zip(declared_types, sig):
+            if stored in _float_types:
                 coercers.append(float)
-            elif declared in _int_types:
+            elif stored in _int_types:
                 coercers.append(int)
             elif language == "JAVASCRIPT" and declared.startswith("object"):
                 coercers.append(_obj_parse)
@@ -1835,7 +1815,7 @@ class CrateSession:
                 "float64" if d in _float_types
                 else "int64" if d in _int_types
                 else None
-                for d in declared_types
+                for d in sig
             ]
             pbody_fn = eval(  # noqa: S307 - trusted-caller surface by design
                 f"lambda {', '.join(arg_names)}: ({body})",
@@ -1951,8 +1931,6 @@ class CrateSession:
         (drop-function.rst): with an argument list, drop exactly that
         overload; without one, drop every overload of the name. The
         mangled registration means Spark builtins are never touched."""
-        from crate_spark.sql_dml import _map_type, _split_top
-
         schema, _, name = qname.rpartition(".")
         schema = (schema or self._search_path()[0]).lower()
         key = (schema, name.strip('`"').lower())
@@ -1964,8 +1942,8 @@ class CrateSession:
             raise ValueError(f"Unknown function: {qname}")
         if argspec is not None:
             sig = tuple(
-                _map_type(_sig_item_type(a))
-                for a in _split_top(argspec)
+                spark_type(_sig_item_type(a))
+                for a in split_args(argspec)
                 if a.strip()
             )
             if sig not in overloads:
@@ -2076,25 +2054,12 @@ def _parse_global_assignments(body: str) -> list[tuple[str, object]]:
     return out
 
 
-#: words that can START a type spelling in a function signature — used
-#: to tell `name type` items from bare `type` items (`double precision`
-#: has no name; `"start" geo_point` does)
-_TYPE_HEAD_WORDS = {
-    "text", "ip", "object", "varchar", "character", "uuid", "json",
-    "timestamp", "timestamptz", "byte", "short", "integer", "long",
-    "real", "double", "geo_point", "geo_shape", "float_vector",
-    "boolean", "bit", "char", "regproc", "regclass", "oidvector",
-    "time", "timetz", "string", "int", "bigint", "smallint", "tinyint",
-    "float", "decimal", "numeric", "array", "interval", "date",
-}
-
-
 def _sig_item_type(item: str) -> str:
     """One signature item -> its bare type spelling, dropping an
     optional leading argument name (create-function.rst: names in
     signatures are allowed and ignored for identity)."""
     toks = item.strip().split()
-    if len(toks) > 1 and toks[0].split("(")[0].strip('"').lower() not in _TYPE_HEAD_WORDS:
+    if len(toks) > 1 and toks[0].split("(")[0].strip('"').lower() not in TYPE_WORDS:
         toks = toks[1:]
     return " ".join(toks)
 

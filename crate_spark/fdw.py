@@ -23,6 +23,8 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
+from crate_spark.datatypes import spark_type
+from crate_spark.dialect import split_args
 from crate_spark.session import rowcount_frame
 
 
@@ -268,13 +270,11 @@ def route_fdw(session, stmt: str):
         name = m.group(2)
         schema_ddl = None
         if m.group(3) and m.group(3).strip():
-            from crate_spark.sql_dml import _map_type, _split_top
-
             cols = []
-            for col in _split_top(m.group(3)):
+            for col in split_args(m.group(3)):
                 parts = col.strip().split(None, 1)
                 if len(parts) == 2:
-                    cols.append(f"{parts[0]} {_map_type(parts[1])}")
+                    cols.append(f"{parts[0]} {spark_type(parts[1])}")
             schema_ddl = ", ".join(cols) or None
         created = store.create_table(
             name, m.group(4), schema_ddl, parse_options(m.group(5)),

@@ -25,6 +25,7 @@ import threading
 import time
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
+from crate_spark.datatypes import http_type
 from crate_spark.errors import error_class
 from crate_spark.session import dml_count
 
@@ -88,23 +89,6 @@ def _error_envelope(session, stmt: str, exc: Exception) -> dict:
     return {"message": str(exc).split("\n")[0][:500], "code": _HTTP_CODES[cls]}
 
 
-#: Spark type -> crate HTTP type id (interfaces/http.rst data-type
-#: table; DataTypes.java ids). Arrays nest as [100, inner].
-def _crate_type_id(dt):
-    from pyspark.sql import types as T
-
-    if isinstance(dt, T.ArrayType):
-        return [100, _crate_type_id(dt.elementType)]
-    if isinstance(dt, (T.StructType, T.MapType)):
-        return 12  # OBJECT
-    return {
-        T.BooleanType: 3, T.StringType: 4, T.DoubleType: 6,
-        T.FloatType: 7, T.ShortType: 8, T.ByteType: 8, T.IntegerType: 9,
-        T.LongType: 10, T.TimestampType: 11, T.TimestampNTZType: 15,
-        T.DecimalType: 22, T.DateType: 24, T.BinaryType: 4,
-    }.get(type(dt), 0)
-
-
 def execute_request(session, payload: dict, *, types: bool = False,
                     error_trace: bool = False) -> dict:
     """One ``/_sql`` request against a CrateSession — the
@@ -166,7 +150,7 @@ def execute_request(session, payload: dict, *, types: bool = False,
         }
         if types:
             resp["col_types"] = [
-                _crate_type_id(f.dataType) for f in df.schema.fields
+                http_type(f.dataType.simpleString()) for f in df.schema.fields
             ]
         return resp
     except Exception as e:  # error envelope, never a raw 500 body

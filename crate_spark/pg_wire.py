@@ -33,24 +33,12 @@ import socketserver
 import struct
 import threading
 
+from crate_spark.datatypes import pg_oid
 from crate_spark.errors import error_class
 from crate_spark.session import dml_count
 
 _SSL_REQUEST = 80877103
 _CANCEL_REQUEST = 80877102
-
-#: PG type OIDs for RowDescription (PGTypes.java mapping)
-_OIDS = {
-    "boolean": 16, "bigint": 20, "smallint": 21, "int": 23, "integer": 23,
-    "double": 701, "float": 700, "string": 25, "timestamp": 1114,
-    "date": 1082, "decimal": 1700, "binary": 17,
-}
-
-
-def _oid_of(spark_type: str) -> int:
-    base = spark_type.split("(")[0]
-    return _OIDS.get(base, 25)  # default: text
-
 
 def _text(v) -> str | None:
     """PG text-format rendering."""
@@ -266,8 +254,9 @@ class _PgHandler(socketserver.BaseRequestHandler):
         self._flush(sock)
 
     def _complete(self, sock, sql: str, df, *, describe: bool) -> None:
-        """Send df's rows and CommandComplete (a bare OK for no result,
-        the PostgreSQL tag with no rows for INSERT/UPDATE/DELETE); a
+        """Send df's rows and CommandComplete (a bare OK for no result;
+        for a statement answered by a count, no rows and its first
+        keyword and the count: ``INSERT 0 n``, ``UPDATE n``, ``CREATE 1``); a
         simple query sends RowDescription first, an extended Execute
         does not (Describe sent it)."""
         if df is None:
@@ -293,7 +282,7 @@ class _PgHandler(socketserver.BaseRequestHandler):
             # table oid, attnum, type oid, typlen -1 (variable),
             # typmod -1, format 0 (text)
             desc += _cstr(f.name) + struct.pack(
-                "!IHIhih", 0, 0, _oid_of(f.dataType.simpleString()), -1, -1, 0
+                "!IHIhih", 0, 0, pg_oid(f.dataType.simpleString()), -1, -1, 0
             )
         return desc
 

@@ -155,14 +155,15 @@ def rowcount_frame(spark: SparkSession, n: int = 1) -> DataFrame:
     return local_frame(spark, [(n,)], "rowcount bigint")
 
 
-_DML_RE = re.compile(r"\s*(INSERT|UPDATE|DELETE)\b", re.IGNORECASE)
+_DML_RE = re.compile(r"\s*(INSERT|UPDATE|DELETE|CREATE|DROP|ALTER|REFRESH)\b", re.IGNORECASE)
 
 
 def dml_count(sql: str, df: DataFrame | None) -> tuple[str, int] | None:
     """(verb, rows affected) when ``df`` is the ``rowcount_frame``
-    answer of an INSERT, UPDATE or DELETE ``sql``; None for any other
-    answer, a RETURNING result among them. Every front door replies to
-    a DML statement from this: a count, not a result set."""
+    answer of an INSERT, UPDATE, DELETE, CREATE, DROP, ALTER or REFRESH
+    ``sql``; None for any other answer, a RETURNING result among them.
+    Every front door replies to such a statement from this: a count,
+    not a result set."""
     m = _DML_RE.match(sql)
     if m is None or df is None or df.columns != ["rowcount"]:
         return None

@@ -25,98 +25,10 @@ import shutil
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from crate_spark.dialect import mask, rewrite, rewrite_sys_columns, unmask
+from crate_spark.datatypes import crate_name, spark_type, type_name
+from crate_spark.dialect import find_close, mask, rewrite, rewrite_sys_columns, split_args, unmask
 from crate_spark.dml import CrateTable
 from crate_spark.session import local_frame, rowcount_frame
-
-#: CrateDB type spellings -> Spark DDL types
-#: (reference ``types/DataTypes.java``; object columns are stored as
-#: JSON strings per SURVEY.md §7 hard part (a))
-_TYPE_MAP = {
-    "text": "string",
-    "ip": "string",
-    "object": "string",
-    "varchar": "string",
-    "character varying": "string",
-    "uuid": "string",
-    "json": "string",
-    "timestamp with time zone": "timestamp",
-    "timestamp without time zone": "timestamp_ntz",
-    "timestamptz": "timestamp",
-    "byte": "tinyint",
-    "short": "smallint",
-    "integer": "int",
-    "long": "bigint",
-    "real": "float",
-    "double precision": "double",
-    "geo_point": "array<double>",
-    # geo_shape stores as WKT text (general/ddl/data-types: shapes are
-    # GeoJSON/WKT at the boundary; our geo scalars parse WKT)
-    "geo_shape": "string",
-    "float_vector": "array<float>",
-    "boolean": "boolean",
-    "bit": "string",  # bit strings render as '010...' text
-    "char": "string",
-    "character": "string",
-    "regproc": "string",
-    "regclass": "string",
-    "oidvector": "array<int>",
-    "time with time zone": "string",
-    "timetz": "string",
-    "interval": "struct<months:bigint,days:int,micros:bigint>",
-}
-
-
-def _map_type(t: str) -> str:
-    # '"CHAR"' — PG's quoted internal one-byte char type spelling
-    key = re.sub(r"\s+", " ", t.strip().strip('"').lower())
-    if key in _TYPE_MAP:
-        return _TYPE_MAP[key]
-    # OBJECT with column policy and/or typed shape —
-    # object(strict|dynamic|ignored) [as (...)]: stored as a JSON
-    # string like bare object (SURVEY.md §7 hard part (a)); the
-    # declared inner shape is not enforced at write (dynamic policy)
-    if re.match(r"object(\s*\(\s*(strict|dynamic|ignored)\s*\))?(\s+as\s*\(.*\))?$", key):
-        return "string"
-    m = re.match(r"array\s*\(\s*(.+)\s*\)$", key)
-    if m:  # CrateDB array(inner) spelling
-        return f"array<{_map_type(m.group(1))}>"
-    m = re.match(r"(.+?)\s*\[\s*\]$", key)
-    if m:  # PG bracket spelling type[] (data-types.rst array aliases);
-        # recursion handles real[][] etc.
-        return f"array<{_map_type(m.group(1))}>"
-    # parameterized spellings (data-types.rst): length args are
-    # advisory on a string-typed store; numeric keeps precision/scale
-    if re.match(r"(varchar|character varying|char|character|bit)\s*\(\s*\d+\s*\)$", key):
-        return "string"
-    m = re.match(r"numeric\s*(\(\s*\d+\s*(,\s*\d+\s*)?\))?$", key)
-    if m:
-        return f"decimal{re.sub(chr(32), '', m.group(1))}" if m.group(1) else "decimal(38,18)"
-    m = re.match(r"float_vector\s*\(\s*\d+\s*\)$", key)
-    if m:
-        return "array<float>"
-    return t.strip()
-
-
-#: normalized crate spelling -> information_schema.columns data_type
-#: (information-schema.rst:363-381 prints lowercase reference names)
-_CRATE_NAME = {
-    "string": "text", "text": "text", "varchar": "text",
-    "character varying": "text", "char": "character",
-    "character": "character", "int": "integer", "integer": "integer",
-    "long": "bigint", "bigint": "bigint", "short": "smallint",
-    "smallint": "smallint", "byte": "byte", "float": "real",
-    "real": "real", "double": "double precision",
-    "double precision": "double precision",
-    "timestamp": "timestamp with time zone",
-    "timestamptz": "timestamp with time zone",
-    "timestamp with time zone": "timestamp with time zone",
-    "timestamp without time zone": "timestamp without time zone",
-    "boolean": "boolean", "ip": "ip", "geo_point": "geo_point",
-    "geo_shape": "geo_shape", "interval": "interval", "bit": "bit",
-    "date": "date",
-}
-
 
 def _crate_decl(raw: str) -> dict:
     """Parse one declared crate type into its information_schema form:
@@ -131,7 +43,7 @@ def _crate_decl(raw: str) -> dict:
     )
     if m:
         children = []
-        for item in _split_top(m.group(2)) if m.group(2) else []:
+        for item in split_args(m.group(2)) if m.group(2) else []:
             cm = re.match(r'("?[\w]+"?)\s+(.*)$', item, re.DOTALL)
             if cm:
                 children.append(
@@ -152,63 +64,16 @@ def _crate_decl(raw: str) -> dict:
         return out
     m = re.match(r"(varchar|character varying|char|character|bit)\s*\(\s*(\d+)\s*\)$", key)
     if m:
-        return {"type": _CRATE_NAME[m.group(1)], "length": int(m.group(2))}
-    if re.match(r"numeric\b", key):
-        return {"type": "numeric"}
-    if re.match(r"float_vector\b", key):
-        return {"type": "float_vector"}
-    return {"type": _CRATE_NAME.get(key, key)}
+        return {"type": type_name(m.group(1)), "length": int(m.group(2))}
+    return {"type": type_name(key)}
 
 
-def _spark_to_crate(simple: str) -> str:
-    """Spark simpleString -> crate data_type name (fallback for tables
-    without declared DDL — e.g. registered parquet sources)."""
-    m = re.match(r"array<(.+)>$", simple)
-    if m:
-        return _spark_to_crate(m.group(1)) + "_array"
-    if simple.startswith("decimal"):
-        return "numeric"
-    if simple.startswith("struct"):
-        return "object"
-    return {
-        "string": "text", "int": "integer", "tinyint": "byte",
-        "float": "real", "double": "double precision",
-        "timestamp": "timestamp with time zone",
-        "timestamp_ntz": "timestamp without time zone",
-        "map<string,string>": "object",
-        "binary": "text",
-    }.get(simple, simple)
-
-
-def _split_top(s: str, sep: str = ",") -> list[str]:
-    """Split at depth-0 separators (parens nest, literals are masked)."""
-    items, buf, depth = [], "", 0
-    for ch in s:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == sep and depth == 0:
-            items.append(buf)
-            buf = ""
-        else:
-            buf += ch
-    if buf.strip():
-        items.append(buf)
-    return [i.strip() for i in items]
-
-
-def _find_close(s: str, open_idx: int) -> int:
-    """Index of the ')' matching s[open_idx] == '('."""
-    depth = 0
-    for i in range(open_idx, len(s)):
-        if s[i] == "(":
-            depth += 1
-        elif s[i] == ")":
-            depth -= 1
-            if depth == 0:
-                return i
-    raise ValueError(f"unbalanced parentheses in: {s[:80]}...")
+def _close(s: str, open_idx: int) -> int:
+    """``find_close`` for a clause that must be balanced."""
+    close = find_close(s, open_idx)
+    if close < 0:
+        raise ValueError(f"unbalanced parentheses in: {s[:80]}...")
+    return close
 
 
 def _parse_returning(tail: str, literals: list[str]) -> tuple[str, list[str] | None]:
@@ -218,7 +83,7 @@ def _parse_returning(tail: str, literals: list[str]) -> tuple[str, list[str] | N
         return tail, None
     cols = unmask(m.group(1).strip(), literals)
     tail = tail[: m.start()].strip()
-    return tail, [] if cols == "*" else [c.strip() for c in _split_top(cols)]
+    return tail, [] if cols == "*" else [c.strip() for c in split_args(cols)]
 
 
 class SqlDmlRouter:
@@ -343,7 +208,7 @@ class SqlDmlRouter:
         if m.group(1) and name in self.crate_tables:
             return rowcount_frame(self.spark, 0)
         open_idx = m.end() - 1
-        close_idx = _find_close(masked, open_idx)
+        close_idx = _close(masked, open_idx)
         body = masked[open_idx + 1 : close_idx]
         tail = masked[close_idx + 1 :]
 
@@ -386,7 +251,7 @@ class SqlDmlRouter:
         defaults: dict[str, str] = {}
         ft_indexes: dict[str, list] = {}
         untyped_generated: list[str] = []
-        for item in _split_top(body):
+        for item in split_args(body):
             up = item.upper()
             if up.startswith("PRIMARY KEY"):
                 named = [
@@ -452,7 +317,7 @@ class SqlDmlRouter:
                 r"GENERATED\s+ALWAYS\s+AS\s*\(", rest, re.IGNORECASE
             )
             if gm:
-                gclose = _find_close(rest, gm.end() - 1)
+                gclose = _close(rest, gm.end() - 1)
                 generated[cname] = unmask(rest[gm.end() : gclose], literals)
                 rest = rest[: gm.start()] + rest[gclose + 1 :]
             else:
@@ -492,7 +357,7 @@ class SqlDmlRouter:
                         if expr.startswith("("):
                             # parenthesized generation expression
                             popen = rest.index("(", am.end())
-                            pclose = _find_close(rest, popen)
+                            pclose = _close(rest, popen)
                             generated[cname] = unmask(
                                 rest[popen + 1 : pclose], literals
                             )
@@ -503,7 +368,7 @@ class SqlDmlRouter:
                         break
             ckm = re.search(r"CHECK\s*\(", rest, re.IGNORECASE)
             if ckm:
-                cclose = _find_close(rest, ckm.end() - 1)
+                cclose = _close(rest, ckm.end() - 1)
                 checks.append(unmask(rest[ckm.end() : cclose], literals))
                 rest = rest[: ckm.start()] + rest[cclose + 1 :]
             # column DEFAULT expression (reference metadata
@@ -537,7 +402,7 @@ class SqlDmlRouter:
                 )
                 if om:
                     obj_defaults = {}
-                    for child in _split_top(om.group(1)):
+                    for child in split_args(om.group(1)):
                         cdm = re.match(
                             r'"?(\w+)"?\s+.*?\bDEFAULT\s+(.+?)\s*$',
                             child,
@@ -585,7 +450,7 @@ class SqlDmlRouter:
                 rest,
                 flags=re.IGNORECASE,
             )
-            ctype = _map_type(rest)
+            ctype = spark_type(rest)
             if not ctype:
                 if cname in generated:
                     # typeless generated column (generated-columns.rst:
@@ -614,7 +479,7 @@ class SqlDmlRouter:
             cols[cols.index(cname)] = f"{cname} {dt}"
             for cc in crate_cols:
                 if cc["name"] == cname and cc["type"] is None:
-                    cc["type"] = _spark_to_crate(dt)
+                    cc["type"] = crate_name(dt)
 
         partitioned: list[str] = []
         pm = re.search(r"PARTITIONED\s+BY\s*\(([^)]*)\)", tail, re.IGNORECASE)
@@ -681,7 +546,7 @@ class SqlDmlRouter:
             path,
             schema_ddl,
             crate_columns=[
-                {"name": f.name, "type": _spark_to_crate(f.dataType.simpleString())}
+                {"name": f.name, "type": crate_name(f.dataType.simpleString())}
                 for f in src.schema.fields
             ],
         )
@@ -828,7 +693,7 @@ class SqlDmlRouter:
                 )
                 table._save_meta()
             else:
-                table.schema_ddl = f"{table.schema_ddl}, {col} {_map_type(raw_type)}"
+                table.schema_ddl = f"{table.schema_ddl}, {col} {spark_type(raw_type)}"
                 table.crate_columns.append({"name": col, **_crate_decl(raw_type)})
                 table._save_meta()
         elif m.group(4):  # DROP COLUMN
@@ -977,7 +842,7 @@ class SqlDmlRouter:
                     re.IGNORECASE,
                 )
                 set_exprs = {}
-                for a in _split_top(cm.group(3)):
+                for a in split_args(cm.group(3)):
                     k, _, v = a.partition("=")
                     vq = colpat.sub(r"target.\1", v.strip())
                     set_exprs[k.strip().strip('"')] = rewrite(
@@ -999,7 +864,7 @@ class SqlDmlRouter:
             ).coalesce(1)
         else:
             # `INSERT INTO t (SELECT ...)` — PG-style parenthesized query
-            if body.startswith("(") and _find_close(body, 0) == len(body) - 1:
+            if body.startswith("(") and find_close(body, 0) == len(body) - 1:
                 body = body[1:-1].strip()
             src = self.spark.sql(rewrite(unmask(body, literals), user_schemas=self.owner._user_schemas()))
         if len(src.columns) != len(target_cols):
@@ -1089,7 +954,7 @@ class SqlDmlRouter:
             )
             body = body[: wm.start()].strip()
         set_exprs = {}
-        for a in _split_top(body):
+        for a in split_args(body):
             k, _, v = a.partition("=")
             set_exprs[k.strip().strip('"')] = rewrite(unmask(v.strip(), literals))
         # partition columns are immutable — moving documents between
@@ -1155,7 +1020,7 @@ class SqlDmlRouter:
         props: dict[str, str] = {}
         pm = re.search(r"WITH\s*\(([^)]*)\)", tail, re.IGNORECASE)
         if pm:
-            for kv in _split_top(pm.group(1)):
+            for kv in split_args(pm.group(1)):
                 k, _, v = kv.partition("=")
                 props[k.strip().lower()] = unmask(v.strip(), literals).strip("'\"")
         where = None

@@ -30,9 +30,9 @@ from urllib.parse import unquote
 import pyarrow.parquet as pq
 
 from crate_spark.cluster_settings import SETTING_DEFAULTS, SETTINGS_COLUMNS
+from crate_spark.datatypes import PG_TYPES, crate_name, pg_oid
 from crate_spark.dialect import mask
 from crate_spark.session import local_frame
-from crate_spark.sql_dml import _spark_to_crate
 
 if TYPE_CHECKING:
     from crate_spark.engine import CrateSession
@@ -248,88 +248,6 @@ _NODE_CHECKS: list[tuple[int, int, str]] = [
      "The amount of shards on the node reached 90 % of the limit of "
      "1000 shards per node."),
 ]
-
-#: pg_type: the reference's full 54-row catalog inventory (PGTypes.java;
-#: listed verbatim in interfaces/postgres.rst) — standard PostgreSQL
-#: catalog facts: oid, typname, typarray (oid of the array type),
-#: typelem (element oid for arrays), typlen (-1 varlena, -2 cstring),
-#: typtype (b base/p pseudo), typcategory (N numeric, S string, A
-#: array, D datetime, ...)
-_PG_TYPES = [
-    (16, "bool", 1000, 0, 1, "b", "N"),
-    (18, "char", 1002, 0, 1, "b", "S"),
-    (19, "name", -1, 0, 64, "b", "S"),
-    (20, "int8", 1016, 0, 8, "b", "N"),
-    (21, "int2", 1005, 0, 2, "b", "N"),
-    (23, "int4", 1007, 0, 4, "b", "N"),
-    (24, "regproc", 1008, 0, 4, "b", "N"),
-    (25, "text", 1009, 0, -1, "b", "S"),
-    (26, "oid", 1028, 0, 4, "b", "N"),
-    (30, "oidvector", 1013, 26, -1, "b", "A"),
-    (114, "json", 199, 0, -1, "b", "U"),
-    (199, "_json", 0, 114, -1, "b", "A"),
-    (600, "point", 1017, 0, 16, "b", "G"),
-    (700, "float4", 1021, 0, 4, "b", "N"),
-    (701, "float8", 1022, 0, 8, "b", "N"),
-    (705, "unknown", 0, 0, -2, "p", "X"),
-    (1000, "_bool", 0, 16, -1, "b", "A"),
-    (1002, "_char", 0, 18, -1, "b", "A"),
-    (1005, "_int2", 0, 21, -1, "b", "A"),
-    (1007, "_int4", 0, 23, -1, "b", "A"),
-    (1008, "_regproc", 0, 24, -1, "b", "A"),
-    (1009, "_text", 0, 25, -1, "b", "A"),
-    (1014, "_bpchar", 0, 1042, -1, "b", "A"),
-    (1015, "_varchar", 0, 1043, -1, "b", "A"),
-    (1016, "_int8", 0, 20, -1, "b", "A"),
-    (1017, "_point", 0, 600, -1, "b", "A"),
-    (1021, "_float4", 0, 700, -1, "b", "A"),
-    (1022, "_float8", 0, 701, -1, "b", "A"),
-    (1042, "bpchar", 1014, 0, -1, "b", "S"),
-    (1043, "varchar", 1015, 0, -1, "b", "S"),
-    (1082, "date", 1182, 0, 4, "b", "D"),
-    (1114, "timestamp", 1115, 0, 8, "b", "D"),
-    (1115, "_timestamp", 0, 1114, -1, "b", "A"),
-    (1182, "_date", 0, 1082, -1, "b", "A"),
-    (1184, "timestamptz", 1185, 0, 8, "b", "D"),
-    (1185, "_timestamptz", 0, 1184, -1, "b", "A"),
-    (1186, "interval", 1187, 0, 16, "b", "T"),
-    (1187, "_interval", 0, 1186, -1, "b", "A"),
-    (1231, "_numeric", 0, 1700, -1, "b", "A"),
-    (1266, "timetz", 1270, 0, 12, "b", "D"),
-    (1270, "_timetz", 0, 1266, -1, "b", "A"),
-    (1560, "bit", 1561, 0, -1, "b", "V"),
-    (1561, "_bit", 0, 1560, -1, "b", "A"),
-    (1700, "numeric", 1231, 0, -1, "b", "N"),
-    (2205, "regclass", 2210, 0, 4, "b", "N"),
-    (2206, "regtype", 2211, 0, 4, "b", "N"),
-    (2210, "_regclass", 0, 2205, -1, "b", "A"),
-    (2211, "_regtype", 0, 2206, -1, "b", "A"),
-    (2249, "record", 2287, 0, -1, "p", "P"),
-    (2276, "any", 0, 0, 4, "p", "P"),
-    (2277, "anyarray", 0, 2276, -1, "p", "P"),
-    (2287, "_record", 0, 2249, -1, "p", "A"),
-    (2950, "uuid", 2951, 0, 16, "b", "U"),
-    (2951, "_uuid", 0, 2950, -1, "b", "A"),
-]
-
-#: Spark type -> PG type OID (PGTypes.java mapping, the subset the
-#: synthetic tables use; 705 = PG's 'unknown' for everything else)
-_PG_OIDS = {
-    "boolean": 16, "bigint": 20, "smallint": 21, "int": 23,
-    "string": 25, "float": 700, "double": 701,
-    "timestamp": 1114, "timestamp_ntz": 1114, "date": 1082,
-    "binary": 17,
-}
-
-
-def _pg_type_oid(dt) -> int:
-    s = dt.simpleString()
-    if s.startswith("decimal"):
-        return 1700
-    if s.startswith("array"):
-        return 2277  # anyarray
-    return _PG_OIDS.get(s, 705)
-
 
 # -- shared row helpers ----------------------------------------------------
 #: version['created'] for user tables (reference stamps the CrateDB
@@ -642,7 +560,7 @@ def _columns(s):
         else:
             rows += [
                 (name, schema, f.name, pos,
-                 _spark_to_crate(f.dataType.simpleString()), f.nullable)
+                 crate_name(f.dataType.simpleString()), f.nullable)
                 for pos, f in enumerate(df.schema.fields, start=1)
             ]
     # self-description (information-schema.rst:395-447)
@@ -988,7 +906,7 @@ _view(
     "pg_catalog_pg_type",
     "oid int, typname string, typarray int, typelem int, "
     "typlen int, typtype string, typcategory string",
-)(lambda s: _PG_TYPES)
+)(lambda s: PG_TYPES)
 
 # pg_class / pg_attribute / pg_proc — what psql's \d and ORM
 # introspection join (PgClassTable/PgAttributeTable/PgProcTable).
@@ -1004,7 +922,7 @@ _view(
     "pg_catalog_pg_attribute",
     "attrelid int, attname string, atttypid int, attnum int, attnotnull boolean",
 )(lambda s: [
-    (16384 + i, f.name, _pg_type_oid(f.dataType), pos, not f.nullable)
+    (16384 + i, f.name, pg_oid(f.dataType.simpleString()), pos, not f.nullable)
     for i, n in enumerate(sorted(s.tables))
     for pos, f in enumerate(s.tables[n].schema.fields, start=1)
 ])

@@ -364,3 +364,31 @@ def test_copy_from_http_url(spark, tmp_path):
             t.copy_from(f"http://127.0.0.1:{port}/*.csv", format="csv")
     finally:
         httpd.shutdown()
+
+
+def test_array_literal_commas_stay_inside_their_item(spark, tmp_path):
+    """A comma inside an array literal does not split a SET list, an
+    ON CONFLICT assignment list or a column list."""
+    from crate_spark.engine import CrateSession
+
+    s = CrateSession(spark, None, storage_dir=str(tmp_path))
+    s.execute("CREATE TABLE ta (id int PRIMARY KEY, a array(integer), b int)")
+    s.execute("INSERT INTO ta (id, a, b) VALUES (1, [1], 1)")
+
+    def row():
+        r = s.execute("SELECT a, b FROM ta WHERE id = 1").collect()[0]
+        return list(r["a"]), r["b"]
+
+    s.execute("UPDATE ta SET a = [7, 8] WHERE id = 1")
+    assert row() == ([7, 8], 1)
+    s.execute("UPDATE ta SET a = ARRAY[7, 9], b = 3 WHERE id = 1")
+    assert row() == ([7, 9], 3)
+    s.execute(
+        "INSERT INTO ta (id, a, b) VALUES (1, [0], 0) "
+        "ON CONFLICT (id) DO UPDATE SET a = [9, 9], b = 2"
+    )
+    assert row() == ([9, 9], 2)
+    s.execute("CREATE TABLE tc (id int, a array(integer) DEFAULT ARRAY[1, 2], b int)")
+    s.execute("INSERT INTO tc (id, b) VALUES (1, 5)")
+    r = s.execute("SELECT id, a, b FROM tc").collect()[0]
+    assert (r["id"], list(r["a"]), r["b"]) == (1, [1, 2], 5)

@@ -194,16 +194,22 @@ def test_http_bulk_dml_reports_rows_affected(spark, tmp_path):
 
 
 def test_http_dml_answers_a_count_not_a_result_set(spark, tmp_path):
-    """A single INSERT, UPDATE or DELETE answers no columns and no rows,
-    with ``rowcount`` the rows it affected (http.rst); INSERT …
-    RETURNING still answers its rows."""
+    """A single INSERT, UPDATE, DELETE, CREATE, ALTER, REFRESH or DROP
+    answers no columns and no rows, with ``rowcount`` the rows it
+    affected or the relations it made, changed or refreshed (http.rst);
+    INSERT … RETURNING still answers its rows."""
     s = CrateSession(spark, None, storage_dir=str(tmp_path))
-    s.execute("CREATE TABLE f (id int, v text)")
 
     def shape(stmt):
         resp = execute_request(s, {"stmt": stmt})
         return resp["cols"], resp["rows"], resp["rowcount"]
 
+    assert shape("CREATE TABLE f (id int, v text)") == ([], [], 1)
+    assert shape("CREATE TABLE IF NOT EXISTS f (id int)") == ([], [], 0)
+    assert shape("CREATE TABLE g (id int)") == ([], [], 1)
+    assert shape("ALTER TABLE g ADD COLUMN w int") == ([], [], 1)
+    assert shape("REFRESH TABLE f, g") == ([], [], 2)
+    assert shape("DROP TABLE g") == ([], [], 1)
     assert shape("INSERT INTO f (id) VALUES (1), (2)") == ([], [], 2)
     assert shape("UPDATE f SET v = 'x' WHERE id = 1") == ([], [], 1)
     assert shape("DELETE FROM f WHERE id > 0") == ([], [], 2)

@@ -430,9 +430,10 @@ def _reply_tags(sock) -> list[tuple[bytes, bytes]]:
 
 
 def test_pg_wire_dml_sends_its_command_tag_and_no_rows(spark, tmp_path):
-    """A simple-query INSERT, UPDATE or DELETE answers with no
-    RowDescription or DataRow and PostgreSQL's tag: ``INSERT 0 n``,
-    ``UPDATE n``, ``DELETE n``. INSERT … RETURNING still sends rows."""
+    """A simple-query INSERT, UPDATE, DELETE, CREATE, ALTER, REFRESH or
+    DROP answers with no RowDescription or DataRow and a tag of its
+    first keyword and count: ``INSERT 0 n``, ``UPDATE n``, ``DELETE n``,
+    ``CREATE 1``. INSERT … RETURNING still sends rows."""
     from crate_spark.pg_wire import _PgHandler
 
     handler = _PgHandler.__new__(_PgHandler)
@@ -445,7 +446,9 @@ def test_pg_wire_dml_sends_its_command_tag_and_no_rows(spark, tmp_path):
         handler._simple_query(sock, sql)
         return _reply_tags(sock)
 
-    reply("CREATE TABLE f (id int, v text)")
+    assert reply("CREATE TABLE f (id int, v text)") == [
+        (b"C", b"CREATE 1\x00"), (b"Z", b"I")
+    ]
     assert reply("INSERT INTO f (id) VALUES (3), (4)") == [
         (b"C", b"INSERT 0 2\x00"), (b"Z", b"I")
     ]
@@ -457,6 +460,11 @@ def test_pg_wire_dml_sends_its_command_tag_and_no_rows(spark, tmp_path):
     ]
     tags = [t for t, _ in reply("INSERT INTO f (id) VALUES (5) RETURNING id")]
     assert tags == [b"T", b"D", b"C", b"Z"]
+    assert reply("ALTER TABLE f ADD COLUMN w int") == [
+        (b"C", b"ALTER 1\x00"), (b"Z", b"I")
+    ]
+    assert reply("REFRESH TABLE f") == [(b"C", b"REFRESH 1\x00"), (b"Z", b"I")]
+    assert reply("DROP TABLE f") == [(b"C", b"DROP 1\x00"), (b"Z", b"I")]
 
 
 def test_pg_wire_extended_dml_describes_no_data(pg_server):
@@ -507,3 +515,31 @@ def test_pg_wire_connection_sets_nodelay(spark, monkeypatch):
         srv.shutdown()
         srv.server_close()
     assert seen == [1]
+
+
+def test_pg_wire_row_description_oids_match_pg_attribute(pg_server):
+    """RowDescription declares each column with the OID that
+    ``pg_catalog.pg_attribute`` reports for it, one storable type per
+    column; a timestamp without time zone is 1114 in both."""
+    c = MiniPgClient(pg_server)
+    try:
+        assert c.query(
+            "CREATE TABLE wire_types (a text, b integer, c bigint, d smallint,"
+            " e byte, f real, g double precision, h boolean, i date,"
+            " j timestamp with time zone, k timestamp without time zone,"
+            " l numeric(10, 2), m bytea, n array(integer), o object,"
+            " p geo_point, q interval, r ip, s float_vector(2))"
+        )[2] is None
+        cols, _rows, err = c.query("SELECT * FROM wire_types")
+        assert err is None and len(cols) == 19
+        wire = c.oids
+        _cols, rows, err = c.query(
+            "SELECT a.atttypid FROM pg_catalog.pg_attribute a "
+            "JOIN pg_catalog.pg_class c ON a.attrelid = c.oid "
+            "WHERE c.relname = 'wire_types' ORDER BY a.attnum"
+        )
+        assert err is None
+        assert wire == [int(r[0]) for r in rows]
+        assert wire[cols.index("k")] == 1114
+    finally:
+        c.close()

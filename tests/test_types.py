@@ -150,3 +150,35 @@ def test_create_table_reference_type_names(spark, tmp_path):
         "SELECT round(distance(g, 'POINT (13.405 52.52)'), 0) AS m FROM typed"
     ).collect()[0]["m"]
     assert 0 <= d < 5000
+    # the PG alias spellings a CAST accepts declare columns too
+    s.execute(
+        "CREATE TABLE aliased (a int2, b int4, c int8, d float4, e float8, f int8[])"
+    )
+    assert [
+        f.dataType.simpleString() for f in s.execute("SELECT * FROM aliased").schema
+    ] == ["smallint", "int", "bigint", "float", "double", "array<bigint>"]
+    assert [
+        r[0]
+        for r in s.execute(
+            "SELECT data_type FROM information_schema.columns "
+            "WHERE table_name = 'aliased' ORDER BY ordinal_position"
+        ).collect()
+    ] == ["smallint", "integer", "bigint", "real", "double precision", "bigint_array"]
+
+
+def test_alias_spellings_cast_like_they_declare(spark, tmp_path):
+    """``char``/``character`` cast to text as they declare text columns,
+    and a function signature takes ``int8`` as a CAST does."""
+    from crate_spark.engine import CrateSession
+
+    s = CrateSession(spark, None, storage_dir=str(tmp_path))
+    row = s.execute(
+        "SELECT '1'::char AS a, CAST('x' AS character) AS b, pg_typeof('1'::char) AS t"
+    ).collect()[0]
+    assert (row["a"], row["b"], row["t"]) == ("1", "x", "text")
+    s.execute(
+        "CREATE FUNCTION twice(a int8) RETURNS int8 LANGUAGE JAVASCRIPT "
+        "AS 'function twice(a) { return a * 2; }'"
+    )
+    row = s.execute("SELECT twice(21) AS v, pg_typeof(twice(21)) AS t").collect()[0]
+    assert (row["v"], row["t"]) == (42, "bigint")
