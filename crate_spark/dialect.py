@@ -4026,9 +4026,12 @@ def rewrite(
 
         def _obj_sub(m: re.Match) -> str:
             base, chain = m.group(1), m.group(2)
-            name = base.split(".")[-1].strip("`").lower()
-            is_arr = "[]" + name in lowered
-            if name not in lowered and not is_arr:
+            name = base.split(".")[-1]
+            # a quoted base keeps its case and names only that column
+            names = string_object_columns if name.startswith("`") else lowered
+            name = name.strip("`") if name.startswith("`") else name.lower()
+            is_arr = "[]" + name in names
+            if name not in names and not is_arr:
                 return m.group(0)
             parts = re.findall(r"\[\s*(__LIT_\d+__|\d+)\s*\]", chain)
             base_expr = base

@@ -17,16 +17,30 @@ Reference parity (SURVEY.md §2.1):
 
 Storage model: one directory per table; Hive-style subdirectories when
 ``partitioned_by`` is set; table attributes (PK, generated columns,
-checks, partitioning) in ``_crate_meta.json``. Mutations are
-read-merge-write with a staging directory and atomic swap — the
-single-writer batch analog of the reference's per-shard write path.
-At production scale the same API fronts a transactional table format
+checks, partitioning) in ``_crate_meta.json``. Part files are
+immutable. The commit point is ``_crate_manifest.json``, the list of
+live files, which every write replaces with ``os.replace`` (the analog
+of a Lucene commit point plus refresh): a read resolves it once and
+scans exactly those files, and a table no commit has listed yet
+(restored, subscribed, pre-existing) reads its directory as version 0.
+An append adds its batch as new files. On an unpartitioned, unclustered
+table a batch that fits one split is written together with the table's
+small tail (its files at or under the split-size floor) as one file in
+the same job, the merge-policy analog of OPTIMIZE, so a hot table stays
+one split. UPDATE, DELETE, upsert, OPTIMIZE and ALTER write the new
+content as new files and list only those. Replaced files are retired,
+not deleted: a later commit deletes them once no statement that started
+before the retirement is still being served (``serving``) and no plan
+built before it is still held (``hold``: a returned frame, a cursor, a
+pg-wire portal), so a reader never loses a file it listed. At
+production scale the same API fronts a transactional table format
 (Delta/Iceberg); the semantics here are what the tests pin down.
 """
 
 from __future__ import annotations
 
 import functools
+import itertools
 import json
 import os
 import re
@@ -34,24 +48,34 @@ import shutil
 import tempfile
 import threading
 import uuid
+import weakref
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.window import Window
 
 from crate_spark.session import (
-    conf_scope, ddl_schema, local_frame, one_split, parquet_files,
+    backticked, conf_scope, ddl_schema, local_frame, one_split, parquet_files,
+    split_floor,
 )
+from crate_spark.streaming.replication import published
 
 META_FILE = "_crate_meta.json"
+#: the commit point: the table's live files, replaced whole by each
+#: commit (underscore-prefixed, so Spark's file listing skips it)
+MANIFEST_FILE = "_crate_manifest.json"
+
+#: Spark lists more explicit paths than this in a job (its default)
+_LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+_SERIAL_LISTING = 32
 
 #: one mutation at a time across all tables. A mutation reads the
 #: current content (PK-clash check, UPDATE/DELETE rewrite) and then
-#: commits by merge or swap; front-door threads share the session, so
-#: without this two INSERTs of one key could both pass the check and
-#: an UPDATE could swap away a concurrent one. Reads take no lock.
+#: commits; front-door threads share the session, so without this two
+#: INSERTs of one key could both pass the check and an UPDATE could
+#: drop a concurrent INSERT. Reads take no lock.
 _WRITE_LOCK = threading.RLock()
 
 
@@ -63,6 +87,62 @@ def _serialized(method):
         with _WRITE_LOCK:
             return method(self, *args, **kwargs)
     return locked
+
+
+#: statements being served, process-wide like ``_WRITE_LOCK`` (any
+#: session's statement may read any table's files): token -> sequence
+#: number at their start. A retired file is deleted only once every
+#: statement that started before its retirement has finished.
+_SERVING: dict[object, int] = {}
+_SEQ = itertools.count(1)
+_SERVING_LOCK = threading.Lock()
+#: tokens of held frames that were released; ``delete_retired`` drops
+#: them from ``_SERVING`` under the lock (a finalizer may run on any
+#: thread at any allocation, also while that thread holds the lock)
+_RELEASED: list = []
+#: ``start``: the sequence number the current statement of this thread
+#: started at; ``retired``: the batches it retired, stamped when it ends
+_SERVED = threading.local()
+
+
+@contextmanager
+def serving():
+    """Mark the enclosed span as one statement being served, from its
+    start to its last row; the front doors wrap each request, and
+    ``CrateSession.execute`` each statement (an inner scope counts as
+    part of the outer one). A retirement takes effect when the
+    committing statement ends, after its caller has registered the
+    table's new relation: a statement that starts later cannot read
+    the replaced files."""
+    if getattr(_SERVED, "retired", None) is not None:
+        yield
+        return
+    token = object()
+    with _SERVING_LOCK:
+        _SERVED.start = _SERVING[token] = next(_SEQ)
+    _SERVED.retired = []
+    try:
+        yield
+    finally:
+        retired, _SERVED.retired = _SERVED.retired, None
+        with _SERVING_LOCK:
+            tag = next(_SEQ)
+            for batch in retired:
+                batch[0] = tag
+            del _SERVING[token]
+
+
+def hold(frame: DataFrame) -> weakref.finalize:
+    """Keep the files ``frame`` may read while it is alive: a plan that
+    outlives its statement (a frame returned to an ``execute`` caller,
+    a pg-wire portal, a cursor) is served from the start of the
+    statement that built it until ``frame`` is garbage collected or the
+    returned finalizer is called, whichever comes first."""
+    token = object()
+    with _SERVING_LOCK:
+        inside = getattr(_SERVED, "retired", None) is not None
+        _SERVING[token] = _SERVED.start if inside else next(_SEQ)
+    return weakref.finalize(frame, _RELEASED.append, token)
 
 
 class CheckViolation(Exception):
@@ -112,6 +192,10 @@ class CrateTable:
     #: information_schema.columns expands into col['sub'] rows
     #: (information-schema.rst:363-381)
     crate_columns: list = field(default_factory=list)
+    #: retired files awaiting deletion: [stamp, paths relative to the
+    #: table directory]; the stamp is None while the retiring
+    #: statement is still being served
+    _retired: list = field(default_factory=list, init=False, repr=False, compare=False)
 
     @property
     def schema(self) -> T.StructType:
@@ -187,22 +271,47 @@ class CrateTable:
             json.dump(meta, f, indent=2)
 
     # -- read ------------------------------------------------------------
+    def _resolve(self) -> tuple[list[tuple[str, int]], int]:
+        """(path, bytes) of the live files and the manifest version that
+        lists them; a table without a manifest is version 0, its
+        directory walked once."""
+        try:
+            with open(os.path.join(self.path, MANIFEST_FILE)) as f:
+                manifest = json.load(f)
+        except FileNotFoundError:
+            return parquet_files(self.path), 0
+        files = [(os.path.join(self.path, rel), size) for rel, size in manifest["files"]]
+        return files, manifest["version"]
+
     def files(self) -> list[tuple[str, int]]:
-        """(path, bytes) of the table's parquet files: one walk."""
-        return parquet_files(self.path)
+        """(path, bytes) of the table's live parquet files."""
+        return self._resolve()[0]
 
     def read(self, files: list[tuple[str, int]] | None = None) -> DataFrame:
-        """The table's rows; ``files`` is a listing the caller already
-        made, so the table is not walked twice."""
-        if not (self.files() if files is None else files):
+        """The table's rows: a plain scan of ``files``, a listing the
+        caller already made, else of the live files. A version-0 table
+        is read as Spark lists its directory, which honours a streaming
+        sink's log (a subscribed table)."""
+        if files is None:
+            files, version = self._resolve()
+            if files and not version:
+                return self.spark.read.schema(self.schema_ddl).parquet(self.path)
+        if not files:
             return local_frame(self.spark, [], self.schema)
-        return self.spark.read.schema(self.schema_ddl).parquet(self.path)
+        scan = self.spark.read.schema(self.schema_ddl).option("basePath", self.path)
+        paths = [p for p, _ in files]
+        if len(paths) <= _SERIAL_LISTING:
+            return scan.parquet(*paths)
+        # more paths than the threshold are listed by a Spark job; the
+        # manifest already holds the list, so stat them on the driver
+        with conf_scope(self.spark, {_LISTING_THRESHOLD: str(len(paths))}):
+            return scan.parquet(*paths)
 
     def relation(self) -> DataFrame:
         """What SQL statements read: ``read()`` declared one partition
         when the table is one split (``session.one_split``)."""
-        files = self.files()
-        return one_split(self.read(files), files)
+        files, version = self._resolve()
+        return one_split(self.read(files if version else None), files)
 
     # -- write plumbing --------------------------------------------------
     #
@@ -219,7 +328,7 @@ class CrateTable:
         """Apply generated columns and project to declared schema order
         (write-time evaluation, DocTableInfo.java:174 semantics).
         CHECK evaluation happens as an observed metric on the write —
-        see _check_viol_col."""
+        see _viol_sql."""
         for col, expr in self.generated.items():
             df = df.withColumn(col, F.expr(self.generated_eval.get(col, expr)))
         # declared length enforcement (data-types.rst VARCHAR(n)/BIT(n)):
@@ -259,17 +368,16 @@ class CrateTable:
                     df = df.withColumn(
                         col, F.expr(f"rpad({col}, {n}, ' ')")
                     )
-        names = self.schema.names
-        return df.select(*names)
+        return df.selectExpr(*[backticked(c) for c in self.schema.names])
 
-    def _check_viol_col(self):
-        """0/1 violation flag for the table's CHECK constraints.
-        PG/CrateDB semantics: a CHECK fails only on explicit FALSE;
-        NULL passes (DocTableInfo.java:188)."""
+    def _viol_sql(self) -> str | None:
+        """The ``__viol`` item: a 0/1 flag for the table's CHECK
+        constraints. PG/CrateDB semantics: a CHECK fails only on
+        explicit FALSE; NULL passes (DocTableInfo.java:188)."""
         if not self.checks:
             return None
         cond = " AND ".join(f"({c})" for c in self.checks)
-        return (F.expr(cond) == F.lit(False)).cast("int")
+        return f"CAST(({cond}) = false AS int) AS __viol"
 
     def _raise_if_viol(self, got: dict) -> None:
         bad = int(got.get("viol") or 0)
@@ -281,14 +389,15 @@ class CrateTable:
 
     def _write_staged(self, df: DataFrame, metrics: dict | None = None) -> tuple[str, dict]:
         """Write df to a fresh staging directory; return (path, observed
-        metrics). The caller decides commit (swap/merge) vs abort."""
+        metrics), where ``metrics`` maps a name to an SQL aggregate over
+        the written rows. The caller decides commit vs abort."""
         staging = os.path.join(
             tempfile.gettempdir(), f"crate_stage_{uuid.uuid4().hex}"
         )
         got: dict = {}
         if metrics:
             obs = Observation()
-            df = df.observe(obs, *[c.alias(k) for k, c in metrics.items()])
+            df = df.observe(obs, *[F.expr(f"{sql} AS {k}") for k, sql in metrics.items()])
         helper = [c for c in df.columns if c.startswith("__")]
         if helper:
             df = df.drop(*helper)
@@ -316,37 +425,81 @@ class CrateTable:
             got = obs.get
         return staging, got
 
-    def _swap_in(self, staging: str) -> None:
-        """Atomically replace table content with the staged write."""
-        old = self.path + f".old-{uuid.uuid4().hex}"
-        os.rename(self.path, old)
-        os.rename(staging, self.path)
-        self._save_meta()
-        shutil.rmtree(old, ignore_errors=True)
-
-    def _merge_in(self, staging: str) -> list[str]:
-        """Append semantics: move staged part files (and partition
-        subdirectories) into the table directory. Part file names are
-        globally unique, so a move-merge never collides."""
-        moved: list[str] = []
-        for root, _dirs, files in os.walk(staging):
-            rel = os.path.relpath(root, staging)
-            dest = self.path if rel == "." else os.path.join(self.path, rel)
-            for f in files:
-                if not f.endswith(".parquet"):
-                    continue
-                os.makedirs(dest, exist_ok=True)
-                target = os.path.join(dest, f)
-                os.rename(os.path.join(root, f), target)
-                moved.append(target)
-        shutil.rmtree(staging, ignore_errors=True)
-        return moved
+    def _commit(self, staging: str | None, retire=()) -> list[tuple[str, int]]:
+        """The one commit path. Move the staged part files into the
+        table directory (their names are unique, so no live file is
+        touched), then replace the manifest with the live files less
+        ``retire`` plus the new ones: that ``os.replace`` is the commit
+        point. ``retire`` stays on disk for the statements that may
+        still read it; files retired earlier are deleted here once none
+        remains. Returns the new files."""
+        files, version = self._resolve()
+        new: list[tuple[str, int]] = []
+        if staging is not None:
+            for root, _dirs, names in os.walk(staging):
+                rel = os.path.relpath(root, staging)
+                dest = self.path if rel == "." else os.path.join(self.path, rel)
+                for f in sorted(names):
+                    if f.endswith(".parquet"):
+                        os.makedirs(dest, exist_ok=True)
+                        target = os.path.join(dest, f)
+                        os.rename(os.path.join(root, f), target)
+                        new.append((target, os.path.getsize(target)))
+            shutil.rmtree(staging, ignore_errors=True)
+        gone = {p for p, _ in retire}
+        live = [f for f in files if f[0] not in gone] + new
+        manifest = {
+            "version": version + 1,
+            "files": [[os.path.relpath(p, self.path), size] for p, size in live],
+        }
+        tmp = os.path.join(self.path, f".{MANIFEST_FILE}.{uuid.uuid4().hex}")
+        with open(tmp, "w") as f:
+            json.dump(manifest, f)
+        os.replace(tmp, os.path.join(self.path, MANIFEST_FILE))
+        self.delete_retired()
+        if gone:
+            batch = [None, [os.path.relpath(p, self.path) for p in sorted(gone)]]
+            self._retired.append(batch)
+            pending = getattr(_SERVED, "retired", None)
+            if pending is None:
+                with _SERVING_LOCK:
+                    batch[0] = next(_SEQ)
+            else:
+                pending.append(batch)
+        return new
 
     @_serialized
-    def _overwrite(self, df: DataFrame) -> None:
-        """Write df as the table's new content via staging + swap."""
-        staging, _ = self._write_staged(df)
-        self._swap_in(staging)
+    def delete_retired(self) -> None:
+        """Delete the retired files no statement being served, and no
+        held frame, can read: those stamped before the oldest of them
+        started. Each commit
+        runs it; a publication runs it too, since a subscriber streams
+        every file in the table directory."""
+        with _SERVING_LOCK:
+            while _RELEASED:
+                del _SERVING[_RELEASED.pop()]
+            oldest = min(_SERVING.values(), default=None)
+        keep = []
+        for batch in self._retired:
+            stamp, rels = batch
+            if stamp is None or (oldest is not None and oldest < stamp):
+                keep.append(batch)
+                continue
+            for rel in rels:
+                try:
+                    os.remove(os.path.join(self.path, rel))
+                except FileNotFoundError:
+                    pass
+        self._retired = keep
+
+    @_serialized
+    def _overwrite(self, change) -> None:
+        """Replace the table's rows with ``change(rows)``, where rows is
+        the current version, read under the write lock."""
+        files = self.files()
+        if files:
+            staging, _ = self._write_staged(change(self.read(files)))
+            self._commit(staging, files)
 
     # -- dynamic columns -------------------------------------------------
     @_serialized
@@ -383,35 +536,78 @@ class CrateTable:
         return self.insert(df.select(*[f.name for f in full.fields]), returning=returning)
 
     # -- INSERT ----------------------------------------------------------
+    def _small_tail(self, batch: DataFrame, files, returning) -> list | None:
+        """The files an append rewrites together with ``batch`` into one
+        file: the smallest files while batch and tail fit one split
+        (``split_floor``; the batch sized by the optimizer's estimate).
+        None when the batch is written as it comes: a partitioned or
+        CLUSTERED table keeps its layout, RETURNING reads back the
+        batch's own files, and a published table's subscribers stream
+        every new file, so a merged file would replay stored rows."""
+        if (self.partitioned_by or (self.clustered_by and self.shards)
+                or returning is not None
+                or published(os.path.dirname(self.path), os.path.basename(self.path))):
+            return None
+        floor = split_floor(self.spark)
+        size = int(batch._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        if size > floor:
+            return None
+        tail = []
+        for f in sorted(files, key=lambda f: f[1]):
+            if size + f[1] > floor:
+                break
+            tail.append(f)
+            size += f[1]
+        return tail
+
     @_serialized
     def insert(self, df: DataFrame, returning: list[str] | None = None):
         """INSERT ... SELECT/VALUES. With a PK, duplicate keys (against
         existing data or within the batch) raise DuplicateKeyError —
         use upsert() for ON CONFLICT behavior.
 
-        Single-pass: batch-dup flags (count window over the PK),
-        existing-PK clash flags (left join against current keys) and
-        CHECK violations are observed metrics on the staged write —
-        one job over the batch, then a file move-merge on success."""
+        One job: a batch that fits one split is written with the small
+        tail (``_small_tail``) as one partition, so one count window
+        over the PK sees both the in-batch duplicates and the keys the
+        tail holds; only files outside the tail are left-joined for
+        clashes. Duplicates, clashes and CHECK violations are observed
+        metrics on the staged write, which is discarded on a violation."""
         df = self._prepare(df)
-        metrics: dict = {"n": F.count(F.lit(1))}
-        viol = self._check_viol_col()
+        viol = self._viol_sql()
         if viol is not None:
-            df = df.withColumn("__viol", viol)
-            metrics["viol"] = F.sum("__viol")
+            df = df.selectExpr("*", viol)
+        files = self.files()
+        tail = self._small_tail(df, files, returning)
+        rows = df.selectExpr("*", "1 AS __new")
+        if tail is not None:
+            if tail:
+                old = self.read(tail).selectExpr(
+                    "*", "0 AS __new", *(["0 AS __viol"] if viol is not None else [])
+                )
+                rows = old.unionByName(rows)
+            rows = rows.coalesce(1)  # the PK window then plans no exchange
+            files = [f for f in files if f not in tail]
+        metrics = {"n": "sum(__new)"}
+        if viol is not None:
+            metrics["viol"] = "sum(__viol)"
         if self.primary_key:
-            pk = self.primary_key
-            w = Window.partitionBy(*pk)
-            df = df.withColumn(
-                "__dup", (F.count(F.lit(1)).over(w) > 1).cast("int")
+            pk = [backticked(c) for c in self.primary_key]
+            over = f"OVER (PARTITION BY {', '.join(pk)})"
+            rows = rows.selectExpr(
+                "*",
+                f"CAST(__new = 1 AND sum(__new) {over} > 1 AS int) AS __dup",
+                f"CAST(__new = 1 AND count(1) {over} > sum(__new) {over} AS int) AS __held",
             )
-            metrics["dups"] = F.sum("__dup")
-            files = self.files()
+            metrics["dups"] = "sum(__dup)"
+            clash = "__held"
             if files:
-                existing = self.read(files).select(*pk).withColumn("__exists", F.lit(1))
-                df = df.join(existing, pk, "left")
-                metrics["clash"] = F.sum("__exists")
-        staging, got = self._write_staged(df, metrics)
+                existing = self.read(files).selectExpr(*pk, "1 AS __exists")
+                rows = rows.join(existing, self.primary_key, "left")
+                clash += " + CAST(__new = 1 AND __exists IS NOT NULL AS int)"
+            metrics["clash"] = f"sum({clash})"
+        if tail is not None:
+            rows = rows.coalesce(1)  # one file, also past a shuffled clash join
+        staging, got = self._write_staged(rows, metrics)
         try:
             self._raise_if_viol(got)
             if int(got.get("dups") or 0):
@@ -425,17 +621,11 @@ class CrateTable:
         except Exception:
             shutil.rmtree(staging, ignore_errors=True)
             raise
-        moved = self._merge_in(staging)
+        new = self._commit(staging, tail or ())
         if returning is not None:
-            out = (
-                self.spark.read.schema(self.schema)
-                .option("basePath", self.path)
-                .parquet(*moved)
-                if moved
-                else self.read().limit(0)
-            )
+            out = self.read(new) if new else self.read().limit(0)
             return out.select(*returning or out.columns)
-        return int(got["n"])
+        return int(got["n"] or 0)
 
     @_serialized
     def upsert(self, df: DataFrame, *, do_nothing: bool = False,
@@ -450,13 +640,14 @@ class CrateTable:
         if not self.primary_key:
             raise ValueError("upsert requires a primary key")
         df = self._prepare(df)
-        viol = self._check_viol_col()
+        viol = self._viol_sql()
         if viol is not None:
             # batch rows carry their violation flag into the merge;
             # rows kept from current content observed as 0
-            df = df.withColumn("__viol", viol)
+            df = df.selectExpr("*", viol)
         df = df.alias("excluded")
-        current = self.read()
+        files = self.files()
+        current = self.read(files)
         if viol is not None:
             current = current.withColumn("__viol", F.lit(0))
         current = current.alias("target")
@@ -506,18 +697,18 @@ class CrateTable:
                 ).drop("__hit")
                 merged = _src(untouched, "keep").unionByName(batch)
         metrics = {
-            "inserted": F.sum((F.col("__src") == "ins").cast("int")),
-            "updated": F.sum((F.col("__src") == "upd").cast("int")),
+            "inserted": "sum(CAST(__src = 'ins' AS int))",
+            "updated": "sum(CAST(__src = 'upd' AS int))",
         }
         if viol is not None:
-            metrics["viol"] = F.sum("__viol")
+            metrics["viol"] = "sum(__viol)"
         staging, got = self._write_staged(merged, metrics)
         try:
             self._raise_if_viol(got)
         except Exception:
             shutil.rmtree(staging, ignore_errors=True)
             raise
-        self._swap_in(staging)
+        self._commit(staging, files)
         return {"inserted": int(got["inserted"]), "updated": int(got["updated"])}
 
     # -- UPDATE / DELETE -------------------------------------------------
@@ -533,7 +724,8 @@ class CrateTable:
         not OOM the driver), and no separate count job: the export
         write IS the matched-row pass.
         """
-        current = self.read()
+        files = self.files()
+        current = self.read(files)
         # matched is evaluated on the OLD values (PG semantics), before
         # any SET expression rewrites a column the predicate reads
         matched = F.coalesce(F.expr(where), F.lit(False)) if where else F.lit(True)
@@ -553,11 +745,12 @@ class CrateTable:
             updated.filter("__matched = 1").select(
                 *(returning or current.columns)
             ).write.parquet(ret_path)
-            self._overwrite(updated)
+            staging, _ = self._write_staged(updated)
+            self._commit(staging, files)
             return self.spark.read.parquet(ret_path)
         # matched-row count rides the rewrite as an observed metric
-        staging, got = self._write_staged(updated, {"n": F.sum("__matched")})
-        self._swap_in(staging)
+        staging, got = self._write_staged(updated, {"n": "sum(__matched)"})
+        self._commit(staging, files)
         return int(got["n"] or 0)
 
     @_serialized
@@ -567,11 +760,12 @@ class CrateTable:
         otherwise read-filter-write with the deleted-row count observed
         on the same pass (no pre-count job). When nothing matched the
         staged rewrite is discarded and the table left untouched."""
+        files = self.files()
         if where is None:
-            n = self.read().count()
-            self._overwrite(self.read().limit(0))
+            n = self.read(files).count()
+            self._commit(None, files)
             return n
-        current = self.read()
+        current = self.read(files)
         flagged = current.withColumn(
             "__del", F.coalesce(F.expr(where), F.lit(False)).cast("int")
         )
@@ -582,23 +776,21 @@ class CrateTable:
         staging, _ = self._write_staged(kept)
         n = int(obs.get["n_del"] or 0)
         if n:
-            self._swap_in(staging)
+            self._commit(staging, files)
         else:
             shutil.rmtree(staging, ignore_errors=True)
         return n
 
     @_serialized
     def drop_partition(self, **kv) -> bool:
-        """DELETE of a whole partition == directory drop."""
+        """DELETE of a whole partition: its files leave the manifest."""
         if list(kv) != self.partitioned_by[: len(kv)]:
             raise ValueError(f"partition keys must be a prefix of {self.partitioned_by}")
-        sub = os.path.join(
-            self.path, *[f"{k}={v}" for k, v in kv.items()]
-        )
-        if os.path.isdir(sub):
-            shutil.rmtree(sub)
-            return True
-        return False
+        sub = os.path.join(self.path, *[f"{k}={v}" for k, v in kv.items()], "")
+        gone = [f for f in self.files() if f[0].startswith(sub)]
+        if gone:
+            self._commit(None, gone)
+        return bool(gone)
 
     # -- COPY ------------------------------------------------------------
     @_serialized
@@ -730,18 +922,18 @@ class CrateTable:
             F.sum("__bad").alias("n_bad"),
         ).filter("__bad = 0").drop("__bad")
         df = self._prepare(good)
-        metrics: dict = {}
-        viol = self._check_viol_col()
+        metrics = {}
+        viol = self._viol_sql()
         if viol is not None:
-            df = df.withColumn("__viol", viol)
-            metrics["viol"] = F.sum("__viol")
+            df = df.selectExpr("*", viol)
+            metrics["viol"] = "sum(__viol)"
         staging, got = self._write_staged(df, metrics or None)
         try:
             self._raise_if_viol(got)
         except Exception:
             shutil.rmtree(staging, ignore_errors=True)
             raise
-        self._merge_in(staging)
+        self._commit(staging)
         loaded = int(obs_in.get["n_total"] or 0) - int(obs_in.get["n_bad"] or 0)
         return {"loaded": loaded, "errors": int(obs_in.get["n_bad"] or 0)}
 
@@ -763,7 +955,7 @@ class CrateTable:
         rewrite to one partition, per the PARTITION clause), flat
         tables coalesce to ``max_num_segments`` (WITH
         (max_num_segments=N); default one file per 128 MB). The
-        rewrite stages and swaps like every other mutation — readers
+        rewrite stages and commits like every other mutation — readers
         never observe a partial table.
         """
         files = self.files()
@@ -782,7 +974,7 @@ class CrateTable:
             df = df.unionByName(keep)
         # _write_staged applies MODULO routing / partitionBy itself
         staging, _ = self._write_staged(df)
-        self._swap_in(staging)
+        self._commit(staging, files)
         return {"files_before": len(files), "files_after": len(self.files())}
 
     def copy_to(self, uri: str, *, format: str = "json",

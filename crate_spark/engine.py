@@ -33,6 +33,7 @@ from crate_spark.datatypes import TYPE_WORDS, show_type, spark_type
 from crate_spark.dialect import (
     add_token, mask, rewrite, rewrite_sys_columns, split_args, unmask,
 )
+from crate_spark.dml import hold, serving
 from crate_spark.session import (
     apply_runtime_confs, dml_count, load_tables, local_frame, rowcount_frame,
 )
@@ -243,12 +244,12 @@ class CrateSession:
             for f in df.schema.fields:
                 simple = f.dataType.simpleString()
                 if simple == "string":
-                    cols.add(f.name.lower())
+                    cols.add(f.name)
                 elif simple == "array<string>":
                     # array-of-objects columns (array(object ...) maps
                     # to array of JSON strings): arr['k'] projects the
                     # field per element (SubscriptFunction on arrays)
-                    cols.add("[]" + f.name.lower())
+                    cols.add("[]" + f.name)
         return cols
 
     def _sql(self, stmt: str) -> DataFrame:
@@ -430,9 +431,14 @@ class CrateSession:
             # TABLES): each read rebuilds its view from the current
             # state, so runtime-backed views (sys.jobs, pg_cursors)
             # stay live, and each CrateSession reads its own catalog
-            # through temp views that are global to the SparkSession
-            with views_held(self, stmt):
-                return self._dispatch(stmt)
+            # through temp views that are global to the SparkSession;
+            # files a commit replaces stay readable while it is served,
+            # and while the caller holds its answer
+            with serving(), views_held(self, stmt):
+                df = self._dispatch(stmt)
+                if df is not None:
+                    hold(df)
+                return df
         except Exception as e:
             err = str(e).split("\n")[0][:200]
             raise
@@ -998,7 +1004,7 @@ class CrateSession:
         # OPTIMIZE TABLE [PARTITION (...)] [WITH (...)]: parquet
         # small-file compaction — the Lucene segment-merge analog
         # (optimize.rst; CrateTable.optimize preserves the routing /
-        # partition layout and swaps atomically)
+        # partition layout and commits through the manifest)
         m = re.match(
             r"OPTIMIZE\s+TABLE\s+(.+?)(?:\s+WITH\s*\((.*)\))?\s*$",
             stmt,
@@ -1089,6 +1095,7 @@ class CrateSession:
             )
             self._cursors[m.group(1).lower()] = {
                 "df": df,
+                "hold": hold(df),  # its files stay until CLOSE
                 "it": None,  # opened lazily on first numbered FETCH
                 "fetched": 0,
                 "schema": df.schema,
@@ -1126,7 +1133,9 @@ class CrateSession:
             target = m.group(1).lower()
             closed = list(self._cursors) if target == "all" else [target]
             for name in closed:
-                self._cursors.pop(name, None)
+                cur = self._cursors.pop(name, None)
+                if cur is not None:
+                    cur["hold"]()
             return local_frame(
                 self.spark, [(n,) for n in closed] or [("",)], "closed string"
             )

@@ -26,6 +26,7 @@ import time
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from crate_spark.datatypes import http_type
+from crate_spark.dml import serving
 from crate_spark.errors import error_class
 from crate_spark.session import dml_count
 
@@ -124,42 +125,43 @@ def execute_request(session, payload: dict, *, types: bool = False,
         # empty bulk: nothing executes, ack with an empty result list
         return {"cols": [], "results": [], "duration": 0.0}
     t0 = time.time()
-    try:
-        if payload.get("bulk_args"):
-            # bulk responses: cols always [], one result per arg row;
-            # a failing arg row reports rowcount -2 + its error
-            # (http.rst "Bulk errors": runtime errors don't abort)
-            results = [
-                {"rowcount": -2, "error": _error_envelope(session, stmt, r)}
-                if isinstance(r, Exception) else {"rowcount": r}
-                for r in session.execute_bulk(stmt, payload["bulk_args"])
-            ]
-            return {"cols": [], "results": results,
-                    "duration": round((time.time() - t0) * 1000, 3)}
-        df = session.execute(stmt, params=payload.get("args"))
-        counted = dml_count(stmt, df)
-        if df is None or counted:
-            return {"cols": [], "rows": [], "rowcount": counted[1] if counted else 0,
-                    "duration": round((time.time() - t0) * 1000, 3)}
-        rows = [[_json_value(v) for v in r] for r in df.collect()]
-        resp = {
-            "cols": list(df.columns),
-            "rows": rows,
-            "rowcount": len(rows),
-            "duration": round((time.time() - t0) * 1000, 3),
-        }
-        if types:
-            resp["col_types"] = [
-                http_type(f.dataType.simpleString()) for f in df.schema.fields
-            ]
-        return resp
-    except Exception as e:  # error envelope, never a raw 500 body
-        out = {"error": _error_envelope(session, stmt, e)}
-        if error_trace:
-            import traceback
+    with serving():  # the statement's files stay until its last row is read
+        try:
+            if payload.get("bulk_args"):
+                # bulk responses: cols always [], one result per arg row;
+                # a failing arg row reports rowcount -2 + its error
+                # (http.rst "Bulk errors": runtime errors don't abort)
+                results = [
+                    {"rowcount": -2, "error": _error_envelope(session, stmt, r)}
+                    if isinstance(r, Exception) else {"rowcount": r}
+                    for r in session.execute_bulk(stmt, payload["bulk_args"])
+                ]
+                return {"cols": [], "results": results,
+                        "duration": round((time.time() - t0) * 1000, 3)}
+            df = session.execute(stmt, params=payload.get("args"))
+            counted = dml_count(stmt, df)
+            if df is None or counted:
+                return {"cols": [], "rows": [], "rowcount": counted[1] if counted else 0,
+                        "duration": round((time.time() - t0) * 1000, 3)}
+            rows = [[_json_value(v) for v in r] for r in df.collect()]
+            resp = {
+                "cols": list(df.columns),
+                "rows": rows,
+                "rowcount": len(rows),
+                "duration": round((time.time() - t0) * 1000, 3),
+            }
+            if types:
+                resp["col_types"] = [
+                    http_type(f.dataType.simpleString()) for f in df.schema.fields
+                ]
+            return resp
+        except Exception as e:  # error envelope, never a raw 500 body
+            out = {"error": _error_envelope(session, stmt, e)}
+            if error_trace:
+                import traceback
 
-            out["error_trace"] = traceback.format_exc()[:4000]
-        return out
+                out["error_trace"] = traceback.format_exc()[:4000]
+            return out
 
 
 class _Handler(BaseHTTPRequestHandler):

@@ -34,6 +34,7 @@ import struct
 import threading
 
 from crate_spark.datatypes import pg_oid
+from crate_spark.dml import serving
 from crate_spark.errors import error_class
 from crate_spark.session import dml_count
 
@@ -103,26 +104,34 @@ class _PgHandler(socketserver.BaseRequestHandler):
             body = self._read_exact(sock, length - 4) or b""
             if tag == b"X":
                 return
-            if tag == b"Q":
-                self._simple_query(sock, body.rstrip(b"\x00").decode())
-            elif tag == b"P":
-                self._parse(sock, body)
-            elif tag == b"B":
-                self._bind(sock, body)
-            elif tag == b"D":
-                self._put(sock, self._describe(body))
-            elif tag == b"E":
-                self._execute(sock, body)
-            elif tag == b"C":
-                self._put(sock, _msg(b"3", b""))  # CloseComplete
-            elif tag == b"H":
-                pass  # Flush: every reply is flushed when it is complete
-            elif tag == b"S":
-                self._put(sock, _msg(b"Z", b"I"))  # Sync
-            else:
-                self._error(sock, "0A000", f"message type {tag!r} not supported")
-                self._put(sock, _msg(b"Z", b"I"))
+            with serving():  # a statement's files stay while its rows are sent
+                self._dispatch(sock, tag, body)
             self._flush(sock)
+
+    def _dispatch(self, sock, tag: bytes, body: bytes) -> None:
+        if tag == b"Q":
+            self._simple_query(sock, body.rstrip(b"\x00").decode())
+        elif tag == b"P":
+            self._parse(sock, body)
+        elif tag == b"B":
+            self._bind(sock, body)
+        elif tag == b"D":
+            self._put(sock, self._describe(body))
+        elif tag == b"E":
+            self._execute(sock, body)
+        elif tag == b"C":
+            if body[:1] == b"P":  # a closed portal's files may go
+                self._portals.pop(body[1:].rstrip(b"\x00").decode(), None)
+            self._put(sock, _msg(b"3", b""))  # CloseComplete
+        elif tag == b"H":
+            pass  # Flush: every reply is flushed when it is complete
+        elif tag == b"S":
+            # Sync ends the implicit transaction, and with it its portals
+            self._portals.clear()
+            self._put(sock, _msg(b"Z", b"I"))
+        else:
+            self._error(sock, "0A000", f"message type {tag!r} not supported")
+            self._put(sock, _msg(b"Z", b"I"))
 
     def _put(self, sock, msg: bytes) -> None:
         self._out += msg
@@ -159,7 +168,9 @@ class _PgHandler(socketserver.BaseRequestHandler):
 
     def _bind(self, sock, body: bytes) -> None:
         """'B': bind text-format params into a portal (Session.bind:403).
-        The portal holds a LAZY DataFrame; rows materialize at Execute."""
+        The portal holds a LAZY DataFrame; rows materialize at Execute.
+        The files it reads stay until the portal is closed or a Sync
+        ends it (``dml.hold``)."""
         portal, rest = body.split(b"\x00", 1)
         stmt_name, rest = rest.split(b"\x00", 1)
         nfmt = struct.unpack("!H", rest[:2])[0]

@@ -133,6 +133,13 @@ def ddl_schema(ddl: str) -> StructType:
     return StructType.fromDDL(ddl)
 
 
+def backticked(name: str) -> str:
+    """A column name as one Spark identifier in SQL text: an item of
+    ``selectExpr`` costs one py4j round trip where a ``Column`` built
+    from functions costs several."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def local_frame(spark: SparkSession, rows, schema: str | StructType) -> DataFrame:
     """``rows`` (tuples in ``schema`` order) as a ``LocalRelation``
     built from a pyarrow Table: collecting it, or a projection or
@@ -184,18 +191,23 @@ def parquet_files(path: str) -> list[tuple[str, int]]:
     ]
 
 
+def split_floor(spark: SparkSession) -> int:
+    """The split-size floor: ``openCostInBytes``, or ``maxPartitionBytes``
+    if smaller. Spark reads a file at or under it as one split (and packs
+    such files together); a table's files at or under it are its small
+    tail, which an append rewrites together with its batch."""
+    conf = spark._jsparkSession.sessionState().conf()
+    return min(conf.filesOpenCostInBytes(), conf.filesMaxPartitionBytes())
+
+
 def one_split(df: DataFrame, files: list[tuple[str, int]]) -> DataFrame:
     """``df``, a scan of ``files``, declared single-partition when Spark
-    reads it as one split: one file no larger than the split-size floor
-    (``openCostInBytes``, or ``maxPartitionBytes`` if smaller). Then
+    reads it as one split: one file no larger than ``split_floor``. Then
     ``coalesce(1)`` moves no row, and aggregates, windows and sorts above
     it plan no exchange, so AQE runs no stage job for them; a join
     partner of another width is still shuffled to that width. Anything
     larger is left as it is: at scale this is a no-op by construction."""
-    if len(files) != 1:
-        return df
-    conf = df.sparkSession._jsparkSession.sessionState().conf()
-    if files[0][1] > min(conf.filesOpenCostInBytes(), conf.filesMaxPartitionBytes()):
+    if len(files) != 1 or files[0][1] > split_floor(df.sparkSession):
         return df
     return df.coalesce(1)
 

@@ -27,8 +27,8 @@ from pyspark.sql import functions as F
 
 from crate_spark.datatypes import crate_name, spark_type, type_name
 from crate_spark.dialect import find_close, mask, rewrite, rewrite_sys_columns, split_args, unmask
-from crate_spark.dml import CrateTable
-from crate_spark.session import local_frame, rowcount_frame
+from crate_spark.dml import _WRITE_LOCK, CrateTable
+from crate_spark.session import backticked, local_frame, rowcount_frame
 
 def _crate_decl(raw: str) -> dict:
     """Parse one declared crate type into its information_schema form:
@@ -698,17 +698,18 @@ class SqlDmlRouter:
                 table._save_meta()
         elif m.group(4):  # DROP COLUMN
             col = m.group(4)
-            fields = [f for f in table.schema.fields if f.name != col]
-            files = table.files()
-            if files:
-                table._overwrite(table.read(files).drop(col))
-            table.schema_ddl = ", ".join(
-                f"{f.name} {f.dataType.simpleString()}" for f in fields
-            )
-            table.crate_columns = [
-                c for c in table.crate_columns if c["name"] != col
-            ]
-            table._save_meta()
+            # the rewrite reads the version current under the lock, and
+            # no INSERT commits between it and the new schema
+            with _WRITE_LOCK:
+                fields = [f for f in table.schema.fields if f.name != col]
+                table._overwrite(lambda rows: rows.drop(col))
+                table.schema_ddl = ", ".join(
+                    f"{f.name} {f.dataType.simpleString()}" for f in fields
+                )
+                table.crate_columns = [
+                    c for c in table.crate_columns if c["name"] != col
+                ]
+                table._save_meta()
         else:  # RENAME COLUMN (top-level or nested object subcolumn)
             old_ref = unmask(m.group(5), literals)
             new_ref = unmask(m.group(6), literals)
@@ -728,50 +729,43 @@ class SqlDmlRouter:
                     raise ValueError(f"unknown column '{old_ref}'")
                 node["name"] = npath[-1]
                 table._save_meta()
-                files = table.files()
-                if files:
-                    # JSON payloads key by field name — rewrite the key
-                    # at this nesting depth
-                    import json as _json
+                # JSON payloads key by field name — rewrite the key at
+                # this nesting depth
+                import json as _json
 
-                    def _rekey(v, parts=tuple(opath), new_name=npath[-1]):
-                        if v is None:
-                            return None
-                        try:
-                            obj = _json.loads(v)
-                        except Exception:
+                def _rekey(v, parts=tuple(opath), new_name=npath[-1]):
+                    if v is None:
+                        return None
+                    try:
+                        obj = _json.loads(v)
+                    except Exception:
+                        return v
+                    node_ = obj
+                    for p in parts[:-1]:
+                        if not isinstance(node_, dict) or p not in node_:
                             return v
-                        node_ = obj
-                        for p in parts[:-1]:
-                            if not isinstance(node_, dict) or p not in node_:
-                                return v
-                            node_ = node_[p]
-                        if isinstance(node_, dict) and parts[-1] in node_:
-                            node_[new_name] = node_.pop(parts[-1])
-                        return _json.dumps(obj)
+                        node_ = node_[p]
+                    if isinstance(node_, dict) and parts[-1] in node_:
+                        node_[new_name] = node_.pop(parts[-1])
+                    return _json.dumps(obj)
 
-                    rekey = F.udf(_rekey, "string")
-                    table._overwrite(
-                        table.read(files).withColumn(ocol, rekey(F.col(ocol)))
-                    )
+                rekey = F.udf(_rekey, "string")
+                table._overwrite(lambda rows: rows.withColumn(ocol, rekey(F.col(ocol))))
             else:
                 old, new = ocol, ncol
-                fields = table.schema.fields
-                files = table.files()
-                renamed = (
-                    table.read(files).withColumnRenamed(old, new)
-                    if files else None
-                )
-                table.schema_ddl = ", ".join(
-                    f"{new if f.name == old else f.name} {f.dataType.simpleString()}"
-                    for f in fields
-                )
-                for c in table.crate_columns:
-                    if c["name"] == old:
-                        c["name"] = new
-                table._save_meta()
-                if renamed is not None:
-                    table._overwrite(renamed)
+                # read under the old schema and commit under the new one
+                # with no INSERT in between
+                with _WRITE_LOCK:
+                    fields = table.schema.fields
+                    table._overwrite(lambda rows: rows.withColumnRenamed(old, new))
+                    table.schema_ddl = ", ".join(
+                        f"{new if f.name == old else f.name} {f.dataType.simpleString()}"
+                        for f in fields
+                    )
+                    for c in table.crate_columns:
+                        if c["name"] == old:
+                            c["name"] = new
+                    table._save_meta()
         self._refresh(name)
         return rowcount_frame(self.spark)
 
@@ -892,35 +886,31 @@ class SqlDmlRouter:
             declared_types = {
                 f.name: f.dataType.simpleString() for f in declared.fields
             }
-        # cast to declared types (VALUES literals arrive as int/decimal);
-        # geo_point columns additionally accept WKT 'POINT (x y)' text
-        # (data-types.rst geo_point: "insert using the WKT syntax")
+        # one projection of SQL items: cast to declared types (VALUES
+        # literals arrive as int/decimal) and fill omitted
+        # (non-generated) columns with their DEFAULT expression, else
+        # NULL (insert.rst default clause); geo_point columns
+        # additionally accept WKT 'POINT (x y)' text (data-types.rst
+        # geo_point: "insert using the WKT syntax")
         src_types = {f.name: f.dataType.simpleString() for f in src.schema.fields}
 
-        def _coerce(c):
-            if (
-                declared_types[c] == "array<double>"
-                and src_types.get(c) == "string"
-            ):
-                return F.expr(
-                    f"CASE WHEN {c} IS NULL THEN NULL ELSE array("
-                    f"CAST(regexp_extract({c}, 'POINT\\\\s*\\\\(\\\\s*(-?[0-9.]+)', 1) AS DOUBLE), "
-                    f"CAST(regexp_extract({c}, '\\\\s(-?[0-9.]+)\\\\s*\\\\)', 1) AS DOUBLE)) END"
-                ).alias(c)
-            return F.col(c).cast(declared_types[c]).alias(c)
+        def _item(c: str) -> str:
+            q = backticked(c)
+            if declared_types[c] == "array<double>" and src_types.get(c) == "string":
+                return (
+                    f"CASE WHEN {q} IS NULL THEN NULL ELSE array("
+                    f"CAST(regexp_extract({q}, 'POINT\\\\s*\\\\(\\\\s*(-?[0-9.]+)', 1) AS DOUBLE), "
+                    f"CAST(regexp_extract({q}, '\\\\s(-?[0-9.]+)\\\\s*\\\\)', 1) AS DOUBLE)) END AS {q}"
+                )
+            if c in src_types:
+                value = q
+            elif c in table.defaults:
+                value = f"({table.defaults[c]})"
+            else:
+                value = "NULL"
+            return f"CAST({value} AS {declared_types[c]}) AS {q}"
 
-        src = src.select(*[_coerce(c) for c in target_cols])
-        # fill omitted (non-generated) columns with their DEFAULT
-        # expression, else NULL (insert.rst default clause)
-        for f in declared.fields:
-            if f.name not in src.columns and f.name not in gen:
-                if f.name in table.defaults:
-                    src = src.withColumn(
-                        f.name, F.expr(table.defaults[f.name]).cast(f.dataType)
-                    )
-                else:
-                    src = src.withColumn(f.name, F.lit(None).cast(f.dataType))
-        src = src.select(*[f.name for f in declared.fields if f.name not in gen])
+        src = src.selectExpr(*[_item(f.name) for f in declared.fields if f.name not in gen])
 
         if conflict is None:
             out = table.insert(src, returning=returning)

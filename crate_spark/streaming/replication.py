@@ -14,15 +14,18 @@ Reference parity:
   ``pg_subscription`` (metadata/pgcatalog/)
 
 Spark-first: the change stream IS Structured Streaming's file source.
-The engine's INSERT path publishes new part files by move-merge
-(dml.CrateTable._merge_in), so ``spark.readStream.parquet`` over the
+An INSERT into a published table commits its batch as new part files
+and never rewrites the table's small tail with it
+(dml.CrateTable._small_tail), so ``spark.readStream.parquet`` over the
 published table directory captures inserts incrementally — initial
 files are batch 0 (the snapshot), later files arrive as micro-batches
 into the subscriber's table directory via the parquet sink with
 exactly-once checkpointing. This is append-capture: UPDATE/DELETE on
 the publisher rewrite files and are NOT replayed (documented
 divergence — re-create the subscription to re-sync); the reference's
-WAL shipping has no parquet analog.
+WAL shipping has no parquet analog. The subscriber's table has no
+manifest while the sink writes it, so it is read as its directory (the
+sink's log) until its first own commit.
 
 The connection string is ``file://<publisher storage_dir>`` — the
 storage-dir handoff is this engine's cluster-URL analog. Publications
@@ -47,6 +50,24 @@ class ReplicationError(Exception):
 PUB_FILE = "_publications.json"
 
 
+def _catalog(storage_dir: str) -> dict | None:
+    """The publications persisted in ``storage_dir``: name -> {
+    "all_tables", "tables", "owner"}; None when none was ever made."""
+    try:
+        with open(os.path.join(storage_dir, PUB_FILE)) as f:
+            return json.load(f)
+    except FileNotFoundError:
+        return None
+
+
+def published(storage_dir: str, table: str) -> bool:
+    """True when a publication in ``storage_dir`` names ``table``.
+    Its subscribers stream every new part file of the table, so an
+    append to it must not rewrite stored rows into a new file."""
+    pubs = _catalog(storage_dir) or {}
+    return any(p["all_tables"] or table in p["tables"] for p in pubs.values())
+
+
 class PublicationStore:
     """Publisher-side catalog, persisted so other sessions can read."""
 
@@ -59,11 +80,7 @@ class PublicationStore:
         return os.path.join(self.storage_dir, PUB_FILE)
 
     def _load(self) -> None:
-        try:
-            with open(self._pub_path()) as f:
-                self.pubs = json.load(f)
-        except FileNotFoundError:
-            self.pubs = {}
+        self.pubs = _catalog(self.storage_dir) or {}
 
     def _save(self) -> None:
         with open(self._pub_path(), "w") as f:
@@ -139,13 +156,9 @@ class SubscriptionStore:
         if key in self.subs:
             raise ReplicationError(f"Subscription '{name}' already exists")
         pub_dir = _connection_dir(connection)
-        try:
-            with open(os.path.join(pub_dir, PUB_FILE)) as f:
-                pubs = json.load(f)
-        except FileNotFoundError:
-            raise ReplicationError(
-                f"No publications found at '{connection}'"
-            ) from None
+        pubs = _catalog(pub_dir)
+        if pubs is None:
+            raise ReplicationError(f"No publications found at '{connection}'")
         pub = pubs.get(publication.lower())
         if pub is None:
             raise ReplicationError(
@@ -247,6 +260,15 @@ class SubscriptionStore:
             q.processAllAvailable()
 
 
+def _settle(session, tables: list[str] | None) -> None:
+    """Delete the files a commit retired from the newly published
+    ``tables`` (None: all) while no reader needs them, so a
+    subscription's snapshot does not read replaced rows again."""
+    for name, ct in list(session._dml.crate_tables.items()):
+        if tables is None or name in tables:
+            ct.delete_retired()
+
+
 def route_replication(session, stmt: str):
     """Handle a PUBLICATION / SUBSCRIPTION statement; None if not one."""
     spark = session.spark
@@ -273,6 +295,7 @@ def route_replication(session, stmt: str):
                         f"Cannot publish '{t}': only stored tables are publishable"
                     )
         session.publications.create(m.group(1), tables, session.current_user)
+        _settle(session, tables)
         return rowcount_frame(spark)
 
     m = re.match(
@@ -293,6 +316,8 @@ def route_replication(session, stmt: str):
                 add=names if verb == "ADD" else [],
                 drop=names if verb == "DROP" else [],
             )
+        if verb != "DROP":
+            _settle(session, names)
         return rowcount_frame(spark)
 
     m = re.match(

@@ -280,19 +280,13 @@ def _nest(flat) -> dict:
 
 
 def _live_partitions(ct) -> list[str]:
-    """Partition directories of ``ct`` that hold data files: a
-    whole-partition DELETE drops the contents
-    (partitioned-tables.rst:301-318) and may leave the empty directory
-    behind."""
-    return [
-        e for e in sorted(os.listdir(ct.path))
-        if "=" in e and os.path.isdir(os.path.join(ct.path, e))
-        and any(
-            f.endswith(".parquet")
-            for _r, _d, fs in os.walk(os.path.join(ct.path, e))
-            for f in fs
-        )
-    ]
+    """Top-level partition directories of ``ct`` that hold live files,
+    as the manifest lists them: a DELETE that empties a partition
+    (partitioned-tables.rst:301-318) retires its files, which may stay
+    on disk until no reader needs them."""
+    rels = (os.path.relpath(p, ct.path) for p, _ in ct.files())
+    tops = {r.split(os.sep, 1)[0] for r in rels if os.sep in r}
+    return sorted(t for t in tops if "=" in t)
 
 
 def _parquet_files(ct) -> list[tuple[str, int, int | None]]:

@@ -93,6 +93,20 @@ def test_rewrite_backticks_each_quoted_name(sql, out):
     assert rewrite(sql) == out
 
 
+@pytest.mark.parametrize(
+    "sql,columns,out",
+    [
+        # a quoted subscript base keeps its case: "O" is not column o
+        ('SELECT "O"[\'b\'] FROM t', {"o"}, "SELECT `O`['b'] FROM t"),
+        ('SELECT "O"[\'b\'] FROM t', {"O"}, "SELECT get_json_object(`O`, '$.b') FROM t"),
+        ('SELECT "o"[\'b\'] FROM t', {"o"}, "SELECT get_json_object(`o`, '$.b') FROM t"),
+        ("SELECT O['b'] FROM t", {"o"}, "SELECT get_json_object(O, '$.b') FROM t"),
+    ],
+)
+def test_quoted_subscript_base_matches_its_exact_name(sql, columns, out):
+    assert rewrite(sql, columns) == out
+
+
 # -- quoted text takes no parameter ------------------------------------------
 @pytest.mark.parametrize(
     "sql,params,rows",

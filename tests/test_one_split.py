@@ -6,9 +6,9 @@ no larger than ``spark.sql.files.openCostInBytes``, and the source of an
 ``INSERT … VALUES`` is one partition. Aggregates, windows and sorts
 over such a relation then need no exchange, so AQE runs no stage job
 for them. Pinned here: the Spark jobs that saves, with answers equal to
-a plain scan's, and that nothing changes where nothing may: above the
-gate, for a table of two files, on the large side of a join and for a
-``LocalRelation``.
+a plain scan's, that a small PK table stays one file as it grows, and
+that nothing changes where nothing may: above the gate, for a table of
+two files, on the large side of a join and for a ``LocalRelation``.
 """
 
 from __future__ import annotations
@@ -58,33 +58,31 @@ def test_group_by_order_by_over_a_one_file_view_runs_one_job(s):
     ).collect()
 
 
-def test_pk_table_runs_one_job_while_one_file_and_as_before_at_two(s):
+def test_pk_table_stays_one_file_and_runs_one_job(s):
     s.execute("CREATE TABLE os_t (k bigint PRIMARY KEY, g int, v double, s text)")
-    s.execute(f"INSERT INTO os_t (k, g, v, s) VALUES {_values(0, 200)}")
     table = s._dml.crate_tables["os_t"]
     stmt = "SELECT g, count(*) AS n, sum(v) AS total FROM os_t GROUP BY g ORDER BY g"
     scan = stmt.replace("FROM os_t", "FROM os_t_scan")
-    assert len(table.files()) == 1
-    assert _count(s, stmt) == 1
-    table.read().createOrReplaceTempView("os_t_scan")
-    assert s.execute(stmt).collect() == s.execute(scan).collect()
-    s.execute(f"INSERT INTO os_t (k, g, v, s) VALUES {_values(200, 400)}")
-    assert len(table.files()) == 2
-    table.read().createOrReplaceTempView("os_t_scan")
-    assert _count(s, stmt) == _count(s, scan) > 1
-    assert s.execute(stmt).collect() == s.execute(scan).collect()
+    for lo in (0, 200):
+        # the second batch is written together with the first file
+        s.execute(f"INSERT INTO os_t (k, g, v, s) VALUES {_values(lo, lo + 200)}")
+        assert len(table.files()) == 1
+        assert _count(s, stmt) == 1
+        table.read().createOrReplaceTempView("os_t_scan")
+        assert s.execute(stmt).collect() == s.execute(scan).collect()
 
 
-def test_pk_insert_values_into_a_non_empty_table_runs_two_jobs(s):
+def test_pk_insert_values_into_a_non_empty_table_runs_one_job(s):
     s.execute("CREATE TABLE os_w (k bigint PRIMARY KEY, g int, v double, s text)")
     s.execute(f"INSERT INTO os_w (k, g, v, s) VALUES {_values(0, 200)}")
     stmt = f"INSERT INTO os_w (k, g, v, s) VALUES {_values(200, 400)}"
-    assert _jobs(s.spark, lambda: s.execute(stmt)) == 2
+    assert _jobs(s.spark, lambda: s.execute(stmt)) == 1
     assert s.execute("SELECT count(*) FROM os_w").collect()[0][0] == 400
     with pytest.raises(Exception, match="duplicate key in batch"):
         s.execute("INSERT INTO os_w (k, g, v, s) VALUES (900, 1, 1.0, 'a'), (900, 2, 2.0, 'b')")
     with pytest.raises(Exception, match="conflict with existing"):
         s.execute("INSERT INTO os_w (k, g, v, s) VALUES (5, 1, 1.0, 'a')")
+    assert s.execute("SELECT count(*) FROM os_w").collect()[0][0] == 400
 
 
 def test_an_empty_table_stays_a_local_relation(s):
@@ -132,6 +130,21 @@ def test_explain_shows_coalesce_only_for_a_file_under_the_gate(low):
 def test_view_over_a_file_above_the_gate_keeps_its_exchange(low):
     plan = _plan(low, AGG)
     assert "Coalesce" not in plan and "Exchange" in plan
+
+
+def test_pk_table_of_two_files_runs_as_before(low):
+    """Batches above the gate are written as they come, one file each,
+    and a table of two files is planned as a plain scan."""
+    low.execute("CREATE TABLE os_t (k bigint PRIMARY KEY, g int, v double, s text)")
+    for lo in (0, 200):
+        low.execute(f"INSERT INTO os_t (k, g, v, s) VALUES {_values(lo, lo + 200)}")
+    table = low._dml.crate_tables["os_t"]
+    assert len(table.files()) == 2
+    stmt = "SELECT g, count(*) AS n, sum(v) AS total FROM os_t GROUP BY g ORDER BY g"
+    scan = stmt.replace("FROM os_t", "FROM os_t_scan")
+    table.read().createOrReplaceTempView("os_t_scan")
+    assert _count(low, stmt) == _count(low, scan) > 1
+    assert low.execute(stmt).collect() == low.execute(scan).collect()
 
 
 @pytest.mark.parametrize("join", ["JOIN", "LEFT JOIN", "FULL JOIN"])

@@ -1437,23 +1437,23 @@ def test_scroll_cursor_errors(session):
 
 def test_optimize_table_compacts_files(dml_session):
     """OPTIMIZE TABLE merges small part files (the segment-merge
-    analog): per-statement INSERTs accumulate one file each; after
-    OPTIMIZE the table reads identically from fewer files."""
-    import os
+    analog): INSERTs of batches above the split-size floor (4 KiB here)
+    are written one file each; after OPTIMIZE the table reads
+    identically from fewer files."""
+    from crate_spark.session import conf_scope
 
     s = dml_session
     s.execute("CREATE TABLE opt_t (id int PRIMARY KEY, v text)")
-    for i in range(6):
-        s.execute(f"INSERT INTO opt_t (id, v) VALUES ({i}, 'row{i}')")
+    with conf_scope(s.spark, {"spark.sql.files.openCostInBytes": "4096"}):
+        for i in range(6):
+            s.execute(
+                "INSERT INTO opt_t (id, v) VALUES "
+                + ", ".join(f"({k}, 'row{k}')" for k in range(i * 200, i * 200 + 200))
+            )
     table = s._dml.crate_tables["opt_t"]
 
     def nfiles():
-        return sum(
-            1
-            for root, _d, fs in os.walk(table.path)
-            for f in fs
-            if f.endswith(".parquet")
-        )
+        return len(table.files())
 
     before = nfiles()
     assert before >= 6
@@ -1462,7 +1462,7 @@ def test_optimize_table_compacts_files(dml_session):
     assert res[0]["files_before"] == before
     assert nfiles() == 1 and res[0]["files_after"] == 1
     rows = s.execute("SELECT id, v FROM opt_t ORDER BY id").collect()
-    assert [(r["id"], r["v"]) for r in rows] == [(i, f"row{i}") for i in range(6)]
+    assert [(r["id"], r["v"]) for r in rows] == [(i, f"row{i}") for i in range(1200)]
 
 
 def test_optimize_partitioned_single_partition(dml_session):
@@ -1484,10 +1484,8 @@ def test_optimize_partitioned_single_partition(dml_session):
     assert res[0]["status"] == "ok"
     table = s._dml.crate_tables["opt_p"]
     eu_files = sum(
-        1
-        for root, _d, fs in os.walk(os.path.join(table.path, "region=eu"))
-        for f in fs
-        if f.endswith(".parquet")
+        1 for f, _size in table.files()
+        if f.startswith(os.path.join(table.path, "region=eu", ""))
     )
     assert eu_files == 1
     rows = s.execute("SELECT count(*) AS n FROM opt_p").collect()
@@ -1498,8 +1496,6 @@ def test_optimize_clustered_preserves_routing(dml_session):
     """CLUSTERED tables compact through their MODULO routing: after
     OPTIMIZE at most one file per declared shard remains (empty hash
     partitions write nothing), down from one file per INSERT."""
-    import os
-
     s = dml_session
     s.execute(
         "CREATE TABLE opt_c (id int PRIMARY KEY, v text) "
@@ -1509,12 +1505,7 @@ def test_optimize_clustered_preserves_routing(dml_session):
         s.execute(f"INSERT INTO opt_c (id, v) VALUES ({i}, 'r{i}')")
     res = s.execute("OPTIMIZE TABLE opt_c").collect()
     table = s._dml.crate_tables["opt_c"]
-    n = sum(
-        1
-        for root, _d, fs in os.walk(table.path)
-        for f in fs
-        if f.endswith(".parquet")
-    )
+    n = len(table.files())
     assert 1 <= n <= 3 and res[0]["files_after"] == n
     assert n < res[0]["files_before"]
     assert s.execute("SELECT count(*) AS n FROM opt_c").collect()[0]["n"] == 5
