@@ -97,6 +97,12 @@ _TOKEN_RE = re.compile(
     r"|`(?:[^`]|``)*`",
     re.DOTALL,
 )
+#: the same scan that also reads ``--`` and ``/* */`` comments, so a
+#: quote inside a comment opens no token and a comment marker inside a
+#: quote is text
+_TOKEN_OR_COMMENT_RE = re.compile(
+    _TOKEN_RE.pattern + r"|--[^\n]*|/\*.*?\*/", re.DOTALL
+)
 _MASK_RE = re.compile(r"__LIT_(\d+)__")
 
 
@@ -109,21 +115,24 @@ def add_token(tokens: list[str], text: str) -> str:
     return f"__LIT_{len(tokens) - 1}__"
 
 
-def mask(sql: str, ident=None) -> tuple[str, list[str]]:
+def mask(sql: str, ident=None, comments: bool = False) -> tuple[str, list[str]]:
     """Lex ``sql`` and replace each quoted token by ``__LIT_n__``,
     where n indexes the returned list of the tokens' source text. With
     ``ident``, a quoted identifier is written in place as
     ``ident(token)`` instead, for passes that must read names
-    (``ident=str`` keeps it as written)."""
+    (``ident=str`` keeps it as written). With ``comments``, each
+    comment becomes one space, as the parser reads it."""
     tokens: list[str] = []
 
     def _sub(m: re.Match) -> str:
         tok = m.group(0)
+        if tok[0] in "-/":
+            return " "
         if ident is not None and tok[0] in '"`':
             return ident(tok)
         return add_token(tokens, tok)
 
-    return _TOKEN_RE.sub(_sub, sql), tokens
+    return (_TOKEN_OR_COMMENT_RE if comments else _TOKEN_RE).sub(_sub, sql), tokens
 
 
 def unmask(masked: str, tokens: list[str]) -> str:

@@ -2,8 +2,12 @@
 
 Maps the reference's session lifecycle (``session/Session.java:370``
 parse -> analyze -> plan -> execute; HTTP ``SqlHttpHandler.quickExec``)
-onto: dialect shim -> ``spark.sql`` -> Catalyst. One object per user
-session, holding the table catalog, system views and session settings.
+onto: ``statement.classify`` -> privilege check -> handler, and for a
+query, dialect shim -> ``spark.sql`` -> Catalyst. Each statement is
+read once into a ``Statement``; ``_dispatch`` is a lookup and a call
+(the reference's Planner visitor, ``Planner.java:289-304``), and each
+handler reads only its own clauses. One object per user session,
+holding the table catalog, system views and session settings.
 
 Surface:
 - ``execute(sql)``      -> DataFrame (SELECT/VALUES/EXPLAIN/SET/...)
@@ -29,14 +33,16 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from crate_spark.admin_sql import _parse_with, check_privileges
 from crate_spark.datatypes import TYPE_WORDS, show_type, spark_type
 from crate_spark.dialect import (
     add_token, mask, rewrite, rewrite_sys_columns, split_args, unmask,
 )
 from crate_spark.dml import hold, serving
 from crate_spark.session import (
-    apply_runtime_confs, dml_count, load_tables, local_frame, rowcount_frame,
+    apply_runtime_confs, load_tables, local_frame, rowcount, rowcount_frame,
 )
+from crate_spark.statement import COUNT, EXPLAIN, Statement, classify, read_of
 from crate_spark.system_views import views_held
 
 
@@ -411,7 +417,9 @@ class CrateSession:
         ``params`` binds ``$1``-style placeholders (reference
         ``session/Session.java`` ``bind():403``) by literal
         substitution — the session is the trusted SQL front door, and
-        values are escaped/typed by ``_bind_params``.
+        values are escaped/typed by ``_bind_params``. The ``Statement``
+        read from ``sql`` is kept on the frame returned or the exception
+        raised (``statement.read_of``), for the front door's reply.
         """
         stmt = sql.strip().rstrip(";")
         if params is not None:
@@ -421,7 +429,7 @@ class CrateSession:
 
         started = datetime.now()
         jid = str(uuid.uuid4())
-        err = None
+        err = st = None
         # in-flight entry backing sys.jobs (SysJobsTableInfo: a
         # running statement sees itself)
         self._jobs_running[jid] = (jid, stmt[:500], self.current_user, started)
@@ -434,13 +442,16 @@ class CrateSession:
             # through temp views that are global to the SparkSession;
             # files a commit replaces stay readable while it is served,
             # and while the caller holds its answer
-            with serving(), views_held(self, stmt):
-                df = self._dispatch(stmt)
+            st = classify(stmt)
+            with serving(), views_held(self, st):
+                df = self._dispatch(st)
                 if df is not None:
                     hold(df)
+                    df._crate_statement = st
                 return df
         except Exception as e:
             err = str(e).split("\n")[0][:200]
+            e._crate_statement = st
             raise
         finally:
             del self._jobs_running[jid]
@@ -599,593 +610,442 @@ class CrateSession:
         cur["pos"] = target
         return local_frame(spark, [buf[target - 1]], schema)
 
-    def _dispatch(self, stmt: str) -> DataFrame:
-        upper = stmt.upper()
-        # name scans read the statement with its literals masked
-        names, _ = mask(stmt, ident=str)
-        if re.search(r"\bblob\s*\.", names, re.IGNORECASE):
+    def _dispatch(self, st: Statement) -> DataFrame:
+        """Check the principal's privileges on ``st`` and answer it with
+        its handler (the reference's Planner visitor)."""
+        if any(r.startswith("blob.") for r in st.relations):
             self._register_blob_views()
+        check_privileges(self, st)
+        # subscribed tables receive files continuously; re-list before
+        # answering a statement that names one
+        for name in self.subscribed_tables.intersection(
+            r.split(".")[-1] for r in st.relations
+        ):
+            ct = self._dml.crate_tables.get(name)
+            if ct is not None:
+                self.register(name, ct.relation())
+        return st.run(self)
 
+    # -- statement handlers: each reads the clauses of its own statement
+    def _ack_node_checks(self, st: Statement) -> DataFrame:
         # UPDATE sys.node_checks SET acknowledged = <bool> [WHERE ...]
-        # — the one writable sys column (SysNodeChecksTableInfo;
-        # system-information.rst "Acknowledge failed checks");
-        # transient, like the reference's
-        m = re.match(
+        # — the one writable sys column (system-information.rst
+        # "Acknowledge failed checks"); transient, like the reference's
+        m = st.match(
             r"UPDATE\s+sys\.\"?node_checks\"?\s+SET\s+acknowledged\s*=\s*"
             r"(true|false)(?:\s+WHERE\s+(.+))?\s*$",
-            stmt,
-            re.IGNORECASE | re.DOTALL,
         )
-        if m:
-            flag = m.group(1).lower() == "true"
-            cond = rewrite(m.group(2)) if m.group(2) else "TRUE"
-            ids = [
-                r["id"]
-                for r in self.spark.sql(
-                    f"SELECT id FROM sys_node_checks WHERE {cond}"
-                ).collect()
-            ]
-            for cid in ids:
-                (self._node_check_ack.add if flag
-                 else self._node_check_ack.discard)(cid)
-            return rowcount_frame(self.spark, len(ids))
+        flag = m.group(1).lower() == "true"
+        cond = rewrite(m.group(2)) if m.group(2) else "TRUE"
+        ids = [
+            r["id"]
+            for r in self.spark.sql(
+                f"SELECT id FROM sys_node_checks WHERE {cond}"
+            ).collect()
+        ]
+        for cid in ids:
+            (self._node_check_ack.add if flag
+             else self._node_check_ack.discard)(cid)
+        return rowcount_frame(self.spark, len(ids))
 
-        # privilege enforcement + admin statements (users/roles/
-        # privileges, repositories/snapshots, session authorization)
-        from crate_spark.admin_sql import check_privileges, route_admin
-
-        check_privileges(self, stmt)
-        admin = route_admin(self, stmt)
-        if admin is not None:
-            return admin
-
-        # PUBLICATION / SUBSCRIPTION DDL (logical-replication.rst)
-        if re.match(
-            r"(CREATE|ALTER|DROP)\s+(PUBLICATION|SUBSCRIPTION)\b", upper
-        ):
-            from crate_spark.streaming.replication import route_replication
-
-            routed = route_replication(self, stmt)
-            if routed is not None:
-                return routed
-
-        # subscribed tables receive files continuously; re-list before
-        # answering a query that touches one
-        for name in self.subscribed_tables:
-            if re.search(rf"(?<![\w.\"]){re.escape(name)}\b", names, re.IGNORECASE):
-                ct = self._dml.crate_tables.get(name)
-                if ct is not None:
-                    self.register(name, ct.relation())
-
-        # SERVER / FOREIGN TABLE / USER MAPPING DDL (admin/fdw.rst)
-        if re.match(
-            r"(CREATE|ALTER|DROP)\s+(SERVER|FOREIGN\s+TABLE|USER\s+MAPPING)\b",
-            upper,
-        ):
-            from crate_spark.fdw import route_fdw
-
-            routed = route_fdw(self, stmt)
-            if routed is not None:
-                return routed
-
-        # CREATE/DROP BLOB TABLE (create-blob-table.rst; blob tables
-        # are content-addressed, always sharded by digest)
-        m = re.match(
+    def _create_blob_table(self, st: Statement) -> DataFrame:
+        # CREATE BLOB TABLE (create-blob-table.rst; blob tables are
+        # content-addressed, always sharded by digest)
+        m = st.match(
             r"CREATE\s+BLOB\s+TABLE\s+\"?([\w]+)\"?"
             r"(?:\s+CLUSTERED\s+INTO\s+(\d+)\s+SHARDS)?"
             r"(?:\s+WITH\s*\((.*)\))?\s*$",
-            stmt,
-            re.IGNORECASE | re.DOTALL,
         )
-        if m:
-            from crate_spark.admin_sql import _parse_with
+        self.blobs.create(
+            m.group(1),
+            shards=int(m.group(2) or 4),
+            settings=_parse_with(m.group(3) or ""),
+        )
+        self._register_blob_views()
+        return rowcount_frame(self.spark)
 
-            self.blobs.create(
-                m.group(1),
-                shards=int(m.group(2) or 4),
-                settings=_parse_with(m.group(3) or ""),
-            )
-            self._register_blob_views()
-            return rowcount_frame(self.spark)
+    def _alter_blob_table(self, st: Statement) -> DataFrame:
         # ALTER BLOB TABLE t SET (...) / RESET (...) — replication and
         # allocation settings are cluster-topology knobs, recorded as
         # table settings (blobs.rst "Altering a blob table")
-        m = re.match(
+        m = st.match(
             r"ALTER\s+BLOB\s+TABLE\s+\"?([\w]+)\"?\s+"
             r"(SET\s*\((.*)\)|RESET\s*\((.*)\))\s*$",
-            stmt,
-            re.IGNORECASE | re.DOTALL,
         )
-        if m:
-            from crate_spark.admin_sql import _parse_with
+        store = self.blobs.get(m.group(1))
+        if m.group(3) is not None:
+            store.settings.update(_parse_with(m.group(3)))
+        else:
+            for k in m.group(4).split(","):
+                store.settings.pop(k.strip().strip('"'), None)
+        # ALTER acks with -1 rows affected (crash renders it so)
+        return rowcount_frame(self.spark, -1)
 
-            store = self.blobs.get(m.group(1))
-            if m.group(3) is not None:
-                store.settings.update(_parse_with(m.group(3)))
-            else:
-                for k in m.group(4).split(","):
-                    store.settings.pop(k.strip().strip('"'), None)
-            # ALTER acks with -1 rows affected (crash renders it so)
-            return rowcount_frame(self.spark, -1)
-        m = re.match(
-            r"DROP\s+BLOB\s+TABLE\s+(IF\s+EXISTS\s+)?\"?([\w]+)\"?\s*$",
-            stmt,
-            re.IGNORECASE,
-        )
-        if m:
-            dropped = self.blobs.drop(m.group(2), if_exists=bool(m.group(1)))
-            if dropped:
-                self.spark.catalog.dropTempView(f"blob_{m.group(2).lower()}")
-            return rowcount_frame(self.spark, 1 if dropped else 0)
+    def _drop_blob_table(self, st: Statement) -> DataFrame:
+        m = st.match(r"DROP\s+BLOB\s+TABLE\s+(IF\s+EXISTS\s+)?\"?([\w]+)\"?\s*$")
+        dropped = self.blobs.drop(m.group(2), if_exists=bool(m.group(1)))
+        if dropped:
+            self.spark.catalog.dropTempView(f"blob_{m.group(2).lower()}")
+        return rowcount_frame(self.spark, 1 if dropped else 0)
 
+    def _create_schema(self, st: Statement) -> DataFrame:
         # CREATE SCHEMA [IF NOT EXISTS] name (create-schema.rst):
         # explicit schemas persist while empty; CREATE TABLE in an
         # unknown schema still implicitly creates it (handled by the
         # table router's schema recording)
-        m = re.match(
-            r"CREATE\s+SCHEMA\s+(IF\s+NOT\s+EXISTS\s+)?\"?([\w]+)\"?\s*$",
-            stmt,
-            re.IGNORECASE,
+        m = st.match(r"CREATE\s+SCHEMA\s+(IF\s+NOT\s+EXISTS\s+)?\"?([\w]+)\"?\s*$")
+        name = m.group(2)
+        exists = (
+            name in self._schemas
+            or name in ("blob", "doc", "information_schema", "pg_catalog", "sys")
+            or name in set(self._table_schema.values())
         )
-        if m:
-            name = m.group(2)
-            exists = (
-                name in self._schemas
-                or name in ("blob", "doc", "information_schema", "pg_catalog", "sys")
-                or name in set(self._table_schema.values())
-            )
-            if exists:
-                if m.group(1):
-                    return rowcount_frame(self.spark, 0)
-                raise ValueError(f"Schema '{name}' already exists")
-            self._schemas.add(name)
-            return rowcount_frame(self.spark)
+        if exists:
+            if m.group(1):
+                return rowcount_frame(self.spark, 0)
+            raise ValueError(f"Schema '{name}' already exists")
+        self._schemas.add(name)
+        return rowcount_frame(self.spark)
 
+    def _drop_schema(self, st: Statement) -> DataFrame:
         # DROP SCHEMA [IF EXISTS] name [, ...] [CASCADE|RESTRICT]
         # (drop-schema.rst): RESTRICT (default) refuses non-empty
         # schemas; CASCADE drops contained tables
-        m = re.match(
+        m = st.match(
             r"DROP\s+SCHEMA\s+(IF\s+EXISTS\s+)?([\w\".,\s]+?)\s*"
             r"(CASCADE|RESTRICT)?\s*$",
-            stmt,
-            re.IGNORECASE,
         )
-        if m:
-            if_exists = bool(m.group(1))
-            cascade = (m.group(3) or "RESTRICT").upper() == "CASCADE"
-            n_dropped = 0
-            for raw in m.group(2).split(","):
-                name = raw.strip().strip('"')
-                if name in ("information_schema", "pg_catalog", "sys"):
-                    raise ValueError(f"Cannot drop schema '{name}'")
-                members = sorted(
-                    t for t, s in self._table_schema.items() if s == name
+        if_exists = bool(m.group(1))
+        cascade = (m.group(3) or "RESTRICT").upper() == "CASCADE"
+        n_dropped = 0
+        for raw in m.group(2).split(","):
+            name = raw.strip().strip('"')
+            if name in ("information_schema", "pg_catalog", "sys"):
+                raise ValueError(f"Cannot drop schema '{name}'")
+            members = sorted(
+                t for t, s in self._table_schema.items() if s == name
+            )
+            if name not in self._schemas and not members:
+                if if_exists:
+                    continue
+                raise ValueError(f"Schema '{name}' unknown")
+            if members and not cascade:
+                raise ValueError(
+                    f"Cannot drop schema '{name}': it contains "
+                    f"{len(members)} relation(s) — use DROP SCHEMA "
+                    f"... CASCADE"
                 )
-                if name not in self._schemas and not members:
-                    if if_exists:
-                        continue
-                    raise ValueError(f"Schema '{name}' unknown")
-                if members and not cascade:
-                    raise ValueError(
-                        f"Cannot drop schema '{name}': it contains "
-                        f"{len(members)} relation(s) — use DROP SCHEMA "
-                        f"... CASCADE"
-                    )
-                for t in members:
-                    self._dml._drop_table(f'DROP TABLE "{t}"')
-                self._schemas.discard(name)
-                n_dropped += 1
-            return rowcount_frame(self.spark, n_dropped)
+            for t in members:
+                self._dml._drop_table(classify(f'DROP TABLE "{t}"'))
+            self._schemas.discard(name)
+            n_dropped += 1
+        return rowcount_frame(self.spark, n_dropped)
 
-        if upper.startswith("EXPLAIN"):
-            analyze = re.match(r"EXPLAIN\s+(\(\s*)?ANALYZE", upper) is not None
-            # option list form (explain.rst): EXPLAIN (ANALYZE, COSTS FALSE)
-            body = re.sub(
-                r"^EXPLAIN\s+(\([^)]*\)\s+|ANALYZE\s+|VERBOSE\s+)*",
-                "",
-                stmt,
-                flags=re.IGNORECASE,
-            )
-            if analyze:
-                return self._explain_analyze(body)
-            plan = self.explain(body)
-            return local_frame(self.spark, [(plan,)], "plan string")
+    def _explain(self, st: Statement) -> DataFrame:
+        # option list form (explain.rst): EXPLAIN (ANALYZE, COSTS FALSE)
+        body = st.sql[EXPLAIN.match(st.sql).end():]
+        if st.match(r"EXPLAIN\s+(\(\s*)?ANALYZE", required=False):
+            return self._explain_analyze(body)
+        return local_frame(self.spark, [(self.explain(body),)], "plan string")
 
-        # SET GLOBAL [PERSISTENT|TRANSIENT] assignments (set.rst; AL
-        # privilege class): comma-separated `k = v` pairs, values may
-        # be nested objects `stats = {jobs_log_size = 2048, ...}`
-        # (runtime-config.rst). Overrides surface in
-        # sys.cluster.settings and the Spark conf.
-        m = re.match(
-            r"SET\s+GLOBAL\s+(?:PERSISTENT\s+|TRANSIENT\s+)?(.+)$",
-            stmt,
-            re.IGNORECASE | re.DOTALL,
+    def _set_global(self, st: Statement) -> DataFrame:
+        # SET GLOBAL [PERSISTENT|TRANSIENT] assignments (set.rst):
+        # comma-separated `k = v` pairs, values may be nested objects
+        # `stats = {jobs_log_size = 2048, ...}` (runtime-config.rst).
+        # Overrides surface in sys.cluster.settings and the Spark conf.
+        m = st.match(r"SET\s+GLOBAL\s+(?:PERSISTENT\s+|TRANSIENT\s+)?(.+)$")
+        pairs = _parse_global_assignments(m.group(1))
+        for key, val in pairs:
+            self._cluster_settings[key] = val
+            # JSON spelling in the conf: booleans stay lowercase
+            self.spark.conf.set(key, _json.dumps(val) if isinstance(val, bool) else str(val))
+        return local_frame(
+            self.spark,
+            [(k, _json.dumps(v) if isinstance(v, bool) else str(v)) for k, v in pairs],
+            "setting string, value string",
         )
-        if m:
-            pairs = _parse_global_assignments(m.group(1))
-            for key, val in pairs:
-                self._cluster_settings[key] = val
-                # JSON spelling in the conf: booleans stay lowercase
-                self.spark.conf.set(key, _json.dumps(val) if isinstance(val, bool) else str(val))
-            return local_frame(
-                self.spark,
-                [(k, _json.dumps(v) if isinstance(v, bool) else str(v)) for k, v in pairs],
-                "setting string, value string",
-            )
-        m = re.match(r"RESET\s+GLOBAL\s+(.+)$", stmt, re.IGNORECASE)
-        if m:
-            keys = [k.strip().strip('"') for k in m.group(1).split(",") if k.strip()]
-            for key in keys:
-                # a bare group name resets every setting under it
-                for stored in list(self._cluster_settings):
-                    if stored == key or stored.startswith(key + "."):
-                        del self._cluster_settings[stored]
-                try:
-                    self.spark.conf.unset(key)
-                except Exception:  # noqa: BLE001 - never-set key
-                    pass
-            return local_frame(
-                self.spark, [(k,) for k in keys], "setting string"
-            )
 
-        # ALTER CLUSTER REROUTE/DECOMMISSION/GC (alter-cluster.rst):
-        # shard placement is Spark's scheduler's job — accepted no-ops
-        # (SWAP TABLE, the one with table-level semantics, is below)
-        m = re.match(
-            r"ALTER\s+CLUSTER\s+(REROUTE\s+RETRY\s+FAILED|GC\s+DANGLING\s+ARTIFACTS|"
-            r"DECOMMISSION\s+\S+)\s*$",
-            stmt,
-            re.IGNORECASE,
+    def _reset_global(self, st: Statement) -> DataFrame:
+        m = st.match(r"RESET\s+GLOBAL\s+(.+)$")
+        keys = [k.strip().strip('"') for k in m.group(1).split(",") if k.strip()]
+        for key in keys:
+            # a bare group name resets every setting under it
+            for stored in list(self._cluster_settings):
+                if stored == key or stored.startswith(key + "."):
+                    del self._cluster_settings[stored]
+            try:
+                self.spark.conf.unset(key)
+            except Exception:  # noqa: BLE001 - never-set key
+                pass
+        return local_frame(self.spark, [(k,) for k in keys], "setting string")
+
+    def _alter_cluster(self, st: Statement) -> DataFrame:
+        # ALTER CLUSTER SWAP TABLE a TO b (alter-cluster.rst): atomic
+        # name exchange — the blue/green cutover primitive
+        m = st.match(
+            r"ALTER\s+CLUSTER\s+(?:SWAP\s+TABLE\s+([\w.\"]+)\s+TO\s+([\w.\"]+)|"
+            r"REROUTE\s+RETRY\s+FAILED\s*$|GC\s+DANGLING\s+ARTIFACTS\s*$|"
+            r"DECOMMISSION\s+\S+\s*$)",
         )
-        if m:
-            return local_frame(self.spark, [("OK",)], "status string")
+        if not m.group(1):
+            # REROUTE/DECOMMISSION/GC: shard placement is Spark's
+            # scheduler's job — accepted no-ops
+            return self._noop(st)
+        a = m.group(1).strip('"').split(".")[-1]
+        b = m.group(2).strip('"').split(".")[-1]
+        ta, tb = self._dml._table(a), self._dml._table(b)
+        self._dml.crate_tables[a], self._dml.crate_tables[b] = tb, ta
+        self._dml._refresh(a)
+        self._dml._refresh(b)
+        return local_frame(self.spark, [(a, b)], "source string, target string")
 
+    def _set(self, st: Statement) -> DataFrame:
         # SET [SESSION|LOCAL] key { = | TO } value|DEFAULT (set.rst,
         # config/session.rst; keys may be double-quoted, search_path
-        # takes a comma list, TO DEFAULT restores the default)
-        m = re.match(
+        # takes a comma list, TO DEFAULT restores the default); SET
+        # TRANSACTION and the like are accepted no-ops
+        m = st.match(
             r"SET\s+(?:SESSION\s+|LOCAL\s+)?\"?([\w.]+)\"?\s*(?:=\s*|TO\s+)(.+)$",
-            stmt,
-            re.IGNORECASE | re.DOTALL,
+        required=False,
         )
-        if m:
-            key, val = m.group(1), m.group(2).strip()
-            if val.upper() == "DEFAULT":
-                try:
-                    self.spark.conf.unset(key)
-                except Exception:  # noqa: BLE001 - never-set key
-                    pass
-            else:
-                self.spark.conf.set(key, val.strip("'\""))
-            return local_frame(
-                self.spark, [(key, val)], "setting string, value string"
-            )
-
-        m = re.match(r"RESET\s+(\S+)$", stmt, re.IGNORECASE)
-        if m:
-            self.spark.conf.unset(m.group(1))
-            return local_frame(self.spark, [(m.group(1),)], "setting string")
-
-        m = re.match(
-            r"CREATE\s+(OR\s+REPLACE\s+)?FUNCTION\s+"
-            r"((?:(?:[\w]+|\"[^\"]+\")\.)?(?:[\w]+|\"[^\"]+\"))\s*"
-            r"\(((?:[^()]|\([^()]*\))*)\)\s*"
-            r"RETURNS\s+([\w()\s]+?)\s+LANGUAGE\s+(PYTHON|PANDAS|JAVASCRIPT)\s+"
-            r"AS\s+'(.*)'\s*$",
-            stmt,
-            re.IGNORECASE | re.DOTALL,
+        if not m:
+            return self._noop(st)
+        key, val = m.group(1), m.group(2).strip()
+        if val.upper() == "DEFAULT":
+            try:
+                self.spark.conf.unset(key)
+            except Exception:  # noqa: BLE001 - never-set key
+                pass
+        else:
+            self.spark.conf.set(key, val.strip("'\""))
+        return local_frame(
+            self.spark, [(key, val)], "setting string, value string"
         )
-        if m:
-            schema, _, fname = m.group(2).rpartition(".")
-            schema = schema.strip('"')
-            return self._create_function(
-                fname, m.group(3), m.group(4).strip(),
-                m.group(6).replace("''", "'"), language=m.group(5).upper(),
-                schema=schema or None, or_replace=bool(m.group(1)),
-            )
 
-        # DROP FUNCTION [IF EXISTS] name[(argtypes)] (drop-function.rst)
-        m = re.match(
-            r"DROP\s+FUNCTION\s+(?:(IF\s+EXISTS)\s+)?((?:[\w]+\.)?[\w]+)\s*"
-            r"(?:\(((?:[^()]|\([^()]*\))*)\))?\s*$",
-            stmt,
-            re.IGNORECASE,
+    def _reset(self, st: Statement) -> DataFrame:
+        m = st.match(r"RESET\s+(\S+)$")
+        self.spark.conf.unset(m.group(1))
+        return local_frame(self.spark, [(m.group(1),)], "setting string")
+
+    def _noop(self, st: Statement) -> DataFrame:
+        return local_frame(self.spark, [("OK",)], "status string")
+
+    def _analyze(self, st: Statement) -> DataFrame:
+        m = st.match(r"ANALYZE(?:\s+(\S+))?\s*$")
+        if m.group(1):
+            return self.analyze(m.group(1))
+        # bare ANALYZE (analyze.rst): collect stats for every user table
+        for name in sorted(self.tables):
+            self.analyze(name)
+        return rowcount_frame(self.spark)
+
+    def _show_create_table(self, st: Statement) -> DataFrame:
+        m = st.match(r"SHOW\s+CREATE\s+TABLE\s+([\w.\"]+)\s*$")
+        name = m.group(1).strip('"').split(".")[-1]
+        return local_frame(
+            self.spark, [(self._show_create_table_sql(name),)], "create_table string"
         )
-        if m:
-            return self._drop_function(m.group(2), m.group(3), bool(m.group(1)))
 
-        m = re.match(r"ANALYZE(?:\s+(\S+))?\s*$", stmt, re.IGNORECASE)
-        if m:
-            if m.group(1):
-                return self.analyze(m.group(1))
-            # bare ANALYZE (analyze.rst): collect stats for every
-            # user table
-            for name in sorted(self.tables):
-                self.analyze(name)
-            return rowcount_frame(self.spark)
-
-        m = re.match(r"SHOW\s+CREATE\s+TABLE\s+([\w.\"]+)\s*$", stmt, re.IGNORECASE)
-        if m:
-            name = m.group(1).strip('"').split(".")[-1]
-            return local_frame(
-                self.spark, [(self._show_create_table(name),)], "create_table string"
-            )
-
-        # SHOW statements (reference sql/statements/show.rst;
-        # planner ShowStatementAnalyzer rewrites them to
+    def _show_catalog(self, st: Statement) -> DataFrame:
+        # SHOW TABLES / SCHEMAS / COLUMNS (sql/statements/show.rst;
+        # the reference's ShowStatementAnalyzer rewrites them to
         # information_schema queries — same trick here)
-        m = re.match(r"SHOW\s+(TABLES|SCHEMAS|COLUMNS\s+(?:FROM|IN)\s+(\w+))\s*$", stmt, re.IGNORECASE)
-        if m:
-            what = m.group(1).upper()
-            if what == "TABLES":
-                return self.spark.sql(
-                    "SELECT table_name FROM information_schema_tables ORDER BY table_name"
-                )
-            if what == "SCHEMAS":
-                return self.spark.sql(
-                    "SELECT schema_name FROM information_schema_schemata "
-                    "ORDER BY schema_name"
-                )
-            return self.spark.sql(
-                f"SELECT column_name, data_type FROM information_schema_columns "
-                f"WHERE table_name = '{m.group(2)}' ORDER BY ordinal_position"
-            )
+        m = st.match(r"SHOW\s+(?:TABLES|SCHEMAS|COLUMNS\s+(?:FROM|IN)\s+(\w+))\s*$")
+        return self.spark.sql({
+            "show_tables": "SELECT table_name FROM information_schema_tables ORDER BY table_name",
+            "show_schemas": "SELECT schema_name FROM information_schema_schemata "
+            "ORDER BY schema_name",
+        }.get(st.kind) or (
+            f"SELECT column_name, data_type FROM information_schema_columns "
+            f"WHERE table_name = '{m.group(1)}' ORDER BY ordinal_position"
+        ))
+
+    def _show(self, st: Statement) -> DataFrame:
         # PG-compat: the engine is autocommit, the reported isolation
         # level is fixed (interfaces/postgres.rst)
-        if re.match(
-            r"SHOW\s+TRANSACTION\s+ISOLATION\s+LEVEL\s*$", stmt, re.IGNORECASE
-        ):
+        if st.match(r"SHOW\s+TRANSACTION\s+ISOLATION\s+LEVEL\s*$", required=False):
             return local_frame(
                 self.spark, [("read uncommitted",)], "transaction_isolation string"
             )
+        m = st.match(r"SHOW\s+(\S+)\s*$")
+        val = self.spark.conf.get(m.group(1), None)
+        return local_frame(
+            self.spark, [(m.group(1), val)], "setting string, value string"
+        )
 
-        m = re.match(r"SHOW\s+(\S+)\s*$", stmt, re.IGNORECASE)
-        if m:
-            val = self.spark.conf.get(m.group(1), None)
-            return local_frame(
-                self.spark, [(m.group(1), val)], "setting string, value string"
-            )
-
-        m = re.match(
+    def _refresh(self, st: Statement) -> DataFrame:
+        # Lucene-refresh analog: parquet reads are always visible;
+        # clear any cached plans for the named table(s). Accepts
+        # schema-qualified spellings and PARTITION clauses
+        # (refresh.rst:20,58) — storage is one flat namespace, so a
+        # partition refresh refreshes the base table.
+        m = st.match(
             r"REFRESH\s+TABLE\s+([\w.\"]+(?:\s*,\s*[\w.\"]+)*)"
             r"(?:\s+PARTITION\s*\([^)]*\))?\s*$",
-            stmt,
-            re.IGNORECASE,
         )
-        if m:
-            # Lucene-refresh analog: parquet reads are always visible;
-            # clear any cached plans for the named table(s). Accepts
-            # schema-qualified spellings and PARTITION clauses
-            # (refresh.rst:20,58) — storage is one flat namespace, so
-            # a partition refresh refreshes the base table.
-            names = [
-                n.strip().strip('"').split(".")[-1]
-                for n in m.group(1).split(",")
-            ]
-            for name in names:
-                self.spark.catalog.refreshTable(name)
-            return rowcount_frame(self.spark, len(names))
+        names = [n.strip().strip('"').split(".")[-1] for n in m.group(1).split(",")]
+        for name in names:
+            self.spark.catalog.refreshTable(name)
+        return rowcount_frame(self.spark, len(names))
 
-        # Transaction statements are accepted no-ops: the engine is
-        # autocommit exactly like the reference (Planner.java:289-304
-        # visitBegin/visitCommit return NoopPlan). KILL likewise.
-        m = re.match(r"(BEGIN|COMMIT|ROLLBACK|END)\b|KILL\s+", upper)
-        if m:
-            return local_frame(self.spark, [("OK",)], "status string")
-
-        # ALTER CLUSTER SWAP TABLE a TO b (alter-cluster.rst): atomic
-        # name exchange — the blue/green cutover primitive
-        m = re.match(
-            r"ALTER\s+CLUSTER\s+SWAP\s+TABLE\s+([\w.\"]+)\s+TO\s+([\w.\"]+)",
-            stmt,
-            re.IGNORECASE,
-        )
-        if m:
-            a = m.group(1).strip('"').split(".")[-1]
-            b = m.group(2).strip('"').split(".")[-1]
-            ta, tb = self._dml._table(a), self._dml._table(b)
-            self._dml.crate_tables[a], self._dml.crate_tables[b] = tb, ta
-            self._dml._refresh(a)
-            self._dml._refresh(b)
-            return local_frame(self.spark, [(a, b)], "source string, target string")
-
-        # More PG-client session-management no-ops (reference planner
-        # visits these to NoopPlan too: deallocate.rst, discard.rst,
-        # set-transaction.rst, set-session-authorization.rst,
-        # start-transaction.rst)
-        m = re.match(
-            r"(DEALLOCATE|DISCARD|START\s+TRANSACTION|"
-            r"SET\s+(?:SESSION\s+AUTHORIZATION|LOCAL\s+|TRANSACTION))",
-            upper,
-        )
-        if m:
-            return local_frame(self.spark, [("OK",)], "status string")
-
+    def _optimize(self, st: Statement) -> DataFrame:
         # OPTIMIZE TABLE [PARTITION (...)] [WITH (...)]: parquet
         # small-file compaction — the Lucene segment-merge analog
         # (optimize.rst; CrateTable.optimize preserves the routing /
         # partition layout and commits through the manifest)
-        m = re.match(
-            r"OPTIMIZE\s+TABLE\s+(.+?)(?:\s+WITH\s*\((.*)\))?\s*$",
-            stmt,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if m:
-            from crate_spark.admin_sql import _parse_with
-
-            props = _parse_with(m.group(2) or "")
-            mns = props.get("max_num_segments")
-            # comma-separated target list, each `ident [PARTITION (...)]`
-            out_rows = []
-            for entry in re.split(r",(?![^()]*\))", m.group(1)):
-                em = re.match(
-                    r"\s*([\w.\"]+)(?:\s+PARTITION\s*\(([^)]*)\))?\s*$",
-                    entry,
-                )
-                if not em:
-                    raise ValueError(f"unsupported OPTIMIZE target: {entry!r}")
-                name = em.group(1).strip('"').split(".")[-1]
-                table = self._dml.crate_tables.get(name)
-                if table is None:
-                    # views/virtual relations ack without a rewrite
-                    out_rows.append((name, "ok", 0, 0))
-                    continue
-                part = None
-                if em.group(2):
-                    part = {}
-                    for kv in em.group(2).split(","):
-                        k, _, v = kv.partition("=")
-                        part[k.strip().strip('"')] = _parse_setting_value(
-                            v.strip().strip("'\"")
-                        )
-                stats = table.optimize(
-                    max_num_segments=int(mns) if mns is not None else None,
-                    partition=part,
-                )
-                self._dml._refresh(name)
-                out_rows.append(
-                    (name, "ok", stats.get("files_before", 0),
-                     stats.get("files_after", 0))
-                )
-            return local_frame(
-                self.spark, out_rows,
-                "table string, status string, files_before int, files_after int",
+        m = st.match(r"OPTIMIZE\s+TABLE\s+(.+?)(?:\s+WITH\s*\((.*)\))?\s*$")
+        props = _parse_with(m.group(2) or "")
+        mns = props.get("max_num_segments")
+        # comma-separated target list, each `ident [PARTITION (...)]`
+        out_rows = []
+        for entry in re.split(r",(?![^()]*\))", m.group(1)):
+            em = re.match(
+                r"\s*([\w.\"]+)(?:\s+PARTITION\s*\(([^)]*)\))?\s*$",
+                entry,
             )
-
-        m = re.match(
-            r"CREATE\s+(?:OR\s+REPLACE\s+)?VIEW\s+([\w.\"]+)\s+AS\s+(.+)$",
-            stmt,
-            re.IGNORECASE | re.DOTALL,
+            if not em:
+                raise ValueError(f"unsupported OPTIMIZE target: {entry!r}")
+            name = em.group(1).strip('"').split(".")[-1]
+            table = self._dml.crate_tables.get(name)
+            if table is None:
+                # views/virtual relations ack without a rewrite
+                out_rows.append((name, "ok", 0, 0))
+                continue
+            part = None
+            if em.group(2):
+                part = {}
+                for kv in em.group(2).split(","):
+                    k, _, v = kv.partition("=")
+                    part[k.strip().strip('"')] = _parse_setting_value(
+                        v.strip().strip("'\"")
+                    )
+            stats = table.optimize(
+                max_num_segments=int(mns) if mns is not None else None,
+                partition=part,
+            )
+            self._dml._refresh(name)
+            out_rows.append(
+                (name, "ok", stats.get("files_before", 0),
+                 stats.get("files_after", 0))
+            )
+        return local_frame(
+            self.spark, out_rows,
+            "table string, status string, files_before int, files_after int",
         )
-        if m:
-            name = m.group(1).strip('"').split(".")[-1]
-            df = self._sql(m.group(2))
-            self._views[name] = m.group(2)[:500]
-            self.register(name, df)
-            return local_frame(self.spark, [(name,)], "view string")
 
-        m = re.match(r"DROP\s+VIEW\s+(IF\s+EXISTS\s+)?([\w.\"]+)\s*$", stmt, re.IGNORECASE)
-        if m:
-            name = m.group(2).strip('"').split(".")[-1]
-            self.spark.catalog.dropTempView(name)
-            self.tables.pop(name, None)
-            self._views.pop(name, None)
-            return local_frame(self.spark, [(name,)], "dropped string")
+    def _create_view(self, st: Statement) -> DataFrame:
+        m = st.match(r"CREATE\s+(?:OR\s+REPLACE\s+)?VIEW\s+([\w.\"]+)\s+AS\s+(.+)$")
+        name = m.group(1).strip('"').split(".")[-1]
+        df = self._sql(m.group(2))
+        self._views[name] = m.group(2)[:500]
+        self.register(name, df)
+        return local_frame(self.spark, [(name,)], "view string")
 
-        # Cursors (reference session/Cursor.java): DECLARE / FETCH /
-        # CLOSE. FETCH n streams through toLocalIterator — one
-        # partition on the driver at a time. FETCH ALL never
-        # materializes: it returns the residual DataFrame itself
-        # (original plan + OFFSET for rows already fetched), so an
-        # `ALL` over a 100 TB result stays a distributed plan. For an
-        # exact already-fetched/residual split the cursor query should
-        # carry a total ORDER BY — same caveat as PG cursors without
-        # a sort.
-        m = re.match(
+    def _drop_view(self, st: Statement) -> DataFrame:
+        m = st.match(r"DROP\s+VIEW\s+(IF\s+EXISTS\s+)?([\w.\"]+)\s*$")
+        name = m.group(2).strip('"').split(".")[-1]
+        self.spark.catalog.dropTempView(name)
+        self.tables.pop(name, None)
+        self._views.pop(name, None)
+        return local_frame(self.spark, [(name,)], "dropped string")
+
+    # Cursors (reference session/Cursor.java): DECLARE / FETCH / CLOSE.
+    # FETCH n streams through toLocalIterator — one partition on the
+    # driver at a time. FETCH ALL never materializes: it returns the
+    # residual DataFrame itself (original plan + OFFSET for rows
+    # already fetched), so an `ALL` over a 100 TB result stays a
+    # distributed plan. For an exact already-fetched/residual split
+    # the cursor query should carry a total ORDER BY — same caveat as
+    # PG cursors without a sort.
+    def _declare(self, st: Statement) -> DataFrame:
+        m = st.match(
             r"DECLARE\s+(\w+)\s+(?:BINARY\s+)?(?:ASENSITIVE\s+|INSENSITIVE\s+)?"
             r"((?:NO\s+)?SCROLL\s+)?CURSOR\s+"
             r"(?:WITH\s+(?:OUT\s+)?HOLD\s+)?FOR\s+(.+)$",
-            stmt,
-            re.IGNORECASE | re.DOTALL,
         )
-        if m:
-            df = self._sql(m.group(3))
-            scroll = bool(
-                m.group(2) and not re.match(r"NO\s", m.group(2), re.IGNORECASE)
-            )
-            self._cursors[m.group(1).lower()] = {
-                "df": df,
-                "hold": hold(df),  # its files stay until CLOSE
-                "it": None,  # opened lazily on first numbered FETCH
-                "fetched": 0,
-                "schema": df.schema,
-                "exhausted": False,
-                "stmt": stmt[:500],
-                # SCROLL (declare.rst:75): backward movement over a
-                # buffer of already-fetched rows ("adds memory
-                # overhead" — reference Cursor.java buffers through
-                # RowAccounting/circuit breaker; here the bound is an
-                # explicit row cap)
-                "scroll": scroll,
-                "buffer": [],  # scroll only: materialized rows
-                "pos": 0,  # scroll only: 1-based row of last fetch; 0 = before first
-            }
-            return local_frame(self.spark, [(m.group(1),)], "cursor string")
+        df = self._sql(m.group(3))
+        scroll = bool(
+            m.group(2) and not re.match(r"NO\s", m.group(2), re.IGNORECASE)
+        )
+        self._cursors[m.group(1).lower()] = {
+            "df": df,
+            "hold": hold(df),  # its files stay until CLOSE
+            "it": None,  # opened lazily on first numbered FETCH
+            "fetched": 0,
+            "schema": df.schema,
+            "exhausted": False,
+            "stmt": st.sql[:500],
+            # SCROLL (declare.rst:75): backward movement over a buffer
+            # of already-fetched rows ("adds memory overhead" —
+            # reference Cursor.java buffers through RowAccounting/
+            # circuit breaker; here the bound is an explicit row cap)
+            "scroll": scroll,
+            "buffer": [],  # scroll only: materialized rows
+            "pos": 0,  # scroll only: 1-based row of last fetch; 0 = before first
+        }
+        return local_frame(self.spark, [(m.group(1),)], "cursor string")
 
-        m = re.match(
+    def _fetch(self, st: Statement) -> DataFrame:
+        m = st.match(
             r"FETCH\s+(?:(NEXT|PRIOR|FORWARD|BACKWARD|ABSOLUTE|RELATIVE)\s+)?"
             r"(ALL|-?\d+)?\s*(?:FROM|IN)\s+(\w+)$",
-            stmt,
-            re.IGNORECASE,
         )
-        if m:
-            name = m.group(3).lower()
-            if name not in self._cursors:
-                raise ValueError(f"cursor '{name}' does not exist")
-            return self._fetch_cursor(
-                self._cursors[name],
-                (m.group(1) or "FORWARD").upper(),
-                m.group(2),
-            )
+        name = m.group(3).lower()
+        if name not in self._cursors:
+            raise ValueError(f"cursor '{name}' does not exist")
+        return self._fetch_cursor(
+            self._cursors[name], (m.group(1) or "FORWARD").upper(), m.group(2)
+        )
 
-        m = re.match(r"CLOSE\s+(ALL|\w+)$", stmt, re.IGNORECASE)
-        if m:
-            target = m.group(1).lower()
-            closed = list(self._cursors) if target == "all" else [target]
-            for name in closed:
-                cur = self._cursors.pop(name, None)
-                if cur is not None:
-                    cur["hold"]()
-            return local_frame(
-                self.spark, [(n,) for n in closed] or [("",)], "closed string"
-            )
+    def _close(self, st: Statement) -> DataFrame:
+        m = st.match(r"CLOSE\s+(ALL|\w+)$")
+        target = m.group(1).lower()
+        closed = list(self._cursors) if target == "all" else [target]
+        for name in closed:
+            cur = self._cursors.pop(name, None)
+            if cur is not None:
+                cur["hold"]()
+        return local_frame(
+            self.spark, [(n,) for n in closed] or [("",)], "closed string"
+        )
 
+    def _create_analyzer(self, st: Statement) -> DataFrame:
         # CREATE ANALYZER (reference FulltextAnalyzerResolver.java,
         # create-analyzer.rst): register a named tokenizer config that
         # MATCH ... WITH (analyzer='name') resolves against.
-        m = re.match(
+        m = st.match(
             r"CREATE\s+ANALYZER\s+\"?(\w+)\"?\s*(?:EXTENDS\s+\"?(\w+)\"?\s*)?"
             r"(?:WITH\s*)?\((.*)\)\s*$",
-            stmt,
-            re.IGNORECASE | re.DOTALL,
         )
-        if m:
-            body = m.group(3)
-            tok = re.search(r"TOKENIZER\s+(\w+)", body, re.IGNORECASE)
-            self._analyzers[m.group(1).lower()] = {
-                "tokenizer": (tok.group(1).lower() if tok else "standard"),
-                "extends": (m.group(2) or "").lower() or None,
-                "definition": body.strip(),
-            }
-            return local_frame(self.spark, [(m.group(1),)], "analyzer string")
+        body = m.group(3)
+        tok = re.search(r"TOKENIZER\s+(\w+)", body, re.IGNORECASE)
+        self._analyzers[m.group(1).lower()] = {
+            "tokenizer": (tok.group(1).lower() if tok else "standard"),
+            "extends": (m.group(2) or "").lower() or None,
+            "definition": body.strip(),
+        }
+        return local_frame(self.spark, [(m.group(1),)], "analyzer string")
 
-        m = re.match(r"DROP\s+ANALYZER\s+\"?(\w+)\"?\s*$", stmt, re.IGNORECASE)
-        if m:
-            self._analyzers.pop(m.group(1).lower(), None)
-            return local_frame(self.spark, [(m.group(1),)], "dropped string")
+    def _drop_analyzer(self, st: Statement) -> DataFrame:
+        m = st.match(r"DROP\s+ANALYZER\s+\"?(\w+)\"?\s*$")
+        self._analyzers.pop(m.group(1).lower(), None)
+        return local_frame(self.spark, [(m.group(1),)], "dropped string")
 
-        # MATCH against a NAMED fulltext index searches its source
-        # columns (fulltext-indices.rst composite indexes) — resolved
-        # BEFORE DML routing so COPY/UPDATE/DELETE WHERE clauses see
-        # the expansion too (dml.rst COPY ... WHERE match(quote_ft, ..))
-        if re.search(r"\bMATCH\s*\(", stmt, re.IGNORECASE):
-            stmt = self._sub_match_index_names(stmt)
+    def _route_dml(self, st: Statement) -> DataFrame:
+        # DML/DDL on stored tables (reference planner/Planner.java:273-500)
+        return self._dml.route(self._sub_match_index_names(st))
 
-        # DML/DDL dispatch (reference planner/Planner.java:273-500):
-        # CREATE TABLE / DROP TABLE / INSERT / UPDATE / DELETE / COPY
-        routed = self._dml.route(stmt)
-        if routed is not None:
-            return routed
-        # detection/validation on a literal-masked copy: '_score'
-        # inside a string literal is data, not a system column
-        _masked, _ = mask(stmt, ident=str)
+    def _query(self, st: Statement) -> DataFrame:
+        st = self._sub_match_index_names(st)
+        stmt = st.sql
         # bare OR alias-qualified (t._score) — qualified sys columns
-        # resolve like any column in the reference
+        # resolve like any column in the reference; '_score' inside a
+        # string literal is data, not a system column
         has_score = bool(
-            re.search(r"(?:(?<![\w.'])|\b\w+\s*\.\s*)_score\b", _masked)
+            re.search(r"(?:(?<![\w.'])|\b\w+\s*\.\s*)_score\b", st.masked)
         )
         if has_score:
-            self._validate_score_in_where(_masked)
+            self._validate_score_in_where(st.masked)
         # MATCH + _score: needs the BM25 join, not a plain rewrite
         if has_score and re.search(r"\bMATCH\s*\(", stmt, re.IGNORECASE):
             return self._execute_match_score(stmt)
@@ -1203,24 +1063,26 @@ class CrateSession:
             stmt = rewrite_sys_columns(stmt)
         return self._sql(stmt)
 
-    def _sub_match_index_names(self, stmt: str) -> str:
-        """Replace a named fulltext index in MATCH(<name>, ...) with
-        the concatenation of its source columns (CompositeIndex in
-        fulltext-indices.rst: the index name is the MATCH target)."""
+    def _sub_match_index_names(self, st: Statement) -> Statement:
+        """``st`` with a named fulltext index in MATCH(<name>, ...)
+        replaced by the concatenation of its source columns
+        (CompositeIndex in fulltext-indices.rst: the index name is the
+        MATCH target) — in queries and in COPY/UPDATE/DELETE WHERE
+        clauses alike (dml.rst COPY ... WHERE match(quote_ft, ..))."""
         mapping: dict[str, str] = {}
         for ct in self._dml.crate_tables.values():
             for idx, cols in ct.ft_indexes.items():
                 mapping[idx.lower()] = "concat_ws(' ', " + ", ".join(cols) + ")"
-        if not mapping:
-            return stmt
+        if not mapping or not re.search(r"\bMATCH\s*\(", st.masked, re.IGNORECASE):
+            return st
 
         def repl(m: re.Match) -> str:
             expr = mapping.get(m.group(1).strip('"').split(".")[-1].lower())
             return f"MATCH({expr}," if expr else m.group(0)
 
-        return re.sub(
-            r"\bMATCH\s*\(\s*([\w.\"]+)\s*,", repl, stmt, flags=re.IGNORECASE
-        )
+        return classify(re.sub(
+            r"\bMATCH\s*\(\s*([\w.\"]+)\s*,", repl, st.sql, flags=re.IGNORECASE
+        ))
 
     _CURRENT_SETTING_RE = re.compile(
         r"current_setting\(\s*'([^']+)'\s*(?:,\s*(true|false))?\s*\)", re.IGNORECASE
@@ -1258,7 +1120,7 @@ class CrateSession:
 
         return self._CURRENT_SETTING_RE.sub(repl, stmt)
 
-    def _show_create_table(self, name: str) -> str:
+    def _show_create_table_sql(self, name: str) -> str:
         """SHOW CREATE TABLE (reference ShowCreateTableAnalyzer /
         MetadataToASTNodeResolver): reconstruct CrateDB-spelled DDL
         from table metadata — PK, generated columns, CHECKs and
@@ -1390,10 +1252,10 @@ class CrateSession:
         for row in bulk_params:
             try:
                 df = self.execute(sql, params=list(row))
-                counted = dml_count(sql, df)
                 out.append(
-                    counted[1] if counted
-                    else 0 if df is None else len(df.collect())
+                    0 if df is None
+                    else rowcount(df) if read_of(df).reply == COUNT
+                    else len(df.collect())
                 )
             except Exception as e:  # noqa: BLE001 - reported per row
                 out.append(e)
@@ -1656,11 +1518,7 @@ class CrateSession:
         )
         return self._sql(new_stmt)
 
-    def _create_function(
-        self, name: str, args: str, ret_type: str, body: str,
-        language: str = "PYTHON", schema: str | None = None,
-        or_replace: bool = True,
-    ) -> DataFrame:
+    def _create_function(self, st: Statement) -> DataFrame:
         """CREATE [OR REPLACE] FUNCTION [schema.]name(args) RETURNS type
         LANGUAGE PYTHON|PANDAS|JAVASCRIPT AS '<body>'.
 
@@ -1675,7 +1533,17 @@ class CrateSession:
         pandas Series (Arrow-batched, ~10-100x faster — the right
         choice at scale when a built-in genuinely can't express it).
         """
-        schema = (schema or self._search_path()[0]).lower()
+        m = st.match(
+            r"CREATE\s+(OR\s+REPLACE\s+)?FUNCTION\s+"
+            r"((?:(?:[\w]+|\"[^\"]+\")\.)?(?:[\w]+|\"[^\"]+\"))\s*"
+            r"\(((?:[^()]|\([^()]*\))*)\)\s*"
+            r"RETURNS\s+([\w()\s]+?)\s+LANGUAGE\s+(PYTHON|PANDAS|JAVASCRIPT)\s+"
+            r"AS\s+'(.*)'\s*$"
+        )
+        schema, _, name = m.group(2).rpartition(".")
+        args, ret_type, language = m.group(3), m.group(4).strip(), m.group(5).upper()
+        body, or_replace = m.group(6).replace("''", "'"), bool(m.group(1))
+        schema = (schema.strip('"') or self._search_path()[0]).lower()
         if schema in ("sys", "information_schema"):
             # user-defined-functions.rst: pg_catalog is allowed for PG
             # compat, the read-only system schemas are not
@@ -1933,13 +1801,16 @@ class CrateSession:
         else:
             self.spark.udf.register(mangled, disp, ret)
 
-    def _drop_function(
-        self, qname: str, argspec: str | None, if_exists: bool
-    ) -> DataFrame:
+    def _drop_function(self, st: Statement) -> DataFrame:
         """DROP FUNCTION [IF EXISTS] [schema.]name[(argtypes)]
         (drop-function.rst): with an argument list, drop exactly that
         overload; without one, drop every overload of the name. The
         mangled registration means Spark builtins are never touched."""
+        m = st.match(
+            r"DROP\s+FUNCTION\s+(?:(IF\s+EXISTS)\s+)?((?:[\w]+\.)?[\w]+)\s*"
+            r"(?:\(((?:[^()]|\([^()]*\))*)\))?\s*$"
+        )
+        qname, argspec, if_exists = m.group(2), m.group(3), bool(m.group(1))
         schema, _, name = qname.rpartition(".")
         schema = (schema or self._search_path()[0]).lower()
         key = (schema, name.strip('`"').lower())

@@ -26,6 +26,7 @@ from dataclasses import dataclass, field
 from crate_spark.datatypes import spark_type
 from crate_spark.dialect import split_args
 from crate_spark.session import rowcount_frame
+from crate_spark.statement import Statement
 
 
 class FdwError(Exception):
@@ -216,110 +217,90 @@ class FdwStore:
         ]
 
 
-def route_fdw(session, stmt: str):
-    """Handle a SERVER / FOREIGN TABLE / USER MAPPING statement;
-    None if ``stmt`` is not one. (create-server.rst,
-    create-foreign-table.rst, create-user-mapping.rst)"""
-    spark = session.spark
-    store: FdwStore = session.fdw
-
-    m = re.match(
+def create_server(session, st: Statement):
+    m = st.match(
         r"CREATE\s+SERVER\s+(IF\s+NOT\s+EXISTS\s+)?\"?([\w]+)\"?\s+"
         r"FOREIGN\s+DATA\s+WRAPPER\s+(\w+)"
-        r"(?:\s+OPTIONS\s*\((.*)\))?\s*$",
-        stmt,
-        re.IGNORECASE | re.DOTALL,
+        r"(?:\s+OPTIONS\s*\((.*)\))?\s*$"
     )
-    if m:
-        created = store.create_server(
-            m.group(2), m.group(3), parse_options(m.group(4)),
-            if_not_exists=bool(m.group(1)),
-        )
-        return rowcount_frame(spark, 1 if created else 0)
-
-    m = re.match(
-        r"ALTER\s+SERVER\s+\"?([\w]+)\"?\s+OPTIONS\s*\((.*)\)\s*$",
-        stmt,
-        re.IGNORECASE | re.DOTALL,
+    created = session.fdw.create_server(
+        m.group(2), m.group(3), parse_options(m.group(4)),
+        if_not_exists=bool(m.group(1)),
     )
-    if m:
-        store.alter_server(m.group(1), parse_options(m.group(2)))
-        return rowcount_frame(spark)
+    return rowcount_frame(session.spark, 1 if created else 0)
 
-    m = re.match(
-        r"DROP\s+SERVER\s+(IF\s+EXISTS\s+)?\"?([\w]+)\"?\s*(CASCADE|RESTRICT)?\s*$",
-        stmt,
-        re.IGNORECASE,
+
+def alter_server(session, st: Statement):
+    m = st.match(r"ALTER\s+SERVER\s+\"?([\w]+)\"?\s+OPTIONS\s*\((.*)\)\s*$")
+    session.fdw.alter_server(m.group(1), parse_options(m.group(2)))
+    return rowcount_frame(session.spark)
+
+
+def drop_server(session, st: Statement):
+    m = st.match(
+        r"DROP\s+SERVER\s+(IF\s+EXISTS\s+)?\"?([\w]+)\"?\s*(CASCADE|RESTRICT)?\s*$"
     )
-    if m:
-        dropped = store.drop_server(
-            m.group(2),
-            if_exists=bool(m.group(1)),
-            cascade=(m.group(3) or "").upper() == "CASCADE",
-        )
-        return rowcount_frame(spark, 1 if dropped else 0)
+    dropped = session.fdw.drop_server(
+        m.group(2),
+        if_exists=bool(m.group(1)),
+        cascade=(m.group(3) or "").upper() == "CASCADE",
+    )
+    return rowcount_frame(session.spark, 1 if dropped else 0)
 
-    m = re.match(
+
+def create_foreign_table(session, st: Statement):
+    spark = session.spark
+    m = st.match(
         r"CREATE\s+FOREIGN\s+TABLE\s+(IF\s+NOT\s+EXISTS\s+)?\"?([\w.]+)\"?\s*"
         r"(?:\(([^)]*)\)\s*)?SERVER\s+\"?([\w]+)\"?"
-        r"(?:\s+OPTIONS\s*\((.*)\))?\s*$",
-        stmt,
-        re.IGNORECASE | re.DOTALL,
+        r"(?:\s+OPTIONS\s*\((.*)\))?\s*$"
     )
-    if m:
-        name = m.group(2)
-        schema_ddl = None
-        if m.group(3) and m.group(3).strip():
-            cols = []
-            for col in split_args(m.group(3)):
-                parts = col.strip().split(None, 1)
-                if len(parts) == 2:
-                    cols.append(f"{parts[0]} {spark_type(parts[1])}")
-            schema_ddl = ", ".join(cols) or None
-        created = store.create_table(
-            name, m.group(4), schema_ddl, parse_options(m.group(5)),
-            if_not_exists=bool(m.group(1)),
-        )
-        if created:
-            # materialize the foreign scan as a named relation; the
-            # DataFrame is lazy — the remote is contacted per query
-            key = name.split(".")[-1].lower()
-            df = store.read(spark, key, session.current_user)
-            df.createOrReplaceTempView(key)
-        return rowcount_frame(spark, 1 if created else 0)
-
-    m = re.match(
-        r"DROP\s+FOREIGN\s+TABLE\s+(IF\s+EXISTS\s+)?\"?([\w.]+)\"?\s*$",
-        stmt,
-        re.IGNORECASE,
+    name = m.group(2)
+    schema_ddl = None
+    if m.group(3) and m.group(3).strip():
+        cols = []
+        for col in split_args(m.group(3)):
+            parts = col.strip().split(None, 1)
+            if len(parts) == 2:
+                cols.append(f"{parts[0]} {spark_type(parts[1])}")
+        schema_ddl = ", ".join(cols) or None
+    created = session.fdw.create_table(
+        name, m.group(4), schema_ddl, parse_options(m.group(5)),
+        if_not_exists=bool(m.group(1)),
     )
-    if m:
-        dropped = store.drop_table(m.group(2), if_exists=bool(m.group(1)))
-        if dropped:
-            spark.catalog.dropTempView(m.group(2).split(".")[-1].lower())
-        return rowcount_frame(spark, 1 if dropped else 0)
+    if created:
+        # materialize the foreign scan as a named relation; the
+        # DataFrame is lazy — the remote is contacted per query
+        key = name.split(".")[-1].lower()
+        df = session.fdw.read(spark, key, session.current_user)
+        df.createOrReplaceTempView(key)
+    return rowcount_frame(spark, 1 if created else 0)
 
-    m = re.match(
+
+def drop_foreign_table(session, st: Statement):
+    m = st.match(r"DROP\s+FOREIGN\s+TABLE\s+(IF\s+EXISTS\s+)?\"?([\w.]+)\"?\s*$")
+    dropped = session.fdw.drop_table(m.group(2), if_exists=bool(m.group(1)))
+    if dropped:
+        session.spark.catalog.dropTempView(m.group(2).split(".")[-1].lower())
+    return rowcount_frame(session.spark, 1 if dropped else 0)
+
+
+def create_user_mapping(session, st: Statement):
+    m = st.match(
         r"CREATE\s+USER\s+MAPPING\s+(?:IF\s+NOT\s+EXISTS\s+)?FOR\s+"
         r"(?:USER|CURRENT_USER|\"?([\w]+)\"?)\s+SERVER\s+\"?([\w]+)\"?"
-        r"(?:\s+OPTIONS\s*\((.*)\))?\s*$",
-        stmt,
-        re.IGNORECASE | re.DOTALL,
+        r"(?:\s+OPTIONS\s*\((.*)\))?\s*$"
     )
-    if m:
-        user = m.group(1) or session.current_user
-        store.create_user_mapping(user, m.group(2), parse_options(m.group(3)))
-        return rowcount_frame(spark)
+    user = m.group(1) or session.current_user
+    session.fdw.create_user_mapping(user, m.group(2), parse_options(m.group(3)))
+    return rowcount_frame(session.spark)
 
-    m = re.match(
+
+def drop_user_mapping(session, st: Statement):
+    m = st.match(
         r"DROP\s+USER\s+MAPPING\s+(IF\s+EXISTS\s+)?FOR\s+"
-        r"(?:USER|CURRENT_USER|\"?([\w]+)\"?)\s+SERVER\s+\"?([\w]+)\"?\s*$",
-        stmt,
-        re.IGNORECASE,
+        r"(?:USER|CURRENT_USER|\"?([\w]+)\"?)\s+SERVER\s+\"?([\w]+)\"?\s*$"
     )
-    if m:
-        user = m.group(2) or session.current_user
-        dropped = store.drop_user_mapping(user, m.group(3), if_exists=bool(m.group(1)))
-        return rowcount_frame(spark, 1 if dropped else 0)
-
-    return None
+    user = m.group(2) or session.current_user
+    dropped = session.fdw.drop_user_mapping(user, m.group(3), if_exists=bool(m.group(1)))
+    return rowcount_frame(session.spark, 1 if dropped else 0)

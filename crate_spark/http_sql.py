@@ -28,7 +28,8 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from crate_spark.datatypes import http_type
 from crate_spark.dml import serving
 from crate_spark.errors import error_class
-from crate_spark.session import dml_count
+from crate_spark.session import rowcount
+from crate_spark.statement import COUNT, read_of
 
 
 def _json_value(v):
@@ -66,25 +67,21 @@ _HTTP_CODES = {
 }
 
 
-def _error_envelope(session, stmt: str, exc: Exception) -> dict:
+def _error_envelope(session, exc: Exception) -> dict:
     """Map an engine exception to the reference's error body
     (``rest/action/HttpError.java`` code families). An unresolved
     relation whose schema prefix names no known schema reports
     SchemaUnknownException/4045, exactly as the reference's analyzer
     does before relation lookup (interfaces/http.rst error example)."""
-    import re as _re
-
     cls = error_class(exc)
     if cls == "unknown_relation":
         known = _BUILTIN_SCHEMAS | session._user_schemas()
-        for sch, _tbl in _re.findall(
-            r"(?:FROM|JOIN|INTO|UPDATE|TABLE)\s+\"?([A-Za-z_]\w*)\"?\s*\.\s*\"?(\w+)\"?",
-            stmt,
-            _re.IGNORECASE,
-        ):
-            if sch.lower() not in known:
+        st = read_of(exc)
+        for rel in st.relations if st else ():
+            schema = rel.partition(".")[0]
+            if schema not in known:
                 return {
-                    "message": f"SchemaUnknownException[Schema '{sch}' unknown]",
+                    "message": f"SchemaUnknownException[Schema '{schema}' unknown]",
                     "code": 4045,
                 }
     return {"message": str(exc).split("\n")[0][:500], "code": _HTTP_CODES[cls]}
@@ -132,16 +129,15 @@ def execute_request(session, payload: dict, *, types: bool = False,
                 # a failing arg row reports rowcount -2 + its error
                 # (http.rst "Bulk errors": runtime errors don't abort)
                 results = [
-                    {"rowcount": -2, "error": _error_envelope(session, stmt, r)}
+                    {"rowcount": -2, "error": _error_envelope(session, r)}
                     if isinstance(r, Exception) else {"rowcount": r}
                     for r in session.execute_bulk(stmt, payload["bulk_args"])
                 ]
                 return {"cols": [], "results": results,
                         "duration": round((time.time() - t0) * 1000, 3)}
             df = session.execute(stmt, params=payload.get("args"))
-            counted = dml_count(stmt, df)
-            if df is None or counted:
-                return {"cols": [], "rows": [], "rowcount": counted[1] if counted else 0,
+            if df is None or read_of(df).reply == COUNT:
+                return {"cols": [], "rows": [], "rowcount": 0 if df is None else rowcount(df),
                         "duration": round((time.time() - t0) * 1000, 3)}
             rows = [[_json_value(v) for v in r] for r in df.collect()]
             resp = {
@@ -156,7 +152,7 @@ def execute_request(session, payload: dict, *, types: bool = False,
                 ]
             return resp
         except Exception as e:  # error envelope, never a raw 500 body
-            out = {"error": _error_envelope(session, stmt, e)}
+            out = {"error": _error_envelope(session, e)}
             if error_trace:
                 import traceback
 

@@ -36,7 +36,8 @@ import threading
 from crate_spark.datatypes import pg_oid
 from crate_spark.dml import serving
 from crate_spark.errors import error_class
-from crate_spark.session import dml_count
+from crate_spark.session import rowcount
+from crate_spark.statement import COUNT, read_of
 
 _SSL_REQUEST = 80877103
 _CANCEL_REQUEST = 80877102
@@ -148,7 +149,7 @@ class _PgHandler(socketserver.BaseRequestHandler):
         self.request.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
         self._out = bytearray()
         self._stmts: dict[str, str] = {}
-        self._portals: dict[str, tuple[str, object]] = {}
+        self._portals: dict[str, object] = {}
         self.user = "crate"
 
     def _exec(self, sql: str, params=None):
@@ -189,22 +190,22 @@ class _PgHandler(socketserver.BaseRequestHandler):
         sql = self._stmts.get(stmt_name.decode(), "")
         try:
             df = self._exec(sql, params=params or None)
-            self._portals[portal.decode()] = (sql, df)
+            self._portals[portal.decode()] = df
             self._put(sock, _msg(b"2", b""))  # BindComplete
         except Exception as e:
             self._fail(sock, e)
 
     def _describe(self, body: bytes) -> bytes:
         kind, name = body[0:1], body[1:].rstrip(b"\x00").decode()
-        sql, df = self._portals.get(name, ("", None))
-        if kind == b"S" or df is None or dml_count(sql, df):
+        df = self._portals.get(name)
+        if kind == b"S" or df is None or read_of(df).reply == COUNT:
             return _msg(b"n", b"")  # NoData: a statement, or no rows
         return _msg(b"T", self._row_description(df))
 
     def _execute(self, sock, body: bytes) -> None:
         portal = body.split(b"\x00", 1)[0].decode()
         try:
-            self._complete(sock, *self._portals.get(portal, ("", None)), describe=False)
+            self._complete(sock, self._portals.get(portal), describe=False)
         except Exception as e:
             self._fail(sock, e)
 
@@ -258,13 +259,13 @@ class _PgHandler(socketserver.BaseRequestHandler):
 
     def _simple_query(self, sock, sql: str) -> None:
         try:
-            self._complete(sock, sql, self._exec(sql), describe=True)
+            self._complete(sock, self._exec(sql), describe=True)
         except Exception as e:
             self._fail(sock, e)
         self._put(sock, _msg(b"Z", b"I"))
         self._flush(sock)
 
-    def _complete(self, sock, sql: str, df, *, describe: bool) -> None:
+    def _complete(self, sock, df, *, describe: bool) -> None:
         """Send df's rows and CommandComplete (a bare OK for no result;
         for a statement answered by a count, no rows and its first
         keyword and the count: ``INSERT 0 n``, ``UPDATE n``, ``CREATE 1``); a
@@ -273,10 +274,10 @@ class _PgHandler(socketserver.BaseRequestHandler):
         if df is None:
             self._put(sock, _msg(b"C", _cstr("OK")))
             return
-        counted = dml_count(sql, df)
-        if counted:
-            verb, n = counted
-            tag = f"INSERT 0 {n}" if verb == "INSERT" else f"{verb} {n}"
+        st = read_of(df)
+        if st.reply == COUNT:
+            n = rowcount(df)
+            tag = f"INSERT 0 {n}" if st.verb == "INSERT" else f"{st.verb} {n}"
             self._put(sock, _msg(b"C", _cstr(tag)))
             return
         rows = df.collect()

@@ -25,7 +25,6 @@ Scale notes (100 TB design intent, tested at local[32]):
 from __future__ import annotations
 
 import os
-import re
 from contextlib import contextmanager
 from functools import lru_cache
 
@@ -159,22 +158,15 @@ def local_frame(spark: SparkSession, rows, schema: str | StructType) -> DataFram
 
 def rowcount_frame(spark: SparkSession, n: int = 1) -> DataFrame:
     """The one-row answer of a DML or DDL statement: rows affected."""
-    return local_frame(spark, [(n,)], "rowcount bigint")
+    df = local_frame(spark, [(n,)], "rowcount bigint")
+    # kept on the frame too: reading a DataFrame's columns is a py4j call
+    df._crate_rowcount = n
+    return df
 
 
-_DML_RE = re.compile(r"\s*(INSERT|UPDATE|DELETE|CREATE|DROP|ALTER|REFRESH)\b", re.IGNORECASE)
-
-
-def dml_count(sql: str, df: DataFrame | None) -> tuple[str, int] | None:
-    """(verb, rows affected) when ``df`` is the ``rowcount_frame``
-    answer of an INSERT, UPDATE, DELETE, CREATE, DROP, ALTER or REFRESH
-    ``sql``; None for any other answer, a RETURNING result among them.
-    Every front door replies to such a statement from this: a count,
-    not a result set."""
-    m = _DML_RE.match(sql)
-    if m is None or df is None or df.columns != ["rowcount"]:
-        return None
-    return m.group(1).upper(), df.collect()[0][0]
+def rowcount(df: DataFrame) -> int:
+    """The rows affected that ``df``, a ``rowcount_frame``, answers."""
+    return df._crate_rowcount
 
 
 def parquet_files(path: str) -> list[tuple[str, int]]:

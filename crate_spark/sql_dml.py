@@ -6,8 +6,8 @@ CopyFrom/CopyTo, DropTable; ``planner/operators/Insert.java:51``;
 ``docs/sql/statements/insert.rst:25-27`` for ON CONFLICT). This module
 is the same dispatch for the SQL front door: conservative parsers for
 the documented statement subset, each routed to the ``CrateTable``
-storage layer (dml.py). Statements that don't match any DML/DDL shape
-return None so the session falls through to ``spark.sql``.
+storage layer (dml.py). ``statement.ROUTES`` sends these statements
+here; a statement outside the documented grammar is an error.
 
 Parsing philosophy matches dialect.py: string literals are masked
 first, structure is found by depth-aware scanning (never by splitting
@@ -26,9 +26,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from crate_spark.datatypes import crate_name, spark_type, type_name
-from crate_spark.dialect import find_close, mask, rewrite, rewrite_sys_columns, split_args, unmask
+from crate_spark.dialect import find_close, rewrite, rewrite_sys_columns, split_args, unmask
 from crate_spark.dml import _WRITE_LOCK, CrateTable
 from crate_spark.session import backticked, local_frame, rowcount_frame
+from crate_spark.statement import Statement
 
 def _crate_decl(raw: str) -> dict:
     """Parse one declared crate type into its information_schema form:
@@ -153,36 +154,10 @@ class SqlDmlRouter:
         return where
 
     # -- dispatch --------------------------------------------------------
-    def route(self, stmt: str) -> DataFrame | None:
-        """Execute stmt if it is DML/DDL; None -> not a DML statement."""
-        masked, literals = mask(stmt, ident=str)
-        head = masked.lstrip().split(None, 2)
-        if not head:
-            return None
-        kw = head[0].upper()
-        kw2 = head[1].upper() if len(head) > 1 else ""
-        if kw == "CREATE" and kw2 == "TABLE":
-            cm = re.match(
-                r"\s*CREATE\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?([\w.\"]+)\s+AS\s+(.+)$",
-                masked,
-                re.IGNORECASE | re.DOTALL,
-            )
-            if cm:
-                return self._create_table_as(cm.group(1), cm.group(2), literals)
-            return self._create_table(masked, literals)
-        if kw == "DROP" and kw2 == "TABLE":
-            return self._drop_table(masked)
-        if kw == "ALTER" and kw2 == "TABLE":
-            return self._alter_table(masked, literals)
-        if kw == "INSERT":
-            return self._insert(masked, literals)
-        if kw == "UPDATE":
-            return self._update(masked, literals)
-        if kw == "DELETE":
-            return self._delete(masked, literals)
-        if kw == "COPY":
-            return self._copy(masked, literals)
-        return None
+    def route(self, st: Statement) -> DataFrame:
+        """Execute ``st``, a CREATE/DROP/ALTER TABLE, INSERT, UPDATE,
+        DELETE or COPY statement, on the storage layer."""
+        return getattr(self, "_" + st.kind)(st)
 
     def _record_schema(self, raw_name: str, table: str) -> None:
         """Remember the schema a SQL-created table belongs to
@@ -196,14 +171,13 @@ class SqlDmlRouter:
             reg[table] = schema
 
     # -- CREATE / DROP TABLE --------------------------------------------
-    def _create_table(self, masked: str, literals: list[str]) -> DataFrame:
-        m = re.match(
-            r"\s*CREATE\s+TABLE\s+(IF\s+NOT\s+EXISTS\s+)?([\w.\"]+)\s*\(",
-            masked,
-            re.IGNORECASE,
-        )
-        if not m:
-            raise ValueError("unsupported CREATE TABLE syntax")
+    def _create_table(self, st: Statement) -> DataFrame:
+        masked, literals = st.masked, st.literals
+        create = r"CREATE\s+TABLE\s+(IF\s+NOT\s+EXISTS\s+)?([\w.\"]+)\s*"
+        cm = st.match(create + r"\s+AS\s+(.+)$", required=False, masked=True)
+        if cm:
+            return self._create_table_as(cm.group(2), cm.group(3), literals)
+        m = st.match(create + r"\(", masked=True)
         name = m.group(2).strip('"').split(".")[-1]
         if m.group(1) and name in self.crate_tables:
             return rowcount_frame(self.spark, 0)
@@ -556,19 +530,19 @@ class SqlDmlRouter:
         self._refresh(name)
         return rowcount_frame(self.spark, n)
 
-    def _alter_table(self, masked: str, literals: list[str]) -> DataFrame:
+    def _alter_table(self, st: Statement) -> DataFrame:
         """ALTER TABLE ADD/DROP/RENAME COLUMN (reference
         ``planner/Planner.java`` AlterTable dispatch; add column mirrors
         the dynamic-mapping path). Data rewrites happen read-merge-write
         like every other mutation."""
+        literals = st.literals
         # ALTER TABLE t OPEN / CLOSE (alter-table.rst): a closed table
         # refuses queries — modeled by deregistering its view; OPEN
         # re-registers it. The closed flag persists in settings.
-        ocm = re.match(
+        ocm = st.match(
             r"\s*ALTER\s+TABLE\s+([\w.\"]+)(\s+PARTITION\s*\([^)]*\))?"
             r"\s+(OPEN|CLOSE)\s*$",
-            masked,
-            re.IGNORECASE,
+            required=False, masked=True,
         )
         if ocm:
             name = ocm.group(1).strip('"').split(".")[-1]
@@ -592,10 +566,9 @@ class SqlDmlRouter:
         # ALTER TABLE a RENAME TO b (alter-table.rst): directory move +
         # catalog/view swap — the table-level rename, distinct from
         # RENAME COLUMN below
-        rnm = re.match(
+        rnm = st.match(
             r"\s*ALTER\s+TABLE\s+([\w.\"]+)\s+RENAME\s+TO\s+([\w.\"]+)\s*$",
-            masked,
-            re.IGNORECASE,
+            required=False, masked=True,
         )
         if rnm:
             old = rnm.group(1).strip('"').split(".")[-1]
@@ -618,12 +591,11 @@ class SqlDmlRouter:
         # partitioned-tables.rst:436 applies them to one partition —
         # storage here is table-scoped, so partition settings land on
         # the table)
-        sm = re.match(
+        sm = st.match(
             r"\s*ALTER\s+TABLE\s+(?:ONLY\s+)?([\w.\"]+)"
             r"(?:\s+PARTITION\s*\([^)]*\))?"
             r"\s+(SET|RESET)\s*\(([^)]*)\)\s*$",
-            masked,
-            re.IGNORECASE,
+            required=False, masked=True,
         )
         if sm:
             table = self._table(sm.group(1).strip('"'))
@@ -644,16 +616,13 @@ class SqlDmlRouter:
             table._save_meta()
             return rowcount_frame(self.spark)
 
-        m = re.match(
+        m = st.match(
             r"\s*ALTER\s+TABLE\s+([\w.\"]+)\s+"
             r"(?:ADD\s+(?:COLUMN\s+)?(\S+)\s+(.+?)"
             r"|DROP\s+(?:COLUMN\s+)?(\w+)"
             r"|RENAME\s+(?:COLUMN\s+)?(\S+)\s+TO\s+(\S+))\s*$",
-            masked,
-            re.IGNORECASE | re.DOTALL,
+            masked=True,
         )
-        if not m:
-            raise ValueError("unsupported ALTER TABLE syntax")
         table = self._table(m.group(1).strip('"'))
         name = m.group(1).strip('"').split(".")[-1]
 
@@ -769,12 +738,8 @@ class SqlDmlRouter:
         self._refresh(name)
         return rowcount_frame(self.spark)
 
-    def _drop_table(self, masked: str) -> DataFrame:
-        m = re.match(
-            r"\s*DROP\s+TABLE\s+(IF\s+EXISTS\s+)?([\w.\"]+)\s*$", masked, re.IGNORECASE
-        )
-        if not m:
-            raise ValueError("unsupported DROP TABLE syntax")
+    def _drop_table(self, st: Statement) -> DataFrame:
+        m = st.match(r"\s*DROP\s+TABLE\s+(IF\s+EXISTS\s+)?([\w.\"]+)\s*$", masked=True)
         name = m.group(2).strip('"').split(".")[-1]
         if name not in self.crate_tables:
             if m.group(1):
@@ -790,14 +755,9 @@ class SqlDmlRouter:
         return rowcount_frame(self.spark)
 
     # -- INSERT ----------------------------------------------------------
-    def _insert(self, masked: str, literals: list[str]) -> DataFrame:
-        m = re.match(
-            r"\s*INSERT\s+INTO\s+([\w.\"]+)\s*(\(([^)]*)\))?\s*(.*)$",
-            masked,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if not m:
-            raise ValueError("unsupported INSERT syntax")
+    def _insert(self, st: Statement) -> DataFrame:
+        literals = st.literals
+        m = st.match(r"\s*INSERT\s+INTO\s+([\w.\"]+)\s*(\(([^)]*)\))?\s*(.*)$", masked=True)
         name = m.group(1).strip('"').split(".")[-1]
         table = self._table(name)
         col_list = None
@@ -924,12 +884,9 @@ class SqlDmlRouter:
         return rowcount_frame(self.spark, stats["inserted"] + stats["updated"])
 
     # -- UPDATE / DELETE -------------------------------------------------
-    def _update(self, masked: str, literals: list[str]) -> DataFrame:
-        m = re.match(
-            r"\s*UPDATE\s+([\w.\"]+)\s+SET\s+(.*)$", masked, re.IGNORECASE | re.DOTALL
-        )
-        if not m:
-            raise ValueError("unsupported UPDATE syntax")
+    def _update(self, st: Statement) -> DataFrame:
+        literals = st.literals
+        m = st.match(r"\s*UPDATE\s+([\w.\"]+)\s+SET\s+(.*)$", masked=True)
         name = m.group(1).strip('"').split(".")[-1]
         table = self._table(name)
         body, returning = _parse_returning(m.group(2), literals)
@@ -970,14 +927,9 @@ class SqlDmlRouter:
         self._refresh(name)
         return out if returning is not None else rowcount_frame(self.spark, out)
 
-    def _delete(self, masked: str, literals: list[str]) -> DataFrame:
-        m = re.match(
-            r"\s*DELETE\s+FROM\s+([\w.\"]+)\s*(?:WHERE\s+(.*))?$",
-            masked,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if not m:
-            raise ValueError("unsupported DELETE syntax")
+    def _delete(self, st: Statement) -> DataFrame:
+        literals = st.literals
+        m = st.match(r"\s*DELETE\s+FROM\s+([\w.\"]+)\s*(?:WHERE\s+(.*))?$", masked=True)
         name = m.group(1).strip('"').split(".")[-1]
         table = self._table(name)
         where = (
@@ -992,16 +944,14 @@ class SqlDmlRouter:
         return rowcount_frame(self.spark, n)
 
     # -- COPY ------------------------------------------------------------
-    def _copy(self, masked: str, literals: list[str]) -> DataFrame:
-        m = re.match(
+    def _copy(self, st: Statement) -> DataFrame:
+        literals = st.literals
+        m = st.match(
             r"\s*COPY\s+([\w.\"]+)\s*(?:PARTITION\s*\([^)]*\)\s*)?"
             r"(\(([^)]*)\))?(?:\s+WHERE\s+(.+?))?\s+(FROM|TO)\s+(DIRECTORY\s+)?"
             r"(__LIT_\d+__)\s*(.*)$",
-            masked,
-            re.IGNORECASE | re.DOTALL,
+            masked=True,
         )
-        if not m:
-            raise ValueError("unsupported COPY syntax")
         name = m.group(1).strip('"').split(".")[-1]
         table = self._table(name)
         direction = m.group(5).upper()

@@ -41,6 +41,7 @@ import re
 from dataclasses import dataclass, field
 
 from crate_spark.session import rowcount_frame
+from crate_spark.statement import Statement
 
 
 class ReplicationError(Exception):
@@ -269,85 +270,69 @@ def _settle(session, tables: list[str] | None) -> None:
             ct.delete_retired()
 
 
-def route_replication(session, stmt: str):
-    """Handle a PUBLICATION / SUBSCRIPTION statement; None if not one."""
-    spark = session.spark
-
-    m = re.match(
+def create_publication(session, st: Statement):
+    m = st.match(
         r"CREATE\s+PUBLICATION\s+\"?([\w]+)\"?\s+FOR\s+"
-        r"(ALL\s+TABLES|TABLE\s+[\w.\",\s]+?)\s*$",
-        stmt,
-        re.IGNORECASE,
+        r"(ALL\s+TABLES|TABLE\s+[\w.\",\s]+?)\s*$"
     )
-    if m:
-        what = m.group(2)
-        tables = (
-            None
-            if what.upper().startswith("ALL")
-            else [t.strip().strip('"').split(".")[-1] for t in what[len("TABLE"):].split(",")]
+    what = m.group(2)
+    tables = (
+        None
+        if what.upper().startswith("ALL")
+        else [t.strip().strip('"').split(".")[-1] for t in what[len("TABLE"):].split(",")]
+    )
+    if tables:
+        for t in tables:
+            if t not in session._dml.crate_tables and not os.path.isfile(
+                os.path.join(session.storage_dir, t, "_crate_meta.json")
+            ):
+                raise ReplicationError(
+                    f"Cannot publish '{t}': only stored tables are publishable"
+                )
+    session.publications.create(m.group(1), tables, session.current_user)
+    _settle(session, tables)
+    return rowcount_frame(session.spark)
+
+
+def alter_publication(session, st: Statement):
+    m = st.match(
+        r"ALTER\s+PUBLICATION\s+\"?([\w]+)\"?\s+(ADD|DROP|SET)\s+TABLE\s+([\w.\",\s]+)\s*$"
+    )
+    names = [t.strip().strip('"').split(".")[-1] for t in m.group(3).split(",")]
+    verb = m.group(2).upper()
+    if verb == "SET":
+        pub = session.publications._get(m.group(1))
+        pub["tables"] = sorted(n.lower() for n in names)
+        session.publications._save()
+    else:
+        session.publications.alter(
+            m.group(1),
+            add=names if verb == "ADD" else [],
+            drop=names if verb == "DROP" else [],
         )
-        if tables:
-            for t in tables:
-                if t not in session._dml.crate_tables and not os.path.isfile(
-                    os.path.join(session.storage_dir, t, "_crate_meta.json")
-                ):
-                    raise ReplicationError(
-                        f"Cannot publish '{t}': only stored tables are publishable"
-                    )
-        session.publications.create(m.group(1), tables, session.current_user)
-        _settle(session, tables)
-        return rowcount_frame(spark)
+    if verb != "DROP":
+        _settle(session, names)
+    return rowcount_frame(session.spark)
 
-    m = re.match(
-        r"ALTER\s+PUBLICATION\s+\"?([\w]+)\"?\s+(ADD|DROP|SET)\s+TABLE\s+([\w.\",\s]+)\s*$",
-        stmt,
-        re.IGNORECASE,
-    )
-    if m:
-        names = [t.strip().strip('"').split(".")[-1] for t in m.group(3).split(",")]
-        verb = m.group(2).upper()
-        if verb == "SET":
-            pub = session.publications._get(m.group(1))
-            pub["tables"] = sorted(n.lower() for n in names)
-            session.publications._save()
-        else:
-            session.publications.alter(
-                m.group(1),
-                add=names if verb == "ADD" else [],
-                drop=names if verb == "DROP" else [],
-            )
-        if verb != "DROP":
-            _settle(session, names)
-        return rowcount_frame(spark)
 
-    m = re.match(
-        r"DROP\s+PUBLICATION\s+(IF\s+EXISTS\s+)?\"?([\w]+)\"?\s*$",
-        stmt,
-        re.IGNORECASE,
-    )
-    if m:
-        dropped = session.publications.drop(m.group(2), if_exists=bool(m.group(1)))
-        return rowcount_frame(spark, 1 if dropped else 0)
+def drop_publication(session, st: Statement):
+    m = st.match(r"DROP\s+PUBLICATION\s+(IF\s+EXISTS\s+)?\"?([\w]+)\"?\s*$")
+    dropped = session.publications.drop(m.group(2), if_exists=bool(m.group(1)))
+    return rowcount_frame(session.spark, 1 if dropped else 0)
 
-    m = re.match(
+
+def create_subscription(session, st: Statement):
+    m = st.match(
         r"CREATE\s+SUBSCRIPTION\s+\"?([\w]+)\"?\s+CONNECTION\s+'([^']+)'\s+"
-        r"PUBLICATION\s+\"?([\w]+)\"?\s*(?:WITH\s*\(.*\))?\s*$",
-        stmt,
-        re.IGNORECASE | re.DOTALL,
+        r"PUBLICATION\s+\"?([\w]+)\"?\s*(?:WITH\s*\(.*\))?\s*$"
     )
-    if m:
-        session.subscriptions.create(session, m.group(1), m.group(2), m.group(3))
-        return rowcount_frame(spark)
+    session.subscriptions.create(session, m.group(1), m.group(2), m.group(3))
+    return rowcount_frame(session.spark)
 
-    m = re.match(
-        r"DROP\s+SUBSCRIPTION\s+(IF\s+EXISTS\s+)?\"?([\w]+)\"?\s*$",
-        stmt,
-        re.IGNORECASE,
+
+def drop_subscription(session, st: Statement):
+    m = st.match(r"DROP\s+SUBSCRIPTION\s+(IF\s+EXISTS\s+)?\"?([\w]+)\"?\s*$")
+    dropped = session.subscriptions.drop(
+        session, m.group(2), if_exists=bool(m.group(1))
     )
-    if m:
-        dropped = session.subscriptions.drop(
-            session, m.group(2), if_exists=bool(m.group(1))
-        )
-        return rowcount_frame(spark, 1 if dropped else 0)
-
-    return None
+    return rowcount_frame(session.spark, 1 if dropped else 0)

@@ -31,11 +31,11 @@ import pyarrow.parquet as pq
 
 from crate_spark.cluster_settings import SETTING_DEFAULTS, SETTINGS_COLUMNS
 from crate_spark.datatypes import PG_TYPES, crate_name, pg_oid
-from crate_spark.dialect import mask
 from crate_spark.session import local_frame
 
 if TYPE_CHECKING:
     from crate_spark.engine import CrateSession
+    from crate_spark.statement import Statement
 
 #: temp-view name -> (DDL schema, session -> rows)
 SYSTEM_VIEWS: dict[str, tuple[str, Callable[["CrateSession"], list]]] = {}
@@ -55,32 +55,21 @@ def _view(name: str, ddl: str):
     return add
 
 
-#: a catalog relation as a statement spells it: ``schema.name`` with
-#: either part double-quoted or backticked, or the underscored view name
-_READ_RE = re.compile(
-    r"\b(information_schema|pg_catalog|sys)[\"`]?\s*\.\s*[\"`]?(\w+)"
-    r"|\b((?:information_schema|pg_catalog|sys)_\w+)",
-    re.IGNORECASE,
-)
 #: SHOW statements read information_schema (ShowStatementAnalyzer)
-_SHOW_RE = re.compile(r"SHOW\s+(TABLES|SCHEMAS|COLUMNS)\b", re.IGNORECASE)
 _SHOW_VIEWS = {
-    "TABLES": "information_schema_tables",
-    "SCHEMAS": "information_schema_schemata",
-    "COLUMNS": "information_schema_columns",
+    "show_tables": "information_schema_tables",
+    "show_schemas": "information_schema_schemata",
+    "show_columns": "information_schema_columns",
 }
 
 
-def views_read(stmt: str) -> set[str]:
-    """The system views ``stmt`` reads; text inside its literals names
-    none."""
-    masked, _ = mask(stmt, ident=str)
-    names = {
-        (f"{m[1]}_{m[2]}" if m[1] else m[3]).lower() for m in _READ_RE.finditer(masked)
-    }
-    show = _SHOW_RE.match(stmt)
-    if show:
-        names.add(_SHOW_VIEWS[show.group(1).upper()])
+def views_read(st: "Statement") -> set[str]:
+    """The system views ``st`` reads: the relations it names as
+    ``schema.name`` or by their underscored view name, and the view a
+    SHOW statement reads."""
+    names = {_SHOW_VIEWS.get(st.kind)}
+    for rel in st.relations:
+        names |= {rel.replace(".", "_", 1), rel.partition(".")[2]}
     return names & SYSTEM_VIEWS.keys()
 
 
@@ -92,11 +81,11 @@ _VIEWS_LOCK = threading.RLock()
 
 
 @contextmanager
-def views_held(session: "CrateSession", stmt: str):
-    """(Re)build the temp views ``stmt`` reads from the session's
+def views_held(session: "CrateSession", st: "Statement"):
+    """(Re)build the temp views ``st`` reads from the session's
     current state and keep them for the enclosed block, which plans
     the statement; a statement that reads no view takes no lock."""
-    names = views_read(stmt)
+    names = views_read(st)
     if not names:
         yield
         return
@@ -280,13 +269,18 @@ def _nest(flat) -> dict:
 
 
 def _live_partitions(ct) -> list[str]:
-    """Top-level partition directories of ``ct`` that hold live files,
-    as the manifest lists them: a DELETE that empties a partition
-    (partitioned-tables.rst:301-318) retires its files, which may stay
-    on disk until no reader needs them."""
-    rels = (os.path.relpath(p, ct.path) for p, _ in ct.files())
-    tops = {r.split(os.sep, 1)[0] for r in rels if os.sep in r}
-    return sorted(t for t in tops if "=" in t)
+    """Partitions of ``ct`` that hold live files, as the manifest lists
+    them: the ``a=…/b=…`` directory prefix, one segment per partition
+    column. A DELETE that empties a partition (partitioned-tables.rst:
+    301-318) retires its files, which may stay on disk until no reader
+    needs them."""
+    depth = len(ct.partitioned_by)
+    parts = set()
+    for p, _ in ct.files():
+        segs = os.path.relpath(p, ct.path).split(os.sep)[:depth]
+        if len(segs) == depth and all("=" in s for s in segs):
+            parts.add("/".join(segs))
+    return sorted(parts)
 
 
 def _parquet_files(ct) -> list[tuple[str, int, int | None]]:

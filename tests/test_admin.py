@@ -304,3 +304,41 @@ def test_schema_catalog_name_is_crate(sess):
         "SELECT catalog_name FROM information_schema.schemata"
     ).collect()
     assert set(r["catalog_name"] for r in rows) == {"crate"}
+
+
+# -- the privilege check reads each statement's relations once ----------
+
+
+@pytest.fixture()
+def mallory(sess):
+    """A user with no privileges, and a stored table ``secret``."""
+    sess.execute("CREATE TABLE secret (id int)")
+    sess.execute("INSERT INTO secret (id) VALUES (1)")
+    sess.execute("CREATE USER mallory")
+    return sess
+
+
+@pytest.mark.parametrize(
+    "stmt",
+    [
+        "(SELECT * FROM secret)",
+        "/* c */ SELECT * FROM secret",
+        "SELECT * FROM doc.secret",
+        'SELECT * FROM "secret"',
+        "EXPLAIN SELECT * FROM secret",
+        "EXPLAIN ANALYZE SELECT * FROM secret",
+        "SELECT * FROM /* c */ secret",
+        "SELECT * FROM -- c\n secret",
+        "SELECT * FROM(secret)",
+        "SELECT * FROM`secret`",
+        "SELECT * FROM /* it's */ secret WHERE 'a' = 'a'",
+    ],
+)
+def test_every_spelling_of_a_denied_relation_is_denied(mallory, stmt):
+    with mallory.acting_as("mallory"), pytest.raises(PermissionDenied):
+        mallory.execute(stmt).collect()
+
+
+def test_a_relation_named_only_inside_a_literal_is_not_checked(mallory):
+    with mallory.acting_as("mallory"):
+        assert mallory.execute("SELECT 'secret' AS x").collect()[0][0] == "secret"

@@ -4,6 +4,8 @@ for a statement that names none."""
 
 from __future__ import annotations
 
+import json
+
 import pytest
 
 from crate_spark.engine import CrateSession
@@ -69,9 +71,10 @@ def test_quoted_system_relations_resolve(fresh):
     ],
 )
 def test_views_read(stmt, views):
+    from crate_spark.statement import classify
     from crate_spark.system_views import views_read
 
-    assert views_read(stmt) == views
+    assert views_read(classify(stmt)) == views
 
 
 def test_golden_pins_every_view():
@@ -79,3 +82,21 @@ def test_golden_pins_every_view():
     from tests.test_system_catalog import GOLDEN, relation_of
 
     assert {relation_of(v) for v in SYSTEM_VIEWS} == set(GOLDEN)
+
+
+def test_a_two_column_partitioning_lists_each_partition(fresh):
+    # partitioned-tables.rst:481-489: one row per (a, b) partition and
+    # live partitions x shards rows in sys.shards
+    fresh.execute("CREATE TABLE p2 (id int, a int, b int) PARTITIONED BY (a, b)")
+    fresh.execute("INSERT INTO p2 (id, a, b) VALUES (1, 1, 1), (2, 1, 2), (3, 2, 1)")
+    rows = fresh.execute(
+        "SELECT partition_ident, values FROM information_schema.table_partitions "
+        "WHERE table_name = 'p2' ORDER BY partition_ident"
+    ).collect()
+    assert [(r[0], json.loads(r[1])) for r in rows] == [
+        ("a=1/b=1", {"a": 1, "b": 1}),
+        ("a=1/b=2", {"a": 1, "b": 2}),
+        ("a=2/b=1", {"a": 2, "b": 1}),
+    ]
+    shards = "SELECT count(*) FROM sys.shards WHERE table_name = 'p2'"
+    assert fresh.execute(shards).collect()[0][0] == 12
