@@ -3,25 +3,30 @@
 The reference resolves every type name and alias in one place
 (``types/DataTypes.java:68-112``) and gives each type one PostgreSQL
 OID (``protocols/postgres/types/PGTypes.java``). ``TYPES`` is that place
-here. A few functions read it:
+here, and `parse_type` is the one reader of a type spelling: a
+multi-word name (``double precision``, ``timestamp with time zone``),
+its ``(p[, s])``, ``array(T)``, a repeated ``T[]``, PG's ``"char"`` and
+``object[(policy)] [AS (name T, …)]``, in any case and spacing.
 
-- inbound, a type spelling: `spark_type` (CREATE TABLE and ALTER TABLE
-  columns, UDF signatures, foreign-table columns), `cast_type` (CAST,
-  ``::`` and typed literals) and `type_name` (the declared column's
-  ``information_schema`` name);
+- inbound, the `TypeSpec` it answers: `spark_type` (CREATE TABLE and
+  ALTER TABLE columns, UDF signatures, foreign-table columns) and
+  `cast_type` (CAST, ``::`` and typed literals); ``sql_dml`` walks it
+  for ``information_schema``;
 - outbound, a Spark type's ``simpleString``: `crate_name`
   (``information_schema``, ``pg_typeof``), `show_type` (SHOW CREATE
   TABLE), `pg_oid` (pg-wire RowDescription and ``pg_attribute``) and
   `http_type` (HTTP ``col_types``); `format_type_names` names PG OIDs.
 
-A spelling the table does not know goes to Spark as written, so every
-Spark DDL type (``decimal(10,2)``, ``map<string,int>``) is accepted.
+A spelling the parser does not read goes to Spark as written, so every
+Spark DDL type (``map<string,int>``, ``struct<a:int>``) is accepted.
 """
 
 from __future__ import annotations
 
 import re
 from typing import NamedTuple
+
+import regex as _regex  # recursive pattern: nested parentheses in a clause
 
 
 class CrateType(NamedTuple):
@@ -35,6 +40,9 @@ class CrateType(NamedTuple):
     oid: int | None = None
     #: HTTP col_types id (interfaces/http.rst data-type table)
     http: int | None = None
+    #: how many arguments its spellings take: a length (advisory for a
+    #: string store, a float_vector's dimension), numeric's ``(p, s)``
+    sized: int = 0
 
 
 #: The first row of each Spark type names that type outbound, and its
@@ -43,7 +51,7 @@ class CrateType(NamedTuple):
 #: maps and structs are not rows: arrays nest their element type, and
 #: a map or struct reads as ``object``.
 TYPES = (
-    CrateType("text", "string", ("text", "string", "varchar", "character varying"), 25, 4),
+    CrateType("text", "string", ("text", "string", "varchar", "character varying"), 25, 4, 1),
     CrateType("integer", "int", ("integer", "int", "int4"), 23, 9),
     CrateType("bigint", "bigint", ("bigint", "long", "int8"), 20, 10),
     CrateType("smallint", "smallint", ("smallint", "short", "int2"), 21, 8),
@@ -64,24 +72,24 @@ TYPES = (
     ),
     # a bare numeric column keeps 18 fractional digits; `cast_type`
     # gives a bare numeric cast its own scale
-    CrateType("numeric", "decimal(38,18)", ("numeric",), 1700, 22),
+    CrateType("numeric", "decimal(38,18)", ("numeric", "decimal"), 1700, 22, 2),
     CrateType("bytea", "binary", ("bytea", "binary"), 17, 4),
     CrateType("undefined", "void", (), 25, 0),
     # objects are stored as JSON text (SURVEY.md §7 hard part (a))
     CrateType("object", "string", ("object",), 25, 12),
-    CrateType("character", "string", ("character", "char"), 1042),
+    CrateType("character", "string", ("character", "char", '"char"'), 1042, None, 1),
     CrateType("ip", "string", ("ip",)),
     CrateType("uuid", "string", ("uuid",), 2950),
     CrateType("json", "string", ("json",), 114),
     # bit strings render as '010…' text
-    CrateType("bit", "string", ("bit",), 1560),
+    CrateType("bit", "string", ("bit",), 1560, None, 1),
     # shapes are WKT text; the geo scalars parse WKT
     CrateType("geo_shape", "string", ("geo_shape",)),
     CrateType("geo_point", "array<double>", ("geo_point",), 600),
-    CrateType("float_vector", "array<float>", ("float_vector",)),
+    CrateType("float_vector", "array<float>", ("float_vector",), None, None, 1),
     CrateType("time with time zone", "string", ("time with time zone", "timetz")),
     # not Spark's TIME: a cast of it has always answered text
-    CrateType("time without time zone", "string", ("time without time zone",)),
+    CrateType("time without time zone", "string", ("time without time zone", "time")),
     CrateType("regproc", "string", ("regproc",)),
     CrateType("regclass", "string", ("regclass",)),
     CrateType("regtype", "string", ("regtype",)),
@@ -101,85 +109,147 @@ for _t in TYPES:
     _BY_SPARK.setdefault(_t.spark, _t)
 _OBJECT = _BY_SPELLING["object"]
 _NUMERIC = _BY_SPELLING["numeric"]
-
-#: spellings whose length argument is advisory (a string store, a
-#: float_vector's dimension) or, for numeric, its precision and scale
-_SIZED = ("varchar", "character varying", "char", "character", "bit", "numeric", "float_vector")
-_SIZED_RE = re.compile(rf"({'|'.join(_SIZED)})\((\d+(?:,\d+)?)\)")
-#: OBJECT[(policy)][ AS (…)]: stored as JSON text like a bare object;
-#: the declared inner shape is not enforced at write (dynamic policy)
-_OBJECT_RE = re.compile(r"object(\((strict|dynamic|ignored)\))?( ?as ?\(.*\))?", re.DOTALL)
-
-#: first words of every spelling and every stored Spark type: an item
-#: of a function signature that starts with one has no argument name
-TYPE_WORDS = frozenset(
-    {sp.split()[0] for sp in _BY_SPELLING}
-    | {re.split(r"[(<]", t.spark)[0] for t in TYPES}
+#: the leading words of the multi-word spellings
+_PREFIXES = frozenset(
+    sp.rsplit(" ", n)[0] for sp in _BY_SPELLING for n in range(1, sp.count(" ") + 1)
 )
 
 
-def _key(spelling: str) -> str:
-    """Lower case, single spaces, no spaces around brackets or commas;
-    ``"char"`` (PG's quoted internal spelling) reads as ``char``."""
-    key = re.sub(r"\s+", " ", spelling.strip().strip('"').lower())
-    return re.sub(r" ?([(),\[\]<>]) ?", r"\1", key)
+class TypeSpec(NamedTuple):
+    """One spelling as `parse_type` read it: the row a scalar or an
+    object names (None for an array), the text as written, ``(p[, s])``,
+    an array's element, and an object's policy and declared columns
+    (name, type, the column's own clauses: ``DEFAULT 'a'``)."""
+
+    row: CrateType | None
+    text: str
+    params: tuple[int, ...] = ()
+    element: TypeSpec | None = None
+    policy: str | None = None
+    children: tuple[tuple[str, TypeSpec, str], ...] = ()
+
+    @property
+    def is_object(self) -> bool:
+        return self.row is _OBJECT
 
 
-def _element(key: str) -> str | None:
-    """Element spelling of ``array(x)`` or ``x[]``, else None."""
-    m = re.fullmatch(r"array\((.+)\)", key) or re.fullmatch(r"(.+?)\[\]", key)
-    return m.group(1) if m else None
+_WORD = re.compile(r'\s*("char"|[A-Za-z_]\w*)', re.IGNORECASE)
+_ARGS = re.compile(r"\s*\(\s*(\d+)\s*(?:,\s*(\d+)\s*)?\)")
+_OPEN = re.compile(r"\s*\(")
+_CLOSE = re.compile(r"\s*\)")
+_BRACKETS = re.compile(r"\s*\[\s*\]")
+_POLICY = re.compile(r"\s*\(\s*(strict|dynamic|ignored)\s*\)", re.IGNORECASE)
+_AS = re.compile(r"\s*as\s*\(", re.IGNORECASE)
+_FIELD = re.compile(r'\s*("(?:[^"]|"")+"|[A-Za-z_]\w*)')
+#: a column's own clauses after its type (``DEFAULT 'a, b'``, ``NOT
+#: NULL``): up to the next ``,`` or ``)`` outside parentheses and quotes
+_CLAUSES = _regex.compile(r"""(?:'[^']*'|"[^"]*"|[^,()'"]|(\((?:[^()'"]|'[^']*'|"[^"]*"|(?1))*\)))*""")
 
 
-def _spark_of(key: str) -> str | None:
-    t = _BY_SPELLING.get(key)
-    if t is not None:
-        return t.spark
-    elem = _element(key)
-    if elem is not None:
-        return f"array<{spark_type(elem)}>"
-    if _OBJECT_RE.fullmatch(key):
-        return _OBJECT.spark
-    m = _SIZED_RE.fullmatch(key)
-    if m:
-        t = _BY_SPELLING[m.group(1)]
-        return f"decimal({m.group(2)})" if t is _NUMERIC else t.spark
-    return None
+def parse_type(text: str, pos: int = 0) -> tuple[TypeSpec, int] | None:
+    """Read the type spelling at ``text[pos:]`` (leading space skipped):
+    its `TypeSpec` and the index just after its last character, or None
+    when no spelling the table knows starts there."""
+    m = _WORD.match(text, pos)
+    if m is None:
+        return None
+    start, name, end = m.start(1), m.group(1).lower(), m.end()
+    if name == "array":
+        o = _OPEN.match(text, end)
+        inner = o and parse_type(text, o.end())
+        c = inner and _CLOSE.match(text, inner[1])
+        if not c:
+            return None
+        spec, end = TypeSpec(None, text[start:c.end()], element=inner[0]), c.end()
+    elif name == "object":
+        spec, end = _object(text, start, end)
+    else:
+        # the longest spelling, then the arguments its row takes
+        read = (name, end) if name in _BY_SPELLING else None
+        while name in _PREFIXES and (m := _WORD.match(text, end)):
+            name, end = f"{name} {m.group(1).lower()}", m.end()
+            read = (name, end) if name in _BY_SPELLING else read
+        if read is None:
+            return None
+        name, end = read
+        row, params = _BY_SPELLING[name], ()
+        if _OPEN.match(text, end):
+            a = _ARGS.match(text, end)
+            params = a and tuple(int(g) for g in a.groups() if g)
+            if not params or len(params) > row.sized:
+                return None
+            end = a.end()
+        spec = TypeSpec(row, text[start:end], params)
+    while b := _BRACKETS.match(text, end):
+        spec, end = TypeSpec(None, text[start:b.end()], element=spec), b.end()
+    return spec, end
+
+
+def read_type(spelling: str) -> TypeSpec | None:
+    """The `TypeSpec` of a whole spelling, or None."""
+    read = parse_type(spelling)
+    return read[0] if read and not spelling[read[1]:].strip() else None
+
+
+def _object(text: str, start: int, end: int) -> tuple[TypeSpec, int]:
+    """``object[(policy)] [AS (name T [clauses], …)]``; without a
+    column list after AS the object ends before it."""
+    policy, children = None, []
+    if p := _POLICY.match(text, end):
+        policy, end = p.group(1).lower(), p.end()
+    pos = (a := _AS.match(text, end)) and a.end()
+    while pos:
+        f = _FIELD.match(text, pos)
+        read = f and parse_type(text, f.end())
+        if read is None:
+            break
+        pos = _CLAUSES.match(text, read[1]).end()
+        children.append((f.group(1).strip('"'), read[0], text[read[1]:pos]))
+        if text.startswith(")", pos):
+            end, pos = pos + 1, None
+        elif not text.startswith(",", pos):
+            break
+        else:
+            pos += 1
+    if pos:
+        children = []
+    return TypeSpec(_OBJECT, text[start:end], policy=policy, children=tuple(children)), end
+
+
+def _spark(spec: TypeSpec) -> str:
+    if spec.element is not None:
+        return f"array<{_spark(spec.element)}>"
+    if spec.row is _NUMERIC and spec.params:
+        return f"decimal({','.join(map(str, spec.params))})"
+    return spec.row.spark
 
 
 def spark_type(spelling: str) -> str:
-    """Spark type of a column declared as ``spelling``."""
-    return _spark_of(_key(spelling)) or spelling.strip()
+    """Spark type of a column declared as ``spelling``; a spelling the
+    parser does not read goes as written."""
+    spec = read_type(spelling)
+    return _spark(spec) if spec else spelling.strip()
 
 
-def cast_type(spelling: str) -> str:
-    """Target of ``CAST(x AS spelling)``, ``x::spelling`` and
-    ``spelling '…'``: the column type in Spark's upper-case spelling.
-    A spelling Spark reads as that type already (``int``,
-    ``decimal(10,2)``) is left as written, and so are interval (an
-    expression's interval is Spark's, not the stored struct) and
-    char(n)/varchar(n) (Spark reads them; the ``::`` pass truncates)."""
-    key = _key(spelling)
-    elem = _element(key)
-    if elem is not None:
-        return f"ARRAY<{cast_type(elem)}>"
-    if key == "numeric":
+def cast_type(spec: TypeSpec) -> str:
+    """Target of ``CAST(x AS T)``, ``x::T`` and ``T '…'``: the column
+    type in Spark's upper-case spelling. A spelling Spark reads as that
+    type already (``int``, ``decimal(10,2)``) is left as written, and so
+    is interval (an expression's interval is Spark's, not the stored
+    struct); a sized string casts to Spark's VARCHAR(n) or CHAR(n)."""
+    if spec.element is not None:
+        return f"ARRAY<{cast_type(spec.element)}>"
+    row = spec.row
+    if row is _NUMERIC and not spec.params:
         # bare numeric: enough scale for display parity, enough headroom
         # that sum/avg over bigint-range values don't overflow
         return "DECIMAL(38,6)"
-    if key == "interval" or re.fullmatch(r"(varchar|character varying|char|character)\(\d+\)", key):
-        return spelling
-    t = _spark_of(key)
-    return spelling if t is None or t == key else t.upper()
-
-
-def type_name(spelling: str) -> str:
-    """Crate name of a declared scalar spelling (``int8`` -> bigint);
-    a spelling the table does not know answers as written."""
-    key = _key(spelling)
-    m = _SIZED_RE.fullmatch(key)
-    t = _BY_SPELLING.get(m.group(1) if m else key)
-    return t.name if t is not None else key
+    if row.name == "interval":
+        return spec.text
+    if spec.params and row.name in ("text", "character"):
+        return f"{'VARCHAR' if row.name == 'text' else 'CHAR'}({spec.params[0]})"
+    spark = _spark(spec)
+    return spec.text if "".join(spec.text.lower().split()) == spark else spark.upper()
 
 
 def _outbound(simple: str) -> CrateType:
@@ -237,26 +307,22 @@ def http_type(simple: str):
 
 
 def crate_name_sql(typeof: str) -> str:
-    """SQL over ``typeof(x)`` that answers `crate_name` at run time
-    (one level of array)."""
-
-    def names(t: str) -> str:
-        arms = "".join(
-            f"WHEN '{spark}' THEN '{t.name}' "
-            for spark, t in _BY_SPARK.items()
-            if spark != t.name and t is not _NUMERIC and "<" not in spark
-        )
-        return (
-            f"(CASE {t} {arms}"
-            f"ELSE (CASE WHEN {t} LIKE 'decimal%' THEN '{_NUMERIC.name}' "
-            f"WHEN {t} LIKE 'struct<%' OR {t} LIKE 'map<%' THEN '{_OBJECT.name}' "
-            f"ELSE {t} END) END)"
-        )
-
-    elem = f"substring({typeof}, 7, length({typeof}) - 7)"
+    """SQL over ``typeof(x)`` that answers `crate_name` at run time: the
+    element under the leading ``array<`` prefixes is named, and
+    ``_array`` is appended once per prefix (only a struct or a map
+    element ends in ``>``, and both name ``object``)."""
+    elem = f"regexp_replace({typeof}, '^(array<)+|>+$', '')"
+    depth = f"length(regexp_extract({typeof}, '^(array<)*', 0)) div 6"
+    arms = "".join(
+        f"WHEN '{spark}' THEN '{row.name}' "
+        for spark, row in _BY_SPARK.items()
+        if spark != row.name and row is not _NUMERIC and "<" not in spark
+    )
     return (
-        f"(CASE WHEN {typeof} LIKE 'array<%' "
-        f"THEN concat({names(elem)}, '_array') ELSE {names(typeof)} END)"
+        f"concat(CASE {elem} {arms}"
+        f"ELSE (CASE WHEN {elem} LIKE 'decimal%' THEN '{_NUMERIC.name}' "
+        f"WHEN {elem} RLIKE '^(struct|map)<' THEN '{_OBJECT.name}' "
+        f"ELSE {elem} END) END, repeat('_array', {depth}))"
     )
 
 

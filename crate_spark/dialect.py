@@ -54,10 +54,11 @@ from __future__ import annotations
 import itertools
 import re
 import time
+from datetime import datetime
 
 import regex as _RE  # recursive patterns: unbounded paren nesting in operands
 
-from crate_spark.datatypes import cast_type, crate_name_sql, format_type_names
+from crate_spark.datatypes import cast_type, crate_name_sql, format_type_names, parse_type, read_type
 
 #: process-start wall time — pg_postmaster_start_time's analog (the
 #: "postmaster" here is this Spark driver process)
@@ -264,20 +265,10 @@ def _body() -> str:
     return rf"(?:[^()]|{_paren()})"
 
 
-_CAST_RE = _RE.compile(
-    rf"(?P<expr>{_operand()})\s*::\s*"
-    r"(?P<ty>(?:timestamp\s+with(?:out)?\s+time\s+zone"
-    r"|time\s+with(?:out)?\s+time\s+zone"
-    r"|double\s+precision"
-    r"|character\s+varying"
-    # crate array(<elem>) spelling — the elem may carry (p[,s])
-    # (CastFunctionTest [1,2,0]::array(boolean); r10)
-    r"|array\s*\(\s*[A-Za-z_][A-Za-z0-9_]*"
-    r"(?:\s*\(\s*\d+(?:\s*,\s*\d+)?\s*\))?\s*\)"
-    r"|[A-Za-z_][A-Za-z0-9_]*(?:\s*\(\s*\d+(?:\s*,\s*\d+)?\s*\))?)"
-    r"(?:\s*\[\s*\])?)",
-    re.IGNORECASE,
-)
+#: ``operand ::``, or a bare ``::`` whose operand shape the operand
+#: grammar does not cover (``named_struct(...).k::varchar``); the type
+#: after it is read by ``datatypes.parse_type``
+_CAST_RE = _RE.compile(rf"(?:(?P<expr>{_operand()})\s*)?::\s*")
 _SUBSCRIPT_RE = _RE.compile(rf"(?P<base>{_sub_base()})\s*\[\s*(?P<idx>\d+)\s*\]")
 #: 1-based inclusive slice subscript arr[from:to] with optional open
 #: ends (AstBuilder subscript grammar -> ArraySliceFunction)
@@ -540,9 +531,7 @@ _FN_TEMPLATES: dict = {
     "timezone": lambda a, lits: (
         (
             f"from_utc_timestamp(CAST({a[1]} AS TIMESTAMP), {a[0]})"
-            if re.search(
-                r"(?i)with\s+time\s+zone|timestamptz|(?:^|\W)\w*_tz\b", a[1]
-            )
+            if _zoned(a[1])
             else f"convert_timezone({a[0]}, 'UTC', "
             f"CAST({_ts_coerce(a[1])} AS TIMESTAMP_NTZ))"
         )
@@ -1247,25 +1236,18 @@ def _lit_value(arg: str, literals: list[str]) -> str | None:
     """The raw text of a masked string literal, or None. A no-op
     ``CAST(__LIT__ AS STRING)`` wrapper (produced by ::text/::geo_shape
     casts and the interval-fold marker) unwraps to the literal."""
-    s = arg.strip()
-    m = (
-        re.fullmatch(r"__LIT_(\d+)__", s)
-        or re.fullmatch(
-            r"CAST\s*\(\s*__LIT_(\d+)__\s+AS\s+STRING\s*\)",
-            s,
-            re.IGNORECASE,
-        )
-        # fn rewrites run before the :: cast pass, so a string-typed
-        # cast suffix may still be attached (within('...'::geo_shape))
-        or re.fullmatch(
-            r"__LIT_(\d+)__\s*::\s*(?:text|string|geo_shape|json)",
-            s,
-            re.IGNORECASE,
-        )
+    m = re.fullmatch(
+        r"__LIT_(\d+)__(?:\s*::(.+))?|CAST\s*\(\s*__LIT_(\d+)__\s+AS\s+STRING\s*\)",
+        arg.strip(),
+        re.IGNORECASE | re.DOTALL,
     )
-    if not m:
+    # fn rewrites run before the :: cast pass, so a string-typed
+    # cast suffix may still be attached (within('...'::geo_shape))
+    if not m or m.group(2) and not (
+        (spec := read_type(m.group(2))) and cast_type(spec).upper() == "STRING"
+    ):
         return None
-    return literals[int(m.group(1))][1:-1].replace("''", "'")
+    return literals[int(m.group(1) or m.group(3))][1:-1].replace("''", "'")
 
 
 #: interval-literal units -> microseconds (DateBinFunction stride)
@@ -2689,12 +2671,11 @@ def _struct_array_literal_subscripts(sql: str, literals: list[str]) -> str:
 
 
 def _map_cast_as_types(sql: str) -> str:
-    """Map the trailing ``AS <type>`` of each ``[TRY_]CAST(...)`` span
-    through ``cast_type`` (bare varchar -> STRING, int8 -> BIGINT,
-    double precision -> DOUBLE, ...). Anchored to CAST spans so an
-    alias that happens to be named like a type is never rewritten;
-    parameterized types (varchar(5), numeric(10,2)) come back from
-    ``cast_type`` unchanged and stay native."""
+    """Map the target of each ``[TRY_]CAST(x AS <type>)`` span through
+    ``cast_type`` (bare varchar -> STRING, int8 -> BIGINT, ...). Anchored
+    to CAST spans so an alias that happens to be named like a type is
+    never rewritten; a target the parser does not read
+    (``STRUCT<a:INT>``) stays as written."""
     pos = 0
     while True:
         m = re.search(r"\b(?:TRY_)?CAST\s*\(", sql[pos:], re.IGNORECASE)
@@ -2705,28 +2686,90 @@ def _map_cast_as_types(sql: str) -> str:
         if close < 0:
             return sql
         inner = sql[open_idx + 1 : close]
-        # last top-level `AS` keyword (any whitespace around it —
-        # ADVICE r7: a newline/tab-separated `CAST(x AS\n varchar)`
-        # must map too) separates operand from target type
-        depth, as_idx, as_end = 0, -1, -1
+        # the first top-level `AS` (any whitespace around it — ADVICE
+        # r7: `CAST(x AS\n varchar)` maps too) from which one spelling
+        # runs to the closing paren separates operand from target
         for am in re.finditer(r"(?<=\s)AS(?=\s)", inner, re.IGNORECASE):
-            depth = inner.count("(", 0, am.start()) - inner.count(")", 0, am.start())
-            if depth == 0:
-                as_idx, as_end = am.start(), am.end()
-        if as_idx >= 0:
-            t = inner[as_end:].strip()
-            mapped = cast_type(t)
-            if mapped != t:
-                sql = (
-                    sql[: open_idx + 1]
-                    + inner[: as_idx]
-                    + "AS "
-                    + mapped
-                    + sql[close:]
-                )
+            if inner.count("(", 0, am.start()) != inner.count(")", 0, am.start()):
+                continue
+            read = parse_type(inner, am.end())
+            if read is not None and not inner[read[1] :].strip():
+                target = cast_type(read[0])
+                if target != read[0].text:
+                    sql = sql[: open_idx + 1] + inner[: am.start()] + "AS " + target + sql[close:]
+                break
         # continue INSIDE the span so nested CASTs are visited too
         pos = open_idx + 1
-    return sql
+
+
+#: a literal after a word or a closing bracket: where a typed literal's
+#: spelling ends (``double precision '1'``, ``numeric(5) '1'``)
+_LIT_AFTER_WORD = re.compile(r"[\w)\]]\s+(__LIT_\d+__)")
+_WORD_START = re.compile(r"(?<![\w.`$])[A-Za-z_]")
+#: the typed literals Spark reads itself
+_SPARK_LITERALS = ("date", "timestamp", "timestamp_ntz", "interval")
+
+
+def _typed_literals(sql: str) -> str:
+    """``<type> 'value'`` -> ``CAST('value' AS <type>)`` for every scalar
+    spelling (data-types.rst); DATE, TIMESTAMP, TIMESTAMP_NTZ and
+    INTERVAL literals are Spark-native and stay."""
+    out, last = [], 0
+    for m in _LIT_AFTER_WORD.finditer(sql):
+        lit = m.start(1)
+        # the leftmost word from which one spelling runs to the literal
+        for w in _WORD_START.finditer(sql, max(last, lit - 64), lit):
+            read = parse_type(sql, w.start())
+            if read is None or sql[read[1]:lit].strip():
+                continue
+            spec = read[0]
+            if spec.element is None and spec.text.lower() not in _SPARK_LITERALS:
+                out += [sql[last:w.start()], f"CAST({m.group(1)} AS {cast_type(spec).upper()})"]
+                last = m.end()
+            break
+    return "".join(out) + sql[last:]
+
+
+#: a name that marks a tz column (ts_tz / *_timestamptz — the docs' convention)
+_TZ_NAME = re.compile(r"(?:^|\W)\w*_(?:timestamp)?tz\b", re.I)
+
+
+def _zoned(operand: str) -> bool:
+    """Whether an operand reads as WITH time zone, textually (the rewrite
+    has no schema): a tz column name, or a zoned spelling other than a
+    bare ``timestamp``, which PG reads without a zone."""
+    return bool(_TZ_NAME.search(operand)) or any(
+        (read := parse_type(operand, w.start())) is not None
+        and read[0].row is not None
+        and read[0].row.name.endswith("with time zone")
+        and read[0].text.lower() != "timestamp"
+        for w in _WORD_START.finditer(operand)
+    )
+
+
+_LIT_CAST = re.compile(r"__LIT_(\d+)__\s*::\s*|\bCAST\s*\(\s*__LIT_(\d+)__\s+AS\s+", re.I)
+
+
+def _array_literal_casts(sql: str, literals: list[str]) -> str:
+    """PG array-input literals cast to arrays (``'{a, b}'::ARRAY(TEXT)``,
+    ``'{a,abc}'::text[]``, ``CAST('{..}' AS array(<t>))``): the string
+    parses as PG array-input syntax and the element type applies on top
+    (CastFunctionTest test_str_value_to_text_array)."""
+    out, last = [], 0
+    for m in _LIT_CAST.finditer(sql):
+        body = literals[int(m.group(1) or m.group(2))][1:-1].replace("''", "'").strip()
+        read = parse_type(sql, m.end())
+        if not (body.startswith("{") and body.endswith("}")) or read is None:
+            continue
+        spec, end = read
+        close = re.compile(r"\s*\)").match(sql, end) if m.group(2) else None
+        if spec.element is None or m.group(2) and close is None:
+            continue
+        arr = _pg_array_literal_to_sql(body)
+        elem = cast_type(spec.element)
+        out += [sql[last:m.start()], arr if elem.upper() == "STRING" else f"CAST({arr} AS ARRAY<{elem}>)"]
+        last = close.end() if close else end
+    return "".join(out) + sql[last:]
 
 
 def find_close(s: str, open_idx: int) -> int:
@@ -3164,10 +3207,6 @@ PG_KEYWORDS = [
     ("optimize", "U"), ("refresh", "U"), ("restore", "U"),
     ("snapshot", "U"), ("strict", "U"), ("summary", "U"),
 ]
-
-
-#: interval field order for <unit> TO <unit> truncation
-_IVL_FIELDS = ("YEAR", "MONTH", "DAY", "HOUR", "MINUTE", "SECOND")
 
 
 def _truncate_interval_fields(parts, start, end):
@@ -3761,25 +3800,7 @@ def rewrite(
             sql,
         )
 
-    # typed literals: <TYPE> 'value' -> CAST (data-types.rst "you can
-    # also use the type name followed by a string literal"); DATE /
-    # TIMESTAMP / INTERVAL are Spark-native and stay
-    def _typed_lit(m: re.Match) -> str:
-        return f"CAST({m.group(2)} AS {cast_type(m.group(1)).upper()})"
-
-    sql = re.sub(
-        r"\b(TIMESTAMP\s+WITH(?:OUT)?\s+TIME\s+ZONE|DOUBLE\s+PRECISION|"
-        r"NUMERIC\s*\(\s*\d+\s*,\s*\d+\s*\)|NUMERIC|INTEGER|INT|BIGINT|"
-        r"SMALLINT|REAL|IP|BOOLEAN|TEXT|"
-        # crate/PG alias spellings (CastFunctionTest r10); STRING is
-        # anchored to the literal so SELECT string FROM t (a column
-        # named string) is unaffected
-        r"STRING|LONG|SHORT|INT2|INT4|INT8|FLOAT4|FLOAT8)"
-        r"\s+(__LIT_\d+__)",
-        _typed_lit,
-        sql,
-        flags=re.IGNORECASE,
-    )
+    sql = _typed_literals(sql)
 
     # expr AT TIME ZONE 'z' (PG; data-types.rst): a WITH-tz operand
     # renders as z-local wall time; a WITHOUT-tz operand is a wall
@@ -3788,9 +3809,7 @@ def rewrite(
     # explicit cast spelling)
     def _at_time_zone(m: re.Match) -> str:
         operand, zone = m.group(1), m.group(2)
-        if re.search(
-            r"(?i)with\s+time\s+zone|timestamptz|(?:^|\W)\w*_tz\b", operand
-        ):
+        if _zoned(operand):
             return f"from_utc_timestamp(CAST({operand} AS TIMESTAMP), {zone})"
         return f"to_utc_timestamp(CAST({operand} AS TIMESTAMP), {zone})"
 
@@ -3801,37 +3820,7 @@ def rewrite(
         flags=re.IGNORECASE,
     )
 
-    # PG array-input literals cast to arrays: '{a, b}'::ARRAY(TEXT),
-    # '{a,abc}'::text[], CAST('{..}' AS array(<t>)) — the string
-    # parses as PG array-input syntax and the element type applies on
-    # top (CastFunctionTest test_str_value_to_text_array; r10
-    # generalized beyond the ARRAY(TEXT) spelling)
-    def _arr_lit_cast(m: re.Match) -> str:
-        lit = literals[int(m.group("lit"))]
-        body = lit[1:-1].replace("''", "'")
-        if not (body.strip().startswith("{") and body.strip().endswith("}")):
-            return m.group(0)
-        arr = _pg_array_literal_to_sql(body)
-        elem = cast_type(
-            re.sub(r"\s+", "", m.group("ty") or m.group("ty2"))
-        )
-        if elem.upper() == "STRING":
-            return arr
-        return f"CAST({arr} AS ARRAY<{elem}>)"
-
-    _ARR_TY = r"(?:ARRAY\s*\(\s*(?P<ty>\w+)\s*\)|(?P<ty2>\w+)\s*\[\s*\])"
-    sql = re.sub(
-        r"__LIT_(?P<lit>\d+)__\s*::\s*" + _ARR_TY,
-        _arr_lit_cast,
-        sql,
-        flags=re.IGNORECASE,
-    )
-    sql = re.sub(
-        r"CAST\s*\(\s*__LIT_(?P<lit>\d+)__\s+AS\s+" + _ARR_TY + r"\s*\)",
-        _arr_lit_cast,
-        sql,
-        flags=re.IGNORECASE,
-    )
+    sql = _array_literal_casts(sql, literals)
 
     # interval literals Spark can't evaluate: EXTRACT over them
     # constant-folds, arithmetic-adjacent mixed literals become
@@ -4254,102 +4243,79 @@ def rewrite(
 
     sql = _rewrite_crate_fns(sql, literals)
 
-    # repeat :: rewrite to handle chains like a::text::int; reference
-    # type spellings (data-types.rst) map to Spark DDL types
-    def _cast_sub(m: re.Match) -> str:
-        # a parenthesized operand right after OVER is a window spec,
-        # not a castable expression (`... OVER (w)::t` casts the whole
-        # window result — not expressible textually; leave to Spark)
-        if m.group("expr").startswith("(") and re.search(
-            r"(?i)\bOVER\s*$", m.string[: m.start()]
-        ):
-            return m.group(0)
+    # x::type -> CAST(x AS type), chains (a::text::int) included;
+    # reference type spellings (data-types.rst) map to Spark DDL types
+    def _cast_sub(expr: str, spec) -> str:
+        lit = re.fullmatch(r"__LIT_(\d+)__", expr.strip())
         # length-parameterized character casts TRUNCATE
         # (data-types.rst: 'Alice Smith'::VARCHAR(5) -> 'Alice')
-        lm = re.fullmatch(
-            r"(?:varchar|charactervarying|char|character)\((\d+)\)",
-            re.sub(r"\s+", "", m.group("ty").lower()),
-        )
-        if lm:
-            return (
-                f"substring(CAST({m.group('expr')} AS STRING), 1, {lm.group(1)})"
-            )
+        if spec.params and spec.row.name in ("text", "character"):
+            return f"substring(CAST({expr} AS STRING), 1, {spec.params[0]})"
         # TIME [WITH TIME ZONE] literals render as [micros_since_
         # midnight, offset_seconds] (data-types.rst TIMETZ examples)
-        if re.fullmatch(
-            r"(?i)timetz|time\s+with\s+time\s+zone", m.group("ty").strip()
-        ):
-            lm2 = re.fullmatch(r"__LIT_(\d+)__", m.group("expr").strip())
-            if lm2:
-                tv = literals[int(lm2.group(1))][1:-1]
-                tm = re.fullmatch(
-                    r"(\d+):(\d+)(?::(\d+(?:\.\d+)?))?"
-                    r"([+-])?(\d{2})?:?(\d{2})?",
-                    tv,
-                )
-                if tm:
-                    us = (int(tm.group(1)) * 3600 + int(tm.group(2)) * 60) * 1_000_000
-                    if tm.group(3):
-                        us += int(round(float(tm.group(3)) * 1_000_000))
-                    off = 0
-                    if tm.group(4) and tm.group(5):
-                        off = int(tm.group(5)) * 3600 + int(tm.group(6) or 0) * 60
-                        if tm.group(4) == "-":
-                            off = -off
-                    return f"array(CAST({us} AS BIGINT), CAST({off} AS BIGINT))"
-        target = cast_type(m.group("ty"))
+        if lit and spec.row is not None and spec.row.name == "time with time zone":
+            tm = re.fullmatch(
+                r"(\d+):(\d+)(?::(\d+(?:\.\d+)?))?"
+                r"([+-])?(\d{2})?:?(\d{2})?",
+                literals[int(lit.group(1))][1:-1],
+            )
+            if tm:
+                us = (int(tm.group(1)) * 3600 + int(tm.group(2)) * 60) * 1_000_000
+                if tm.group(3):
+                    us += int(round(float(tm.group(3)) * 1_000_000))
+                off = 0
+                if tm.group(4) and tm.group(5):
+                    off = int(tm.group(5)) * 3600 + int(tm.group(6) or 0) * 60
+                    if tm.group(4) == "-":
+                        off = -off
+                return f"array(CAST({us} AS BIGINT), CAST({off} AS BIGINT))"
+        target = cast_type(spec)
         # string-literal -> timestamp casts: the reference's parser is
         # laxer than Spark's ('1852-05-04T00:00Z' — minutes precision
         # with zone); normalize via fromisoformat at rewrite time
-        if target.upper().startswith("TIMESTAMP"):
-            lm3 = re.fullmatch(r"__LIT_(\d+)__", m.group("expr").strip())
-            if lm3:
-                raw = literals[int(lm3.group(1))][1:-1]
-                try:
-                    from datetime import datetime as _dt
-
-                    norm = _dt.fromisoformat(raw.replace("Z", "+00:00"))
-                    literals[int(lm3.group(1))] = (
-                        "'" + norm.isoformat(sep=" ") + "'"
-                    )
-                except ValueError:
-                    pass
+        if lit and target.upper().startswith("TIMESTAMP"):
+            raw = literals[int(lit.group(1))][1:-1]
+            try:
+                norm = datetime.fromisoformat(raw.replace("Z", "+00:00"))
+                literals[int(lit.group(1))] = f"'{norm.isoformat(sep=' ')}'"
+            except ValueError:
+                pass
         # numeric -> timestamp casts read epoch MILLIS (crate storage;
         # data-types.rst 1000::TIMESTAMP = 1970-01-01T00:00:01)
         if target.upper().startswith("TIMESTAMP") and re.fullmatch(
-            r"-?\d+", m.group("expr").strip()
+            r"-?\d+", expr.strip()
         ):
-            inner = f"timestamp_millis({m.group('expr')})"
+            inner = f"timestamp_millis({expr})"
             if target.upper() == "TIMESTAMP":
                 return inner
             return f"CAST({inner} AS {target})"
-        return f"CAST({m.group('expr')} AS {target})"
+        return f"CAST({expr} AS {target})"
 
-    prev = None
-    while prev != sql:
-        prev = sql
-        sql = _CAST_RE.sub(_cast_sub, sql)
+    pos = 0
+    while "::" in sql and (m := _CAST_RE.search(sql, pos)):
+        read = parse_type(sql, m.end())
+        if read is None:  # a spelling the parser does not read: Spark's
+            pos = m.end()
+            continue
+        spec, end = read
+        expr = m.group("expr")
+        # a parenthesized operand right after OVER is a window spec,
+        # not a castable expression (`... OVER (w)::t` casts the whole
+        # window result — not expressible textually): Spark parses
+        # `expr::type` natively, so only the type is mapped there
+        if expr is None or expr.startswith("(") and re.search(
+            r"(?i)\bOVER\s*$", sql[: m.start()]
+        ):
+            pos = m.end()
+            sql = sql[:pos] + cast_type(spec) + sql[end:]
+        else:
+            pos = m.start()
+            sql = sql[:pos] + _cast_sub(expr, spec) + sql[end:]
     # explicit CAST(x AS <type>) spellings go through the same type
     # map as `::` (the reference accepts bare varchar/text/int8/...;
     # Spark's VARCHAR demands a length). Anchored to real CAST spans —
     # an unrelated alias named like a type (`1 AS text`) is untouched.
     sql = _map_cast_as_types(sql)
-    # residual ``::type`` whose OPERAND shape the _CAST_RE grammar
-    # doesn't cover (e.g. `named_struct(...).k::varchar` emitted by
-    # the struct-literal subscript pass — fuzz family o0xx): Spark 4
-    # parses `expr::type` natively, so only the crate TYPE spelling
-    # needs mapping (bare varchar is rejected, int8/float4 mistyped).
-    # Single-word unparameterized types only — varchar(n) keeps the
-    # dedicated truncating rewrite, interval maps identically and is
-    # left to its dedicated handling.
-    sql = re.sub(
-        r"::\s*([A-Za-z_]\w*)\b(?!\s*\()",
-        lambda m: m.group(0)
-        if cast_type(m.group(1)) == m.group(1)
-        or not re.fullmatch(r"[A-Za-z_][\w<>,()]*", cast_type(m.group(1)))
-        else f"::{cast_type(m.group(1))}",
-        sql,
-    )
     sql = _SUBSCRIPT_SLICE_RE.sub(_subscript_slice_sub, sql)
     sql = _SUBSCRIPT_RE.sub(r"element_at(\g<base>, \g<idx>)", sql)
     # `^` is EXPONENTIATION in the reference (arithmetic.rst operator

@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from crate_spark.admin_sql import _parse_with, check_privileges
-from crate_spark.datatypes import TYPE_WORDS, show_type, spark_type
+from crate_spark.datatypes import read_type, show_type, spark_type
 from crate_spark.dialect import (
     add_token, mask, rewrite, rewrite_sys_columns, split_args, unmask,
 )
@@ -1134,7 +1134,9 @@ class CrateSession:
                 # declared crate spelling; objects nest their
                 # subcolumns like the reference's renderer
                 t = decl["type"]
-                if t == "object" or t.startswith("object"):
+                if t.endswith("_array"):
+                    return f"ARRAY({_decl_type({**decl, 'type': t[:-6]}, indent)})"
+                if t == "object":
                     pol = decl.get("policy", "dynamic").upper()
                     out = f"OBJECT({pol})"
                     kids = decl.get("children") or []
@@ -1146,8 +1148,6 @@ class CrateSession:
                         )
                         out += " AS (\n" + inner + "\n" + " " * indent + ")"
                     return out
-                if t.endswith("_array"):
-                    return f"ARRAY({t[:-6].upper()})"
                 return t.upper()
 
             decls = {c["name"]: c for c in getattr(ct, "crate_columns", [])}
@@ -1537,7 +1537,7 @@ class CrateSession:
             r"CREATE\s+(OR\s+REPLACE\s+)?FUNCTION\s+"
             r"((?:(?:[\w]+|\"[^\"]+\")\.)?(?:[\w]+|\"[^\"]+\"))\s*"
             r"\(((?:[^()]|\([^()]*\))*)\)\s*"
-            r"RETURNS\s+([\w()\s]+?)\s+LANGUAGE\s+(PYTHON|PANDAS|JAVASCRIPT)\s+"
+            r"RETURNS\s+(.+?)\s+LANGUAGE\s+(PYTHON|PANDAS|JAVASCRIPT)\s+"
             r"AS\s+'(.*)'\s*$"
         )
         schema, _, name = m.group(2).rpartition(".")
@@ -1664,15 +1664,14 @@ class CrateSession:
 
         coercers = []
         for declared, stored in zip(declared_types, sig):
+            spec = read_type(declared)
             if stored in _float_types:
                 coercers.append(float)
             elif stored in _int_types:
                 coercers.append(int)
-            elif language == "JAVASCRIPT" and declared.startswith("object"):
+            elif language == "JAVASCRIPT" and spec and spec.is_object:
                 coercers.append(_obj_parse)
-            elif language == "JAVASCRIPT" and re.fullmatch(
-                r"array\s*\(\s*object.*", declared
-            ):
+            elif language == "JAVASCRIPT" and spec and spec.element and spec.element.is_object:
                 coercers.append(
                     lambda xs: [_obj_parse(e) for e in xs]
                     if isinstance(xs, list)
@@ -1937,11 +1936,10 @@ def _parse_global_assignments(body: str) -> list[tuple[str, object]]:
 def _sig_item_type(item: str) -> str:
     """One signature item -> its bare type spelling, dropping an
     optional leading argument name (create-function.rst: names in
-    signatures are allowed and ignored for identity)."""
-    toks = item.strip().split()
-    if len(toks) > 1 and toks[0].split("(")[0].strip('"').lower() not in TYPE_WORDS:
-        toks = toks[1:]
-    return " ".join(toks)
+    signatures are allowed and ignored for identity): an item that is
+    not one whole type spelling is ``name type``."""
+    item = item.strip()
+    return item if read_type(item) else item.split(None, 1)[-1]
 
 
 class _JsMath:

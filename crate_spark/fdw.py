@@ -24,7 +24,7 @@ import re
 from dataclasses import dataclass, field
 
 from crate_spark.datatypes import spark_type
-from crate_spark.dialect import split_args
+from crate_spark.dialect import find_close, split_args, unmask
 from crate_spark.session import rowcount_frame
 from crate_spark.statement import Statement
 
@@ -250,23 +250,21 @@ def drop_server(session, st: Statement):
 
 def create_foreign_table(session, st: Statement):
     spark = session.spark
-    m = st.match(
-        r"CREATE\s+FOREIGN\s+TABLE\s+(IF\s+NOT\s+EXISTS\s+)?\"?([\w.]+)\"?\s*"
-        r"(?:\(([^)]*)\)\s*)?SERVER\s+\"?([\w]+)\"?"
-        r"(?:\s+OPTIONS\s*\((.*)\))?\s*$"
+    head = st.match(
+        r"CREATE\s+FOREIGN\s+TABLE\s+(IF\s+NOT\s+EXISTS\s+)?\"?([\w.]+)\"?\s*", masked=True
     )
-    name = m.group(2)
-    schema_ddl = None
-    if m.group(3) and m.group(3).strip():
-        cols = []
-        for col in split_args(m.group(3)):
-            parts = col.strip().split(None, 1)
-            if len(parts) == 2:
-                cols.append(f"{parts[0]} {spark_type(parts[1])}")
-        schema_ddl = ", ".join(cols) or None
+    text, pos, name, schema_ddl = st.masked, head.end(), head.group(2), None
+    if text.startswith("(", pos):
+        close = find_close(text, pos)
+        cols = [col.split(None, 1) for col in split_args(text[pos + 1 : close])]
+        schema_ddl = ", ".join(f"{c[0]} {spark_type(c[1])}" for c in cols if len(c) == 2) or None
+        pos = close + 1
+    m = re.match(r"\s*SERVER\s+\"?(\w+)\"?(?:\s+OPTIONS\s*\((.*)\))?\s*$", text[pos:], re.I | re.S)
+    if m is None:
+        raise ValueError(f"unsupported CREATE statement: {st.sql[:80]}")
     created = session.fdw.create_table(
-        name, m.group(4), schema_ddl, parse_options(m.group(5)),
-        if_not_exists=bool(m.group(1)),
+        name, m.group(1), schema_ddl, parse_options(m.group(2) and unmask(m.group(2), st.literals)),
+        if_not_exists=bool(head.group(1)),
     )
     if created:
         # materialize the foreign scan as a named relation; the

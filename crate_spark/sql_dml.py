@@ -25,48 +25,38 @@ import shutil
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from crate_spark.datatypes import crate_name, spark_type, type_name
+from crate_spark.datatypes import TypeSpec, crate_name, parse_type, read_type, spark_type
 from crate_spark.dialect import find_close, rewrite, rewrite_sys_columns, split_args, unmask
 from crate_spark.dml import _WRITE_LOCK, CrateTable
 from crate_spark.session import backticked, local_frame, rowcount_frame
 from crate_spark.statement import Statement
 
 def _crate_decl(raw: str) -> dict:
-    """Parse one declared crate type into its information_schema form:
+    """One declared crate type in its information_schema form:
     {"type": <data_type spelling>} plus, for objects, the declared
     subcolumns as {"children": [{"name", ...decl}]} (recursive)."""
-    key = re.sub(r"\s+", " ", raw.strip().lower()).rstrip()
-    m = re.match(
-        r"object(?:\s*\(\s*(strict|dynamic|ignored)\s*\))?"
-        r"(?:\s+as\s*\((.*)\))?$",
-        key,
-        re.DOTALL,
-    )
-    if m:
-        children = []
-        for item in split_args(m.group(2)) if m.group(2) else []:
-            cm = re.match(r'("?[\w]+"?)\s+(.*)$', item, re.DOTALL)
-            if cm:
-                children.append(
-                    {"name": cm.group(1).strip('"'), **_crate_decl(cm.group(2))}
-                )
-        out = {"type": "object", "children": children}
-        if m.group(1):
-            out["policy"] = m.group(1)
-        return out
-    m = re.match(r"array\s*\(\s*(.+)\s*\)$", key, re.DOTALL) or re.match(
-        r"(.+?)\s*\[\s*\]$", key, re.DOTALL
-    )
-    if m:
-        inner = _crate_decl(m.group(1))
+    spec = read_type(raw)
+    if spec is None:  # a Spark spelling, named as written
+        return {"type": " ".join(raw.lower().split())}
+    return _decl(spec)
+
+
+def _decl(spec: TypeSpec) -> dict:
+    if spec.element is not None:
+        inner = _decl(spec.element)
         out = {"type": inner["type"] + "_array"}
         if inner.get("children"):
             out["children"] = inner["children"]
         return out
-    m = re.match(r"(varchar|character varying|char|character|bit)\s*\(\s*(\d+)\s*\)$", key)
-    if m:
-        return {"type": type_name(m.group(1)), "length": int(m.group(2))}
-    return {"type": type_name(key)}
+    out = {"type": spec.row.name}
+    if spec.is_object:
+        out["children"] = [{"name": n, **_decl(t)} for n, t, _ in spec.children]
+        if spec.policy:
+            out["policy"] = spec.policy
+    elif spec.params and spec.row.spark == "string":
+        # the length of a string store (varchar(n), char(n), bit(n))
+        out["length"] = spec.params[0]
+    return out
 
 
 def _close(s: str, open_idx: int) -> int:
@@ -310,27 +300,17 @@ class SqlDmlRouter:
                     # bare `[data_type] AS expr` shorthand — GENERATED
                     # ALWAYS is optional in the reference grammar
                     # (create-table.rst base_column_definition; the
-                    # lang-js integration tests use `x AS arr_max(xs)`).
-                    # Only a top-level AS whose prefix is empty or a
-                    # plain type spelling counts, so OBJECT AS (...)
-                    # shapes and CAST(... AS ...) inside DEFAULT/CHECK
-                    # never match.
-                    for am in re.finditer(r"\bAS\b", rest, re.IGNORECASE):
-                        pre = rest[: am.start()]
-                        if pre.count("(") != pre.count(")"):
-                            continue  # inside an expression
-                        pres = pre.strip()
-                        if pres and not re.match(
-                            r'(?!object\b)[\w" ]+'
-                            r"(\s*\(\s*\d+[\d\s,]*\))?(\s*\[\s*\])*$",
-                            pres,
-                            re.IGNORECASE,
-                        ):
-                            break  # prefix isn't a type spelling
-                        expr = rest[am.end() :].strip()
+                    # lang-js integration tests use `x AS arr_max(xs)`):
+                    # an AS right after the type, or with no type (an
+                    # OBJECT AS (...) shape is all type)
+                    read = parse_type(rest)
+                    pre = rest[: read[1]] if read else ""
+                    am = re.match(r"\s*AS\b", rest[len(pre) :], re.IGNORECASE)
+                    if am:
+                        expr = rest[len(pre) + am.end() :].strip()
                         if expr.startswith("("):
                             # parenthesized generation expression
-                            popen = rest.index("(", am.end())
+                            popen = rest.index("(", len(pre) + am.end())
                             pclose = _close(rest, popen)
                             generated[cname] = unmask(
                                 rest[popen + 1 : pclose], literals
@@ -339,7 +319,6 @@ class SqlDmlRouter:
                         else:
                             generated[cname] = unmask(expr, literals)
                             rest = pre
-                        break
             ckm = re.search(r"CHECK\s*\(", rest, re.IGNORECASE)
             if ckm:
                 cclose = _close(rest, ckm.end() - 1)
@@ -369,36 +348,25 @@ class SqlDmlRouter:
                 # OBJECT AS (key TEXT DEFAULT '') — subcolumn defaults
                 # materialize the whole object when INSERT omits the
                 # column (sql/statements/create-table.rst:141-156)
-                om = re.match(
-                    r"object(?:\s*\(\s*\w+\s*\))?\s+as\s*\((.*)\)\s*$",
-                    rest.strip(),
-                    re.IGNORECASE | re.DOTALL,
-                )
-                if om:
-                    obj_defaults = {}
-                    for child in split_args(om.group(1)):
-                        cdm = re.match(
-                            r'"?(\w+)"?\s+.*?\bDEFAULT\s+(.+?)\s*$',
-                            child,
-                            re.IGNORECASE | re.DOTALL,
+                read = parse_type(rest)
+                obj_defaults = {}
+                for child, _, clauses in read[0].children if read else ():
+                    cdm = re.search(r"\bDEFAULT\s+(.+?)\s*$", clauses, re.I | re.S)
+                    if cdm:
+                        raw = unmask(cdm.group(1).strip(), literals)
+                        obj_defaults[child] = (
+                            raw[1:-1].replace("''", "'")
+                            if raw.startswith("'")
+                            else json.loads(raw.lower())
+                            if raw.lower() in ("true", "false")
+                            else float(raw)
+                            if "." in raw
+                            else int(raw)
                         )
-                        if cdm:
-                            raw = unmask(cdm.group(2).strip(), literals)
-                            obj_defaults[cdm.group(1)] = (
-                                raw[1:-1].replace("''", "'")
-                                if raw.startswith("'")
-                                else json.loads(raw.lower())
-                                if raw.lower() in ("true", "false")
-                                else float(raw)
-                                if "." in raw
-                                else int(raw)
-                            )
-                    if obj_defaults:
-                        defaults[cname] = (
-                            "'"
-                            + json.dumps(obj_defaults).replace("'", "''")
-                            + "'"
-                        )
+                if obj_defaults:
+                    defaults[cname] = (
+                        "'" + json.dumps(obj_defaults).replace("'", "''") + "'"
+                    )
             if re.search(r"\bPRIMARY\s+KEY\b", rest, re.IGNORECASE):
                 pk.append(cname)
                 not_null.append(cname)  # PK implies NOT NULL

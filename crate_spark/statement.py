@@ -48,7 +48,7 @@ _ROWS = (
     Route(("INSERT",), "insert", DML, COUNT, _S + "_route_dml"),
     Route(("UPDATE",), "update", DML, COUNT, _S + "_route_dml"),
     Route(("DELETE",), "delete", DML, COUNT, _S + "_route_dml"),
-    Route(("COPY",), "copy", DML, ROWS, _S + "_route_dml"),
+    Route(("COPY",), "copy", DML, COUNT, _S + "_route_dml"),
     Route(("CREATE TABLE",), "create_table", DDL, COUNT, _S + "_route_dml"),
     Route(("DROP TABLE",), "drop_table", DDL, COUNT, _S + "_route_dml"),
     Route(("ALTER TABLE",), "alter_table", DDL, COUNT, _S + "_route_dml"),
@@ -57,18 +57,18 @@ _ROWS = (
     Route(("CREATE BLOB",), "create_blob_table", DDL, COUNT, _S + "_create_blob_table"),
     Route(("ALTER BLOB",), "alter_blob_table", DDL, COUNT, _S + "_alter_blob_table"),
     Route(("DROP BLOB",), "drop_blob_table", DDL, COUNT, _S + "_drop_blob_table"),
-    Route(("CREATE SCHEMA",), "create_schema", None, COUNT, _S + "_create_schema"),
-    Route(("DROP SCHEMA",), "drop_schema", None, COUNT, _S + "_drop_schema"),
+    Route(("CREATE SCHEMA",), "create_schema", DDL, COUNT, _S + "_create_schema"),
+    Route(("DROP SCHEMA",), "drop_schema", DDL, COUNT, _S + "_drop_schema"),
     Route(("CREATE FUNCTION",), "create_function", DDL, ROWS, _S + "_create_function"),
     Route(("DROP FUNCTION",), "drop_function", DDL, ROWS, _S + "_drop_function"),
     Route(("CREATE ANALYZER",), "create_analyzer", DDL, ROWS, _S + "_create_analyzer"),
     Route(("DROP ANALYZER",), "drop_analyzer", DDL, ROWS, _S + "_drop_analyzer"),
     Route(("OPTIMIZE",), "optimize", DDL, ROWS, _S + "_optimize"),
     Route(("REFRESH",), "refresh", DQL, COUNT, _S + "_refresh"),
-    Route(("ANALYZE",), "analyze", None, ROWS, _S + "_analyze"),
-    Route(("ALTER CLUSTER",), "alter_cluster", None, ROWS, _S + "_alter_cluster"),
+    Route(("ANALYZE",), "analyze", None, COUNT, _S + "_analyze"),
+    Route(("ALTER CLUSTER",), "alter_cluster", AL, ROWS, _S + "_alter_cluster"),
     Route(("SET GLOBAL",), "set_global", AL, ROWS, _S + "_set_global"),
-    Route(("RESET GLOBAL",), "reset_global", None, ROWS, _S + "_reset_global"),
+    Route(("RESET GLOBAL",), "reset_global", AL, ROWS, _S + "_reset_global"),
     Route(("SET",), "set", None, ROWS, _S + "_set"),
     Route(("RESET",), "reset", None, ROWS, _S + "_reset"),
     Route(("SHOW",), "show", DQL, ROWS, _S + "_show"),
@@ -94,27 +94,27 @@ _ROWS = (
     Route(("CREATE USER", "CREATE ROLE"), "create_role", AL, COUNT, _A + "create_role"),
     Route(("ALTER USER", "ALTER ROLE"), "alter_role", AL, COUNT, _A + "alter_role"),
     Route(("DROP USER", "DROP ROLE"), "drop_role", AL, COUNT, _A + "drop_role"),
-    Route(("GRANT", "DENY", "REVOKE"), "grant", AL, ROWS, _A + "grant"),
+    Route(("GRANT", "DENY", "REVOKE"), "grant", AL, COUNT, _A + "grant"),
     Route(("CREATE REPOSITORY",), "create_repository", DDL, COUNT, _A + "create_repository"),
     Route(("ALTER REPOSITORY",), "alter_repository", DDL, COUNT, _A + "alter_repository"),
     Route(("DROP REPOSITORY",), "drop_repository", DDL, COUNT, _A + "drop_repository"),
     Route(("CREATE SNAPSHOT",), "create_snapshot", DDL, COUNT, _A + "create_snapshot"),
     Route(("DROP SNAPSHOT",), "drop_snapshot", DDL, COUNT, _A + "drop_snapshot"),
-    Route(("RESTORE SNAPSHOT",), "restore_snapshot", DDL, ROWS, _A + "restore_snapshot"),
+    Route(("RESTORE SNAPSHOT",), "restore_snapshot", DDL, COUNT, _A + "restore_snapshot"),
     # foreign data wrappers (admin/fdw.rst)
-    Route(("CREATE SERVER",), "create_server", None, COUNT, _F + "create_server"),
-    Route(("ALTER SERVER",), "alter_server", None, COUNT, _F + "alter_server"),
-    Route(("DROP SERVER",), "drop_server", None, COUNT, _F + "drop_server"),
-    Route(("CREATE FOREIGN",), "create_foreign_table", None, COUNT, _F + "create_foreign_table"),
-    Route(("DROP FOREIGN",), "drop_foreign_table", None, COUNT, _F + "drop_foreign_table"),
+    Route(("CREATE SERVER",), "create_server", AL, COUNT, _F + "create_server"),
+    Route(("ALTER SERVER",), "alter_server", AL, COUNT, _F + "alter_server"),
+    Route(("DROP SERVER",), "drop_server", AL, COUNT, _F + "drop_server"),
+    Route(("CREATE FOREIGN",), "create_foreign_table", DDL, COUNT, _F + "create_foreign_table"),
+    Route(("DROP FOREIGN",), "drop_foreign_table", DDL, COUNT, _F + "drop_foreign_table"),
     Route(("CREATE USER MAPPING",), "create_user_mapping", AL, COUNT, _F + "create_user_mapping"),
     Route(("DROP USER MAPPING",), "drop_user_mapping", AL, COUNT, _F + "drop_user_mapping"),
     # logical replication (logical-replication.rst)
-    Route(("CREATE PUBLICATION",), "create_publication", None, COUNT, _R + "create_publication"),
-    Route(("ALTER PUBLICATION",), "alter_publication", None, COUNT, _R + "alter_publication"),
-    Route(("DROP PUBLICATION",), "drop_publication", None, COUNT, _R + "drop_publication"),
-    Route(("CREATE SUBSCRIPTION",), "create_subscription", None, COUNT, _R + "create_subscription"),
-    Route(("DROP SUBSCRIPTION",), "drop_subscription", None, COUNT, _R + "drop_subscription"),
+    Route(("CREATE PUBLICATION",), "create_publication", AL, COUNT, _R + "create_publication"),
+    Route(("ALTER PUBLICATION",), "alter_publication", AL, COUNT, _R + "alter_publication"),
+    Route(("DROP PUBLICATION",), "drop_publication", AL, COUNT, _R + "drop_publication"),
+    Route(("CREATE SUBSCRIPTION",), "create_subscription", AL, COUNT, _R + "create_subscription"),
+    Route(("DROP SUBSCRIPTION",), "drop_subscription", AL, COUNT, _R + "drop_subscription"),
 )
 #: first keywords (``CREATE OR REPLACE`` read as ``CREATE``) -> route;
 #: the longest key that matches wins
@@ -265,7 +265,10 @@ def classify(sql: str) -> Statement:
     relations = _relations(upper)
     privilege, reply = route.privilege, route.reply
     if route.kind == "copy":
-        privilege = DML if re.search(r"\bFROM\s+__LIT_", upper) else DQL
+        # COPY FROM answers its summary rows, COPY TO a count
+        privilege, reply = (DML, ROWS) if re.search(r"\bFROM\s+__LIT_", upper) else (DQL, COUNT)
+    elif route.kind == "analyze" and words[1:]:
+        reply = ROWS  # ANALYZE t answers its (table, status) rows
     elif route.kind == "update" and relations[:1] == ("sys.node_checks",):
         route, privilege = _ACK_NODE_CHECKS, None
     if reply == COUNT and "RETURNING" in upper and re.search(r"\bRETURNING\b", upper):

@@ -15,8 +15,10 @@ from __future__ import annotations
 
 import pytest
 
+from crate_spark.admin_sql import check_privileges
 from crate_spark.engine import CrateSession
 from crate_spark.roles import PermissionDenied, RoleError, RoleStore
+from crate_spark.statement import classify
 
 SF = "/root/testdata/sf0.001"
 
@@ -342,3 +344,33 @@ def test_every_spelling_of_a_denied_relation_is_denied(mallory, stmt):
 def test_a_relation_named_only_inside_a_literal_is_not_checked(mallory):
     with mallory.acting_as("mallory"):
         assert mallory.execute("SELECT 'secret' AS x").collect()[0][0] == "secret"
+
+
+@pytest.mark.parametrize(
+    "stmt, privilege",
+    [
+        ("ALTER CLUSTER SWAP TABLE secret TO other", "AL"),
+        ("RESET GLOBAL stats.enabled", "AL"),
+        ("CREATE SERVER lake FOREIGN DATA WRAPPER file OPTIONS (format 'parquet')", "AL"),
+        ("ALTER SERVER lake OPTIONS (SET format 'csv')", "AL"),
+        ("DROP SERVER lake", "AL"),
+        ("CREATE FOREIGN TABLE ext (id int) SERVER lake", "DDL"),
+        ("DROP FOREIGN TABLE ext", "DDL"),
+        ("CREATE PUBLICATION p FOR TABLE secret", "AL"),
+        ("ALTER PUBLICATION p ADD TABLE secret", "AL"),
+        ("DROP PUBLICATION p", "AL"),
+        ("CREATE SUBSCRIPTION s CONNECTION 'file:///nowhere' PUBLICATION p", "AL"),
+        ("DROP SUBSCRIPTION s", "AL"),
+        ("CREATE SCHEMA s1", "DDL"),
+        ("DROP SCHEMA s1", "DDL"),
+    ],
+)
+def test_cluster_and_schema_statements_need_their_privilege_class(mallory, stmt, privilege):
+    """privileges.rst: cluster, server, replication and schema
+    statements need AL or DDL; a user without it is refused before the
+    statement runs, and a user holding it passes the check."""
+    with mallory.acting_as("mallory"), pytest.raises(PermissionDenied):
+        mallory.execute(stmt)
+    mallory.execute(f"GRANT {privilege} TO mallory")
+    with mallory.acting_as("mallory"):
+        check_privileges(mallory, classify(stmt))

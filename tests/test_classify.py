@@ -64,7 +64,7 @@ def test_a_comment_led_set_sets_the_setting(sess):
         ("EXPLAIN ANALYZE SELECT * FROM t", "explain", DQL, ("doc.t",), ROWS),
         ("INSERT INTO t SELECT * FROM u", "insert", DML, ("doc.t", "doc.u"), COUNT),
         ("UPDATE t SET v = 'x' RETURNING id", "update", DML, ("doc.t",), ROWS),
-        ("COPY t TO DIRECTORY '/x'", "copy", DQL, ("doc.t",), ROWS),
+        ("COPY t TO DIRECTORY '/x'", "copy", DQL, ("doc.t",), COUNT),
         ("CREATE OR REPLACE VIEW v AS SELECT * FROM t", "create_view", DDL,
          ("doc.v", "doc.t"), ROWS),
         ("SELECT * FROM sys.jobs, pg_catalog.\"pg_type\"", "query", DQL,

@@ -131,3 +131,17 @@ def test_fdw_errors(sess):
         sess.execute("CREATE FOREIGN TABLE t (id int) SERVER missing")
     sess.execute("DROP SERVER IF EXISTS missing")  # tolerated
     sess.execute("DROP FOREIGN TABLE IF EXISTS missing")
+
+
+def test_foreign_table_columns_declare_as_create_table(sess):
+    """A foreign table's column list is read by the type parser, so
+    sized, nested and object spellings declare the Spark types the same
+    CREATE TABLE declares."""
+    cols = "a numeric(10,2), b array(text), c object(strict) AS (x int)"
+    sess.execute("CREATE SERVER lake FOREIGN DATA WRAPPER file OPTIONS (format 'parquet')")
+    sess.execute(f"CREATE FOREIGN TABLE ft ({cols}) SERVER lake OPTIONS (path '{SF}/region.parquet')")
+    sess.execute(f"CREATE TABLE t ({cols})")
+    declared = sess.spark.createDataFrame([], sess.fdw.tables["ft"].schema_ddl).schema
+    assert [(f.name, f.dataType) for f in declared] == [
+        (f.name, f.dataType) for f in sess.execute("SELECT * FROM t").schema
+    ]

@@ -217,6 +217,27 @@ def test_http_dml_answers_a_count_not_a_result_set(spark, tmp_path):
     assert shape("SELECT count(*) AS rowcount FROM f") == (["rowcount"], [[1]], 1)
 
 
+def test_http_privileges_copy_to_and_analyze_answer_a_count(spark, tmp_path):
+    """GRANT, DENY, REVOKE, COPY … TO and a bare ANALYZE answer no
+    columns and no rows, with ``rowcount`` what they changed or wrote;
+    ``ANALYZE t`` keeps its (table, status) result set."""
+    s = CrateSession(spark, None, storage_dir=str(tmp_path))
+    s.execute("CREATE TABLE f (id int)")
+    s.execute("INSERT INTO f (id) VALUES (1), (2)")
+    s.execute("CREATE USER alice")
+
+    def shape(stmt):
+        resp = execute_request(s, {"stmt": stmt})
+        return resp["cols"], resp["rows"], resp["rowcount"]
+
+    assert shape("GRANT DQL ON TABLE doc.f TO alice") == ([], [], 1)
+    assert shape("DENY DML ON TABLE doc.f TO alice") == ([], [], 1)
+    assert shape("REVOKE DQL ON TABLE doc.f FROM alice") == ([], [], 1)
+    assert shape(f"COPY f TO DIRECTORY '{tmp_path}/out'") == ([], [], 2)
+    assert shape("ANALYZE") == ([], [], 1)
+    assert shape("ANALYZE f")[0] == ["table", "status"]
+
+
 def test_http_concurrent_users_see_only_their_own_principal(spark, tmp_path):
     """Requests from different users run concurrently on one shared
     session: each statement runs as its requester, and the session's

@@ -467,6 +467,32 @@ def test_pg_wire_dml_sends_its_command_tag_and_no_rows(spark, tmp_path):
     assert reply("DROP TABLE f") == [(b"C", b"DROP 1\x00"), (b"Z", b"I")]
 
 
+def test_pg_wire_grant_and_copy_to_send_their_command_tag(spark, tmp_path):
+    """GRANT and COPY … TO answer a count: no rows, and the tag
+    ``GRANT n`` or ``COPY n``."""
+    from crate_spark.pg_wire import _PgHandler
+
+    handler = _PgHandler.__new__(_PgHandler)
+    handler.request = _RecordingSocket()
+    handler.session = s = CrateSession(spark, None, storage_dir=str(tmp_path))
+    handler.setup()
+    s.execute("CREATE TABLE f (id int)")
+    s.execute("INSERT INTO f (id) VALUES (1), (2)")
+    s.execute("CREATE USER alice")
+
+    def reply(sql):
+        handler.request = sock = _RecordingSocket()
+        handler._simple_query(sock, sql)
+        return _reply_tags(sock)
+
+    assert reply("GRANT DQL ON TABLE doc.f TO alice") == [
+        (b"C", b"GRANT 1\x00"), (b"Z", b"I")
+    ]
+    assert reply(f"COPY f TO DIRECTORY '{tmp_path}/out'") == [
+        (b"C", b"COPY 2\x00"), (b"Z", b"I")
+    ]
+
+
 def test_pg_wire_extended_dml_describes_no_data(pg_server):
     """An extended-protocol INSERT describes its portal as NoData and
     completes with ``INSERT 0 1``, as a simple query does."""

@@ -44,7 +44,21 @@ def _reason(stmt: str, diff: str) -> str | None:
         return "EXPLAIN needs the privilege of the statement it explains"
     if diff == "privilege None -> DDL" and re.match(r"CREATE\s+OR\s+REPLACE\b", stmt, re.I):
         return "CREATE OR REPLACE is DDL like CREATE"
+    st = classify(stmt)
+    if diff in ("privilege None -> AL", "privilege None -> DDL") and st.kind in _ADMIN_KINDS:
+        return "cluster, server, replication and schema statements need AL or DDL"
+    if diff == f"reply rows -> {st.verb}" and st.kind in ("grant", "restore_snapshot", "copy", "analyze"):
+        return "GRANT/DENY/REVOKE, RESTORE SNAPSHOT, COPY TO and a bare ANALYZE answer a count"
     return None
+
+
+#: the kinds the parent let anyone run (privileges.rst asks AL or DDL)
+_ADMIN_KINDS = {
+    "alter_cluster", "reset_global", "create_server", "alter_server", "drop_server",
+    "create_foreign_table", "drop_foreign_table", "create_publication",
+    "alter_publication", "drop_publication", "create_subscription",
+    "drop_subscription", "create_schema", "drop_schema",
+}
 
 
 def _differences(stmt: str, want: dict) -> list[str]:

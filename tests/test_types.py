@@ -182,3 +182,73 @@ def test_alias_spellings_cast_like_they_declare(spark, tmp_path):
     )
     row = s.execute("SELECT twice(21) AS v, pg_typeof(twice(21)) AS t").collect()[0]
     assert (row["v"], row["t"]) == (42, "bigint")
+
+
+def test_parse_type_reads_every_shape_in_any_case_and_spacing():
+    """``datatypes.parse_type`` reads multi-word names, ``array(T)``,
+    repeated ``T[]`` and objects with nested children whatever their
+    case and spacing, and its end stops before what follows the type."""
+    from crate_spark.datatypes import parse_type, read_type, spark_type
+
+    spec = read_type("ARRAY ( DOUBLE   PRECISION )")
+    assert (spec.element.row.name, spark_type("ARRAY ( DOUBLE   PRECISION )")) == (
+        "double precision", "array<double>",
+    )
+    assert spark_type("integer [ ] [ ]") == "array<array<int>>"
+    obj = read_type("Object(Strict) AS (a INT, b OBJECT AS (c TEXT))")
+    assert obj.policy == "strict"
+    (a, a_type, _), (b, b_type, _) = obj.children
+    assert (a, a_type.row.name, b, b_type.row.name) == ("a", "integer", "b", "object")
+    assert [(n, t.row.name) for n, t, _ in b_type.children] == [("c", "text")]
+    for text, spelling in [
+        ("x timestamp with time zone NOT NULL", "timestamp with time zone"),
+        ("x numeric(10, 2), y int", "numeric(10, 2)"),
+        ("x int[] )", "int[]"),
+        ("x object AS (k text DEFAULT 'a, b') NOT NULL", "object AS (k text DEFAULT 'a, b')"),
+    ]:
+        spec, end = parse_type(text, 1)
+        assert (spec.text, text[1:end].strip()) == (spelling, spelling)
+    # a word no spelling starts, or an argument list a name does not take
+    assert parse_type("map<string,int>") is None and parse_type("timestamp(3)") is None
+
+
+def test_nested_arrays_are_named_at_every_level(spark, tmp_path):
+    """pg_typeof, information_schema and SHOW CREATE TABLE name each
+    array level of a nested array column."""
+    from crate_spark.engine import CrateSession
+
+    s = CrateSession(spark, None, storage_dir=str(tmp_path))
+    s.execute("CREATE TABLE nested (a int[], b array(array(int)), c int[][][])")
+    ddl = s.execute("SHOW CREATE TABLE nested").collect()[0][0]
+    assert '"b" ARRAY(ARRAY(INTEGER))' in ddl and '"c" ARRAY(ARRAY(ARRAY(INTEGER)))' in ddl
+    s.execute("CREATE TABLE objs (o array(object AS (x int)))")
+    assert '"o" ARRAY(OBJECT(DYNAMIC) AS (' in s.execute("SHOW CREATE TABLE objs").collect()[0][0]
+    s.execute("INSERT INTO nested (a, b, c) VALUES ([1], [[1]], [[[1]]])")
+    row = s.execute("SELECT pg_typeof(a), pg_typeof(b), pg_typeof(c) FROM nested").collect()[0]
+    info = [
+        r[0]
+        for r in s.execute(
+            "SELECT data_type FROM information_schema.columns "
+            "WHERE table_name = 'nested' ORDER BY ordinal_position"
+        ).collect()
+    ]
+    assert list(row) == info == ["integer_array", "integer_array_array", "integer_array_array_array"]
+
+
+def test_object_subcolumn_defaults_keep_their_declared_type(spark, tmp_path):
+    """A subcolumn's DEFAULT clause is not part of its type: the
+    information_schema names the type, and the defaults still fill the
+    object an INSERT omits."""
+    from crate_spark.engine import CrateSession
+
+    s = CrateSession(spark, None, storage_dir=str(tmp_path))
+    s.execute("CREATE TABLE od (id int, o OBJECT AS (key TEXT DEFAULT 'a,b', n INT DEFAULT 3))")
+    s.execute("INSERT INTO od (id) VALUES (1)")
+    assert s.execute("SELECT o FROM od").collect()[0][0] == '{"key": "a,b", "n": 3}'
+    assert [
+        tuple(r)
+        for r in s.execute(
+            "SELECT column_name, data_type FROM information_schema.columns "
+            "WHERE table_name = 'od' ORDER BY ordinal_position"
+        ).collect()
+    ] == [("id", "integer"), ("o", "object"), ("o['key']", "text"), ("o['n']", "integer")]
