@@ -2716,18 +2716,25 @@ def _typed_literals(sql: str) -> str:
     INTERVAL literals are Spark-native and stay."""
     out, last = [], 0
     for m in _LIT_AFTER_WORD.finditer(sql):
-        lit = m.start(1)
-        # the leftmost word from which one spelling runs to the literal
-        for w in _WORD_START.finditer(sql, max(last, lit - 64), lit):
-            read = parse_type(sql, w.start())
-            if read is None or sql[read[1]:lit].strip():
-                continue
-            spec = read[0]
-            if spec.element is None and spec.text.lower() not in _SPARK_LITERALS:
-                out += [sql[last:w.start()], f"CAST({m.group(1)} AS {cast_type(spec).upper()})"]
-                last = m.end()
-            break
+        typed = _literal_type(sql, m.start(1), last)
+        if typed is None:
+            continue
+        start, spec = typed
+        if spec.element is None and spec.text.lower() not in _SPARK_LITERALS:
+            out += [sql[last:start], f"CAST({m.group(1)} AS {cast_type(spec).upper()})"]
+            last = m.end()
     return "".join(out) + sql[last:]
+
+
+def _literal_type(sql: str, lit: int, lo: int = 0):
+    """``(start, TypeSpec)`` of the type spelling that runs up to the
+    literal at ``lit`` (a typed literal's type), read from the leftmost
+    word after ``lo`` that reads one; None when no spelling does."""
+    for w in _WORD_START.finditer(sql, max(lo, lit - 64), lit):
+        read = parse_type(sql, w.start())
+        if read is not None and not sql[read[1]:lit].strip():
+            return w.start(), read[0]
+    return None
 
 
 #: a name that marks a tz column (ts_tz / *_timestamptz — the docs' convention)
@@ -2745,6 +2752,44 @@ def _zoned(operand: str) -> bool:
         and read[0].text.lower() != "timestamp"
         for w in _WORD_START.finditer(operand)
     )
+
+
+_AT_TIME_ZONE = re.compile(r"\s+AT\s+TIME\s+ZONE\s+(__LIT_\d+__)", re.I)
+#: a subscript base or a number, with any subscripts after it
+_AT_TIME_ZONE_OPERAND = _RE.compile(
+    rf"(?:{_sub_base()}|(?<![\w.`])\d+(?:\.\d+)?)(?:\s*\[[^\[\]]*\])*"
+)
+_CAST_ARROW = re.compile(r"\s*::\s*")
+
+
+def _at_time_zone(sql: str) -> str:
+    """``expr AT TIME ZONE 'z'`` (PG; data-types.rst): a WITH-tz operand
+    renders as z-local wall time; a WITHOUT-tz operand is a wall clock
+    INTERPRETED in z -> UTC instant (direction split like timezone();
+    tz-ness detected textually by the *_tz naming or an explicit cast
+    spelling). The operand is a name, call, parenthesised group, number
+    or typed literal with its subscripts and the ``::type`` chain after
+    it, which binds tighter than AT TIME ZONE; the chain stays for the
+    ``::`` pass to rewrite."""
+    if not _AT_TIME_ZONE.search(sql):
+        return sql
+    pos = 0
+    while m := _AT_TIME_ZONE_OPERAND.search(sql, pos):
+        start, end = m.start(), m.end()
+        while (c := _CAST_ARROW.match(sql, end)) and (read := parse_type(sql, c.end())):
+            end = read[1]
+        z = _AT_TIME_ZONE.match(sql, end)
+        if z is None:
+            pos = start + 1
+            continue
+        if re.fullmatch(r"__LIT_\d+__", m.group(0)) and (typed := _literal_type(sql, start)):
+            start = typed[0]
+        operand = sql[start:end]
+        fn = "from_utc_timestamp" if _zoned(operand) else "to_utc_timestamp"
+        # a chained AT TIME ZONE takes this call as its operand
+        sql = f"{sql[:start]}{fn}(CAST({operand} AS TIMESTAMP), {z.group(1)}){sql[z.end():]}"
+        pos = start
+    return sql
 
 
 _LIT_CAST = re.compile(r"__LIT_(\d+)__\s*::\s*|\bCAST\s*\(\s*__LIT_(\d+)__\s+AS\s+", re.I)
@@ -3800,25 +3845,10 @@ def rewrite(
             sql,
         )
 
+    # before the typed literals, whose CAST drops a literal's zone
+    sql = _at_time_zone(sql)
+
     sql = _typed_literals(sql)
-
-    # expr AT TIME ZONE 'z' (PG; data-types.rst): a WITH-tz operand
-    # renders as z-local wall time; a WITHOUT-tz operand is a wall
-    # clock INTERPRETED in z -> UTC instant (direction split like
-    # timezone(); tz-ness detected textually by the *_tz naming or an
-    # explicit cast spelling)
-    def _at_time_zone(m: re.Match) -> str:
-        operand, zone = m.group(1), m.group(2)
-        if _zoned(operand):
-            return f"from_utc_timestamp(CAST({operand} AS TIMESTAMP), {zone})"
-        return f"to_utc_timestamp(CAST({operand} AS TIMESTAMP), {zone})"
-
-    sql = re.sub(
-        r"((?:[\w.`\]]+|\([^()]*\)))\s+AT\s+TIME\s+ZONE\s+(__LIT_\d+__)",
-        _at_time_zone,
-        sql,
-        flags=re.IGNORECASE,
-    )
 
     sql = _array_literal_casts(sql, literals)
 

@@ -36,7 +36,8 @@ from pyspark.sql import functions as F
 from crate_spark.admin_sql import _parse_with, check_privileges
 from crate_spark.datatypes import read_type, show_type, spark_type
 from crate_spark.dialect import (
-    add_token, mask, rewrite, rewrite_sys_columns, split_args, unmask,
+    add_token, find_close, mask, rewrite, rewrite_sys_columns, split_args,
+    string_value, unmask,
 )
 from crate_spark.dml import hold, serving
 from crate_spark.session import (
@@ -1533,16 +1534,21 @@ class CrateSession:
         pandas Series (Arrow-batched, ~10-100x faster — the right
         choice at scale when a built-in genuinely can't express it).
         """
-        m = st.match(
+        head = st.match(
             r"CREATE\s+(OR\s+REPLACE\s+)?FUNCTION\s+"
-            r"((?:(?:[\w]+|\"[^\"]+\")\.)?(?:[\w]+|\"[^\"]+\"))\s*"
-            r"\(((?:[^()]|\([^()]*\))*)\)\s*"
-            r"RETURNS\s+(.+?)\s+LANGUAGE\s+(PYTHON|PANDAS|JAVASCRIPT)\s+"
-            r"AS\s+'(.*)'\s*$"
+            r"((?:(?:[\w]+|\"[^\"]+\")\.)?(?:[\w]+|\"[^\"]+\"))\s*\(",
+            masked=True,
         )
-        schema, _, name = m.group(2).rpartition(".")
-        args, ret_type, language = m.group(3), m.group(4).strip(), m.group(5).upper()
-        body, or_replace = m.group(6).replace("''", "'"), bool(m.group(1))
+        args, end = _arg_list(st, head.end() - 1)
+        m = st.match(
+            r"\s*RETURNS\s+(.+?)\s+LANGUAGE\s+(PYTHON|PANDAS|JAVASCRIPT)\s+"
+            r"AS\s+__LIT_(\d+)__\s*$",
+            masked=True, pos=end,
+        )
+        schema, _, name = head.group(2).rpartition(".")
+        ret_type, language = m.group(1).strip(), m.group(2).upper()
+        body = string_value(st.literals[int(m.group(3))])
+        or_replace = bool(head.group(1))
         schema = (schema.strip('"') or self._search_path()[0]).lower()
         if schema in ("sys", "information_schema"):
             # user-defined-functions.rst: pg_catalog is allowed for PG
@@ -1710,23 +1716,28 @@ class CrateSession:
                 )
             # numeric returns into a timestamp-typed function are UTC
             # seconds, like the reference's double->timestamp cast
-            # (user-defined-functions.rst "Working with NUMBERS")
+            # (user-defined-functions.rst "Working with NUMBERS"); into
+            # a numeric-typed one they are decimals (a DecimalType UDF
+            # answers NULL for a float), NULL when not finite
             _ts_ret = ret_type.startswith("timestamp")
+            _dec_ret = ret_type.startswith("decimal")
 
             def entry_fn(*vals, _bf=body_fn, _co=coercers):
                 r = _bf(*[
                     None if v is None else c(v) for c, v in zip(_co, vals)
                 ])
-                if (
-                    _ts_ret
-                    and isinstance(r, (int, float))
-                    and not isinstance(r, bool)
-                ):
-                    import datetime as _dt
+                if isinstance(r, (int, float)) and not isinstance(r, bool):
+                    if _ts_ret:
+                        import datetime as _dt
 
-                    return _dt.datetime.fromtimestamp(
-                        float(r), tz=_dt.timezone.utc
-                    )
+                        return _dt.datetime.fromtimestamp(
+                            float(r), tz=_dt.timezone.utc
+                        )
+                    if _dec_ret:
+                        import decimal as _dec
+
+                        finite = isinstance(r, int) or _math.isfinite(r)
+                        return _dec.Decimal(str(r)) if finite else None
                 return r
 
         key = (schema, name.strip('`"').lower())
@@ -1806,10 +1817,14 @@ class CrateSession:
         overload; without one, drop every overload of the name. The
         mangled registration means Spark builtins are never touched."""
         m = st.match(
-            r"DROP\s+FUNCTION\s+(?:(IF\s+EXISTS)\s+)?((?:[\w]+\.)?[\w]+)\s*"
-            r"(?:\(((?:[^()]|\([^()]*\))*)\))?\s*$"
+            r"DROP\s+FUNCTION\s+(?:(IF\s+EXISTS)\s+)?((?:[\w]+\.)?[\w]+)\s*",
+            masked=True,
         )
-        qname, argspec, if_exists = m.group(2), m.group(3), bool(m.group(1))
+        argspec, end = None, m.end()
+        if st.masked.startswith("(", end):
+            argspec, end = _arg_list(st, end)
+        st.match(r"\s*$", masked=True, pos=end)
+        qname, if_exists = m.group(2), bool(m.group(1))
         schema, _, name = qname.rpartition(".")
         schema = (schema or self._search_path()[0]).lower()
         key = (schema, name.strip('`"').lower())
@@ -1931,6 +1946,16 @@ def _parse_global_assignments(body: str) -> list[tuple[str, object]]:
         else:
             out.append((k, _parse_setting_value(v)))
     return out
+
+
+def _arg_list(st: Statement, open_idx: int) -> tuple[str, int]:
+    """The argument list opening at ``open_idx`` of the masked statement
+    (types nest to any depth: ``array(numeric(10,2))``) and the index
+    after its closing parenthesis."""
+    close = find_close(st.masked, open_idx)
+    if close < 0:
+        raise st.unsupported()
+    return st.masked[open_idx + 1 : close], close + 1
 
 
 def _sig_item_type(item: str) -> str:

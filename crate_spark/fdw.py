@@ -261,7 +261,7 @@ def create_foreign_table(session, st: Statement):
         pos = close + 1
     m = re.match(r"\s*SERVER\s+\"?(\w+)\"?(?:\s+OPTIONS\s*\((.*)\))?\s*$", text[pos:], re.I | re.S)
     if m is None:
-        raise ValueError(f"unsupported CREATE statement: {st.sql[:80]}")
+        raise st.unsupported()
     created = session.fdw.create_table(
         name, m.group(1), schema_ddl, parse_options(m.group(2) and unmask(m.group(2), st.literals)),
         if_not_exists=bool(head.group(1)),

@@ -472,6 +472,8 @@ def streaming_rollup_events(spark, sf_dir):
     # it explicitly instead of inheriting a batch-sized default.
     # (r11 A/B: the JVM windowed agg is state-store-bound, not
     # compute-bound — 16 beat both 4 (0.95 s) and 32 (1.28 s).)
+    # The query clones the session's conf when start() builds it, so
+    # the scope closes before the run and no other thread sees the 16.
     with conf_scope(spark, {"spark.sql.shuffle.partitions": "16"}):
         q = (
             agg.writeStream.format("memory")
@@ -480,7 +482,7 @@ def streaming_rollup_events(spark, sf_dir):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+    q.awaitTermination(120)
     return spark.sql(f"SELECT * FROM {name}")
 
 
@@ -747,6 +749,7 @@ def streaming_sessionize_events(spark, sf_dir):
         "spark.sql.streaming.noDataMicroBatches.enabled": "true",
     }
     try:
+        # closed once start() has cloned the conf (rollup twin)
         with conf_scope(spark, overrides):
             q = (
                 sessions.writeStream.format("memory")
@@ -755,7 +758,7 @@ def streaming_sessionize_events(spark, sf_dir):
                 .trigger(availableNow=True)
                 .start()
             )
-            q.awaitTermination(300)
+        q.awaitTermination(300)
     finally:
         shutil.rmtree(stage, ignore_errors=True)
     # NTZ timestamps deserialize naively, like DuckDB's (rollup twin)

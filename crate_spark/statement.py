@@ -145,14 +145,19 @@ class Statement:
     reply: str
     handler: str
 
-    def match(self, pattern: str, required: bool = True, masked: bool = False):
-        """``pattern`` matched case-blind at the start of the statement,
-        or of its ``masked`` text; a statement whose clauses its handler
+    def match(self, pattern: str, required: bool = True, masked: bool = False, pos: int = 0):
+        """``pattern`` matched case-blind at ``pos`` of the statement, or
+        of its ``masked`` text; a statement whose clauses its handler
         cannot read is an error."""
-        m = re.match(pattern, self.masked if masked else self.sql, re.IGNORECASE | re.DOTALL)
+        text = self.masked if masked else self.sql
+        m = re.compile(pattern, re.IGNORECASE | re.DOTALL).match(text, pos)
         if m is None and required:
-            raise ValueError(f"unsupported {self.verb} statement: {self.sql[:80]}")
+            raise self.unsupported()
         return m
+
+    def unsupported(self) -> ValueError:
+        """The error for a statement whose clauses its handler cannot read."""
+        return ValueError(f"unsupported {self.verb} statement: {self.sql[:80]}")
 
     def run(self, session):
         """Answer the statement with its handler."""

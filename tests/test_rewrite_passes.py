@@ -36,6 +36,19 @@ def test_at_time_zone(crate):
     ) == [("2024-01-01 11:00:00", "2024-01-01 13:00:00")]
 
 
+def test_at_time_zone_takes_the_whole_cast_chain(crate):
+    """``::`` binds tighter than AT TIME ZONE: the operand is the cast
+    chain, and its last spelling says whether the operand is zoned; a
+    typed literal's spelling does the same."""
+    assert _rows(
+        crate,
+        "SELECT CAST('2024-01-01 12:00:00'::timestamp AT TIME ZONE 'Europe/Berlin' AS STRING) AS a, "
+        "CAST('2024-01-01 12:00:00'::text::timestamptz AT TIME ZONE 'Europe/Berlin' AS STRING) AS b, "
+        "CAST(CAST('2024-01-01 12:00:00' AS TIMESTAMP)::timestamp AT TIME ZONE 'UTC' AS STRING) AS c, "
+        "CAST(timestamptz '2024-01-01 12:00:00+00' AT TIME ZONE 'Europe/Berlin' AS STRING) AS d",
+    ) == [("2024-01-01 11:00:00", "2024-01-01 13:00:00", "2024-01-01 12:00:00", "2024-01-01 13:00:00")]
+
+
 def test_schema_qualified_table_function(crate):
     assert sorted(_rows(crate, "SELECT * FROM pg_catalog.generate_series(1, 3)")) == [
         (1,), (2,), (3,),

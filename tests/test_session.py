@@ -1294,6 +1294,33 @@ def test_create_function_javascript(spark, tmp_path):
     s.execute("DROP FUNCTION IF EXISTS never_created")
 
 
+def test_create_function_numeric_return_and_nested_argument_types(spark, tmp_path):
+    """A JS UDF declared ``RETURNS numeric`` answers a decimal, not NULL;
+    CREATE and DROP FUNCTION read an argument type nested to any depth."""
+    from decimal import Decimal
+
+    import pytest as _pytest
+
+    from crate_spark.engine import CrateSession
+
+    s = CrateSession(spark, None, storage_dir=str(tmp_path))
+    s.execute(
+        "CREATE FUNCTION half(a double precision) RETURNS numeric "
+        "LANGUAGE JAVASCRIPT AS 'function half(a) { return a / 2; }'"
+    )
+    r = s.execute("SELECT half(3) AS v, pg_typeof(half(3)) AS t").collect()[0]
+    assert (r["v"], r["t"]) == (Decimal("1.5"), "numeric")
+    s.execute("DROP FUNCTION half(double precision)")
+    s.execute(
+        "CREATE FUNCTION f(a array(numeric(10,2))) RETURNS integer "
+        "LANGUAGE JAVASCRIPT AS 'function f(a) { return a.length; }'"
+    )
+    assert s.execute("SELECT f([1.5, 2.25, 3]) AS n").collect()[0][0] == 3
+    s.execute("DROP FUNCTION f(array(numeric(10,2)))")
+    with _pytest.raises(Exception):
+        s.execute("SELECT f([1.5])").collect()
+
+
 def test_occ_system_columns(session):
     """_version/_seq_no/_primary_term (SysColumns.java:50-56, occ.rst):
     constant OCC handshake values — mutations rewrite parquet content,

@@ -5,8 +5,15 @@ rollup."""
 from __future__ import annotations
 
 import json
+import threading
 
+import pytest
+from pyspark.sql.streaming.query import StreamingQuery
+from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+from crate_spark.queries import load_all
 from crate_spark.streaming import stream_ingest, stream_windowed_rollup
+from tests.conftest import assert_matches_oracle
 
 SCHEMA = "id bigint, ts timestamp_ntz, value double"
 
@@ -237,3 +244,54 @@ def test_session_frame_bounds_read_as_the_same_instants(spark):
         .selectExpr("unix_micros(session_start) AS s", "unix_micros(session_end) AS e")
     )
     assert sorted(tuple(r) for r in out.collect()) == sorted(zip(starts, ends))
+
+
+# -- the registry streams scope their shuffle-partition override -------------
+@pytest.mark.parametrize(
+    "name", ["streaming_rollup_events", "streaming_sessionize_events"]
+)
+def test_stream_override_does_not_leak_while_running(
+    spark, duck, monkeypatch, name
+):
+    """The stream clones the session's conf when ``start()`` builds it:
+    while ``awaitTermination`` runs, a second thread planning on the same
+    session reads the session's own shuffle partitions, and the stream
+    still runs its state store on 16."""
+    own = spark.conf.get("spark.sql.shuffle.partitions")
+    assert own != "16"
+    started, seen, queries = threading.Event(), [], []
+
+    def reader(done):
+        started.set()
+        while True:
+            seen.append(spark.conf.get("spark.sql.shuffle.partitions"))
+            if done.is_set():
+                return
+            done.wait(0.01)
+
+    real_start, real_await = DataStreamWriter.start, StreamingQuery.awaitTermination
+
+    def start(self, *a, **kw):
+        q = real_start(self, *a, **kw)
+        queries.append(q)
+        return q
+
+    def await_termination(self, *a, **kw):
+        done = threading.Event()
+        t = threading.Thread(target=reader, args=(done,))
+        t.start()
+        started.wait()
+        try:
+            return real_await(self, *a, **kw)
+        finally:
+            done.set()
+            t.join()
+
+    monkeypatch.setattr(DataStreamWriter, "start", start)
+    monkeypatch.setattr(StreamingQuery, "awaitTermination", await_termination)
+    spec = load_all()[name]
+    assert_matches_oracle(spark, duck, spec.fn, spec.oracle)
+    assert seen and set(seen) == {own}
+    [q] = queries
+    assert q.lastProgress["stateOperators"][0]["numShufflePartitions"] == 16
+    assert spark.conf.get("spark.sql.shuffle.partitions") == own
