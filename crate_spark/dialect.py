@@ -15,6 +15,19 @@ Every text pass that runs before Spark and must skip quoted text
 (parameter binding, the DML router, UDF resolution, the system-column
 and system-view scans, ``rewrite``) goes through this pair.
 
+Brackets are matched by the recursive patterns ``_paren`` (a balanced
+group at any depth) and ``_body`` (text whose groups balance), by
+``find_close`` (the close of one group), ``split_args`` (top-level
+commas; parentheses, brackets and braces nest) and ``blank_groups``
+(depth-0 text, for searches that must skip nested clauses). No other
+code in the front end counts depth or matches one nesting level.
+
+A call that maps to a Spark expression, or that answers a plan-time
+constant (``version()``, ``current_database()``,
+``has_table_privilege(…)``, …), is a row of ``_FN_TEMPLATES``: one
+scan (``_rewrite_crate_fns``) finds each call with its arguments at
+any depth, with or without a ``pg_catalog.`` prefix.
+
 Rewrites:
 - ``"name"``                -> one backticked Spark identifier
 - ``expr::type``            -> ``CAST(expr AS type)`` (identifier,
@@ -45,8 +58,8 @@ Rewrites:
   default (ASC -> NULLS LAST, DESC -> NULLS FIRST) — Spark's default
   is the opposite (SURVEY.md §2.6).
 
-Deliberately NOT handled here: ON CONFLICT (DML layer), MATCH
-(operators/fulltext), CREATE ANALYZER (out of scope).
+Deliberately NOT handled here: ON CONFLICT (DML layer), CREATE
+ANALYZER (out of scope).
 """
 
 from __future__ import annotations
@@ -327,6 +340,46 @@ _CONCAT_OP_RE = _RE.compile(rf"(?P<lhs>{_operand()})\s*\|\|\s*(?P<rhs>{_operand(
 _POW_OP_RE = _RE.compile(rf"(?P<lhs>{_operand()})\s*\^\s*(?P<rhs>{_operand()})")
 _XOR_OP_RE = _RE.compile(rf"(?P<lhs>{_operand()})\s*#\s*(?P<rhs>{_operand()})")
 _OVERLAP_OP_RE = _RE.compile(rf"(?P<lhs>{_operand()})\s*&&\s*(?P<rhs>{_operand()})")
+#: a named WINDOW clause (``WINDOW w AS (…)[, v AS (…)]``), one of its
+#: definitions, and an ``OVER (w …)`` that names (and may extend) one
+_WINDOW_CLAUSE_RE = _RE.compile(
+    rf"\bWINDOW\s+\w+\s+AS\s*{_paren()}(?:\s*,\s*\w+\s+AS\s*{_paren()})*", re.IGNORECASE
+)
+_WINDOW_DEF_RE = _RE.compile(rf"(?P<name>\w+)\s+AS\s*\((?P<spec>{_body()}*)\)", re.IGNORECASE)
+_OVER_EXTEND_RE = _RE.compile(
+    rf"\bOVER\s*\(\s*(?P<name>\w+)\s*(?P<extra>{_body()}*)\)", re.IGNORECASE
+)
+#: ``(_pg_expandarray(arr)).field``
+_EXPAND_FIELD_RE = _RE.compile(
+    rf"\(\s*_pg_expandarray\s*\((?P<arr>{_body()}*)\)\s*\)\s*\.\s*(?P<field>\w+)", re.IGNORECASE
+)
+#: ``MATCH(col | concat_ws(…), 'terms') [USING mode [WITH (options)]]``
+_MATCH_RE = _RE.compile(
+    rf"\bMATCH\s*\(\s*(?P<col>{_IDENT}|concat_ws\s*{_paren()})\s*,\s*(?P<query>__LIT_\d+__)\s*\)"
+    rf"(?:\s+USING\s+(?P<mode>\w+))?(?:\s+WITH\s*\((?P<opts>[^)]*)\))?",
+    re.IGNORECASE,
+)
+#: ``agg(arg) FILTER (WHERE cond) OVER``: an aggregate used as a window
+#: function with a filter
+_WINDOW_FILTER_RE = _RE.compile(
+    rf"\b(?P<fn>{_IDENT})\s*\(\s*(?P<arg>\*|{_body()}*?)\s*\)"
+    rf"\s*FILTER\s*\(\s*WHERE\s+(?P<cond>{_body()}+?)\s*\)(?P<over>\s*OVER\b)",
+    re.IGNORECASE,
+)
+#: a ranking or offset window function over a window with a PARTITION
+#: BY and no ORDER BY, up to the window's closing paren
+_UNORDERED_WINDOW_RE = _RE.compile(
+    rf"(?P<head>\b(?:lag|lead|row_number|rank|dense_rank|ntile)\s*{_paren()}\s*"
+    rf"OVER\s*\(\s*PARTITION\s+BY\s+(?:(?!\bORDER\b)[^()]|{_paren()})*)\)",
+    re.IGNORECASE,
+)
+#: ``pattern ESCAPE 'c'``: the pattern is a literal, a call, a name or a
+#: parenthesised group
+_ESCAPE_RE = _RE.compile(
+    rf"(?P<pat>__LIT_\d+__|(?<![\w.`\]])(?!{_KW}\s*\()[\w.`\]]+\s*{_paren()}|[\w.`\]]+|{_paren()})"
+    r"\s+ESCAPE\s+__LIT_(?P<esc>\d+)__",
+    re.IGNORECASE,
+)
 #: ``schema.name`` of a system relation; either part may be
 #: backticked (double-quoted identifiers are backticked by then), but
 #: not the whole: `sys.jobs` is one name
@@ -337,16 +390,18 @@ _SCHEMA_RE = re.compile(
 
 
 # ---------------------------------------------------------------------------
-# crate-only scalar function names -> Spark SQL expression templates
+# the bracket readers: the only code in the front end that matches
+# brackets (with the recursive ``_paren``/``_body`` patterns above)
 # ---------------------------------------------------------------------------
 def split_args(s: str) -> list[str]:
-    """Split at top-level commas: parentheses and brackets nest, so an
-    array literal's commas stay inside its item (literals are masked)."""
+    """Split at top-level commas: parentheses, brackets and braces nest,
+    so an array or object literal's commas stay inside its item
+    (literals are masked)."""
     parts, depth, cur = [], 0, []
     for ch in s:
-        if ch in "([":
+        if ch in "([{":
             depth += 1
-        elif ch in ")]":
+        elif ch in ")]}":
             depth -= 1
         if ch == "," and depth == 0:
             parts.append("".join(cur).strip())
@@ -357,6 +412,46 @@ def split_args(s: str) -> list[str]:
     if tail:
         parts.append(tail)
     return parts
+
+
+def find_close(s: str, open_idx: int) -> int:
+    """Index of the ')' matching s[open_idx] == '('; -1 if unbalanced."""
+    depth = 0
+    for i in range(open_idx, len(s)):
+        if s[i] == "(":
+            depth += 1
+        elif s[i] == ")":
+            depth -= 1
+            if depth == 0:
+                return i
+    return -1
+
+
+_GROUP_RE = _RE.compile(_paren())
+
+
+def blank_groups(s: str) -> str:
+    """``s`` with every balanced parenthesised group blanked to spaces,
+    at the same length: a search of it finds only depth-0 text, at the
+    positions it has in ``s``."""
+    return _GROUP_RE.sub(lambda m: " " * len(m.group(0)), s)
+
+
+# ---------------------------------------------------------------------------
+# crate-only scalar function names -> Spark SQL expression templates
+# ---------------------------------------------------------------------------
+def _str_token(lits: list[str], value: str) -> str:
+    """``value`` as one more string-literal token."""
+    return add_token(lits, "'" + value.replace("'", "''") + "'")
+
+
+def _current_schemas_sql(a: list[str], lits: list[str]) -> str | None:
+    """CurrentSchemasFunction: the search path, led by pg_catalog when
+    the argument is true."""
+    if len(a) != 1 or a[0].lower() not in ("true", "false"):
+        return None
+    names = ["pg_catalog", "doc"] if a[0].lower() == "true" else ["doc"]
+    return "array(" + ", ".join(_str_token(lits, n) for n in names) + ")"
 
 
 def _not_null(a: str) -> str:
@@ -757,6 +852,28 @@ _FN_TEMPLATES: dict = {
     # sleep inside a distributed expression would stall every task;
     # PG's void return renders as ''
     "pg_sleep": lambda a, lits: "''" if len(a) == 1 else None,
+    # session-information and pg-compat tooling scalars
+    # (systeminformation/*.java): a single-user, single-catalog engine
+    # answers them with plan-time constants, as the reference resolves
+    # them for the default 'crate' superuser
+    "current_schemas": lambda a, lits: _current_schemas_sql(a, lits),
+    "current_database": lambda a, lits: _str_token(lits, "crate") if not a else None,
+    # the reference's shape "CrateDB <v> (built ..., <os>, <vm>)"
+    # (VersionFunction.java formatVersion; the engine's table-version
+    # stamp is 6.5.0): Spark's own version() answers "<spark> <sha>"
+    "version": lambda a, lits: _str_token(lits, _engine_version_string()) if not a else None,
+    "pg_backend_pid": lambda a, lits: "0" if not a else None,
+    # PgPostmasterStartTime.java: the node's start instant, here the
+    # process start, constant for the session's lifetime
+    "pg_postmaster_start_time": lambda a, lits: (
+        f"TIMESTAMP {_str_token(lits, _PROCESS_START)}" if not a else None
+    ),
+    **dict.fromkeys(
+        [f"has_{o}_privilege" for o in ("table", "schema", "database", "function", "column")]
+        + ["pg_table_is_visible", "pg_function_is_visible"],
+        lambda a, lits: "TRUE",
+    ),
+    **dict.fromkeys(["col_description", "obj_description"], lambda a, lits: "CAST(NULL AS STRING)"),
 }
 
 
@@ -1801,8 +1918,7 @@ def _map_fn_sql(a: list[str], lits: list[str]) -> str | None:
                 raw = k
             else:
                 return None
-        key_lit = add_token(lits, "'" + raw.replace("'", "''") + "'")
-        parts.append(f"{key_lit}, {a[i + 1]}")
+        parts.append(f"{_str_token(lits, raw)}, {a[i + 1]}")
     return "to_json(named_struct(" + ", ".join(parts) + "))"
 
 
@@ -1840,10 +1956,11 @@ def _age_sql(a: list[str]) -> str | None:
         f"'days', {days}, 'micros', {rem}))"
     )
 
-#: optional schema qualifier — the reference registers these under
-#: pg_catalog/information_schema and the docs spell them qualified
+#: optional schema qualifier, plain or quoted — the reference registers
+#: these under pg_catalog/information_schema and the docs spell them
+#: qualified
 _FN_CALL_RE = re.compile(
-    r"(?:\b(?:pg_catalog|information_schema)\s*\.\s*)?"
+    r"(?:`?\b(?:pg_catalog|information_schema)`?\s*\.\s*)?"
     r"\b(" + "|".join(_FN_TEMPLATES) + r")\s*\(",
     re.IGNORECASE,
 )
@@ -1929,7 +2046,7 @@ def _substring_from_for_commas(sql: str) -> str:
     Spark's builtin unchanged. Top-level keywords only — a FROM inside
     a nested call is someone else's clause."""
     pat = re.compile(r"\bsubstr(?:ing)?\s*\(", re.IGNORECASE)
-    kw = re.compile(r"\s+(?:FROM|FOR)\s+", re.IGNORECASE)
+    kw = re.compile(r"\s+(FROM|FOR)\s+", re.IGNORECASE)
     out, i = [], 0
     while True:
         m = pat.search(sql, i)
@@ -1942,27 +2059,10 @@ def _substring_from_for_commas(sql: str) -> str:
             return "".join(out)
         inner = _substring_from_for_commas(sql[m.end() : close])
         # replace top-level FROM/FOR keywords with commas
-        pieces, j, d = [], 0, 0
-        k = 0
-        while k < len(inner):
-            ch = inner[k]
-            if ch in "([":
-                d += 1
-            elif ch in ")]":
-                d -= 1
-            elif d == 0:
-                km = kw.match(inner, k)
-                if km:
-                    pieces.append(inner[j:k])
-                    pieces.append(", ")
-                    j = k = km.end()
-                    continue
-            k += 1
-        pieces.append(inner[j:])
+        top = blank_groups(inner)
         out.append(sql[i : m.end()])
-        out.append("".join(pieces))
+        out.append(kw.sub(lambda k: ", " if top[k.start(1)] != " " else k.group(0), inner))
         i = close
-    return "".join(out)
 
 
 def _substring_regex_sql(a: list[str], lits: list[str]) -> str | None:
@@ -2084,20 +2184,14 @@ def _rewrite_crate_fns(sql: str, literals: list[str]) -> str:
     m = _FN_CALL_RE.search(sql)
     if not m:
         return sql
-    depth, i = 1, m.end()
-    while i < len(sql) and depth:
-        if sql[i] == "(":
-            depth += 1
-        elif sql[i] == ")":
-            depth -= 1
-        i += 1
-    if depth:
+    close = find_close(sql, m.end() - 1)
+    if close < 0:
         return sql  # unbalanced parens: bail untouched
-    inner = _rewrite_crate_fns(sql[m.end() : i - 1], literals)
+    inner = _rewrite_crate_fns(sql[m.end() : close], literals)
     out = _FN_TEMPLATES[m.group(1).lower()](split_args(inner), literals)
     if out is None:  # unsupported arity: keep the call, args rewritten
         out = sql[m.start() : m.end()] + inner + ")"
-    return sql[: m.start()] + out + _rewrite_crate_fns(sql[i:], literals)
+    return sql[: m.start()] + out + _rewrite_crate_fns(sql[close + 1 :], literals)
 #: pg_typeof(expr) -> Spark's typeof(expr) (type-name spellings differ:
 #: Spark says 'bigint' where PG says 'int8' — documented divergence)
 #: the schema-qualified spelling arrives as pg_catalog_pg_typeof
@@ -2107,65 +2201,39 @@ _PG_TYPEOF_RE = re.compile(
 )
 
 
+#: where an ORDER BY clause ends at depth 0: the close of its group, a
+#: later clause, or a window frame (ROWS/RANGE/GROUPS)
+_ORDER_BY_END = re.compile(
+    r"\)|\b(?:LIMIT|OFFSET|FETCH|UNION|INTERSECT|EXCEPT|WINDOW|ROWS|RANGE|GROUPS)\b",
+    re.IGNORECASE,
+)
+
+
+def _with_nulls_order(item: str) -> str:
+    """An ORDER BY item with PG's default null order made explicit."""
+    if not item or re.search(r"\bNULLS\s+(FIRST|LAST)\b", item, re.IGNORECASE):
+        return item
+    if re.search(r"\bDESC\b\s*$", item, re.IGNORECASE):
+        return item + " NULLS FIRST"
+    return item + " NULLS LAST"
+
+
 def _rewrite_order_by(sql: str) -> str:
     """Inject PG default null ordering into ORDER BY items that don't
-    specify one. Tracks paren depth so commas inside function calls
-    don't split items; stops at LIMIT/OFFSET/closing paren."""
+    specify one. Commas inside function calls don't split items; the
+    clause stops at LIMIT/OFFSET/a window frame/its closing paren."""
     out = []
     i = 0
-    upper = sql.upper()
-    while True:
-        m = re.search(r"\bORDER\s+BY\b", upper[i:])
-        if not m:
-            out.append(sql[i:])
-            break
+    while m := re.search(r"\bORDER\s+BY\b", sql[i:], re.IGNORECASE):
         start = i + m.end()
-        out.append(sql[i : start])
-        # find the end of the ORDER BY clause at depth 0
-        depth = 0
-        j = start
-        while j < len(sql):
-            c = sql[j]
-            if c == "(":
-                depth += 1
-            elif c == ")":
-                if depth == 0:
-                    break
-                depth -= 1
-            elif depth == 0:
-                tail = upper[j:]
-                if re.match(r"\b(LIMIT|OFFSET|FETCH|UNION|INTERSECT|EXCEPT|WINDOW)\b", tail):
-                    break
-                # ROWS/RANGE terminate a window ORDER BY
-                if re.match(r"\b(ROWS|RANGE|GROUPS)\b", tail):
-                    break
-            j += 1
-        clause = sql[start:j]
-        items, buf, d = [], "", 0
-        for ch in clause:
-            if ch == "(":
-                d += 1
-            elif ch == ")":
-                d -= 1
-            if ch == "," and d == 0:
-                items.append(buf)
-                buf = ""
-            else:
-                buf += ch
-        items.append(buf)
-        fixed = []
-        for item in items:
-            s = item.strip()
-            if not s or re.search(r"\bNULLS\s+(FIRST|LAST)\b", s, re.IGNORECASE):
-                fixed.append(item)
-            elif re.search(r"\bDESC\b\s*$", s, re.IGNORECASE):
-                fixed.append(item.rstrip() + " NULLS FIRST")
-            else:
-                fixed.append(item.rstrip() + " NULLS LAST")
-        out.append(" " + ", ".join(f.strip() for f in fixed))
+        out.append(sql[i:start])
+        end = _ORDER_BY_END.search(blank_groups(sql[start:]))
+        j = start + end.start() if end else len(sql)
+        out.append(" " + ", ".join(_with_nulls_order(x) for x in split_args(sql[start:j])))
         if j < len(sql):
             out.append(" " if sql[j] not in ") " else "")
         i = j
+    out.append(sql[i:])
     return "".join(out)
 
 
@@ -2181,20 +2249,8 @@ def _obj_lit_sub(m: re.Match) -> str:
     marker becomes named_struct, with to_json() wrapped around only the
     OUTERMOST struct so nested objects stay nested (the engine's
     object representation is a JSON string — one encoding, at the top)."""
-    entries, buf, depth = [], "", 0
-    for ch in m.group(1):
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            entries.append(buf)
-            buf = ""
-        else:
-            buf += ch
-    entries.append(buf)
     parts = []
-    for e in entries:
+    for e in split_args(m.group(1)):
         km = re.match(r'\s*["`]?([A-Za-z_]\w*)["`]?\s*=\s*(.*)$', e, re.DOTALL)
         if not km:
             return m.group(0)  # not an object literal — leave alone
@@ -2213,15 +2269,9 @@ def _finalize_obj_structs(sql: str) -> str:
         if j < 0:
             out.append(sql[i:])
             return "".join(out)
-        depth, k = 0, j + len(tok)
-        while k < len(sql):
-            if sql[k] == "(":
-                depth += 1
-            elif sql[k] == ")":
-                depth -= 1
-                if depth == 0:
-                    break
-            k += 1
+        k = find_close(sql, j + len(tok))
+        if k < 0:
+            k = len(sql)
         span = sql[j : k + 1].replace(tok, "named_struct")
         out.append(sql[i:j])
         out.append(f"to_json({span})")
@@ -2322,7 +2372,7 @@ def _extract_field_pat(fields: str) -> "re.Pattern":
     ANY paren nesting depth (named group ``x``)."""
     return _RE.compile(
         rf"\bEXTRACT\s*\(\s*(?:{fields})\s+FROM\s+"
-        rf"(?P<x>(?:[^()]|{_paren()})+)\)",
+        rf"(?P<x>{_body()}+)\)",
         re.IGNORECASE,
     )
 
@@ -2767,10 +2817,10 @@ def _at_time_zone(sql: str) -> str:
     renders as z-local wall time; a WITHOUT-tz operand is a wall clock
     INTERPRETED in z -> UTC instant (direction split like timezone();
     tz-ness detected textually by the *_tz naming or an explicit cast
-    spelling). The operand is a name, call, parenthesised group, number
-    or typed literal with its subscripts and the ``::type`` chain after
-    it, which binds tighter than AT TIME ZONE; the chain stays for the
-    ``::`` pass to rewrite."""
+    spelling). The operand is a name, call, parenthesised group, number,
+    typed literal or ``CASE … END`` block with its subscripts and the
+    ``::type`` chain after it, which binds tighter than AT TIME ZONE;
+    the chain stays for the ``::`` pass to rewrite."""
     if not _AT_TIME_ZONE.search(sql):
         return sql
     pos = 0
@@ -2784,6 +2834,8 @@ def _at_time_zone(sql: str) -> str:
             continue
         if re.fullmatch(r"__LIT_\d+__", m.group(0)) and (typed := _literal_type(sql, start)):
             start = typed[0]
+        elif m.group(0).upper() == "END" and (case := _open_case(sql, start)) is not None:
+            start = case
         operand = sql[start:end]
         fn = "from_utc_timestamp" if _zoned(operand) else "to_utc_timestamp"
         # a chained AT TIME ZONE takes this call as its operand
@@ -2817,19 +2869,6 @@ def _array_literal_casts(sql: str, literals: list[str]) -> str:
     return "".join(out) + sql[last:]
 
 
-def find_close(s: str, open_idx: int) -> int:
-    """Index of the ')' matching s[open_idx] == '('; -1 if unbalanced."""
-    depth = 0
-    for i in range(open_idx, len(s)):
-        if s[i] == "(":
-            depth += 1
-        elif s[i] == ")":
-            depth -= 1
-            if depth == 0:
-                return i
-    return -1
-
-
 def _rewrite_array_subquery(sql: str) -> str:
     """``ARRAY(SELECT expr FROM ... [ORDER BY o [DESC]] [LIMIT n])``
     (reference ``expression/scalar/arithmetic/ArrayFunction`` subquery
@@ -2845,37 +2884,18 @@ def _rewrite_array_subquery(sql: str) -> str:
     if close < 0:
         return sql
     inner = sql[open_idx + 1 : close]
+    top = blank_groups(inner)
     # single select expression up to the depth-0 FROM
-    depth = 0
-    from_idx = -1
-    upper = inner.upper()
-    for i, ch in enumerate(inner):
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        elif depth == 0 and upper.startswith("FROM", i) and not inner[i - 1].isalnum():
-            from_idx = i
-            break
-    if from_idx < 0:
+    fm = re.search(r"\bFROM\b", top, re.IGNORECASE)
+    if not fm:
         return sql
-    expr = re.sub(r"^\s*SELECT\s+", "", inner[:from_idx], flags=re.IGNORECASE).strip()
-    rest = inner[from_idx:]
+    expr = re.sub(r"^\s*SELECT\s+", "", inner[: fm.start()], flags=re.IGNORECASE).strip()
+    rest = inner[fm.start() :]
     # depth-0 ORDER BY / LIMIT tail
-    depth = 0
-    ob_idx = -1
-    upper_rest = rest.upper()
-    for i, ch in enumerate(rest):
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        elif depth == 0 and upper_rest.startswith("ORDER BY", i):
-            ob_idx = i
-            break
-    if ob_idx >= 0:
-        tail = rest[ob_idx + len("ORDER BY"):].strip()
-        base = rest[:ob_idx]
+    ob = re.search(r"\bORDER\s+BY\b", top[fm.start() :], re.IGNORECASE)
+    if ob:
+        tail = rest[ob.end() :].strip()
+        base = rest[: ob.start()]
         lm = re.search(r"\bLIMIT\s+(\d+)\s*$", tail, re.IGNORECASE)
         limit = None
         if lm:
@@ -2912,31 +2932,16 @@ def _rewrite_unnest_tvf(sql: str) -> str:
             return "".join(out)
         start = i + m.start()
         open_idx = i + m.end() - 1
-        depth, j = 1, open_idx + 1
-        while j < len(sql) and depth:
-            if sql[j] == "(":
-                depth += 1
-            elif sql[j] == ")":
-                depth -= 1
-            j += 1
-        if depth:  # unbalanced: bail
+        close = find_close(sql, open_idx)
+        if close < 0:  # unbalanced: bail
             out.append(sql[i:])
             return "".join(out)
-        inner = sql[open_idx + 1 : j - 1]
-        # top-level comma => multi-arg zip form
-        d = 0
-        multi = False
-        for ch in inner:
-            if ch == "(" or ch == "[":
-                d += 1
-            elif ch == ")" or ch == "]":
-                d -= 1
-            elif ch == "," and d == 0:
-                multi = True
-                break
+        inner = sql[open_idx + 1 : close]
+        # several arrays => multi-arg zip form
+        multi = len(split_args(inner)) > 1
         fn = f"inline(arrays_zip({inner}))" if multi else f"explode({inner})"
         out.append(sql[i:start] + m.group(1) + fn)
-        i = j
+        i = close + 1
     return "".join(out)
 
 
@@ -3439,18 +3444,11 @@ def _extract_over_age(sql: str) -> str:
         if not m:
             return sql
         call_start = m.end()
-        open_paren = sql.index("(", call_start)
-        depth, i = 1, open_paren + 1
-        while i < len(sql) and depth:
-            if sql[i] == "(":
-                depth += 1
-            elif sql[i] == ")":
-                depth -= 1
-            i += 1
-        if depth:
+        close = find_close(sql, sql.index("(", call_start))
+        if close < 0:
             return sql
-        S = "(" + sql[call_start:i] + ")"
-        j = i
+        S = "(" + sql[call_start : close + 1] + ")"
+        j = close + 1
         closers = (2 if m.group(2) else 1)
         ok = True
         for _ in range(closers):
@@ -3483,29 +3481,32 @@ def _extract_over_age(sql: str) -> str:
         pos = m.start()
 
 
+_CASE_OR_END = re.compile(r"\bCASE\b|\bEND\b", re.IGNORECASE)
+
+
+def _open_case(sql: str, pos: int) -> int | None:
+    """Start of the innermost CASE still open at ``pos`` (the CASE/END
+    balance read backwards from ``pos``); None outside every CASE."""
+    depth = 0
+    for m in reversed(list(_CASE_OR_END.finditer(sql, 0, pos))):
+        if m.group(0).upper() == "END":
+            depth += 1
+        elif depth == 0:
+            return m.start()
+        else:
+            depth -= 1
+    return None
+
+
 def _typed_null_case_conditions(sql: str) -> str:
     """Type bare ``WHEN NULL THEN`` conditions in searched CASEs (any
     arm, not just the first) as ``CAST(NULL AS BOOLEAN)``. The
     governing CASE of each occurrence is found by scanning backwards
     over CASE/END tokens; simple CASEs (head not followed by WHEN)
     are left alone because their comparand types the NULL."""
-    heads = [
-        (m.start(), m.group(0).upper())
-        for m in re.finditer(r"\bCASE\b|\bEND\b", sql, re.IGNORECASE)
-    ]
     spans = []
     for m in re.finditer(r"\bWHEN\s+NULL\s+THEN\b", sql, re.IGNORECASE):
-        depth, case_pos = 0, None
-        for tpos, tok in reversed(heads):
-            if tpos > m.start():
-                continue
-            if tok == "END":
-                depth += 1
-            elif depth == 0:
-                case_pos = tpos
-                break
-            else:
-                depth -= 1
+        case_pos = _open_case(sql, m.start())
         if case_pos is None:
             continue
         if re.match(r"\s+WHEN\b", sql[case_pos + 4 :], re.IGNORECASE):
@@ -3740,7 +3741,7 @@ def rewrite(
     # backslash in the pattern makes each one self-escaped — a
     # literal — which is exactly "no escape character".
     def _esc_empty(m: re.Match) -> str:
-        pat, idx = m.group(1), int(m.group(2))
+        pat, idx = m.group("pat"), int(m.group("esc"))
         if literals[idx] != "''":
             return m.group(0)
         pm = re.fullmatch(r"__LIT_(\d+)__", pat)
@@ -3752,13 +3753,7 @@ def rewrite(
         bs2 = add_token(literals, "'\\\\\\\\'")  # two backslashes
         return f"replace({pat}, {bs1}, {bs2})"
 
-    sql = re.sub(
-        r"((?:__LIT_\d+__|[\w.`\]]+|\([^()]*\)))\s+ESCAPE\s+"
-        r"__LIT_(\d+)__",
-        lambda m: _esc_empty(m),
-        sql,
-        flags=re.IGNORECASE,
-    )
+    sql = _ESCAPE_RE.sub(_esc_empty, sql)
 
     # LIKE patterns where the escape precedes an ORDINARY character:
     # the reference drops the escape and keeps the char
@@ -3873,12 +3868,8 @@ def rewrite(
     # keyword relation. New literals go through the mask so the later
     # passes keep their all-literals-masked invariant.
     if re.search(r"(?i)\bpg_get_keywords\s*\(\s*\)", sql):
-
-        def _kw_lit(v: str) -> str:
-            return add_token(literals, f"'{v}'")
-
         _kw_vals = ", ".join(
-            f"({_kw_lit(w)}, {_kw_lit(c)})" for w, c in PG_KEYWORDS
+            f"({_str_token(literals, w)}, {_str_token(literals, c)})" for w, c in PG_KEYWORDS
         )
         sql = re.sub(
             r"(?i)\bpg_get_keywords\s*\(\s*\)",
@@ -3893,16 +3884,10 @@ def rewrite(
     # definitions transitively, inline every reference, and drop the
     # WINDOW clause. Clause overrides error like the reference.
     _win_defs: dict[str, str] = {}
-    _win_clause_re = re.compile(
-        r"\bWINDOW\s+\w+\s+AS\s*\([^()]*\)(?:\s*,\s*\w+\s+AS\s*\([^()]*\))*",
-        re.IGNORECASE,
-    )
-    _wcm = _win_clause_re.search(sql)
+    _wcm = _WINDOW_CLAUSE_RE.search(sql)
     if _wcm:
-        for wm in re.finditer(
-            r"(\w+)\s+AS\s*\(([^()]*)\)", _wcm.group(0), re.IGNORECASE
-        ):
-            _win_defs[wm.group(1).lower()] = wm.group(2).strip()
+        for wm in _WINDOW_DEF_RE.finditer(_wcm.group(0)):
+            _win_defs[wm.group("name").lower()] = wm.group("spec").strip()
 
         def _win_extend(name: str, base: str, extra: str) -> str:
             for clause in ("ORDER BY", "PARTITION BY"):
@@ -3927,19 +3912,16 @@ def rewrite(
                 )
 
         def _over_ref(m: re.Match) -> str:
-            name = m.group(1)
-            extra = (m.group(2) or "").strip() if m.lastindex and m.lastindex >= 2 else ""
+            name = m.group("name")
+            extra = (m.groupdict().get("extra") or "").strip()
             d = _win_defs.get(name.lower())
             if d is None:
                 return m.group(0)
             return f"OVER ({_win_extend(name, d, extra)})"
 
-        sql = re.sub(
-            r"\bOVER\s*\(\s*(\w+)\s*([^()]*)\)", _over_ref, sql,
-            flags=re.IGNORECASE,
-        )
-        sql = re.sub(r"\bOVER\s+(\w+)\b", _over_ref, sql, flags=re.IGNORECASE)
-        sql = _win_clause_re.sub("", sql).rstrip()
+        sql = _OVER_EXTEND_RE.sub(_over_ref, sql)
+        sql = re.sub(r"\bOVER\s+(?P<name>\w+)\b", _over_ref, sql, flags=re.IGNORECASE)
+        sql = _WINDOW_CLAUSE_RE.sub("", sql).rstrip()
 
     # exponent literals just past DBL_MAX: the reference rounds to the
     # nearest double (data-types.rst:1380-1395), Spark's parser
@@ -4011,19 +3993,10 @@ def rewrite(
         if before.endswith(("/", "*", "%")):
             return m.group(0)
         # split the chain on top-level same-precedence operators
-        s, terms, ops, buf, depth = m.group(1), [], [], [], 0
-        for ch in s:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            if ch in "/*%" and depth == 0:
-                terms.append("".join(buf).strip())
-                ops.append(ch)
-                buf = []
-            else:
-                buf.append(ch)
-        terms.append("".join(buf).strip())
+        s = m.group(1)
+        cuts = [k for k, ch in enumerate(blank_groups(s)) if ch in "/*%"]
+        ops = [s[k] for k in cuts]
+        terms = [s[a + 1 : b].strip() for a, b in zip([-1] + cuts, cuts + [len(s)])]
         if "/" not in ops:
             return m.group(0)
         expr = terms[0]
@@ -4121,22 +4094,14 @@ def rewrite(
         mso = re.search(r"\bsubscript_obj\s*\(", sql, re.IGNORECASE)
         if not mso:
             break
-        depth, i = 1, mso.end()
-        while i < len(sql) and depth:
-            if sql[i] == "(":
-                depth += 1
-            elif sql[i] == ")":
-                depth -= 1
-            i += 1
-        if depth:
+        close = find_close(sql, mso.end() - 1)
+        if close < 0:
             break
-        args = split_args(sql[mso.end() : i - 1])
+        args = split_args(sql[mso.end() : close])
         if len(args) < 2:
             break
-        chain = "(" + args[0].strip() + ")" + "".join(
-            f"[{k.strip()}]" for k in args[1:]
-        )
-        sql = sql[: mso.start()] + chain + sql[i:]
+        chain = "(" + args[0] + ")" + "".join(f"[{k}]" for k in args[1:])
+        sql = sql[: mso.start()] + chain + sql[close + 1 :]
 
     prev_arr = None
     while prev_arr != sql:
@@ -4248,20 +4213,14 @@ def rewrite(
     # access over the SRF (value-expressions.rst:180): project the
     # requested field directly (.x = values, .n = 1-based indices)
     def _expand_field(m: re.Match) -> str:
-        arr, field = m.group(1), m.group(2).lower()
+        arr, field = m.group("arr"), m.group("field").lower()
         if field == "n":
             return f"explode(sequence(1, size({arr})))"
         if field == "x":
             return f"explode({arr})"
         return m.group(0)
 
-    sql = re.sub(
-        r"\(\s*(?:information_schema\.)?_pg_expandarray\s*\("
-        r"((?:[^()]|\([^()]*\))*)\)\s*\)\s*\.\s*(\w+)",
-        _expand_field,
-        sql,
-        flags=re.IGNORECASE,
-    )
+    sql = _EXPAND_FIELD_RE.sub(_expand_field, sql)
 
     # SQL-standard keyword spellings normalized before templating:
     # substring(x FROM a [FOR b]) -> comma form (routes the PG regex
@@ -4340,6 +4299,9 @@ def rewrite(
             sql = sql[:pos] + cast_type(spec) + sql[end:]
         else:
             pos = m.start()
+            # a typed literal is one operand: TIMESTAMP '…'::text
+            if re.fullmatch(r"__LIT_\d+__", expr) and (typed := _literal_type(sql, pos)):
+                pos, expr = typed[0], sql[typed[0] : m.end("expr")]
             sql = sql[:pos] + _cast_sub(expr, spec) + sql[end:]
     # explicit CAST(x AS <type>) spellings go through the same type
     # map as `::` (the reference accepts bare varchar/text/int8/...;
@@ -4539,52 +4501,9 @@ def rewrite(
             break
         mapped = crate_name_sql(f"typeof({sql[m.end():close]})")
         sql = sql[: m.start()] + mapped + sql[close + 1 :]
-    # session-information scalars (systeminformation/CurrentSchemaFunction,
-    # CurrentSchemasFunction, CurrentDatabaseFunction): single-schema
-    # catalog -> plan-time literals
-    sql = re.sub(
-        r"\b(?:pg_catalog\s*[._]\s*)?current_schemas\s*\(\s*true\s*\)", "array('pg_catalog', 'doc')", sql,
-        flags=re.IGNORECASE,
-    )
-    sql = re.sub(
-        r"\b(?:pg_catalog\s*[._]\s*)?current_schemas\s*\(\s*false\s*\)", "array('doc')", sql, flags=re.IGNORECASE
-    )
+    # CurrentSchemaFunction: single-schema catalog -> a plan-time
+    # literal (the session-information calls are _FN_TEMPLATES rows)
     sql = re.sub(r"\b(?:pg_catalog\s*[._]\s*)?current_schema\b(\s*\(\s*\))?", "'doc'", sql, flags=re.IGNORECASE)
-    sql = re.sub(r"\b(?:pg_catalog\s*[._]\s*)?current_database\s*\(\s*\)", "'crate'", sql, flags=re.IGNORECASE)
-    # version() renders the reference's shape "CrateDB <v> (built ...,
-    # <os>, <vm>)" (VersionFunction.java formatVersion; the engine's
-    # table-version stamp is 6.5.0) — Spark's own version() would
-    # answer "<spark> <sha>"
-    sql = re.sub(
-        r"\b(?:pg_catalog\s*[._]\s*)?version\s*\(\s*\)",
-        lambda m: "'" + _engine_version_string().replace("'", "''") + "'",
-        sql,
-        flags=re.IGNORECASE,
-    )
-    # pg-compat tooling scalars (systeminformation/*.java): single-user
-    # single-catalog engine -> plan-time constants, as the reference
-    # resolves them for the default 'crate' superuser
-    _call = r"\s*\((?:[^()]|\([^()]*\))*\)"
-    sql = re.sub(
-        rf"\b(?:pg_catalog\s*[._]\s*)?has_(?:table|schema|database|function|column)_privilege{_call}",
-        "TRUE", sql, flags=re.IGNORECASE,
-    )
-    sql = re.sub(
-        rf"\b(?:pg_catalog\s*[._]\s*)?pg_(?:table|function)_is_visible{_call}", "TRUE", sql, flags=re.IGNORECASE
-    )
-    sql = re.sub(rf"\b(?:pg_catalog\s*[._]\s*)?pg_backend_pid\s*\(\s*\)", "0", sql, flags=re.IGNORECASE)
-    # PgPostmasterStartTime.java: the node's start instant — the
-    # process-start analog, constant for the session's lifetime
-    sql = re.sub(
-        r"\b(?:pg_catalog\s*[._]\s*)?pg_postmaster_start_time\s*\(\s*\)",
-        f"TIMESTAMP '{_PROCESS_START}'",
-        sql,
-        flags=re.IGNORECASE,
-    )
-    sql = re.sub(
-        rf"\b(?:pg_catalog\s*[._]\s*)?(?:col|obj)_description{_call}", "CAST(NULL AS STRING)", sql,
-        flags=re.IGNORECASE,
-    )
     # session-info scalars resolve to the AUTHENTICATED session user
     # (SessionSettings; SET SESSION AUTHORIZATION switches it). The
     # bare USER keyword is PG's current_user alias.
@@ -4598,7 +4517,7 @@ def rewrite(
     )
 
     def _match_sub(m: re.Match) -> str:
-        col, lit_ref, mode, opts = m.groups()
+        col, lit_ref, mode, opts = m.group("col", "query", "mode", "opts")
         idx = int(re.match(r"__LIT_(\d+)__", lit_ref).group(1))
         terms = [t for t in literals[idx].strip("'").lower().split() if t]
         toks = (
@@ -4623,14 +4542,7 @@ def rewrite(
     # token predicate (MatchPredicate.java:85: best_fields-OR default,
     # operator='and' option, phrase mode; _score ranking needs
     # operators/fulltext.bm25_scores — handled by the engine, not here)
-    sql = re.sub(
-        rf"\bMATCH\s*\(\s*({_IDENT}|concat_ws\s*\((?:[^()]|\([^()]*\))*\))"
-        rf"\s*,\s*(__LIT_\d+__)\s*\)"
-        rf"(?:\s+USING\s+(\w+))?(?:\s+WITH\s*\(([^)]*)\))?",
-        _match_sub,
-        sql,
-        flags=re.IGNORECASE,
-    )
+    sql = _MATCH_RE.sub(_match_sub, sql)
 
     # (to_char is handled by the _FN_TEMPLATES balanced-paren path)
 
@@ -4658,28 +4570,16 @@ def rewrite(
     # Plain aggregate FILTER (no OVER) is Spark-native — the lookahead
     # leaves it alone.
     def _win_filter_sub(m: re.Match) -> str:
-        fn, arg, cond, over = m.groups()
+        fn, arg, cond, over = m.group("fn", "arg", "cond", "over")
         arg = "1" if arg.strip() == "*" else arg
         return f"{fn}(CASE WHEN {cond} THEN {arg} END){over}"
 
-    sql = re.sub(
-        rf"\b({_IDENT})\s*\(\s*(\*|(?:[^()]|\([^()]*\))*?)\s*\)"
-        rf"\s*FILTER\s*\(\s*WHERE\s+((?:[^()]|\([^()]*\))+?)\s*\)(\s*OVER\b)",
-        _win_filter_sub,
-        sql,
-        flags=re.IGNORECASE,
-    )
+    sql = _WINDOW_FILTER_RE.sub(_win_filter_sub, sql)
 
     # lag/lead over an unordered window: the reference evaluates them
     # in partition insertion order (WindowFunction docs examples);
     # Spark demands ORDER BY — a constant key keeps arrival order
-    sql = re.sub(
-        r"(\b(?:lag|lead|row_number|rank|dense_rank|ntile)\s*\((?:[^()]|\([^()]*\))*\)\s*"
-        r"OVER\s*\(\s*PARTITION\s+BY\s+(?:(?!\bORDER\b)[^()])*)\)",
-        r"\1 ORDER BY 1)",
-        sql,
-        flags=re.IGNORECASE,
-    )
+    sql = _UNORDERED_WINDOW_RE.sub(r"\g<head> ORDER BY 1)", sql)
 
     sql = _rewrite_order_by(sql)
     # PG/CrateDB string literals are standard-conforming: backslash is

@@ -30,14 +30,15 @@ import re
 import threading
 from contextlib import contextmanager
 
+import regex as _RE  # recursive patterns: a group nested to any depth
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from crate_spark.admin_sql import _parse_with, check_privileges
 from crate_spark.datatypes import read_type, show_type, spark_type
 from crate_spark.dialect import (
-    add_token, find_close, mask, rewrite, rewrite_sys_columns, split_args,
-    string_value, unmask,
+    _paren, add_token, blank_groups, find_close, mask, rewrite, rewrite_sys_columns,
+    split_args, string_value, unmask,
 )
 from crate_spark.dml import hold, serving
 from crate_spark.session import (
@@ -69,8 +70,6 @@ def _sql_literal(v) -> str:
     return "'" + str(v).replace("'", "''") + "'"
 
 
-#: an innermost parenthesised group
-_GROUP = re.compile(r"\([^()]*\)")
 #: the clauses that can follow a FROM-less select list
 _AFTER_SELECT_LIST = re.compile(
     r"\b(?:WHERE|GROUP|HAVING|WINDOW|QUALIFY|ORDER|SORT|CLUSTER|DISTRIBUTE"
@@ -89,10 +88,7 @@ def _over_one_row(sql: str) -> str:
     if not re.match(r"\s*SELECT\b", sql, re.IGNORECASE):
         return sql
     masked, tokens = mask(sql)
-    blank, prev = masked, None
-    while blank != prev:
-        prev = blank
-        blank = _GROUP.sub(lambda m: " " * len(m.group(0)), blank)
+    blank = blank_groups(masked)
     if re.search(r"\bFROM\b", blank, re.IGNORECASE):
         return sql
     clause = _AFTER_SELECT_LIST.search(blank)
@@ -899,7 +895,7 @@ class CrateSession:
         mns = props.get("max_num_segments")
         # comma-separated target list, each `ident [PARTITION (...)]`
         out_rows = []
-        for entry in re.split(r",(?![^()]*\))", m.group(1)):
+        for entry in split_args(m.group(1)):
             em = re.match(
                 r"\s*([\w.\"]+)(?:\s+PARTITION\s*\(([^)]*)\))?\s*$",
                 entry,
@@ -1263,9 +1259,9 @@ class CrateSession:
         return out
 
     # -- fulltext --------------------------------------------------------
-    _MATCH_CALL_RE = re.compile(
-        r"\bMATCH\s*\(\s*([\w.]+|concat_ws\s*\([^()]*\))\s*,\s*'([^']*)'\s*\)"
-        r"(?:\s+USING\s+\w+)?(?:\s+WITH\s*\(\s*analyzer\s*=\s*'(\w+)'\s*\))?",
+    _MATCH_CALL_RE = _RE.compile(
+        rf"\bMATCH\s*\(\s*(?P<col>[\w.]+|concat_ws\s*{_paren()})\s*,\s*'(?P<query>[^']*)'\s*\)"
+        r"(?:\s+USING\s+\w+)?(?:\s+WITH\s*\(\s*analyzer\s*=\s*'(?P<analyzer>\w+)'\s*\))?",
         re.IGNORECASE,
     )
 
@@ -1296,7 +1292,7 @@ class CrateSession:
         through to the dialect shim's standard-analyzer rewrite."""
 
         def _sub(m: re.Match) -> str:
-            col, q, analyzer = m.groups()
+            col, q, analyzer = m.group("col", "query", "analyzer")
             if not analyzer:
                 return m.group(0)
             toks_sql, tok_q = self._analyzer_tokens_sql(col, analyzer)
@@ -1363,17 +1359,10 @@ class CrateSession:
                     prefix = prefix[: cast_m.start()]
                 if re.search(r"\bNOT\s*$", prefix, re.IGNORECASE):
                     raise ValueError(err)
-                open_nots = []
-                for t in re.finditer(r"\bNOT\s*\(|\(|\)", prefix, re.IGNORECASE):
-                    tok = t.group(0)
-                    if tok.upper().startswith("NOT"):
-                        open_nots.append(True)
-                    elif tok == "(":
-                        open_nots.append(False)
-                    else:
-                        if open_nots:
-                            open_nots.pop()
-                if any(open_nots):
+                if any(
+                    find_close(prefix, t.end() - 1) < 0
+                    for t in re.finditer(r"\bNOT\s*\(", prefix, re.IGNORECASE)
+                ):
                     raise ValueError(err)
 
     def _execute_match_score(self, stmt: str) -> DataFrame:
@@ -1391,7 +1380,7 @@ class CrateSession:
         m = self._MATCH_CALL_RE.search(stmt)
         if not m:
             raise ValueError("_score requires a MATCH predicate")
-        col, query, _analyzer = m.groups()
+        col, query = m.group("col", "query")
         tbl_m = re.search(r"\bFROM\s+([\w.\"]+)", stmt, re.IGNORECASE)
         if not tbl_m:
             raise ValueError("MATCH requires a FROM table")
@@ -1446,12 +1435,12 @@ class CrateSession:
     #: knn_match(col, [v1, v2, ...], k) — literal query vector, like the
     #: reference's scalar (KnnMatch.java:52 takes a float_vector literal)
     _KNN_CALL_RE = re.compile(
-        r"\bknn_match\s*\(\s*([\w.\"]+)\s*,\s*\[([^\]]*)\]\s*,\s*(\d+)\s*\)",
+        r"\bknn_match\s*\(\s*([\w.\"]+)\s*,\s*\[([^\]]*)\]\s*,\s*(?P<k>\d+)\s*\)",
         re.IGNORECASE,
     )
     #: subquery query-vector form: knn_match(col, (SELECT ...), k)
-    _KNN_SUBQ_RE = re.compile(
-        r"\bknn_match\s*\(\s*([\w.\"]+)\s*,\s*(\((?:[^()]|\([^()]*\))*\))\s*,\s*(\d+)\s*\)",
+    _KNN_SUBQ_RE = _RE.compile(
+        rf"\bknn_match\s*\(\s*([\w.\"]+)\s*,\s*(?P<query>{_paren()})\s*,\s*(?P<k>\d+)\s*\)",
         re.IGNORECASE,
     )
 
@@ -1480,14 +1469,14 @@ class CrateSession:
                 raise ValueError(
                     "knn_match requires (column, [vector literal] | (subquery), k)"
                 )
-            rows = self._sql(m.group(2).strip()[1:-1]).limit(2).collect()
+            rows = self._sql(m.group("query")[1:-1]).limit(2).collect()
             if len(rows) != 1 or len(rows[0]) != 1:
                 raise ValueError(
                     "knn_match subquery must return exactly one vector"
                 )
             vec = [float(x) for x in rows[0][0]]
         col = m.group(1).strip('"').split(".")[-1]
-        k = int(m.group(3))
+        k = int(m.group("k"))
         tbl_m = re.search(r"\bFROM\s+([\w.\"]+)", stmt, re.IGNORECASE)
         if not tbl_m:
             raise ValueError("knn_match requires a FROM table")
@@ -1923,21 +1912,8 @@ def _parse_global_assignments(body: str) -> list[tuple[str, object]]:
     """``k = v, k2 = {a = 1, b = 2}`` -> [(k, v), (k2.a, 1), (k2.b, 2)]
     — the SET GLOBAL assignment grammar incl. nested-object values
     (runtime-config.rst:53-57)."""
-    items, depth, buf = [], 0, ""
-    for ch in body:
-        if ch in "{(":
-            depth += 1
-        elif ch in "})":
-            depth -= 1
-        if ch == "," and depth == 0:
-            items.append(buf)
-            buf = ""
-        else:
-            buf += ch
-    if buf.strip():
-        items.append(buf)
     out: list[tuple[str, object]] = []
-    for item in items:
+    for item in split_args(body):
         k, _, v = item.partition("=")
         k, v = k.strip().strip('"'), v.strip()
         if v.startswith("{") and v.endswith("}"):

@@ -155,33 +155,6 @@ def interval_sum(iv: Column | str) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# quantified comparisons (ANY / ALL over arrays)
-# ---------------------------------------------------------------------------
-def any_match(val: Column | str, arr: Column | str, op) -> Column:
-    """``val <op> ANY(arr)`` (``expression/operator/any/AnyOperator.java:56``):
-    true if op holds for some element; Kleene 3VL (NULL if no match but a
-    NULL element exists) — exactly Spark's ``exists`` HOF semantics.
-    ``op`` is a binary Column function, e.g. ``lambda v, e: v > e``."""
-    v = _col(val)
-    return F.exists(_col(arr), lambda e: op(v, e))
-
-
-def like_any(val: Column | str, patterns: Column | str) -> Column:
-    """``val LIKE ANY(patterns)`` (``AnyLikeOperator.java``)."""
-    return any_match(val, patterns, lambda v, p: v.like(p))
-
-
-def ilike_any(val: Column | str, patterns: Column | str) -> Column:
-    return any_match(val, patterns, lambda v, p: v.ilike(p))
-
-
-def not_like_any(val: Column | str, patterns: Column | str) -> Column:
-    """``val NOT LIKE ANY(patterns)`` — true if some pattern does NOT
-    match (CrateDB binds NOT into the quantified operator, not around it)."""
-    return any_match(val, patterns, lambda v, p: ~v.like(p))
-
-
-# ---------------------------------------------------------------------------
 # network
 # ---------------------------------------------------------------------------
 def ip_in_cidr(ip: Column | str, cidr: str) -> Column:

@@ -116,13 +116,18 @@ def test_literals_roundtrip_through_spark(spark, crate, s):
 @settings(max_examples=60, deadline=None)
 @given(
     st.integers(min_value=1, max_value=12),
-    st.sampled_from(["cast", "subscript", "slice", "power", "regexop", "any_eq", "any_cmp", "concat_arr"]),
+    st.sampled_from([
+        "cast", "subscript", "slice", "power", "regexop", "any_eq", "any_cmp", "concat_arr",
+        "lag_unordered", "window_filter", "window_def", "has_privilege", "expandarray",
+        "escape_empty", "match_concat_ws",
+    ]),
 )
 def test_operand_nesting_depth_unbounded(depth, form):
     """An operand nested to ANY paren depth participates in the
     ::-cast / subscript / binary-operator rewrites — the r7 fuzz found
     a 2-level cliff, r7 raised the bound to 4-5, r8 removes the class
-    (dialect._paren recursive pattern)."""
+    (dialect._paren recursive pattern) — and in the window, constant
+    call, ESCAPE and MATCH rewrites."""
     wrapped = "(" * depth + "a + b" + ")" * depth
     if form == "cast":
         out = rewrite(f"SELECT {wrapped}::bigint AS v FROM t")
@@ -145,6 +150,29 @@ def test_operand_nesting_depth_unbounded(depth, form):
     elif form == "any_cmp":
         out = rewrite(f"SELECT x FROM t WHERE {wrapped} > ANY(vals)")
         assert "exists(" in out, out
+    elif form == "lag_unordered":
+        out = rewrite(f"SELECT lag({wrapped}) OVER (PARTITION BY g) AS l FROM t")
+        assert out.endswith("OVER (PARTITION BY g ORDER BY 1 NULLS LAST) AS l FROM t"), out
+    elif form == "window_filter":
+        out = rewrite(f"SELECT sum(x) FILTER (WHERE {wrapped} > 10) OVER (PARTITION BY g) AS s FROM t")
+        assert f"sum(CASE WHEN {wrapped} > 10 THEN x END) OVER" in out, out
+    elif form == "window_def":
+        out = rewrite(
+            f"SELECT row_number() OVER (w ORDER BY id) AS r FROM t WINDOW w AS (PARTITION BY {wrapped})"
+        )
+        assert f"OVER (PARTITION BY {wrapped} ORDER BY id NULLS LAST) AS r" in out and "WINDOW" not in out, out
+    elif form == "has_privilege":
+        out = rewrite(f"SELECT has_table_privilege({wrapped}, 'SELECT') AS v")
+        assert out == "SELECT TRUE AS v", out
+    elif form == "expandarray":
+        out = rewrite(f"SELECT (_pg_expandarray({wrapped})).x AS v FROM t")
+        assert out == f"SELECT explode({wrapped}) AS v FROM t", out
+    elif form == "escape_empty":
+        out = rewrite(f"SELECT x LIKE {wrapped} ESCAPE '' AS v FROM t")
+        assert out == rf"SELECT x LIKE replace({wrapped}, '\\', '\\\\') AS v FROM t", out
+    elif form == "match_concat_ws":
+        out = rewrite(f"SELECT x FROM t WHERE MATCH(concat_ws(' ', {wrapped}, c), 'q')")
+        assert "array_contains(" in out and "MATCH" not in out, out
     else:
         out = rewrite(f"SELECT array(1,2) || {wrapped} AS v FROM t")
         assert "array_append" in out, out

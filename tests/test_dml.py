@@ -392,3 +392,30 @@ def test_array_literal_commas_stay_inside_their_item(spark, tmp_path):
     s.execute("INSERT INTO tc (id, b) VALUES (1, 5)")
     r = s.execute("SELECT id, a, b FROM tc").collect()[0]
     assert (r["id"], list(r["a"]), r["b"]) == (1, [1, 2], 5)
+
+
+def test_object_literal_commas_stay_inside_their_item(spark, tmp_path):
+    """A comma inside an object literal does not split a SET list or an
+    ON CONFLICT assignment list."""
+    from crate_spark.dialect import split_args
+    from crate_spark.engine import CrateSession
+
+    assert split_args("obj = {a=1, b=2}, id = 3") == ["obj = {a=1, b=2}", "id = 3"]
+    s = CrateSession(spark, None, storage_dir=str(tmp_path))
+    s.execute("CREATE TABLE o (id int PRIMARY KEY, obj object AS (a int, b int), n int)")
+    s.execute("INSERT INTO o (id, obj, n) VALUES (1, {a=1, b=2}, 0)")
+
+    def row():
+        # the object column reads back as its JSON text
+        r = s.execute("SELECT obj['a'] AS a, obj['b'] AS b, n FROM o WHERE id = 1").collect()[0]
+        return r["a"], r["b"], r["n"]
+
+    s.execute("UPDATE o SET obj = {a=5, b=6} WHERE id = 1")
+    assert row() == ("5", "6", 0)
+    s.execute("UPDATE o SET obj = {a=7, b=8}, n = 1 WHERE id = 1")
+    assert row() == ("7", "8", 1)
+    s.execute(
+        "INSERT INTO o (id, obj, n) VALUES (1, {a=0, b=0}, 0) "
+        "ON CONFLICT (id) DO UPDATE SET obj = {a=9, b=10}, n = 2"
+    )
+    assert row() == ("9", "10", 2)

@@ -105,3 +105,72 @@ def test_lag_over_unordered_partition(crate):
         assert sorted(r[2] is None for r in part) == [False, True]
         (x_first,) = [r[1] for r in part if r[2] is None]
         assert [r[2] for r in part if r[2] is not None] == [x_first]
+
+
+@pytest.mark.parametrize("window", [
+    "lag(coalesce(x, abs(g))) OVER (PARTITION BY g)",
+    "lag(x) OVER (PARTITION BY abs(coalesce(g, 0)))",
+])
+def test_lag_over_unordered_partition_with_nested_calls(crate, window):
+    rows = _rows(crate, f"SELECT g, x, {window} AS l FROM rp")
+    for g in (1, 2):
+        part = [r for r in rows if r[0] == g]
+        assert sorted(r[2] is None for r in part) == [False, True]
+
+
+def test_window_filter_with_nested_calls(crate):
+    assert sorted(_rows(
+        crate,
+        "SELECT id, sum(x) FILTER (WHERE abs(coalesce(x, 0)) > 10) OVER (PARTITION BY g) AS s FROM rp",
+    )) == [(1, 20), (2, 20), (3, 70), (4, 70)]
+
+
+def test_named_window_definition_with_a_call(crate):
+    assert sorted(_rows(
+        crate,
+        "SELECT id, row_number() OVER (w ORDER BY id) AS r FROM rp "
+        "WINDOW w AS (PARTITION BY abs(g))",
+    )) == [(1, 1), (2, 2), (3, 1), (4, 2)]
+
+
+@pytest.mark.parametrize("expr, want", [
+    ("has_table_privilege(lower(concat('T', '')), 'SELECT')", [(True,)]),
+    ("col_description(abs(coalesce(1, 0)), 1)", [(None,)]),
+    ("(_pg_expandarray(array_cat(array(1), array(abs(2))))).x", [(1,), (2,)]),
+])
+def test_calls_with_nested_arguments(crate, expr, want):
+    assert sorted(_rows(crate, f"SELECT {expr} AS v")) == want
+
+
+def test_schema_qualified_constant_calls(crate):
+    assert _rows(
+        crate,
+        'SELECT "pg_catalog".current_database() AS a, pg_catalog.pg_backend_pid() AS b, '
+        "information_schema.has_schema_privilege('doc', 'USAGE') AS c",
+    ) == [("crate", 0, True)]
+
+
+def test_empty_escape_after_a_call(crate):
+    assert _rows(crate, "SELECT 'a\\b' LIKE concat('a\\', 'b') ESCAPE '' AS v") == [(True,)]
+
+
+def test_case_block_at_time_zone(crate):
+    assert _rows(
+        crate,
+        "SELECT CAST(CASE WHEN true THEN CAST('2024-01-01 12:00:00' AS TIMESTAMP) END "
+        "AT TIME ZONE 'Europe/Berlin' AS STRING) AS a",
+    ) == [("2024-01-01 11:00:00",)]
+
+
+def test_typed_literal_is_one_cast_operand(crate):
+    assert _rows(
+        crate,
+        "SELECT TIMESTAMP '2024-01-01 12:00:00'::text AS a, "
+        "pg_postmaster_start_time()::text IS NOT NULL AS b",
+    ) == [("2024-01-01 12:00:00", True)]
+
+
+def test_order_by_item_named_like_a_clause_keyword(crate):
+    assert _rows(crate, "SELECT id AS my_rows FROM rp ORDER BY my_rows DESC") == [
+        (4,), (3,), (2,), (1,),
+    ]
