@@ -28,16 +28,6 @@ from crate_spark.statement import DQL, SYSTEM_SCHEMAS, Statement
 _PRIV_WORD = "|".join(PERMISSIONS)
 
 
-def _parse_with(body: str) -> dict:
-    """WITH (k='v', k2=v2) -> dict (lowercased keys)."""
-    out = {}
-    for part in re.split(r",(?=(?:[^']*'[^']*')*[^']*$)", body):
-        m = re.match(r"\s*(\w+)\s*=\s*(.+?)\s*$", part)
-        if m:
-            out[m.group(1).lower()] = m.group(2).strip().strip("'\"")
-    return out
-
-
 def _names(csv: str) -> list[str]:
     return [n.strip().strip('"').lower() for n in csv.split(",") if n.strip()]
 
@@ -74,7 +64,8 @@ def alter_role(session, st: Statement) -> DataFrame:
     roles: RoleStore = session.roles
     m = st.match(
         r"ALTER\s+(?:USER|ROLE)\s+(\"[^\"]+\"|[\w]+)\s+"
-        r"(?:SET\s*\((.*)\)|RESET\s+(ALL|\"?[\w.]+\"?))\s*$"
+        r"(?:SET\s*\((.*)\)|RESET\s+(ALL|\"?[\w.]+\"?))\s*$",
+        masked=True,
     )
     name = m.group(1).strip('"')
     if m.group(3):
@@ -83,16 +74,7 @@ def alter_role(session, st: Statement) -> DataFrame:
             name, None if target.upper() == "ALL" else target, None
         )
         return rowcount_frame(session.spark)
-    for item in re.split(r",(?=(?:[^']*'[^']*')*[^']*$)", m.group(2)):
-        km = re.match(
-            r"\s*\"?([\w.]+)\"?\s*=\s*(?:'([^']*)'|(NULL))\s*$",
-            item,
-            re.IGNORECASE,
-        )
-        if not km:
-            raise ValueError(f"Cannot parse ALTER setting: {item!r}")
-        key = km.group(1).lower()
-        val = None if km.group(3) else km.group(2)
+    for key, val in st.properties(m.group(2)).items():
         if key == "password":
             roles.alter_password(name, val)
         else:
@@ -152,9 +134,10 @@ def grant(session, st: Statement) -> DataFrame:
 def create_repository(session, st: Statement) -> DataFrame:
     m = st.match(
         r"CREATE\s+REPOSITORY\s+\"?([\w]+)\"?\s+TYPE\s+\"?(\w+)\"?"
-        r"(?:\s+WITH\s*\((.*)\))?\s*$"
+        r"(?:\s+WITH\s*\((.*)\))?\s*$",
+        masked=True,
     )
-    settings = _parse_with(m.group(3) or "")
+    settings = st.properties(m.group(3) or "")
     if m.group(2).lower() == "fs":
         settings.setdefault(
             "location",
@@ -168,13 +151,13 @@ def alter_repository(session, st: Statement) -> DataFrame:
     """ALTER REPOSITORY name SET (...) | RESET prop [, prop ...]
     (alter-repository.rst:72-77)."""
     m = st.match(
-        r"ALTER\s+REPOSITORY\s+\"?([\w]+)\"?\s+(?:SET\s*\((.*)\)|RESET\s+(.+?))\s*$"
+        r"ALTER\s+REPOSITORY\s+\"?([\w]+)\"?\s+(?:SET\s*\((.*)\)|RESET\s+(.+?))\s*$",
+        masked=True,
     )
     if m.group(3):
-        props = [p.strip().strip('"') for p in m.group(3).split(",")]
-        session.snapshots.reset_repository_settings(m.group(1), props)
+        session.snapshots.reset_repository_settings(m.group(1), list(st.properties(m.group(3))))
     else:
-        session.snapshots.alter_repository(m.group(1), _parse_with(m.group(2)))
+        session.snapshots.alter_repository(m.group(1), st.properties(m.group(2)))
     return rowcount_frame(session.spark)
 
 

@@ -8,10 +8,12 @@ multi-word name (``double precision``, ``timestamp with time zone``),
 its ``(p[, s])``, ``array(T)``, a repeated ``T[]``, PG's ``"char"`` and
 ``object[(policy)] [AS (name T, …)]``, in any case and spacing.
 
-- inbound, the `TypeSpec` it answers: `spark_type` (CREATE TABLE and
-  ALTER TABLE columns, UDF signatures, foreign-table columns) and
-  `cast_type` (CAST, ``::`` and typed literals); ``sql_dml`` walks it
-  for ``information_schema``;
+- inbound, the `TypeSpec` it answers: `spark_type` (UDF signatures)
+  and `cast_type` (CAST, ``::`` and typed literals); ``sql_dml`` walks
+  it for ``information_schema``;
+- `parse_column`, the one reader of a column definition (CREATE TABLE
+  and its object columns, ALTER TABLE ADD COLUMN, CREATE FOREIGN
+  TABLE): the name, the type and the constraints in any order;
 - outbound, a Spark type's ``simpleString``: `crate_name`
   (``information_schema``, ``pg_typeof``), `show_type` (SHOW CREATE
   TABLE), `pg_oid` (pg-wire RowDescription and ``pg_attribute``) and
@@ -25,8 +27,6 @@ from __future__ import annotations
 
 import re
 from typing import NamedTuple
-
-import regex as _regex  # recursive pattern: nested parentheses in a clause
 
 
 class CrateType(NamedTuple):
@@ -118,15 +118,14 @@ _PREFIXES = frozenset(
 class TypeSpec(NamedTuple):
     """One spelling as `parse_type` read it: the row a scalar or an
     object names (None for an array), the text as written, ``(p[, s])``,
-    an array's element, and an object's policy and declared columns
-    (name, type, the column's own clauses: ``DEFAULT 'a'``)."""
+    an array's element, and an object's policy and declared columns."""
 
     row: CrateType | None
     text: str
     params: tuple[int, ...] = ()
     element: TypeSpec | None = None
     policy: str | None = None
-    children: tuple[tuple[str, TypeSpec, str], ...] = ()
+    children: tuple[Column, ...] = ()
 
     @property
     def is_object(self) -> bool:
@@ -140,10 +139,6 @@ _CLOSE = re.compile(r"\s*\)")
 _BRACKETS = re.compile(r"\s*\[\s*\]")
 _POLICY = re.compile(r"\s*\(\s*(strict|dynamic|ignored)\s*\)", re.IGNORECASE)
 _AS = re.compile(r"\s*as\s*\(", re.IGNORECASE)
-_FIELD = re.compile(r'\s*("(?:[^"]|"")+"|[A-Za-z_]\w*)')
-#: a column's own clauses after its type (``DEFAULT 'a, b'``, ``NOT
-#: NULL``): up to the next ``,`` or ``)`` outside parentheses and quotes
-_CLAUSES = _regex.compile(r"""(?:'[^']*'|"[^"]*"|[^,()'"]|(\((?:[^()'"]|'[^']*'|"[^"]*"|(?1))*\)))*""")
 
 
 def parse_type(text: str, pos: int = 0) -> tuple[TypeSpec, int] | None:
@@ -199,12 +194,11 @@ def _object(text: str, start: int, end: int) -> tuple[TypeSpec, int]:
         policy, end = p.group(1).lower(), p.end()
     pos = (a := _AS.match(text, end)) and a.end()
     while pos:
-        f = _FIELD.match(text, pos)
-        read = f and parse_type(text, f.end())
-        if read is None:
+        read = parse_column(text, pos)
+        if read is None or read[0].spec is None:
             break
-        pos = _CLAUSES.match(text, read[1]).end()
-        children.append((f.group(1).strip('"'), read[0], text[read[1]:pos]))
+        children.append(read[0])
+        pos = read[1]
         if text.startswith(")", pos):
             end, pos = pos + 1, None
         elif not text.startswith(",", pos):
@@ -214,6 +208,152 @@ def _object(text: str, start: int, end: int) -> tuple[TypeSpec, int]:
     if pos:
         children = []
     return TypeSpec(_OBJECT, text[start:end], policy=policy, children=tuple(children)), end
+
+
+class Column(NamedTuple):
+    """One item of a table's element list as `parse_column` read it.
+
+    A column has a name (with an ``['key']`` subscript path as written),
+    its type as written (empty for a type-less generated column), the
+    `TypeSpec` of that spelling (None for one the table does not know,
+    which goes to Spark as written) and its constraints. A table
+    constraint has no name: PRIMARY KEY (…) sets ``key``, CHECK (…)
+    ``checks`` and INDEX n USING FULLTEXT (…) ``fulltext``. Expressions
+    are text as written; a generated or check expression loses the
+    parentheses around it."""
+
+    name: str | None
+    spec: TypeSpec | None = None
+    spelling: str = ""
+    key: tuple[str, ...] = ()
+    not_null: bool = False
+    default: str | None = None
+    generated: str | None = None
+    checks: tuple[str, ...] = ()
+    fulltext: tuple[str, tuple[str, ...]] | None = None
+
+    @property
+    def spark(self) -> str:
+        """The Spark type a column of this spelling stores."""
+        return _spark(self.spec) if self.spec else self.spelling
+
+
+#: what a column definition is scanned for: quoted text (passed over
+#: whole), brackets, commas and the words that open a constraint
+_CLAUSE = re.compile(
+    r"""'(?:[^']|'')*'|"(?:[^"]|"")*"|(?P<open>[(\[{])|(?P<close>[)\]}])|(?P<comma>,)"""
+    r"|\b(?P<kw>PRIMARY\s+KEY|NOT\s+NULL|NULL|DEFAULT|GENERATED\s+ALWAYS\s+AS|AS"
+    r"|CHECK(?=\s*\()|CONSTRAINT|INDEX(?=\s+(?:OFF|USING)\b)|STORAGE(?=\s+WITH\b))\b",
+    re.IGNORECASE,
+)
+#: an expression ending here wants an operand, so a NULL or NOT NULL
+#: after it belongs to it (``x IS NOT NULL``, ``THEN NULL``)
+_WANTS_OPERAND = re.compile(
+    r"(?:^|[-+*/%=<>|&^~!:(,]|\b(?:IS|NOT|AND|OR|WHEN|THEN|ELSE))\s*$", re.IGNORECASE
+)
+_EXPRESSIONS = ("DEFAULT", "GENERATED ALWAYS AS", "AS")
+_QUOTED = r'"(?:[^"]|"")+"'
+#: a column's name, with a subscript path, ends before a space
+_COLUMN = re.compile(rf"\s*({_QUOTED}|[A-Za-z_]\w*)((?:\s*\[[^\]]*\])*)(?![^\s,)])")
+#: a table constraint up to its parenthesis
+_ELEMENT = re.compile(
+    rf"\s*(?:CONSTRAINT\s+(?:{_QUOTED}|\w+)\s+)?(?:(?P<pk>PRIMARY\s+KEY)|(?P<check>CHECK)"
+    rf"|INDEX\s+(?P<index>{_QUOTED}|\w+)\s+USING\s+(?P<method>\w+))\s*\(",
+    re.IGNORECASE,
+)
+
+
+def _top(text: str, pos: int):
+    """The depth-0 keywords and commas from ``pos`` on, then the first
+    closing bracket without an opening one."""
+    depth = 0
+    for m in _CLAUSE.finditer(text, pos):
+        if m["open"]:
+            depth += 1
+        elif m["close"]:
+            if not depth:
+                yield m
+                return
+            depth -= 1
+        elif not depth and (m["kw"] or m["comma"]):
+            yield m
+
+
+def _group_end(text: str, open_idx: int) -> int:
+    """Index of the bracket that closes the one at ``open_idx``."""
+    return next((m.start() for m in _top(text, open_idx + 1) if m["close"]), -1)
+
+
+def _unwrap(expr: str) -> str:
+    """``expr`` without the parentheses around all of it."""
+    return expr[1:-1] if expr[:1] == "(" and _group_end(expr, 0) == len(expr) - 1 else expr
+
+
+def _constraints(text: str, pos: int) -> list[tuple[str | None, int, int]]:
+    """(keyword, start, end) of each constraint from ``pos``, ending
+    with (None, i, i) at the depth-0 ``,`` or ``)`` or the end of the
+    text that ends the column."""
+    out = []
+    for m in _top(text, pos):
+        if not m["kw"]:
+            return out + [(None, m.start(), m.start())]
+        out.append((" ".join(m["kw"].upper().split()), m.start(), m.end()))
+    return out + [(None, len(text), len(text))]
+
+
+def parse_column(text: str, pos: int = 0) -> tuple[Column, int] | None:
+    """Read the column definition or table constraint at ``text[pos:]``:
+    its `Column` and the index of the ``,`` or ``)`` that ends it (the
+    length of the text at its end), or None when neither starts there.
+    A constraint expression (DEFAULT, GENERATED ALWAYS AS or AS) ends
+    at the next constraint at its depth."""
+    if e := _ELEMENT.match(text, pos):
+        close = _group_end(text, e.end() - 1)
+        body = text[e.end():close]
+        names = tuple(n.strip().strip('"') for n in body.split(","))
+        end = _constraints(text, close + 1)[-1][1]
+        if e["pk"]:
+            return Column(None, key=names), end
+        if e["check"]:
+            return Column(None, checks=(body,)), end
+        fulltext = e["method"].lower() == "fulltext"
+        return Column(None, fulltext=(e["index"].strip('"'), names) if fulltext else None), end
+    f = _COLUMN.match(text, pos)
+    if f is None:
+        return None
+    name = f.group(1).strip('"') + f.group(2)
+    read = parse_type(text, f.end())
+    clauses = read and _constraints(text, read[1])
+    if clauses and not text[read[1]:clauses[0][1]].strip():
+        spec, spelling = read[0], read[0].text
+    else:
+        clauses = _constraints(text, f.end())
+        spec, spelling = None, text[f.end():clauses[0][1]].strip()
+    col = Column(name, spec, spelling)
+    i = 0
+    while clauses[i][0]:
+        kw, _, start = clauses[i]
+        i += 1
+        while (
+            kw in _EXPRESSIONS
+            and clauses[i][0] in ("NULL", "NOT NULL")
+            and _WANTS_OPERAND.search(text[start:clauses[i][1]])
+        ):
+            i += 1
+        body = text[start:clauses[i][1]].strip()
+        if kw == "PRIMARY KEY":
+            col = col._replace(key=(name,))
+        elif kw == "NOT NULL":
+            col = col._replace(not_null=True)
+        elif kw == "DEFAULT":
+            col = col._replace(default=body)
+        elif kw in _EXPRESSIONS:
+            col = col._replace(generated=_unwrap(body))
+        elif kw == "CHECK":
+            col = col._replace(checks=col.checks + (_unwrap(body),))
+        # NULL, CONSTRAINT name, INDEX … and STORAGE WITH (…) name
+        # nothing a table keeps
+    return col, clauses[i][1]
 
 
 def _spark(spec: TypeSpec) -> str:

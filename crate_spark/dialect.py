@@ -367,10 +367,11 @@ _WINDOW_FILTER_RE = _RE.compile(
     re.IGNORECASE,
 )
 #: a ranking or offset window function over a window with a PARTITION
-#: BY and no ORDER BY, up to the window's closing paren
+#: BY and no ORDER BY, up to its frame or its closing paren
 _UNORDERED_WINDOW_RE = _RE.compile(
     rf"(?P<head>\b(?:lag|lead|row_number|rank|dense_rank|ntile)\s*{_paren()}\s*"
-    rf"OVER\s*\(\s*PARTITION\s+BY\s+(?:(?!\bORDER\b)[^()]|{_paren()})*)\)",
+    rf"OVER\s*\(\s*PARTITION\s+BY\s+(?:(?!\b(?:ORDER|ROWS|RANGE|GROUPS)\b)[^()]|{_paren()})*)"
+    rf"(?P<frame>\b(?:ROWS|RANGE|GROUPS)\b(?:[^()]|{_paren()})*)?\)",
     re.IGNORECASE,
 )
 #: ``pattern ESCAPE 'c'``: the pattern is a literal, a call, a name or a
@@ -1367,30 +1368,6 @@ def _lit_value(arg: str, literals: list[str]) -> str | None:
     return literals[int(m.group(1) or m.group(3))][1:-1].replace("''", "'")
 
 
-#: interval-literal units -> microseconds (DateBinFunction stride)
-_IV_UNITS = {
-    "microsecond": 1, "microseconds": 1,
-    "millisecond": 1000, "milliseconds": 1000,
-    "second": 1_000_000, "seconds": 1_000_000, "sec": 1_000_000, "secs": 1_000_000,
-    "minute": 60_000_000, "minutes": 60_000_000, "min": 60_000_000, "mins": 60_000_000,
-    "hour": 3_600_000_000, "hours": 3_600_000_000,
-    "day": 86_400_000_000, "days": 86_400_000_000,
-    "week": 604_800_000_000, "weeks": 604_800_000_000,
-}
-
-
-def _interval_literal_micros(text: str) -> int | None:
-    total = 0
-    matched = False
-    for num, unit in re.findall(r"(-?\d+)\s*([a-zA-Z]+)", text):
-        scale = _IV_UNITS.get(unit.lower())
-        if scale is None:
-            return None
-        total += int(num) * scale
-        matched = True
-    return total if matched else None
-
-
 def _date_bin_sql(a: list[str], literals: list[str]) -> str | None:
     """DateBinFunction.java:41 — floor((ts - origin) / stride) * stride
     + origin, floor division so negative offsets round toward
@@ -1398,16 +1375,20 @@ def _date_bin_sql(a: list[str], literals: list[str]) -> str | None:
     time); pure epoch arithmetic, stays in whole-stage codegen."""
     if len(a) != 3:
         return None
-    # stride arg shapes: __LIT__ / __LIT__::interval / CAST(__LIT__ AS ...)
-    m = re.search(r"__LIT_(\d+)__", a[0])
-    if not m or not re.fullmatch(
-        r"(?:CAST\s*\(\s*|INTERVAL\s+)?__LIT_\d+__"
-        r"(?:\s*AS\s+INTERVAL[\w\s]*\))?(?:\s*::\s*interval)?",
+    # stride arg shapes: __LIT__ / __LIT__::interval / CAST(__LIT__ AS
+    # ...), and the CAST(__LIT__ AS STRING) an interval fold leaves
+    m = re.fullmatch(
+        r"(?:CAST\s*\(\s*|INTERVAL\s+)?__LIT_(\d+)__"
+        r"(?:\s*AS\s+(?:INTERVAL[\w\s]*|STRING\s*)\))?(?:\s*::\s*interval)?",
         a[0].strip(),
         re.IGNORECASE,
-    ):
+    )
+    parsed = m and _parse_interval_literal(literals[int(m.group(1))][1:-1])
+    # a stride of months or years has no fixed length
+    if not parsed or parsed[0] or parsed[1]:
         return None
-    stride_us = _interval_literal_micros(literals[int(m.group(1))][1:-1])
+    _, _, d, h, mi, s = parsed
+    stride_us = ((d * 24 + h) * 60 + mi) * 60_000_000 + round(s * 1_000_000)
     if not stride_us:
         return None
     # DateBinFunction ignores the interval's sign ('-3 days' bins
@@ -1956,12 +1937,11 @@ def _age_sql(a: list[str]) -> str | None:
         f"'days', {days}, 'micros', {rem}))"
     )
 
-#: optional schema qualifier, plain or quoted — the reference registers
-#: these under pg_catalog/information_schema and the docs spell them
-#: qualified
+#: a call, with an optional schema qualifier, plain or quoted — the
+#: reference registers the `_FN_TEMPLATES` functions under
+#: pg_catalog/information_schema and the docs spell them qualified
 _FN_CALL_RE = re.compile(
-    r"(?:`?\b(?:pg_catalog|information_schema)`?\s*\.\s*)?"
-    r"\b(" + "|".join(_FN_TEMPLATES) + r")\s*\(",
+    r"(?:`?\b(?:pg_catalog|information_schema)`?\s*\.\s*)?\b([A-Za-z_]\w*)\s*\(",
     re.IGNORECASE,
 )
 
@@ -2181,7 +2161,7 @@ def _rewrite_crate_fns(sql: str, literals: list[str]) -> str:
     args are rewritten recursively BEFORE templating and emitted text is
     never re-scanned, so a template may safely reference the original
     name (array_position -> nullif(array_position(...), 0))."""
-    m = _FN_CALL_RE.search(sql)
+    m = next((m for m in _FN_CALL_RE.finditer(sql) if m.group(1).lower() in _FN_TEMPLATES), None)
     if not m:
         return sql
     close = find_close(sql, m.end() - 1)
@@ -2426,6 +2406,7 @@ _IV_UNIT_SLOTS = {
     "second": "seconds", "seconds": "seconds",
     "ms": "millis", "msec": "millis", "msecs": "millis",
     "millisecond": "millis", "milliseconds": "millis",
+    "microsecond": "micros", "microseconds": "micros",
 }
 
 
@@ -2520,7 +2501,7 @@ def _parse_interval_literal_ex(text: str):
     # one shared milliseconds slot, like the reference's milliSeconds
     # variable: a fractional seconds value fills it (truncated at ms
     # precision, parseMilliSeconds), making a later ms unit a repeat
-    sec_i = ms_i = 0
+    sec_i = ms_i = us = 0
     days_parsed = weeks_parsed = time_parsed = False
     used_words = used_shorthand = False
     ym = re.match(r"^([+-]?)(\d+)-(\d+)(?!\S)", t)
@@ -2574,10 +2555,15 @@ def _parse_interval_literal_ex(text: str):
                     return None
                 sec_i, ms_i = _sec_ms_parts(m.group(1))
                 time_parsed = True
-            else:  # millis: fraction truncates toward zero
+            elif unit == "millis":  # a fraction truncates toward zero
                 if ms_i > 0:
                     return None
                 ms_i = int(v)
+                time_parsed = True
+            else:  # micros, likewise
+                if us > 0:
+                    return None
+                us = int(v)
                 time_parsed = True
             used_words = True
             t = t[m.end():].strip()
@@ -2624,7 +2610,7 @@ def _parse_interval_literal_ex(text: str):
                 continue
             return None
         return None
-    s = sec_i + ms_i / 1000.0
+    s = sec_i + ms_i / 1000.0 + us / 1_000_000
     return (y, mo, d, h, mi, s), used_shorthand
 
 
@@ -2883,7 +2869,7 @@ def _rewrite_array_subquery(sql: str) -> str:
     close = find_close(sql, open_idx)
     if close < 0:
         return sql
-    inner = sql[open_idx + 1 : close]
+    inner = _rewrite_array_subquery(sql[open_idx + 1 : close])
     top = blank_groups(inner)
     # single select expression up to the depth-0 FROM
     fm = re.search(r"\bFROM\b", top, re.IGNORECASE)
@@ -4579,7 +4565,9 @@ def rewrite(
     # lag/lead over an unordered window: the reference evaluates them
     # in partition insertion order (WindowFunction docs examples);
     # Spark demands ORDER BY — a constant key keeps arrival order
-    sql = _UNORDERED_WINDOW_RE.sub(r"\g<head> ORDER BY 1)", sql)
+    sql = _UNORDERED_WINDOW_RE.sub(
+        lambda m: f"{m['head']} ORDER BY 1{' ' + m['frame'] if m['frame'] else ''})", sql
+    )
 
     sql = _rewrite_order_by(sql)
     # PG/CrateDB string literals are standard-conforming: backslash is

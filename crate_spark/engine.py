@@ -34,7 +34,7 @@ import regex as _RE  # recursive patterns: a group nested to any depth
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from crate_spark.admin_sql import _parse_with, check_privileges
+from crate_spark.admin_sql import check_privileges
 from crate_spark.datatypes import read_type, show_type, spark_type
 from crate_spark.dialect import (
     _paren, add_token, blank_groups, find_close, mask, rewrite, rewrite_sys_columns,
@@ -44,7 +44,7 @@ from crate_spark.dml import hold, serving
 from crate_spark.session import (
     apply_runtime_confs, load_tables, local_frame, rowcount, rowcount_frame,
 )
-from crate_spark.statement import COUNT, EXPLAIN, Statement, classify, read_of
+from crate_spark.statement import COUNT, EXPLAIN, Statement, classify, read_of, typed
 from crate_spark.system_views import views_held
 
 
@@ -652,11 +652,12 @@ class CrateSession:
             r"CREATE\s+BLOB\s+TABLE\s+\"?([\w]+)\"?"
             r"(?:\s+CLUSTERED\s+INTO\s+(\d+)\s+SHARDS)?"
             r"(?:\s+WITH\s*\((.*)\))?\s*$",
+            masked=True,
         )
         self.blobs.create(
             m.group(1),
             shards=int(m.group(2) or 4),
-            settings=_parse_with(m.group(3) or ""),
+            settings=st.properties(m.group(3) or ""),
         )
         self._register_blob_views()
         return rowcount_frame(self.spark)
@@ -667,14 +668,16 @@ class CrateSession:
         # table settings (blobs.rst "Altering a blob table")
         m = st.match(
             r"ALTER\s+BLOB\s+TABLE\s+\"?([\w]+)\"?\s+"
-            r"(SET\s*\((.*)\)|RESET\s*\((.*)\))\s*$",
+            r"(SET|RESET)\s*\((.*)\)\s*$",
+            masked=True,
         )
         store = self.blobs.get(m.group(1))
-        if m.group(3) is not None:
-            store.settings.update(_parse_with(m.group(3)))
+        props = st.properties(m.group(3))
+        if m.group(2).upper() == "SET":
+            store.settings.update(props)
         else:
-            for k in m.group(4).split(","):
-                store.settings.pop(k.strip().strip('"'), None)
+            for k in props:
+                store.settings.pop(k, None)
         # ALTER acks with -1 rows affected (crash renders it so)
         return rowcount_frame(self.spark, -1)
 
@@ -750,8 +753,8 @@ class CrateSession:
         # comma-separated `k = v` pairs, values may be nested objects
         # `stats = {jobs_log_size = 2048, ...}` (runtime-config.rst).
         # Overrides surface in sys.cluster.settings and the Spark conf.
-        m = st.match(r"SET\s+GLOBAL\s+(?:PERSISTENT\s+|TRANSIENT\s+)?(.+)$")
-        pairs = _parse_global_assignments(m.group(1))
+        m = st.match(r"SET\s+GLOBAL\s+(?:PERSISTENT\s+|TRANSIENT\s+)?(.+)$", masked=True)
+        pairs = list(_flat(st.properties(m.group(1))))
         for key, val in pairs:
             self._cluster_settings[key] = val
             # JSON spelling in the conf: booleans stay lowercase
@@ -890,8 +893,8 @@ class CrateSession:
         # small-file compaction — the Lucene segment-merge analog
         # (optimize.rst; CrateTable.optimize preserves the routing /
         # partition layout and commits through the manifest)
-        m = st.match(r"OPTIMIZE\s+TABLE\s+(.+?)(?:\s+WITH\s*\((.*)\))?\s*$")
-        props = _parse_with(m.group(2) or "")
+        m = st.match(r"OPTIMIZE\s+TABLE\s+(.+?)(?:\s+WITH\s*\((.*)\))?\s*$", masked=True)
+        props = st.properties(m.group(2) or "")
         mns = props.get("max_num_segments")
         # comma-separated target list, each `ident [PARTITION (...)]`
         out_rows = []
@@ -908,14 +911,7 @@ class CrateSession:
                 # views/virtual relations ack without a rewrite
                 out_rows.append((name, "ok", 0, 0))
                 continue
-            part = None
-            if em.group(2):
-                part = {}
-                for kv in em.group(2).split(","):
-                    k, _, v = kv.partition("=")
-                    part[k.strip().strip('"')] = _parse_setting_value(
-                        v.strip().strip("'\"")
-                    )
+            part = {k: typed(v) for k, v in st.properties(em.group(2)).items()} if em.group(2) else None
             stats = table.optimize(
                 max_num_segments=int(mns) if mns is not None else None,
                 partition=part,
@@ -1895,33 +1891,15 @@ class CrateSession:
         return local_frame(self.spark, [(table, status)], "table string, status string")
 
 
-def _parse_setting_value(v: str):
-    """A SET GLOBAL value literal -> typed Python value (booleans and
-    integers must round-trip through the settings JSON unquoted)."""
-    v = v.strip()
-    if v.lower() == "true":
-        return True
-    if v.lower() == "false":
-        return False
-    if re.fullmatch(r"-?\d+", v):
-        return int(v)
-    return v.strip("'\"")
-
-
-def _parse_global_assignments(body: str) -> list[tuple[str, object]]:
-    """``k = v, k2 = {a = 1, b = 2}`` -> [(k, v), (k2.a, 1), (k2.b, 2)]
-    — the SET GLOBAL assignment grammar incl. nested-object values
-    (runtime-config.rst:53-57)."""
-    out: list[tuple[str, object]] = []
-    for item in split_args(body):
-        k, _, v = item.partition("=")
-        k, v = k.strip().strip('"'), v.strip()
-        if v.startswith("{") and v.endswith("}"):
-            for sk, sv in _parse_global_assignments(v[1:-1]):
-                out.append((f"{k}.{sk}", sv))
+def _flat(props: dict, prefix: str = ""):
+    """SET GLOBAL assignments as (dotted key, value): a nested object
+    ``stats = {jobs_log_size = 2048}`` names ``stats.jobs_log_size``
+    (runtime-config.rst:53-57); unquoted booleans and integers typed."""
+    for k, v in props.items():
+        if isinstance(v, dict):
+            yield from _flat(v, f"{prefix}{k}.")
         else:
-            out.append((k, _parse_setting_value(v)))
-    return out
+            yield f"{prefix}{k}", typed(v)
 
 
 def _arg_list(st: Statement, open_idx: int) -> tuple[str, int]:

@@ -23,8 +23,8 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
-from crate_spark.datatypes import spark_type
-from crate_spark.dialect import find_close, split_args, unmask
+from crate_spark.datatypes import parse_column
+from crate_spark.dialect import find_close, split_args
 from crate_spark.session import rowcount_frame
 from crate_spark.statement import Statement
 
@@ -46,21 +46,6 @@ class ForeignTable:
     server: str
     schema_ddl: str | None
     options: dict = field(default_factory=dict)
-
-
-def parse_options(body: str | None) -> dict:
-    """OPTIONS (key 'value', key2 'value2') — PG FDW option syntax
-    (also accepts key = 'value')."""
-    out: dict = {}
-    if not body:
-        return out
-    for part in re.split(r",(?=(?:[^']*'[^']*')*[^']*$)", body):
-        m = re.match(r"\s*(?:SET\s+|ADD\s+)?\"?(\w+)\"?\s*=?\s*'((?:[^']|'')*)'\s*$", part)
-        if m:
-            out[m.group(1).lower()] = m.group(2).replace("''", "'")
-        elif re.match(r"\s*DROP\s+(\w+)\s*$", part, re.IGNORECASE):
-            out[re.match(r"\s*DROP\s+(\w+)\s*$", part, re.IGNORECASE).group(1).lower()] = None
-    return out
 
 
 class FdwStore:
@@ -221,18 +206,22 @@ def create_server(session, st: Statement):
     m = st.match(
         r"CREATE\s+SERVER\s+(IF\s+NOT\s+EXISTS\s+)?\"?([\w]+)\"?\s+"
         r"FOREIGN\s+DATA\s+WRAPPER\s+(\w+)"
-        r"(?:\s+OPTIONS\s*\((.*)\))?\s*$"
+        r"(?:\s+OPTIONS\s*\((.*)\))?\s*$",
+        masked=True,
     )
     created = session.fdw.create_server(
-        m.group(2), m.group(3), parse_options(m.group(4)),
+        m.group(2), m.group(3), st.properties(m.group(4) or ""),
         if_not_exists=bool(m.group(1)),
     )
     return rowcount_frame(session.spark, 1 if created else 0)
 
 
 def alter_server(session, st: Statement):
-    m = st.match(r"ALTER\s+SERVER\s+\"?([\w]+)\"?\s+OPTIONS\s*\((.*)\)\s*$")
-    session.fdw.alter_server(m.group(1), parse_options(m.group(2)))
+    m = st.match(r"ALTER\s+SERVER\s+\"?([\w]+)\"?\s+OPTIONS\s*\((.*)\)\s*$", masked=True)
+    # ADD k 'v' and SET k 'v' set an option, DROP k removes it
+    options = re.sub(r"(?i)(^|,)\s*(?:ADD|SET)\s+", r"\1", m.group(2))
+    options = re.sub(r"(?i)(^|,)\s*DROP\s+([\w\"]+)\s*(?=,|$)", r"\1\2 = NULL", options)
+    session.fdw.alter_server(m.group(1), st.properties(options))
     return rowcount_frame(session.spark)
 
 
@@ -256,14 +245,16 @@ def create_foreign_table(session, st: Statement):
     text, pos, name, schema_ddl = st.masked, head.end(), head.group(2), None
     if text.startswith("(", pos):
         close = find_close(text, pos)
-        cols = [col.split(None, 1) for col in split_args(text[pos + 1 : close])]
-        schema_ddl = ", ".join(f"{c[0]} {spark_type(c[1])}" for c in cols if len(c) == 2) or None
+        cols = [parse_column(item) for item in split_args(text[pos + 1 : close])]
+        if None in cols:
+            raise st.unsupported()
+        schema_ddl = ", ".join(f"{c.name} {c.spark}" for c, _ in cols if c.spelling) or None
         pos = close + 1
     m = re.match(r"\s*SERVER\s+\"?(\w+)\"?(?:\s+OPTIONS\s*\((.*)\))?\s*$", text[pos:], re.I | re.S)
     if m is None:
         raise st.unsupported()
     created = session.fdw.create_table(
-        name, m.group(1), schema_ddl, parse_options(m.group(2) and unmask(m.group(2), st.literals)),
+        name, m.group(1), schema_ddl, st.properties(m.group(2) or ""),
         if_not_exists=bool(head.group(1)),
     )
     if created:
@@ -287,10 +278,11 @@ def create_user_mapping(session, st: Statement):
     m = st.match(
         r"CREATE\s+USER\s+MAPPING\s+(?:IF\s+NOT\s+EXISTS\s+)?FOR\s+"
         r"(?:USER|CURRENT_USER|\"?([\w]+)\"?)\s+SERVER\s+\"?([\w]+)\"?"
-        r"(?:\s+OPTIONS\s*\((.*)\))?\s*$"
+        r"(?:\s+OPTIONS\s*\((.*)\))?\s*$",
+        masked=True,
     )
     user = m.group(1) or session.current_user
-    session.fdw.create_user_mapping(user, m.group(2), parse_options(m.group(3)))
+    session.fdw.create_user_mapping(user, m.group(2), st.properties(m.group(3) or ""))
     return rowcount_frame(session.spark)
 
 

@@ -25,20 +25,20 @@ import shutil
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from crate_spark.datatypes import TypeSpec, crate_name, parse_type, read_type, spark_type
+from crate_spark.datatypes import Column, TypeSpec, crate_name, parse_column
 from crate_spark.dialect import find_close, rewrite, rewrite_sys_columns, split_args, unmask
 from crate_spark.dml import _WRITE_LOCK, CrateTable
 from crate_spark.session import backticked, local_frame, rowcount_frame
-from crate_spark.statement import Statement
+from crate_spark.statement import Bare, Statement, typed
 
-def _crate_decl(raw: str) -> dict:
-    """One declared crate type in its information_schema form:
+
+def _crate_decl(col: Column) -> dict:
+    """A column's declared crate type in its information_schema form:
     {"type": <data_type spelling>} plus, for objects, the declared
     subcolumns as {"children": [{"name", ...decl}]} (recursive)."""
-    spec = read_type(raw)
-    if spec is None:  # a Spark spelling, named as written
-        return {"type": " ".join(raw.lower().split())}
-    return _decl(spec)
+    if col.spec is None:  # a Spark spelling, named as written
+        return {"type": " ".join(col.spelling.lower().split())}
+    return _decl(col.spec)
 
 
 def _decl(spec: TypeSpec) -> dict:
@@ -50,13 +50,20 @@ def _decl(spec: TypeSpec) -> dict:
         return out
     out = {"type": spec.row.name}
     if spec.is_object:
-        out["children"] = [{"name": n, **_decl(t)} for n, t, _ in spec.children]
+        out["children"] = [{"name": c.name, **_decl(c.spec)} for c in spec.children]
         if spec.policy:
             out["policy"] = spec.policy
     elif spec.params and spec.row.spark == "string":
         # the length of a string store (varchar(n), char(n), bit(n))
         out["length"] = spec.params[0]
     return out
+
+
+def _json_value(value):
+    """A subcolumn DEFAULT value as JSON: unquoted numbers and booleans
+    typed."""
+    value = typed(value)
+    return float(value) if isinstance(value, Bare) else value
 
 
 def _close(s: str, open_idx: int) -> int:
@@ -206,234 +213,13 @@ class SqlDmlRouter:
             self._refresh(name)
             return rowcount_frame(self.spark)
 
-        cols: list[str] = []
-        crate_cols: list[dict] = []
-        not_null: list[str] = []
-        pk: list[str] = []
-        checks: list[str] = []
-        generated: dict[str, str] = {}
-        defaults: dict[str, str] = {}
-        ft_indexes: dict[str, list] = {}
-        untyped_generated: list[str] = []
-        for item in split_args(body):
-            up = item.upper()
-            if up.startswith("PRIMARY KEY"):
-                named = [
-                    c.strip().strip('"')
-                    for c in item[item.index("(") + 1 : item.rindex(")")].split(",")
-                ]
-                pk += named
-                not_null += [c for c in named if c not in not_null]
-                continue
-            # table-level CHECK only — a COLUMN named check_sum also
-            # starts with CHECK (dml.rst debit_card example)
-            if re.match(r"CHECK\s*\(", up):
-                checks.append(
-                    unmask(item[item.index("(") + 1 : item.rindex(")")], literals)
-                )
-                continue
-            if up.startswith("CONSTRAINT "):
-                # named table-level constraints (constraints.rst:
-                # CONSTRAINT name CHECK (...) / PRIMARY KEY (...)) —
-                # the name is metadata, the body routes as unnamed
-                item = re.sub(
-                    r'^\s*CONSTRAINT\s+"?[\w]+"?\s+', "", item, flags=re.IGNORECASE
-                )
-                up = item.upper()
-                if up.startswith("PRIMARY KEY"):
-                    named = [
-                        c.strip().strip('"')
-                        for c in item[item.index("(") + 1 : item.rindex(")")].split(",")
-                    ]
-                    pk += named
-                    not_null += [c for c in named if c not in not_null]
-                    continue
-                if re.match(r"CHECK\s*\(", up):
-                    checks.append(
-                        unmask(item[item.index("(") + 1 : item.rindex(")")], literals)
-                    )
-                    continue
-            if up.startswith("INDEX "):
-                # composite fulltext index (fulltext-indices.rst):
-                # INDEX <name> USING FULLTEXT (col, ...) — MATCH can
-                # target the index NAME, searching its source columns
-                fim = re.match(
-                    r'INDEX\s+"?(\w+)"?\s+USING\s+FULLTEXT\s*\(([^)]*)\)',
-                    item,
-                    re.IGNORECASE,
-                )
-                if fim:
-                    ft_indexes[fim.group(1)] = [
-                        c.strip().strip('"') for c in fim.group(2).split(",")
-                    ]
-                continue
-            cm = re.match(r'("?[\w]+"?)\s+(.*)$', item, re.DOTALL)
-            if not cm:
-                raise ValueError(f"cannot parse column definition: {item!r}")
-            cname = cm.group(1).strip('"')
-            rest = cm.group(2)
-            # named column constraints (constraints.rst): the name
-            # tags whatever constraint clause follows it
-            rest = re.sub(
-                r'\bCONSTRAINT\s+"?[\w]+"?\s+', "", rest, flags=re.IGNORECASE
-            )
-            gm = re.search(
-                r"GENERATED\s+ALWAYS\s+AS\s*\(", rest, re.IGNORECASE
-            )
-            if gm:
-                gclose = _close(rest, gm.end() - 1)
-                generated[cname] = unmask(rest[gm.end() : gclose], literals)
-                rest = rest[: gm.start()] + rest[gclose + 1 :]
-            else:
-                # paren-less form (create-table.rst: GENERATED ALWAYS
-                # AS expr — parentheses optional): the expression runs
-                # to the end of the column item
-                gm2 = re.search(
-                    r"GENERATED\s+ALWAYS\s+AS\s+(.+)$",
-                    rest,
-                    re.IGNORECASE | re.DOTALL,
-                )
-                if gm2:
-                    generated[cname] = unmask(gm2.group(1).strip(), literals)
-                    rest = rest[: gm2.start()]
-                else:
-                    # bare `[data_type] AS expr` shorthand — GENERATED
-                    # ALWAYS is optional in the reference grammar
-                    # (create-table.rst base_column_definition; the
-                    # lang-js integration tests use `x AS arr_max(xs)`):
-                    # an AS right after the type, or with no type (an
-                    # OBJECT AS (...) shape is all type)
-                    read = parse_type(rest)
-                    pre = rest[: read[1]] if read else ""
-                    am = re.match(r"\s*AS\b", rest[len(pre) :], re.IGNORECASE)
-                    if am:
-                        expr = rest[len(pre) + am.end() :].strip()
-                        if expr.startswith("("):
-                            # parenthesized generation expression
-                            popen = rest.index("(", len(pre) + am.end())
-                            pclose = _close(rest, popen)
-                            generated[cname] = unmask(
-                                rest[popen + 1 : pclose], literals
-                            )
-                            rest = pre + rest[pclose + 1 :]
-                        else:
-                            generated[cname] = unmask(expr, literals)
-                            rest = pre
-            ckm = re.search(r"CHECK\s*\(", rest, re.IGNORECASE)
-            if ckm:
-                cclose = _close(rest, ckm.end() - 1)
-                checks.append(unmask(rest[ckm.end() : cclose], literals))
-                rest = rest[: ckm.start()] + rest[cclose + 1 :]
-            # column DEFAULT expression (reference metadata
-            # Reference.defaultExpression; insert.rst) — applied when
-            # INSERT omits the column. Only a DEFAULT at paren depth 0
-            # belongs to this column: OBJECT AS (key TEXT DEFAULT '')
-            # carries subcolumn defaults inside the shape
-            # (sql/statements/create-table.rst)
-            dm = next(
-                (
-                    c
-                    for c in re.finditer(r"\bDEFAULT\s+", rest, re.IGNORECASE)
-                    if rest[: c.start()].count("(")
-                    == rest[: c.start()].count(")")
-                ),
-                None,
-            )
-            if dm:
-                defaults[cname] = rewrite(
-                    unmask(rest[dm.end():].strip(), literals)
-                )
-                rest = rest[: dm.start()]
-            else:
-                # OBJECT AS (key TEXT DEFAULT '') — subcolumn defaults
-                # materialize the whole object when INSERT omits the
-                # column (sql/statements/create-table.rst:141-156)
-                read = parse_type(rest)
-                obj_defaults = {}
-                for child, _, clauses in read[0].children if read else ():
-                    cdm = re.search(r"\bDEFAULT\s+(.+?)\s*$", clauses, re.I | re.S)
-                    if cdm:
-                        raw = unmask(cdm.group(1).strip(), literals)
-                        obj_defaults[child] = (
-                            raw[1:-1].replace("''", "'")
-                            if raw.startswith("'")
-                            else json.loads(raw.lower())
-                            if raw.lower() in ("true", "false")
-                            else float(raw)
-                            if "." in raw
-                            else int(raw)
-                        )
-                if obj_defaults:
-                    defaults[cname] = (
-                        "'" + json.dumps(obj_defaults).replace("'", "''") + "'"
-                    )
-            if re.search(r"\bPRIMARY\s+KEY\b", rest, re.IGNORECASE):
-                pk.append(cname)
-                not_null.append(cname)  # PK implies NOT NULL
-                rest = re.sub(r"\bPRIMARY\s+KEY\b", "", rest, flags=re.IGNORECASE)
-            if re.search(r"\bNOT\s+NULL\b", rest, re.IGNORECASE):
-                not_null.append(cname)
-            rest = re.sub(r"\bNOT\s+NULL\b", "", rest, flags=re.IGNORECASE)
-            # explicit nullable spelling `<col> <type> NULL`
-            # (ddl/constraints.rst:72) — the default, drop the token
-            # (DEFAULT/CHECK/GENERATED expressions holding real NULLs
-            # were already extracted above)
-            rest = re.sub(r"\bNULL\b", "", rest, flags=re.IGNORECASE)
-            # column index clauses (create-table.rst): INDEX OFF,
-            # INDEX USING fulltext/plain/geohash/quadtree/bkdtree
-            # [WITH (...)] — storage/index details Parquet supersedes;
-            # STORAGE WITH (columnstore = ...) likewise (storage.rst)
-            rest = re.sub(
-                r"\bSTORAGE\s+WITH\s*\([^)]*\)", "", rest, flags=re.IGNORECASE
-            )
-            rest = re.sub(
-                r"\bINDEX\s+(OFF\b|(USING\s+)?\"?\w+\"?)?(\s+WITH\s*\(.*?\))?",
-                "",
-                rest,
-                flags=re.IGNORECASE,
-            )
-            ctype = spark_type(rest)
-            if not ctype:
-                if cname in generated:
-                    # typeless generated column (generated-columns.rst:
-                    # "a data type is optional ... inferred from the
-                    # expression"): resolved after the loop
-                    untyped_generated.append(cname)
-                    cols.append(cname)  # placeholder, patched below
-                    crate_cols.append({"name": cname, "type": None})
-                    continue
-                raise ValueError(f"column '{cname}' needs an explicit type")
-            cols.append(f"{cname} {ctype}")
-            crate_cols.append({"name": cname, **_crate_decl(rest)})
-        # evaluation form: UDF call sites resolved to their mangled
-        # Spark registrations and crate-isms rewritten ONCE at CREATE —
-        # `generated` keeps the user's spelling for SHOW CREATE TABLE
-        resolve = getattr(self.owner, "_resolve_udf_calls", None) or (lambda x: x)
-        generated_eval = {
-            k: rewrite(resolve(v)) for k, v in generated.items()
-        }
-        for cname in untyped_generated:
-            typed = ", ".join(c for c in cols if " " in c)
-            probe = local_frame(self.spark, [], typed or "__x int")
-            dt = probe.selectExpr(
-                f"({generated_eval[cname]}) AS __g"
-            ).schema[0].dataType.simpleString()
-            cols[cols.index(cname)] = f"{cname} {dt}"
-            for cc in crate_cols:
-                if cc["name"] == cname and cc["type"] is None:
-                    cc["type"] = crate_name(dt)
-
+        meta = self._elements(split_args(body), st)
         partitioned: list[str] = []
         pm = re.search(r"PARTITIONED\s+BY\s*\(([^)]*)\)", tail, re.IGNORECASE)
         if pm:
             partitioned = [c.strip().strip('"') for c in pm.group(1).split(",")]
-        settings: dict[str, str] = {}
-        wm = re.search(r"\bWITH\s*\(([^)]*)\)", tail, re.IGNORECASE)
-        if wm:
-            for kv in wm.group(1).split(","):
-                if "=" in kv:
-                    k, v = kv.split("=", 1)
-                    settings[k.strip().strip('"')] = unmask(v.strip(), literals).strip("'\"")
+        wm = re.search(r"\bWITH\s*\(", tail, re.IGNORECASE)
+        settings = st.properties(tail[wm.end() : _close(tail, wm.end() - 1)]) if wm else {}
 
         # CLUSTERED [BY (col)] INTO n SHARDS (create-table.rst): the
         # MODULO routing key — writes hash-repartition on it so each
@@ -455,24 +241,81 @@ class SqlDmlRouter:
         t = CrateTable.create(
             self.spark,
             path,
-            ", ".join(cols),
-            primary_key=pk,
+            meta.pop("schema_ddl"),
             partitioned_by=partitioned,
-            generated=generated,
-            generated_eval=generated_eval,
-            checks=checks,
-            defaults=defaults,
             settings=settings,
             clustered_by=clustered_by,
             shards=shards,
-            ft_indexes=ft_indexes,
-            crate_columns=crate_cols,
-            not_null=not_null,
+            **meta,
         )
         self.crate_tables[name] = t
         self._record_schema(m.group(2), name)
         self._refresh(name)
         return rowcount_frame(self.spark)
+
+    def _elements(self, items: list[str], st: Statement, base_ddl: str = "") -> dict:
+        """The table metadata a list of column definitions and table
+        constraints declares (masked items of ``st``): ``schema_ddl``
+        and the keyword arguments of ``CrateTable.create`` they set. A
+        type-less generated column (generated-columns.rst: the type is
+        inferred from the expression) may also read ``base_ddl``."""
+        literals = st.literals
+        cols: list[str] = []
+        meta: dict = {
+            "primary_key": [], "not_null": [], "checks": [], "generated": {},
+            "defaults": {}, "ft_indexes": {}, "crate_columns": [],
+        }
+        for item in items:
+            read = parse_column(item)
+            if read is None or read[1] != len(item):
+                raise ValueError(f"cannot parse column definition: {item!r}")
+            col = read[0]
+            meta["primary_key"] += col.key
+            # a primary key column is NOT NULL
+            for c in col.key + ((col.name,) if col.not_null else ()):
+                if c not in meta["not_null"]:
+                    meta["not_null"].append(c)
+            meta["checks"] += [unmask(c, literals) for c in col.checks]
+            if col.fulltext:
+                # MATCH can name the index and search its columns
+                # (fulltext-indices.rst)
+                meta["ft_indexes"][col.fulltext[0]] = list(col.fulltext[1])
+            if col.name is None:
+                continue
+            if col.generated is not None:
+                meta["generated"][col.name] = unmask(col.generated, literals)
+            if col.default is not None:
+                # applied where INSERT leaves the column out (insert.rst)
+                meta["defaults"][col.name] = rewrite(unmask(col.default, literals))
+            elif col.spec and col.spec.children:
+                # an object's subcolumn defaults make the whole object
+                # when INSERT leaves it out (create-table.rst:141-156)
+                obj = {
+                    c.name: _json_value(st.value(c.default))
+                    for c in col.spec.children
+                    if c.default is not None
+                }
+                if obj:
+                    meta["defaults"][col.name] = "'" + json.dumps(obj).replace("'", "''") + "'"
+            if not col.spelling and col.generated is None:
+                raise ValueError(f"column '{col.name}' needs an explicit type")
+            cols.append(f"{col.name} {col.spark}" if col.spelling else col.name)
+            meta["crate_columns"].append({"name": col.name, **_crate_decl(col)})
+        # the evaluation form: UDF calls resolved to their Spark
+        # registrations and rewritten once; `generated` keeps the
+        # user's spelling for SHOW CREATE TABLE
+        resolve = getattr(self.owner, "_resolve_udf_calls", None) or (lambda x: x)
+        meta["generated_eval"] = {k: rewrite(resolve(v)) for k, v in meta["generated"].items()}
+        for i, name in enumerate(cols):
+            if " " in name:
+                continue
+            known = ", ".join(c for c in [base_ddl] + cols if " " in c) or "__x int"
+            probe = local_frame(self.spark, [], known).selectExpr(f"({meta['generated_eval'][name]}) AS __g")
+            dt = probe.schema[0].dataType.simpleString()
+            cols[i] = f"{name} {dt}"
+            meta["crate_columns"][i]["type"] = crate_name(dt)
+        meta["schema_ddl"] = ", ".join(cols)
+        return meta
 
     def _create_table_as(self, raw_name: str, query: str, literals: list[str]) -> DataFrame:
         """CREATE TABLE t AS <query> (reference ``CreateTableAsPlan``):
@@ -567,26 +410,22 @@ class SqlDmlRouter:
         )
         if sm:
             table = self._table(sm.group(1).strip('"'))
+            props = st.properties(sm.group(3))
             if sm.group(2).upper() == "SET":
-                for kv in sm.group(3).split(","):
-                    if "=" in kv:
-                        k, v = kv.split("=", 1)
-                        key = k.strip().strip('"')
-                        val = unmask(v.strip(), literals).strip("'\"")
-                        table.settings[key] = val
-                        if key == "number_of_shards" and val.isdigit():
-                            # applies to future partitions/batches
-                            # (alter-table.rst:75; sys.shards reflects it)
-                            table.shards = int(val)
+                table.settings.update(props)
+                if str(props.get("number_of_shards", "")).isdigit():
+                    # applies to future partitions/batches
+                    # (alter-table.rst:75; sys.shards reflects it)
+                    table.shards = int(props["number_of_shards"])
             else:
-                for k in sm.group(3).split(","):
-                    table.settings.pop(k.strip().strip('"'), None)
+                for k in props:
+                    table.settings.pop(k, None)
             table._save_meta()
             return rowcount_frame(self.spark)
 
         m = st.match(
             r"\s*ALTER\s+TABLE\s+([\w.\"]+)\s+"
-            r"(?:ADD\s+(?:COLUMN\s+)?(\S+)\s+(.+?)"
+            r"(?:ADD\s+(?:COLUMN\s+)?(\S.*?)"
             r"|DROP\s+(?:COLUMN\s+)?(\w+)"
             r"|RENAME\s+(?:COLUMN\s+)?(\S+)\s+TO\s+(\S+))\s*$",
             masked=True,
@@ -613,28 +452,19 @@ class SqlDmlRouter:
             return level
 
         if m.group(2):  # ADD COLUMN (top-level or obj['sub'] nested)
-            ref = unmask(m.group(2), literals)
-            raw_type = unmask(m.group(3), literals).strip()
-            if re.search(r"\bPRIMARY\s+KEY\b", raw_type, re.IGNORECASE):
-                table.primary_key = list(table.primary_key) + [ref]
-            raw_type = re.sub(
-                r"\b(NOT\s+NULL|PRIMARY\s+KEY)\b", "", raw_type,
-                flags=re.IGNORECASE,
-            ).strip()
-            col, path = _subref(ref)
+            read = parse_column(m.group(2))
+            if read is None or read[0].name is None or read[1] != len(m.group(2)):
+                raise st.unsupported()
+            col, path = _subref(unmask(read[0].name, literals))
             if path:
                 # nested add (alter-table.rst:148): object payloads are
                 # JSON strings — the new subcolumn is catalog metadata
-                _decl_at([col] + path[:-1]).append(
-                    {"name": path[-1], **_crate_decl(raw_type)}
-                )
+                _decl_at([col] + path[:-1]).append({"name": path[-1], **_crate_decl(read[0])})
                 table._save_meta()
             else:
-                table.schema_ddl = f"{table.schema_ddl}, {col} {spark_type(raw_type)}"
-                table.crate_columns.append({"name": col, **_crate_decl(raw_type)})
-                table._save_meta()
-        elif m.group(4):  # DROP COLUMN
-            col = m.group(4)
+                self._add_column(table, m.group(2), st)
+        elif m.group(3):  # DROP COLUMN
+            col = m.group(3)
             # the rewrite reads the version current under the lock, and
             # no INSERT commits between it and the new schema
             with _WRITE_LOCK:
@@ -648,8 +478,8 @@ class SqlDmlRouter:
                 ]
                 table._save_meta()
         else:  # RENAME COLUMN (top-level or nested object subcolumn)
-            old_ref = unmask(m.group(5), literals)
-            new_ref = unmask(m.group(6), literals)
+            old_ref = unmask(m.group(4), literals)
+            new_ref = unmask(m.group(5), literals)
             ocol, opath = _subref(old_ref)
             ncol, npath = _subref(new_ref)
             if opath:
@@ -705,6 +535,29 @@ class SqlDmlRouter:
                     table._save_meta()
         self._refresh(name)
         return rowcount_frame(self.spark)
+
+    def _add_column(self, table: CrateTable, item: str, st: Statement) -> None:
+        """ALTER TABLE ADD COLUMN ``item``: its type and constraints as
+        CREATE TABLE reads them, applied to the rows written from now
+        on (no existing row is rewritten). The new type and each
+        expression are analyzed before the metadata is saved, so a
+        failed ALTER leaves the table as it was."""
+        add = self._elements([item], st, table.schema_ddl)
+        schema_ddl = f"{table.schema_ddl}, {add['schema_ddl']}"
+        probe = local_frame(self.spark, [], schema_ddl)
+        types = {f.name: f.dataType.simpleString() for f in probe.schema}
+        exprs = [f"CAST(({d}) AS {types[c]})" for c, d in add["defaults"].items()]
+        exprs += [*add["generated_eval"].values(), *add["checks"]]
+        if exprs:
+            probe.selectExpr(*exprs)
+        table.schema_ddl = schema_ddl
+        table.primary_key = list(table.primary_key) + add["primary_key"]
+        table.not_null = table.not_null + add["not_null"]
+        table.checks = table.checks + add["checks"]
+        for key in ("generated", "generated_eval", "defaults"):
+            getattr(table, key).update(add[key])
+        table.crate_columns.extend(add["crate_columns"])
+        table._save_meta()
 
     def _drop_table(self, st: Statement) -> DataFrame:
         m = st.match(r"\s*DROP\s+TABLE\s+(IF\s+EXISTS\s+)?([\w.\"]+)\s*$", masked=True)
@@ -923,14 +776,10 @@ class SqlDmlRouter:
         name = m.group(1).strip('"').split(".")[-1]
         table = self._table(name)
         direction = m.group(5).upper()
-        uri = unmask(m.group(7), literals).strip("'")
+        uri = st.value(m.group(7))
         tail = m.group(8) or ""
-        props: dict[str, str] = {}
         pm = re.search(r"WITH\s*\(([^)]*)\)", tail, re.IGNORECASE)
-        if pm:
-            for kv in split_args(pm.group(1)):
-                k, _, v = kv.partition("=")
-                props[k.strip().lower()] = unmask(v.strip(), literals).strip("'\"")
+        props = st.properties(pm.group(1)) if pm else {}
         where = None
         # copy-to.rst grammar puts WHERE before TO; accept a trailing
         # spelling too for compatibility with earlier statements

@@ -19,7 +19,7 @@ import re
 from dataclasses import dataclass
 from typing import NamedTuple
 
-from crate_spark.dialect import mask
+from crate_spark.dialect import mask, split_args, string_value, unmask
 
 #: reply kinds: rows affected, or a result set
 COUNT, ROWS = "count", "rows"
@@ -27,6 +27,26 @@ COUNT, ROWS = "count", "rows"
 AL, DDL, DML, DQL = "AL", "DDL", "DML", "DQL"
 #: schemas whose relations are not stored tables
 SYSTEM_SCHEMAS = ("sys", "information_schema", "pg_catalog", "blob")
+
+
+class Bare(str):
+    """A property value written without quotes, kept as written."""
+
+
+def typed(value):
+    """A `Bare` value as the boolean or integer it spells, else as it
+    is: settings that take booleans and numbers type only these."""
+    if not isinstance(value, Bare):
+        return value
+    if value.lower() in ("true", "false"):
+        return value.lower() == "true"
+    return int(value) if re.fullmatch(r"-?\d+", value) else value
+
+
+#: one item of a property list: a key, then its value after an
+#: optional ``=`` (``OPTIONS (url 'x')`` has none)
+_PROPERTY = re.compile(r'\s*("(?:[^"]|"")+"|[A-Za-z_][\w.]*)\s*(?:=\s*)?(.*)', re.DOTALL)
+_LITERAL = re.compile(r"__LIT_(\d+)__")
 
 
 class Route(NamedTuple):
@@ -154,6 +174,34 @@ class Statement:
         if m is None and required:
             raise self.unsupported()
         return m
+
+    def properties(self, text: str) -> dict:
+        """The ``k = v, …`` list ``text`` (masked, inside its
+        parentheses) as key -> `value`. An unquoted key folds to lower
+        case; a quoted key stays as written. A key without a value
+        (``RESET (k)``) maps to None."""
+        out = {}
+        for item in split_args(text):
+            m = _PROPERTY.fullmatch(item)
+            if m is None:
+                raise self.unsupported()
+            key = m.group(1)
+            key = key[1:-1].replace('""', '"') if key[0] == '"' else key.lower()
+            out[key] = self.value(m.group(2)) if m.group(2).strip() else None
+        return out
+
+    def value(self, text: str):
+        """One masked value: a string literal's value (``''``, ``E'…'``
+        and ``$$…$$`` decoded), None for NULL, a ``{…}`` property list
+        as a dict, anything else `Bare` as written."""
+        text = text.strip()
+        if lit := _LITERAL.fullmatch(text):
+            return string_value(self.literals[int(lit.group(1))])
+        if text.upper() == "NULL":
+            return None
+        if text[:1] == "{" and text[-1:] == "}":
+            return self.properties(text[1:-1])
+        return Bare(unmask(text, self.literals))
 
     def unsupported(self) -> ValueError:
         """The error for a statement whose clauses its handler cannot read."""

@@ -174,3 +174,35 @@ def test_order_by_item_named_like_a_clause_keyword(crate):
     assert _rows(crate, "SELECT id AS my_rows FROM rp ORDER BY my_rows DESC") == [
         (4,), (3,), (2,), (1,),
     ]
+
+
+def test_ranking_over_a_framed_unordered_window(crate):
+    """The constant ORDER BY goes before the frame, not after it."""
+    assert sorted(_rows(
+        crate,
+        "SELECT id, rank() OVER (PARTITION BY g ROWS BETWEEN UNBOUNDED PRECEDING "
+        "AND CURRENT ROW) AS r FROM rp",
+    )) == [(1, 1), (2, 1), (3, 1), (4, 1)]
+
+
+def test_nested_array_subqueries(crate):
+    (v,) = _rows(crate, "SELECT ARRAY(SELECT ARRAY(SELECT x FROM rp WHERE g = 1) FROM rp WHERE id = 1) AS v")[0]
+    assert [sorted(a) for a in v] == [[10, 20]]
+
+
+@pytest.mark.parametrize("stride, ts, want", [
+    ("INTERVAL '1.5 seconds'", "2024-01-01T00:00:04", "2024-01-01 00:00:03"),
+    ("INTERVAL '00:15:00'", "2024-01-01T00:20:00", "2024-01-01 00:15:00"),
+    ("INTERVAL 'PT15M'", "2024-01-01T00:20:00", "2024-01-01 00:15:00"),
+    ("'15 mins'::interval", "2024-01-01T00:20:00", "2024-01-01 00:15:00"),
+    ("'500 microseconds'::interval", "2024-01-01T00:00:00.0012", "2024-01-01 00:00:00.001"),
+])
+def test_date_bin_reads_its_stride_as_an_interval_literal(crate, stride, ts, want):
+    assert _rows(
+        crate, f"SELECT CAST(date_bin({stride}, TIMESTAMP '{ts}', 0) AS STRING) AS v"
+    ) == [(want,)]
+
+
+def test_date_bin_rejects_a_month_stride(crate):
+    with pytest.raises(Exception):
+        crate.execute("SELECT date_bin(INTERVAL '1 month', TIMESTAMP '2024-01-01T00:00:00', 0)").collect()

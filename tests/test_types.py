@@ -197,9 +197,9 @@ def test_parse_type_reads_every_shape_in_any_case_and_spacing():
     assert spark_type("integer [ ] [ ]") == "array<array<int>>"
     obj = read_type("Object(Strict) AS (a INT, b OBJECT AS (c TEXT))")
     assert obj.policy == "strict"
-    (a, a_type, _), (b, b_type, _) = obj.children
-    assert (a, a_type.row.name, b, b_type.row.name) == ("a", "integer", "b", "object")
-    assert [(n, t.row.name) for n, t, _ in b_type.children] == [("c", "text")]
+    a, b = obj.children
+    assert (a.name, a.spec.row.name, b.name, b.spec.row.name) == ("a", "integer", "b", "object")
+    assert [(c.name, c.spec.row.name) for c in b.spec.children] == [("c", "text")]
     for text, spelling in [
         ("x timestamp with time zone NOT NULL", "timestamp with time zone"),
         ("x numeric(10, 2), y int", "numeric(10, 2)"),
