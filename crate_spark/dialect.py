@@ -2343,10 +2343,6 @@ def _struct_literal_subscripts(sql: str, literals: list[str]) -> str:
     return "".join(out)
 
 
-#: interval literal unit spellings -> canonical slot (PG/crate parser:
-#: sql-parser IntervalLiteral; millennium/century/decade omitted like
-#: the reference's Period mapping). Distinct from the _IV_UNITS
-#: micros table used by _interval_literal_micros.
 def _extract_field_pat(fields: str) -> "re.Pattern":
     """``EXTRACT(<field> FROM <operand>)`` with the operand matched at
     ANY paren nesting depth (named group ``x``)."""
@@ -2391,6 +2387,9 @@ _SPARK_IV_UNITS = {
     "microseconds",
 }
 
+#: interval literal unit spellings -> canonical slot (PG/crate parser:
+#: sql-parser IntervalLiteral; millennium/century/decade omitted like
+#: the reference's Period mapping)
 _IV_UNIT_SLOTS = {
     "y": "years", "yr": "years", "yrs": "years", "year": "years",
     "years": "years",
